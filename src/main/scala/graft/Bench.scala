@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Driver benchmark: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints a one-line JSON artifact per completed sweep (the LAST line is the
@@ -41,7 +42,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional comma-separated name filter for fast local iteration; the
     // driver sets no filter and always times the full surface.
     val only: Option[Set[String]] =
@@ -68,11 +68,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_SEC", "90").toDouble
     val maxSweeps = 3
     val maxMeasPerQuery = 4
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     StallMeter.start()
     // absorb one-time JVM/codegen/scan-setup cost outside the timed loop
@@ -106,39 +102,10 @@ object Bench {
       graft.ext.Checkpoints.release(df)
       (t, stall, df)
     }
-    // Physical-plan fingerprint: see [[PlanFp]] (shared with FpCensus so
-    // the stability census hashes the SAME canonical form as the bench
-    // artifact). Round-over-round diffs of this map separate "the plan
-    // changed" from "the data or the box re-costed" mechanically.
-    // Best-effort: a plan whose internals can't be walked fingerprints
-    // what it can see.
+    // Physical-plan fingerprint per query ([[PlanFp.fp]]): round-over-round
+    // diffs of this map separate "the plan changed" from "the data or the
+    // box re-costed" mechanically.
     val planFps = scala.collection.mutable.Map.empty[String, String]
-    def planFp(fpDumpName: String,
-               df: org.apache.spark.sql.DataFrame): String = try {
-      val canon = PlanFp.canon(df).mkString(",")
-      // forensic hook for fp-flip diagnosis: dump each query's raw
-      // sorted node multiset (first measurement only) so two runs'
-      // dumps diff to the exact nodes that moved
-      sys.env.get("SPARK_GRAFT_BENCH_FP_DUMP").foreach { dir =>
-        try {
-          val p = java.nio.file.Paths.get(dir)
-          java.nio.file.Files.createDirectories(p)
-          val f = p.resolve(fpDumpName + ".nodes")
-          if (!java.nio.file.Files.exists(f))
-            java.nio.file.Files.writeString(f, canon.replace(",", "\n"))
-          // full executed-plan treeString alongside the multiset, for
-          // fp-flip forensics where the multiset diff alone can't
-          // localize the moved subtree (opt-in: large files)
-          if (sys.env.contains("SPARK_GRAFT_BENCH_PLAN_DUMP")) {
-            val t = p.resolve(fpDumpName + ".tree")
-            if (!java.nio.file.Files.exists(t))
-              java.nio.file.Files.writeString(t,
-                df.queryExecution.executedPlan.toString)
-          }
-        } catch { case _: Throwable => () }
-      }
-      PlanFp.md5Hex12(canon)
-    } catch { case _: Throwable => "unavailable" }
     // min over INTERLEAVED sweeps (was median of 3 back-to-back runs):
     // stall noise is strictly one-sided, so the minimum estimates the
     // plan's true cost (the timeit rule); and the repetitions of one query
@@ -166,7 +133,7 @@ object Bench {
         : Unit = {
       try {
         val (t, stall, df) = once(fn)
-        if (!planFps.contains(name)) planFps(name) = planFp(name, df)
+        if (!planFps.contains(name)) planFps(name) = PlanFp.fp(df)
         if (t < times.getOrElse(name, Double.MaxValue)) {
           times(name) = t
           stallAtMin(name) = stall

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Plan-inspection utility: prints the formatted physical plan of selected
   * queries (all, if no names given) so shuffle/broadcast/pushdown choices
@@ -11,17 +11,10 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    // match the bench session shape (cores + shuffle partitions) so the
-    // printed plans are the ones the bench actually costs — a 4-core
-    // session re-decides broadcast/exchange choices
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    require(cpus.forall(_.isDigit) && cpus.nonEmpty,
-      s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session (cores + shuffle partitions), so the printed
+    // plans are the ones the bench costs: a different core count
+    // re-decides broadcast/exchange choices
+    val spark = GraftSession.local("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

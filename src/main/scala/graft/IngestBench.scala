@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
-import graft.engine.{Pipeline, Tenancy}
+import graft.engine.{GraftSession, Pipeline, Tenancy}
 
 /** End-to-end upload->transform throughput vs the reference's only stated
   * performance numbers (BASELINE.md: ~30-60s for <10MB, ~1-3min for
@@ -14,12 +14,7 @@ import graft.engine.{Pipeline, Tenancy}
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val sizeMb = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-ingest-bench")
     spark.sparkContext.setLogLevel("WARN")
     val (sec, nRows) = run(spark, sizeMb)
     println(s"""{"metric":"ingest_${sizeMb}mb","value":$sec,"unit":"sec","rows":$nRows,"reference_claim_sec":"30-60 (<10MB) / 60-180 (10-100MB)"}""")

@@ -4,10 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** Executed-plan fingerprint, shared by [[Bench]] and [[FpCensus]] so the
-  * stability census and the bench artifact hash the SAME canonical form —
-  * a pin verified by the census is then verified for the bench by
-  * construction.
+/** Executed-plan fingerprint, recorded per query in [[Bench]]'s artifact.
   *
   * Canonical form (the round-15/16 normalization, moved here verbatim):
   * md5 (first 12 hex) over the SORTED multiset of executed-plan node

@@ -105,10 +105,11 @@ object Warehouse {
     * one row per map partition before the shuffle, where the original
     * window-row_number formulation buffered and sorted the hot key's
     * whole row set in a single task (the banned
-    * `Window.partitionBy(hotableKey)` shape; `changelog_hot_key` in
-    * ScaleBench measures this exact plan under half-the-input-one-key
-    * skew). Versions must be distinct per key (a CDC log's LSN / batch
-    * id is): ties would make "latest" partition-order-dependent.
+    * `Window.partitionBy(hotableKey)` shape; the `changelog_hot_key`
+    * decade shape ran this exact plan under half-the-input-one-key skew
+    * at per-row ratio 0.42, recorded in SURVEY.md). Versions must be
+    * distinct per key (a CDC log's LSN / batch id is): ties would make
+    * "latest" partition-order-dependent.
     */
   def upsertLatest(base: DataFrame, updates: DataFrame, keyCol: String,
                    versionCol: String): DataFrame = {

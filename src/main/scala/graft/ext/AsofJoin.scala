@@ -76,8 +76,8 @@ object AsofJoin {
     * same interleave through [[GlobalOrder.withFillForward]] instead:
     * the right payload fills forward over the (key, time, side) range
     * order — which IS the as-of match — with the hot key spread across
-    * range partitions and stitched by O(p) driver state
-    * (`asof_hot_key` in ScaleBench). Same inclusive `<=` semantics
+    * range partitions and stitched by O(p) driver state (`asof_hot_key`
+    * decade shape: ratio 0.71, SURVEY.md). Same inclusive `<=` semantics
     * (right sorts before left on time ties) and the same
     * unique-per-(key, time) right-side contract; additionally `key`,
     * both time columns, and `rightValue` must be non-null LongType

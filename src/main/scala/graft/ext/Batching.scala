@@ -55,8 +55,8 @@ object Batching {
     * band's offsets (a combinable per-band aggregate, broadcast back —
     * one row per band). Bit-identical to the window formulation
     * (asserted in Round9Suite) with no task ever holding more than a range
-    * partition; `batch_hot_band` in ScaleBench measures the
-    * all-rows-one-band adversary.
+    * partition; the `batch_hot_band` decade shape measured the
+    * all-rows-one-band adversary at ratio 0.91 (SURVEY.md).
     */
   def lengthBucketedBatches(df: DataFrame, idCol: Column, lenCol: Column,
                             bandWidth: Long, capTokens: Long): DataFrame = {

@@ -892,6 +892,9 @@ object Dedup {
     * containment but low Jaccard, and training-data curation usually
     * wants the quote dropped. Same inverted-index join discipline (and
     * the same hot-shingle caveat) as [[jaccardPairs]].
+    *
+    * PRECONDITION: `doc_id` unique per input row ([[shingleSets]]) —
+    * duplicate doc_id rows are not set-merged across rows.
     */
   def containmentPairs(docs: DataFrame, threshold: Double,
                        n: Int = 3): DataFrame = {
@@ -931,7 +934,8 @@ object Dedup {
     * corpus-universal boilerplate chunk's join partition crossed a
     * single-task memory cliff at 10M docs (measured superlinear,
     * per-row ratio 2.3); with long keys the same planted-hot-chunk shape
-    * runs linear (`chunk_dedup_hot_chunk` in ScaleBench). The df count
+    * runs linear (`chunk_dedup_hot_chunk` decade shape: ratio 1.10,
+    * SURVEY.md). The df count
     * is a partial aggregate, AQE splits the join-back skew, and 60-bit
     * collisions misattribute a chunk with probability ~n²/2⁶¹ —
     * negligible against the boilerplate signal.

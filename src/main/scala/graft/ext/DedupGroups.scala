@@ -82,7 +82,6 @@ object DedupGroups {
         .select(col("id"),
           least(col("component"), coalesce(col("n_component"), col("component")))
             .as("component"))
-      if (iter == 0) Graph.dumpIterPlan("cc_round", next0)
       // localCheckpoint: caps the lineage, which otherwise doubles per
       // round and eventually dominates planning time
       val next = next0.localCheckpoint()

@@ -34,11 +34,8 @@ object Graph {
     * session's shuffle-partition setting, so the layout is scale-adaptive
     * (the bench session sets it to the core count; a cluster job sets it
     * to its own sizing) rather than a constant tuned for either.
-    */
-  private def loopPartitions(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
-  /** Round-19 (guide §2.4 "remove shuffles outright"): every iterative
+    *
+    * Round-19 (guide §2.4 "remove shuffles outright"): every iterative
     * loop here re-reads its edge table once per iteration, and the old
     * shape paid a full O(E) exchange (plus, under sort-merge, an O(E)
     * sort) of that table EVERY iteration to satisfy the rank/label join.
@@ -56,23 +53,9 @@ object Graph {
     * construction. Build-side memory per task is O(V/P), the same
     * contract as the outdeg table; P follows
     * `spark.sql.shuffle.partitions` so it scales with the session.
-    *
-    * Set `SPARK_GRAFT_GRAPH_PLAN_DUMP=<dir>` to dump each loop's
-    * first-iteration formatted plan (evidence for plans/r19).
     */
-  private[ext] def dumpIterPlan(tag: String, df: DataFrame): Unit =
-    sys.env.get("SPARK_GRAFT_GRAPH_PLAN_DUMP").foreach { dir =>
-      try {
-        val p = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.createDirectories(p)
-        val f = p.resolve(tag + ".txt")
-        if (!java.nio.file.Files.exists(f))
-          java.nio.file.Files.writeString(f,
-            df.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")))
-      } catch { case _: Throwable => () }
-    }
+  private def loopPartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Fixed-iteration integer PageRank. `edges` needs (src, dst) columns
     * (parallel edges should be pre-deduplicated if unwanted); returns
@@ -99,7 +82,7 @@ object Graph {
     // inputs, checkpoint the evolving state, unpersist on exit.
     // Round-19: invariants are pre-partitioned by their per-iteration
     // join key and the state joins pinned shuffled-hash — see
-    // [[dumpIterPlan]]'s scaladoc for the full §2.4 argument.
+    // [[loopPartitions]]' scaladoc for the full §2.4 argument.
     val p = loopPartitions(edges)
     val e = edges.repartition(p, col("src")).persist()
     val nodes = e.select(col("src").as("node"))
@@ -133,7 +116,6 @@ object Graph {
           .select(col("node"),
             (base + expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
               .as("rank"))
-        dumpIterPlan(s"pagerank_iter$it", next)
         ranks = next.localCheckpoint()
         // free the PREVIOUS iteration's checkpoint blocks now that the
         // new one is materialized — leaked checkpoint blocks pin storage
@@ -213,7 +195,6 @@ object Graph {
             (when(col("is_seed"), base).otherwise(lit(0L)) +
               expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
               .as("rank"))
-        if (it == 1) dumpIterPlan("ppr_iter", next)
         ranks = next.localCheckpoint()
         checkpointed.foreach(Checkpoints.release)
         checkpointed = Some(ranks)
@@ -286,7 +267,6 @@ object Graph {
             Seq("node"), "left")
           .select(col("node"),
             coalesce(col("__seed_label"), col("__vote")).as("label"))
-        if (round == 1) dumpIterPlan("labelprop_round", next)
         cur = next.localCheckpoint()
         checkpointed.foreach(Checkpoints.release)
         checkpointed = Some(cur)
@@ -668,7 +648,6 @@ object Graph {
           .select(col("node"),
             (base + expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
               .as("rank"))
-        if (it == 1) dumpIterPlan("wpagerank_iter", next)
         ranks = next.localCheckpoint()
         checkpointed.foreach(Checkpoints.release)
         checkpointed = Some(ranks)

@@ -540,7 +540,7 @@ object Pq {
     // whole-stage-codegen'd the stream-side ENCODE into the join's
     // consume path, re-encoding every corpus row once per broadcast
     // row: per-row cost grew with the batch size (measured round 18 at
-    // sf1: 5 queries -> encode 5x, 52 s vs 12 s; QueryMetrics artifact
+    // sf1: 5 queries -> encode 5x, 52 s vs 12 s;
     // docs/opq_metrics_r18.json).
     val spark = corpusCodes.sparkSession
     val (flat, norms, kk, subDim) =

@@ -10,7 +10,8 @@ import graft.ext.Dedup
   * gated per-document, as a per-language census, and as a provenance
   * attribution (which copy is canonical). Library operator:
   * [[graft.ext.Dedup.duplicatedSpans]] / [[graft.ext.Dedup.spanProvenance]];
-  * adversarial shape: `substring_dedup_boilerplate` in ScaleBench.
+  * adversarial shape: `substring_dedup_boilerplate`, ratio 0.29
+  * (docs/PLANS.md).
   */
 object Round13Queries {
 

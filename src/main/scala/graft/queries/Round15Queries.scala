@@ -9,7 +9,7 @@ import graft.ext.Pq
   * proof, and the model-compatibility guard — each as a gated query.
   *
   *  - q345/q346: a ≤ 32-byte/vector PQ config GATED at recall@20 ≥ 0.7.
-  *    The Pq15Sweep evidence (docs/PLANS.md round-15 table): at m=32 the
+  *    The round-15 sweep (docs/pq15_sweep.jsonl): at m=32 the
   *    codebook-capacity axis beats the permutation axis — k=256 plain
   *    (exactly 32 bytes/vector) reads 0.90/0.85 at sf0.01 and 0.85/0.80
   *    at sf0.1 (mean/min), vs 0.76/0.65 for round-14's m=32/k=64+perm —

@@ -152,36 +152,6 @@ object EventStream {
       }
   }
 
-  /** MEASUREMENT-ONLY A/B twin of [[throttledPings]] with the bounded-state
-    * machinery removed: no watermark, no event-time timeout, state lives
-    * for the lifetime of the user key. Identical keep/suppress verdicts on
-    * in-order bounded input; state grows with LIFETIME user cardinality,
-    * which is exactly the unbounded-state pattern the production operator
-    * exists to avoid — so this is NOT an operator, it is the control arm
-    * of [[graft.queries.ThrottleAB]]'s cost decomposition (round-11
-    * verdict: attribute q179's 1.96 → 6.93 s regression to harness
-    * contention vs the TTL machinery's real per-batch work).
-    */
-  private[graft] def throttledPingsUnboundedState(pings: Dataset[Ping],
-      gapUs: Long): Dataset[Ping] = {
-    import pings.sparkSession.implicits._
-    pings
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastSeen, Ping](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, batch: Iterator[Ping], state: GroupState[LastSeen]) =>
-          val sorted = batch.toArray.sortBy(p => (p.tsu, p.event_id))
-          var last: Option[Long] = state.getOption.map(_.tsu)
-          val kept = sorted.filter { p =>
-            val keep = last.forall(l => p.tsu - l > gapUs)
-            last = Some(last.map(math.max(_, p.tsu)).getOrElse(p.tsu))
-            keep
-          }
-          last.foreach(l => state.update(LastSeen(l)))
-          kept.iterator
-      }
-  }
-
   /** A gap alert: user `user_id` was silent from `prev_tsu` to `tsu`
     * (strictly longer than the configured gap), detected when the
     * closing event arrived.

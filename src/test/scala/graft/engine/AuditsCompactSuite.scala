@@ -34,7 +34,7 @@ class AuditsCompactSuite extends SparkSpec {
         Audits.enforce(df, Audits.contractAudits))
     }
     it("a failing model audit aborts materialization before the swap") {
-      val wh = Files.createTempDirectory("graft_audit").resolve("w")
+      val wh = tempDir("graft_audit").resolve("w")
       val bad = Pipeline.ModelSpec("m.bad", Nil,
         (s, _) => { import s.implicits._
           Seq((null.asInstanceOf[String], 1.0)).toDF("job_title", "total_amount") },
@@ -44,7 +44,7 @@ class AuditsCompactSuite extends SparkSpec {
       assert(!Files.exists(wh)) // never went live
     }
     it("audits attach to the production ingest path per model name") {
-      val storage = Files.createTempDirectory("graft_audit_ingest")
+      val storage = tempDir("graft_audit_ingest")
       val users = Tenancy.parseUsersJson(
         s"""{"T": {"password": "${Tenancy.sha256Hex("p")}", "industry_type": "corporate"}}""")
       val csv = storage.resolve("src.csv")
@@ -83,7 +83,7 @@ class AuditsCompactSuite extends SparkSpec {
 
   describe("Warehouse.writePartitioned") {
     it("prunes partitions at planning time for partition-column filters") {
-      val dir = Files.createTempDirectory("graft_part").resolve("events")
+      val dir = tempDir("graft_part").resolve("events")
       val prevNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
       try {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -110,7 +110,7 @@ class AuditsCompactSuite extends SparkSpec {
       }
     }
     it("compacting a partitioned dir preserves the layout") {
-      val dir = Files.createTempDirectory("graft_part2").resolve("t")
+      val dir = tempDir("graft_part2").resolve("t")
       import spark.implicits._
       val df = (1 to 1000).map(i => (s"k${i % 3}", i)).toDF("part", "v")
         .repartition(10)
@@ -129,7 +129,7 @@ class AuditsCompactSuite extends SparkSpec {
 
   describe("Warehouse.compact") {
     it("rewrites many small files into few, preserving data") {
-      val dir = Files.createTempDirectory("graft_compact").resolve("t")
+      val dir = tempDir("graft_compact").resolve("t")
       spark.range(10000).selectExpr("id", "id * 2 as v")
         .repartition(40) // 40 tiny files
         .write.parquet(dir.toString)
@@ -147,7 +147,7 @@ class AuditsCompactSuite extends SparkSpec {
     }
 
     it("is a no-op on a dir with no parquet bytes") {
-      val dir = Files.createTempDirectory("graft_compact_empty").resolve("t")
+      val dir = tempDir("graft_compact_empty").resolve("t")
       Files.createDirectories(dir)
       Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
       Warehouse.compact(spark, dir.toString) // must not throw

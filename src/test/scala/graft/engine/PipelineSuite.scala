@@ -12,8 +12,6 @@ class PipelineSuite extends SparkSpec {
 
   private val frozen = lit("2020-01-01 00:00:00").cast("timestamp")
 
-  private def tmpDir = Files.createTempDirectory("graft_test")
-
   private val usersJson =
     """{
       |  "LA_Office": {"password": "%s", "industry_type": "corporate"},
@@ -55,7 +53,7 @@ class PipelineSuite extends SparkSpec {
   }
 
   describe("ingest end-to-end (corporate)") {
-    val storage = tmpDir
+    val storage = tempDir("graft_test")
     val csv = storage.resolve("corporate_src.csv")
     Files.write(csv,
       ("""Row ID,Year,Department Title,Job Class Title,Employment Type,Base Pay,Overtime Pay,Longevity Bonus Pay,Average Benefit Cost

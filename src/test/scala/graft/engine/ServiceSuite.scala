@@ -12,7 +12,7 @@ import graft.SparkSpec
 class ServiceSuite extends SparkSpec {
 
   private val frozen = lit("2020-01-01 00:00:00").cast("timestamp")
-  private val storage = Files.createTempDirectory("graft_svc")
+  private val storage = tempDir("graft_svc")
   private val users = Tenancy.parseUsersJson(
     """{
       |  "LA": {"password": "%s", "industry_type": "corporate"},

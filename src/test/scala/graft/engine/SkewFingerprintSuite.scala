@@ -28,7 +28,7 @@ class SkewFingerprintSuite extends SparkSpec {
 
   describe("Pipeline.ingestIfChanged (M5 fingerprint cache)") {
     it("skips the rebuild when input and models are unchanged") {
-      val storage = Files.createTempDirectory("graft_fp")
+      val storage = tempDir("graft_fp")
       val users = Tenancy.parseUsersJson(
         s"""{"T": {"password": "${Tenancy.sha256Hex("p")}", "industry_type": "corporate"}}""")
       val csv = storage.resolve("src.csv")

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -38,7 +39,23 @@ class WarehouseSuite extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  // the shared session installs GraftExtensions, so these specs first
+  // drop the injected function to test registerFunctions on its own
+  private def dropInjected(name: String): Unit = {
+    val id = FunctionIdentifier(name)
+    spark.sessionState.functionRegistry.dropFunction(id)
+    assert(!spark.sessionState.functionRegistry.functionExists(id))
+  }
+
+  it("the session builds with the engine's SQL functions injected") {
+    val r = spark.sql(
+      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
+      .collect()(0).getDouble(0)
+    assert(r == 11.0)
+  }
+
   it("SQL surface exposes graft_dot after registration") {
+    dropInjected("graft_dot")
     GraftSession.registerFunctions(spark)
     val r = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
@@ -47,6 +64,7 @@ class WarehouseSuite extends SparkSpec {
   }
 
   it("SQL surface exposes graft_int_dot after registration") {
+    dropInjected("graft_int_dot")
     GraftSession.registerFunctions(spark)
     val r = spark.sql(
       "SELECT graft_int_dot(array(1L, -2L), array(3L, 4L)) AS d")

@@ -120,7 +120,7 @@ class MultimodalStreamingSuite extends SparkSpec {
 
     it("sinks micro-batches to a parquet warehouse dir") {
       implicit val sc = spark.sqlContext
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+      val dir = tempDir("graft_stream")
       val src = MemoryStream[EventStream.Event]
       src.addData(ev(1, "2026-01-01 10:00:00", 1, "click", 1.0),
         ev(2, "2026-01-01 10:05:00", 2, "view", 2.0))

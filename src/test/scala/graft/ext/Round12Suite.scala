@@ -8,152 +8,129 @@ import org.apache.spark.sql.types._
 class Round12Suite extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(prefix)
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
-
   describe("Warehouse.durableAdditiveMvFold") {
     // the additive-schema contract: the batch carries the summands. The
     // file stream source lists FILES in its directory (no recursion), so
     // the single part file is moved up as a flat file.
     def additive(dir: java.nio.file.Path, name: String,
                  rows: Seq[(String, Long)]): Unit = {
-      val scratch = tmpDir("mv_scratch")
-      try {
-        rows.map { case (t, v) => (t, 1L, v) }
-          .toDF("event_type", "n", "vc_sum")
-          .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-        import scala.jdk.CollectionConverters._
-        val part = java.nio.file.Files.list(scratch).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        java.nio.file.Files.move(part, dir.resolve(name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally rmTree(scratch)
+      val scratch = tempDir("mv_scratch")
+      rows.map { case (t, v) => (t, 1L, v) }
+        .toDF("event_type", "n", "vc_sum")
+        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+      import scala.jdk.CollectionConverters._
+      val part = java.nio.file.Files.list(scratch).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      java.nio.file.Files.move(part, dir.resolve(name),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
 
     it("survives a restart from the checkpoint without double-counting") {
-      val inDir = tmpDir("mv_in"); val ck = tmpDir("mv_ck")
-      val mv = tmpDir("mv_out")
-      try {
-        val aSchema = StructType(Seq(
-          StructField("event_type", StringType),
-          StructField("n", LongType), StructField("vc_sum", LongType)))
-        def run(): Unit = {
-          val q = spark.readStream.schema(aSchema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inDir.toString)
-            .writeStream
-            .option("checkpointLocation", ck.toString)
-            .foreachBatch(Warehouse.durableAdditiveMvFold(mv.toString,
-              Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        additive(inDir, "a.parquet",
-          Seq(("click", 10L), ("click", 20L), ("view", 5L)))
-        run() // first lifetime: folds file A, then the query STOPS —
-        // the kill-between-batches restart case by construction
-        val afterA = Warehouse.readDurableMv(spark, mv.toString).get
-          .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-        assert(afterA == Seq(("click", 2L, 30L), ("view", 1L, 5L)))
+      val inDir = tempDir("mv_in"); val ck = tempDir("mv_ck")
+      val mv = tempDir("mv_out")
+      val aSchema = StructType(Seq(
+        StructField("event_type", StringType),
+        StructField("n", LongType), StructField("vc_sum", LongType)))
+      def run(): Unit = {
+        val q = spark.readStream.schema(aSchema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(inDir.toString)
+          .writeStream
+          .option("checkpointLocation", ck.toString)
+          .foreachBatch(Warehouse.durableAdditiveMvFold(mv.toString,
+            Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      additive(inDir, "a.parquet",
+        Seq(("click", 10L), ("click", 20L), ("view", 5L)))
+      run() // first lifetime: folds file A, then the query STOPS —
+      // the kill-between-batches restart case by construction
+      val afterA = Warehouse.readDurableMv(spark, mv.toString).get
+        .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(afterA == Seq(("click", 2L, 30L), ("view", 1L, 5L)))
 
-        additive(inDir, "b.parquet", Seq(("click", 7L), ("buy", 100L)))
-        run() // restart from the SAME checkpoint: only B may fold — the
-        // source's offset log must not re-apply A, and the fold must
-        // continue from the committed generation
-        val afterB = Warehouse.readDurableMv(spark, mv.toString).get
-          .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-        assert(afterB == Seq(("buy", 1L, 100L), ("click", 3L, 37L),
-          ("view", 1L, 5L)))
-      } finally { rmTree(inDir); rmTree(ck); rmTree(mv) }
+      additive(inDir, "b.parquet", Seq(("click", 7L), ("buy", 100L)))
+      run() // restart from the SAME checkpoint: only B may fold — the
+      // source's offset log must not re-apply A, and the fold must
+      // continue from the committed generation
+      val afterB = Warehouse.readDurableMv(spark, mv.toString).get
+        .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(afterB == Seq(("buy", 1L, 100L), ("click", 3L, 37L),
+        ("view", 1L, 5L)))
     }
 
     it("skips a re-delivered batchId (at-least-once -> exactly-once)") {
-      val mv = tmpDir("mv_redeliver")
-      try {
-        val fold = Warehouse.durableAdditiveMvFold(mv.toString,
-          Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _
-        val b0 = Seq(("click", 1L, 10L)).toDF("event_type", "n", "vc_sum")
-        fold(b0, 0L)
-        // crash-after-commit re-delivery: same batchId arrives again
-        // (possibly with identical content) — the guard must no-op
-        fold(b0, 0L)
-        fold(Seq(("click", 1L, 99L)).toDF("event_type", "n", "vc_sum"), 0L)
-        val got = Warehouse.readDurableMv(spark, mv.toString).get
-          .as[(String, Long, Long)].collect().toSeq
-        assert(got == Seq(("click", 1L, 10L)))
-        // the next batchId folds normally
-        fold(Seq(("click", 2L, 30L)).toDF("event_type", "n", "vc_sum"), 1L)
-        val got2 = Warehouse.readDurableMv(spark, mv.toString).get
-          .as[(String, Long, Long)].collect().toSeq
-        assert(got2 == Seq(("click", 3L, 40L)))
-      } finally rmTree(mv)
+      val mv = tempDir("mv_redeliver")
+      val fold = Warehouse.durableAdditiveMvFold(mv.toString,
+        Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _
+      val b0 = Seq(("click", 1L, 10L)).toDF("event_type", "n", "vc_sum")
+      fold(b0, 0L)
+      // crash-after-commit re-delivery: same batchId arrives again
+      // (possibly with identical content) — the guard must no-op
+      fold(b0, 0L)
+      fold(Seq(("click", 1L, 99L)).toDF("event_type", "n", "vc_sum"), 0L)
+      val got = Warehouse.readDurableMv(spark, mv.toString).get
+        .as[(String, Long, Long)].collect().toSeq
+      assert(got == Seq(("click", 1L, 10L)))
+      // the next batchId folds normally
+      fold(Seq(("click", 2L, 30L)).toDF("event_type", "n", "vc_sum"), 1L)
+      val got2 = Warehouse.readDurableMv(spark, mv.toString).get
+        .as[(String, Long, Long)].collect().toSeq
+      assert(got2 == Seq(("click", 3L, 40L)))
     }
 
     it("re-folds a crashed half-write of the SAME batch from the old " +
        "generation (crash between write and commit)") {
-      val mv = tmpDir("mv_crash")
-      try {
-        val fold = Warehouse.durableAdditiveMvFold(mv.toString,
-          Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _
-        fold(Seq(("click", 1L, 10L)).toDF("event_type", "n", "vc_sum"), 0L)
-        // simulate the crash window: gen-1 exists on disk but _committed
-        // still points at gen-0 (steps 3..4 of the protocol interrupted)
-        Seq(("garbage", 9L, 9L)).toDF("event_type", "n", "vc_sum")
-          .write.mode("overwrite")
-          .parquet(java.nio.file.Paths.get(mv.toString, "gen-1").toString)
-        // the re-delivered batch 1 must fold from the COMMITTED gen-0,
-        // overwriting the half-written gen-1
-        fold(Seq(("view", 1L, 5L)).toDF("event_type", "n", "vc_sum"), 1L)
-        val got = Warehouse.readDurableMv(spark, mv.toString).get
-          .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-        assert(got == Seq(("click", 1L, 10L), ("view", 1L, 5L)))
-      } finally rmTree(mv)
+      val mv = tempDir("mv_crash")
+      val fold = Warehouse.durableAdditiveMvFold(mv.toString,
+        Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _
+      fold(Seq(("click", 1L, 10L)).toDF("event_type", "n", "vc_sum"), 0L)
+      // simulate the crash window: gen-1 exists on disk but _committed
+      // still points at gen-0 (steps 3..4 of the protocol interrupted)
+      Seq(("garbage", 9L, 9L)).toDF("event_type", "n", "vc_sum")
+        .write.mode("overwrite")
+        .parquet(java.nio.file.Paths.get(mv.toString, "gen-1").toString)
+      // the re-delivered batch 1 must fold from the COMMITTED gen-0,
+      // overwriting the half-written gen-1
+      fold(Seq(("view", 1L, 5L)).toDF("event_type", "n", "vc_sum"), 1L)
+      val got = Warehouse.readDurableMv(spark, mv.toString).get
+        .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(got == Seq(("click", 1L, 10L), ("view", 1L, 5L)))
     }
   }
 
   describe("Round11Queries.labelCentroids cache invalidation") {
     it("observes a fresh model after the embeddings table is regenerated") {
-      val dir = tmpDir("centroids")
-      try {
-        def writeEmb(values: Seq[(Long, Seq[Float])]): Unit = {
-          values.toDF("label", "embedding").coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dir.resolve("embeddings.parquet").toString)
-          // mtime granularity on some filesystems is 1 s; force distinct
-          // fingerprints the way a driver-side regeneration (seconds
-          // apart) would naturally have them
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(dir.resolve("embeddings.parquet"))
-          try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-            .foreach { p =>
-              java.nio.file.Files.setLastModifiedTime(p,
-                java.nio.file.attribute.FileTime.fromMillis(
-                  System.nanoTime() / 1000))
-            }
-          finally walk.close()
-        }
-        writeEmb(Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f))))
-        val (l1, c1) = graft.queries.Round11Queries.labelCentroids(
-          spark, dir.toString)
-        assert(l1 == Seq(0L, 1L))
-        assert(c1.head.head == 1.0)
-        writeEmb(Seq((0L, Seq(3f, 0f)), (1L, Seq(0f, 5f))))
-        val (_, c2) = graft.queries.Round11Queries.labelCentroids(
-          spark, dir.toString)
-        assert(c2.head.head == 3.0) // stale cache would still say 1.0
-        assert(c2(1)(1) == 5.0)
-      } finally rmTree(dir)
+      val dir = tempDir("centroids")
+      def writeEmb(values: Seq[(Long, Seq[Float])]): Unit = {
+        values.toDF("label", "embedding").coalesce(1)
+          .write.mode("overwrite")
+          .parquet(dir.resolve("embeddings.parquet").toString)
+        // mtime granularity on some filesystems is 1 s; force distinct
+        // fingerprints the way a driver-side regeneration (seconds
+        // apart) would naturally have them
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(dir.resolve("embeddings.parquet"))
+        try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .foreach { p =>
+            java.nio.file.Files.setLastModifiedTime(p,
+              java.nio.file.attribute.FileTime.fromMillis(
+                System.nanoTime() / 1000))
+          }
+        finally walk.close()
+      }
+      writeEmb(Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f))))
+      val (l1, c1) = graft.queries.Round11Queries.labelCentroids(
+        spark, dir.toString)
+      assert(l1 == Seq(0L, 1L))
+      assert(c1.head.head == 1.0)
+      writeEmb(Seq((0L, Seq(3f, 0f)), (1L, Seq(0f, 5f))))
+      val (_, c2) = graft.queries.Round11Queries.labelCentroids(
+        spark, dir.toString)
+      assert(c2.head.head == 3.0) // stale cache would still say 1.0
+      assert(c2(1)(1) == 5.0)
     }
   }
 

@@ -191,8 +191,7 @@ class Round14Suite extends SparkSpec {
     }
 
     it("model parquet roundtrip is exact") {
-      val path = java.nio.file.Files
-        .createTempDirectory("pq_rt_").resolve("m").toString
+      val path = tempDir("pq_rt_").resolve("m").toString
       Pq.saveModel(spark, model, path)
       val back = Pq.loadModel(spark, path)
       assert(back == model)

@@ -15,7 +15,7 @@ class Round15Suite extends SparkSpec {
   private def embeddings = spark.read.parquet(s"$sf/embeddings.parquet")
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
+    tempDir(prefix).resolve("t").toString
 
   describe("Pq.modelHash") {
     it("separates models and ignores nothing") {

@@ -106,74 +106,60 @@ class Round16Suite extends SparkSpec {
     // happen) — and the restarted query must converge to exactly the
     // batch census: no double-fold of the crashed batch, no loss.
     it("kill after side-effect, before engine commit; restart == batch oracle") {
-      def tmpDir(p: String) = java.nio.file.Files.createTempDirectory(p)
-      def rmTree(p: java.nio.file.Path): Unit = {
+      val inDir = tempDir("crash_in"); val ck = tempDir("crash_ck")
+      val mv = tempDir("crash_mv")
+      val aSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("event_type",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("n",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("vc_sum",
+          org.apache.spark.sql.types.LongType)))
+      def file(name: String, rows: Seq[(String, Long, Long)]): Unit = {
+        val scratch = tempDir("crash_scratch")
+        rows.toDF("event_type", "n", "vc_sum")
+          .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
         import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally walk.close()
+        val part = java.nio.file.Files.list(scratch).iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        java.nio.file.Files.move(part, inDir.resolve(name))
+      }
+      val fold = graft.engine.Warehouse.durableAdditiveMvFold(
+        mv.toString, Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _
+      def run(crashOnBatch: Option[Long]): Unit = {
+        val q = spark.readStream.schema(aSchema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(inDir.toString)
+          .writeStream
+          .option("checkpointLocation", ck.toString)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            fold(b, id)
+            if (crashOnBatch.contains(id))
+              throw new RuntimeException("injected crash after side-effect")
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        try q.awaitTermination()
+        catch {
+          case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+            assert(crashOnBatch.nonEmpty,
+              s"unexpected stream failure: ${e.getMessage}")
         }
       }
-      val inDir = tmpDir("crash_in"); val ck = tmpDir("crash_ck")
-      val mv = tmpDir("crash_mv")
-      try {
-        val aSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("vc_sum",
-            org.apache.spark.sql.types.LongType)))
-        def file(name: String, rows: Seq[(String, Long, Long)]): Unit = {
-          val scratch = tmpDir("crash_scratch")
-          try {
-            rows.toDF("event_type", "n", "vc_sum")
-              .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-            import scala.jdk.CollectionConverters._
-            val part = java.nio.file.Files.list(scratch).iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet")).get
-            java.nio.file.Files.move(part, inDir.resolve(name))
-          } finally rmTree(scratch)
-        }
-        val fold = graft.engine.Warehouse.durableAdditiveMvFold(
-          mv.toString, Seq("event_type"), Seq("n", "vc_sum"), Some("n")) _
-        def run(crashOnBatch: Option[Long]): Unit = {
-          val q = spark.readStream.schema(aSchema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inDir.toString)
-            .writeStream
-            .option("checkpointLocation", ck.toString)
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              fold(b, id)
-              if (crashOnBatch.contains(id))
-                throw new RuntimeException("injected crash after side-effect")
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          catch {
-            case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-              assert(crashOnBatch.nonEmpty,
-                s"unexpected stream failure: ${e.getMessage}")
-          }
-        }
-        file("a.parquet", Seq(("click", 1L, 10L), ("view", 1L, 5L)))
-        file("b.parquet", Seq(("click", 1L, 7L), ("buy", 1L, 100L)))
-        file("c.parquet", Seq(("view", 1L, 3L)))
-        // lifetime 1: batch 0 folds+commits; batch 1 folds, then the
-        // query DIES before the engine commit — the offset log has
-        // batch 1, the commit log does not
-        run(crashOnBatch = Some(1L))
-        // lifetime 2: the engine re-delivers batch 1 (the fold's
-        // batchId guard must no-op), then folds batch 2
-        run(crashOnBatch = None)
-        val got = graft.engine.Warehouse.readDurableMv(spark, mv.toString)
-          .get.as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-        assert(got == Seq(("buy", 1L, 100L), ("click", 2L, 17L),
-          ("view", 2L, 8L)))
-      } finally { rmTree(inDir); rmTree(ck); rmTree(mv) }
+      file("a.parquet", Seq(("click", 1L, 10L), ("view", 1L, 5L)))
+      file("b.parquet", Seq(("click", 1L, 7L), ("buy", 1L, 100L)))
+      file("c.parquet", Seq(("view", 1L, 3L)))
+      // lifetime 1: batch 0 folds+commits; batch 1 folds, then the
+      // query DIES before the engine commit — the offset log has
+      // batch 1, the commit log does not
+      run(crashOnBatch = Some(1L))
+      // lifetime 2: the engine re-delivers batch 1 (the fold's
+      // batchId guard must no-op), then folds batch 2
+      run(crashOnBatch = None)
+      val got = graft.engine.Warehouse.readDurableMv(spark, mv.toString)
+        .get.as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(got == Seq(("buy", 1L, 100L), ("click", 2L, 17L),
+        ("view", 2L, 8L)))
     }
   }
 

@@ -213,7 +213,7 @@ class Round5Suite extends SparkSpec {
 
   describe("Readers.jsonl") {
     it("round-trips records through newline-delimited JSON") {
-      val tmp = java.nio.file.Files.createTempDirectory("jsonl_spec")
+      val tmp = tempDir("jsonl_spec")
         .toString
       val src = Seq((1L, "with \"quotes\" and\ttabs"), (2L, "plain"))
         .toDF("id", "s")

@@ -213,22 +213,15 @@ class Round6Suite extends SparkSpec {
 
   describe("Readers.parquetMerged / Skew.heavyKeys") {
     it("merges evolving schemas by name, null-filling old files") {
-      val tmp = java.nio.file.Files.createTempDirectory("evo_test")
-      try {
-        Seq((1L, 10.0)).toDF("k", "v").write.parquet(s"$tmp/v1")
-        Seq((2L, 20.0, "x")).toDF("k", "v", "tag")
-          .write.parquet(s"$tmp/v2")
-        val got = graft.engine.Readers
-          .parquetMerged(spark, Seq(s"$tmp/v1", s"$tmp/v2"))
-          .select("k", "v", "tag").as[(Long, Double, Option[String])]
-          .collect().sortBy(_._1).toSeq
-        assert(got == Seq((1L, 10.0, None), (2L, 20.0, Some("x"))))
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      val tmp = tempDir("evo_test")
+      Seq((1L, 10.0)).toDF("k", "v").write.parquet(s"$tmp/v1")
+      Seq((2L, 20.0, "x")).toDF("k", "v", "tag")
+        .write.parquet(s"$tmp/v2")
+      val got = graft.engine.Readers
+        .parquetMerged(spark, Seq(s"$tmp/v1", s"$tmp/v2"))
+        .select("k", "v", "tag").as[(Long, Double, Option[String])]
+        .collect().sortBy(_._1).toSeq
+      assert(got == Seq((1L, 10.0, None), (2L, 20.0, Some("x"))))
     }
 
     it("heavyKeys returns only keys past the threshold") {

@@ -277,22 +277,20 @@ class Round7Suite extends SparkSpec {
 
   describe("Warehouse partitioned layout") {
     it("pruned reads plan PartitionFilters on the partition column") {
-      val tmp = java.nio.file.Files.createTempDirectory("r7_part")
-      try {
-        val li = spark.read
+      val tmp = tempDir("r7_part")
+      val li = spark.read
           .parquet("/root/testdata/sf0.001/lineitem.parquet")
           .select("l_orderkey", "l_returnflag", "l_quantity")
-        graft.engine.Warehouse.writePartitioned(li, s"$tmp/li",
-          "l_returnflag")
-        val q = spark.read.parquet(s"$tmp/li")
-          .filter(col("l_returnflag") === "R")
-        val plan = q.queryExecution.executedPlan.toString
-        assert(plan.contains("PartitionFilters") &&
-          plan.matches("(?s).*PartitionFilters: \\[[^\\]]*l_returnflag[^\\]]*\\].*"),
-          s"expected a pushed partition filter in:\n$plan")
-        // and the pruned read matches the plain filter
-        assert(q.count() == li.filter(col("l_returnflag") === "R").count())
-      } finally graft.engine.Pipeline.deleteRecursively(tmp)
+      graft.engine.Warehouse.writePartitioned(li, s"$tmp/li",
+        "l_returnflag")
+      val q = spark.read.parquet(s"$tmp/li")
+        .filter(col("l_returnflag") === "R")
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") &&
+        plan.matches("(?s).*PartitionFilters: \\[[^\\]]*l_returnflag[^\\]]*\\].*"),
+        s"expected a pushed partition filter in:\n$plan")
+      // and the pruned read matches the plain filter
+      assert(q.count() == li.filter(col("l_returnflag") === "R").count())
     }
   }
 
@@ -321,31 +319,29 @@ class Round7Suite extends SparkSpec {
 
   describe("PERMISSIVE corrupt-record accounting (q128 shape)") {
     it("routes a schema-drift line (valid JSON, wrong type) to _corrupt") {
-      val tmp = java.nio.file.Files.createTempDirectory("r8_jsonl")
-      try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$tmp/data.json"),
-          """{"l_orderkey": 1, "l_quantity": 2.5}
-            |{"l_orderkey": "not-a-number", "l_quantity": 3.0}
-            |{broken
-            |""".stripMargin)
-        val read = spark.read
-          .schema("l_orderkey BIGINT, l_quantity DOUBLE, _corrupt STRING")
-          .option("columnNameOfCorruptRecord", "_corrupt")
-          .json(tmp.toString)
-        val rows = read.collect()
-        assert(rows.length == 3)
-        // drifted line: parses as JSON but fails the BIGINT cast -> raw
-        // text lands in _corrupt (counted bad, never silently dropped or
-        // half-parsed into the aggregate)
-        val bad = rows.filter(r => !r.isNullAt(2))
-        assert(bad.length == 2)
-        assert(bad.exists(_.getString(2).contains("not-a-number")))
-        assert(bad.exists(_.getString(2).contains("{broken")))
-        val good = rows.filter(_.isNullAt(2))
-        assert(good.length == 1 && good.head.getLong(0) == 1L &&
-          good.head.getDouble(1) == 2.5)
-      } finally graft.engine.Pipeline.deleteRecursively(tmp)
+      val tmp = tempDir("r8_jsonl")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$tmp/data.json"),
+        """{"l_orderkey": 1, "l_quantity": 2.5}
+          |{"l_orderkey": "not-a-number", "l_quantity": 3.0}
+          |{broken
+          |""".stripMargin)
+      val read = spark.read
+        .schema("l_orderkey BIGINT, l_quantity DOUBLE, _corrupt STRING")
+        .option("columnNameOfCorruptRecord", "_corrupt")
+        .json(tmp.toString)
+      val rows = read.collect()
+      assert(rows.length == 3)
+      // drifted line: parses as JSON but fails the BIGINT cast -> raw
+      // text lands in _corrupt (counted bad, never silently dropped or
+      // half-parsed into the aggregate)
+      val bad = rows.filter(r => !r.isNullAt(2))
+      assert(bad.length == 2)
+      assert(bad.exists(_.getString(2).contains("not-a-number")))
+      assert(bad.exists(_.getString(2).contains("{broken")))
+      val good = rows.filter(_.isNullAt(2))
+      assert(good.length == 1 && good.head.getLong(0) == 1L &&
+        good.head.getDouble(1) == 2.5)
     }
   }
 

@@ -121,26 +121,24 @@ class Round8Suite extends SparkSpec {
     }
 
     it("writes range-disjoint z-spans per file (the skipping property)") {
-      val tmp = java.nio.file.Files.createTempDirectory("r8_zorder")
-      try {
-        val df = spark.range(20000).select(
-          (col("id") % 512).as("x"), ((col("id") * 7) % 512).as("y"))
-        ZOrder.writeZOrdered(df, s"$tmp/z", col("x"), col("y"),
-          bits = 9, partitions = 8)
-        val spans = spark.read.parquet(s"$tmp/z")
-          .groupBy(input_file_name().as("f"))
-          .agg(min("z").as("lo"), max("z").as("hi"))
-          .orderBy("lo")
-          .as[(String, Long, Long)].collect()
-        assert(spans.length == 8)
-        spans.sliding(2).foreach {
-          case Array(a, b) => assert(a._3 < b._2,
-            s"overlapping file z-spans: $a vs $b")
-          case _ =>
-        }
-        // layout is result-invisible
-        assert(spark.read.parquet(s"$tmp/z").count() == 20000)
-      } finally graft.engine.Pipeline.deleteRecursively(tmp)
+      val tmp = tempDir("r8_zorder")
+      val df = spark.range(20000).select(
+        (col("id") % 512).as("x"), ((col("id") * 7) % 512).as("y"))
+      ZOrder.writeZOrdered(df, s"$tmp/z", col("x"), col("y"),
+        bits = 9, partitions = 8)
+      val spans = spark.read.parquet(s"$tmp/z")
+        .groupBy(input_file_name().as("f"))
+        .agg(min("z").as("lo"), max("z").as("hi"))
+        .orderBy("lo")
+        .as[(String, Long, Long)].collect()
+      assert(spans.length == 8)
+      spans.sliding(2).foreach {
+        case Array(a, b) => assert(a._3 < b._2,
+          s"overlapping file z-spans: $a vs $b")
+        case _ =>
+      }
+      // layout is result-invisible
+      assert(spark.read.parquet(s"$tmp/z").count() == 20000)
     }
   }
 
