@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import graft.engine.GraftSession
 
 /** Driver benchmark: times every registered query at SPARK_GRAFT_SF_DIR and
@@ -39,6 +41,14 @@ object Bench {
       s"queries, registry has $curCount — docs/bench_prev.json may be " +
       "stale (expected when queries were added this round; anything else " +
       "means the prev refresh was skipped)")
+
+  /** (classes compiled, Janino ms) in this JVM so far. Spark keeps both
+    * JVM-wide, so a delta around one measurement is that measurement's
+    * codegen cost only while nothing else runs beside it.
+    */
+  private def codegenTotals(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e6)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -86,21 +96,24 @@ object Bench {
     // materialize the ALREADY-optimized plan: .count() would re-optimize
     // with a count aggregate on top, pruning every unused projection and
     // dropping sorts — q02's "full export" would time a bare row count.
-    // Returns (elapsed, largest stall observed inside the measurement).
+    // Returns (elapsed, largest stall observed inside the measurement,
+    // the DataFrame, (classes compiled, Janino ms) during it).
     // After timing, release any localCheckpoint the query pinned
     // (Checkpoints.release is a no-op for plans without a LogicalRDD
     // leaf): q65/q123/q141/q143 pin one generation per run by documented
     // contract, so a 3-sweep bench would otherwise hold ~12 dead tables.
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, org.apache.spark.sql.DataFrame) = {
+        : (Double, Double, org.apache.spark.sql.DataFrame, (Long, Double)) = {
       StallMeter.mark()
+      val (n0, ms0) = codegenTotals()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       df.queryExecution.toRdd.foreach(_ => ())
       val t = (System.nanoTime() - t0) / 1e9
       val stall = StallMeter.gapSec()
+      val (n1, ms1) = codegenTotals()
       graft.ext.Checkpoints.release(df)
-      (t, stall, df)
+      (t, stall, df, (n1 - n0, ms1 - ms0))
     }
     // Physical-plan fingerprint per query ([[PlanFp.fp]]): round-over-round
     // diffs of this map separate "the plan changed" from "the data or the
@@ -123,20 +136,26 @@ object Bench {
     val times = scala.collection.mutable.Map.empty[String, Double]
     // stall gap observed during the measurement that PRODUCED times(name)
     val stallAtMin = scala.collection.mutable.Map.empty[String, Double]
+    // (classes compiled, Janino ms) during that same measurement
+    val codegenAtMin = scala.collection.mutable.Map.empty[String, (Long, Double)]
     val meas = scala.collection.mutable.Map.empty[String, Int]
     val retried = scala.collection.mutable.Set.empty[String]
     val sweepTotals = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // classes compiled per sweep: sweep 1 counts the surface's distinct
+    // generated classes; a later sweep above 0 means the cache evicted
+    val sweepCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     def short(name: String): String = name.takeWhile(_ != '_')
     def measure(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Unit = {
       try {
-        val (t, stall, df) = once(fn)
+        val (t, stall, df, codegen) = once(fn)
         if (!planFps.contains(name)) planFps(name) = PlanFp.fp(df)
         if (t < times.getOrElse(name, Double.MaxValue)) {
           times(name) = t
           stallAtMin(name) = stall
+          codegenAtMin(name) = codegen
         }
       } catch {
         case e: Throwable =>
@@ -238,6 +257,10 @@ object Bench {
       }.getOrElse("")
       // complete artifact -> file (kill-safe: rewritten on every emit)
       val fullQs = jmap(results.map { case (k, v) => short(k) -> v }, fmt)
+      // per query [classes compiled, Janino ms] of the reported run
+      val fullCodegen = jmap(results.collect {
+        case (k, _) if codegenAtMin.contains(k) => short(k) -> codegenAtMin(k)
+      }, (c: (Long, Double)) => "[" + c._1 + "," + fmt(c._2) + "]")
       val fullFps = jmap(results.map { case (k, _) =>
         short(k) -> planFps.getOrElse(k, "unmeasured")
       }, (s: String) => "\"" + s + "\"")
@@ -270,7 +293,7 @@ object Bench {
           "\"" + sk + "\":[" + fmt(v) + "," + fmt(p) + "," + fc + "]"
         }.mkString("{", ",", "}") + ","
       val fullJson =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","streaming_sec":${fmt(streaming)},"relational_sec":${fmt(total - streaming)},"sweeps_completed":${sweepTotals.size},"sweep_sec":$sweeps,"max_stall_sec":${fmt(StallMeter.runMaxGapSec())},"retried":${retried.size},$ingestPart$deltaAgg$deltaDetail"stalls":${jmap(stallsAll, fmt)},"slow_meas":${jmap(slowAll.map { case (k, v) => k -> v.toLong }, (n: Long) => n.toString)},"meas":${jmap(results.map { case (k, _) => short(k) -> meas.getOrElse(k, 0).toLong }, (n: Long) => n.toString)},"plan_fp":$fullFps,"queries":$fullQs,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","streaming_sec":${fmt(streaming)},"relational_sec":${fmt(total - streaming)},"sweeps_completed":${sweepTotals.size},"sweep_sec":$sweeps,"max_stall_sec":${fmt(StallMeter.runMaxGapSec())},"retried":${retried.size},"sweep_compiles":${sweepCompiles.mkString("[", ",", "]")},$ingestPart$deltaAgg$deltaDetail"stalls":${jmap(stallsAll, fmt)},"slow_meas":${jmap(slowAll.map { case (k, v) => k -> v.toLong }, (n: Long) => n.toString)},"meas":${jmap(results.map { case (k, _) => short(k) -> meas.getOrElse(k, 0).toLong }, (n: Long) => n.toString)},"plan_fp":$fullFps,"codegen":$fullCodegen,"queries":$fullQs,"sf":"$sfDir"}"""
       try {
         val p = java.nio.file.Paths.get(fullPath).toAbsolutePath
         if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -366,6 +389,7 @@ object Bench {
     var go = true
     while (go) {
       val sweepT0 = System.nanoTime()
+      val sweepCompiles0 = codegenTotals()._1
       var done = 0
       // Sweep 1 runs in registry order; sweeps >= 2 run SLOWEST-FIRST
       // (streaming included in sweep 2 — min-of-2 for every query —
@@ -387,6 +411,7 @@ object Bench {
         if (done % 30 == 0) emit()
       }
       sweepTotals += (System.nanoTime() - sweepT0) / 1e9
+      sweepCompiles += codegenTotals()._1 - sweepCompiles0
       emit() // cumulative artifact after EVERY sweep — kill-safe
       retryOutliers()
       sweep += 1

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import graft.engine.{GraftSession, Pipeline, Tenancy}
 
@@ -25,10 +25,17 @@ object IngestBench {
     * CSV; returns (seconds, fact rows). Callable from [[Bench]] so every
     * round's artifact carries the ingest number the reference actually
     * publishes (BASELINE.md's only stated performance figures), not just
-    * the round-1 measurement.
+    * the round-1 measurement. Runs in a fresh temp storage dir, removed
+    * on return.
     */
   def run(spark: SparkSession, sizeMb: Int): (Double, Long) = {
     val storage = Files.createTempDirectory("graft_ingest_bench")
+    try runIn(spark, storage, sizeMb)
+    finally Pipeline.deleteRecursively(storage)
+  }
+
+  private def runIn(spark: SparkSession, storage: Path, sizeMb: Int)
+  : (Double, Long) = {
     val csv = storage.resolve("src.csv")
     val w = Files.newBufferedWriter(csv)
     w.write("Row ID,Year,Department Title,Job Class Title,Employment Type," +

@@ -23,7 +23,18 @@ import graft.functions.{DotProduct, IntDotProduct}
   *  - 128m scan partitions so executor memory bounds hold on wide rows
   *    (binary media columns);
   *  - broadcast threshold left at default — joins that MUST broadcast say
-  *    so in code (`broadcast()`), size-based choices stay Catalyst's.
+  *    so in code (`broadcast()`), size-based choices stay Catalyst's;
+  *  - the generated-class cache holds [[CodegenCacheEntries]] classes, not
+  *    Spark's 100. The cache is LRU, so a working set larger than the
+  *    bound misses on every pass and each warm re-execution pays Janino
+  *    again; the 7-query sf0.001 perfbench sample alone fills about 170
+  *    entries per pass. Each entry costs about 35 KB of heap plus 10 KB
+  *    of Metaspace, which is why the bound is not sized for a full
+  *    380-query sweep (5706 entries). `CodeGenerator` reads the size
+  *    once, when it first initializes, so it is a build-time conf: a
+  *    session the driver hands over ([[registerFunctions]]) keeps
+  *    whatever size its JVM started with. Measurements: "The recompile
+  *    nobody saw" in `docs/PLANS.md`.
   *
   * [[GraftSession.local]] is that builder on `local[cpus]` with the UI
   * off; every main and the test session are built through it.
@@ -46,6 +57,9 @@ object GraftSession {
       n.get
   }
 
+  /** Generated-class cache bound (`spark.sql.codegen.cache.maxEntries`). */
+  val CodegenCacheEntries = 2000
+
   def builder(appName: String = "graft",
               parallelism: Int = Runtime.getRuntime.availableProcessors)
   : SparkSession.Builder =
@@ -57,6 +71,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", parallelism.toString)
       .config("spark.sql.files.maxPartitionBytes", "134217728")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
 
   /** The [[builder]] session on `local[cpus]` with the UI off. */

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.Dedup
 
 /** Round-13 batch: exact substring-level dedup (the suffix-gram
@@ -16,7 +17,7 @@ import graft.ext.Dedup
 object Round13Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.{Dedup, Stats}
 import graft.functions.Portable.wsTokens
 
@@ -15,7 +16,7 @@ import graft.functions.Portable.wsTokens
 object Round13cQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.{Stats, TextAnalysis}
 
 /** Round-13 fourth batch: corpus-audit and distribution-shape
@@ -15,7 +16,7 @@ import graft.ext.{Stats, TextAnalysis}
 object Round13dQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.{Analytics, Dedup, Stats}
 import graft.functions.Portable.hash60
 
@@ -18,7 +19,7 @@ import graft.functions.Portable.hash60
 object Round13eQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 

@@ -15,7 +15,7 @@ import graft.functions.Portable
 object Round13gQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   /** hash60('purchase') as a compile-side constant — must equal the
     * engine expression conv(substr(md5(x),1,15),16,10).

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.{Mixture, Similarity}
 
 /** Round-13 ninth batch: data-selection primitives — k-center greedy
@@ -14,7 +15,7 @@ import graft.ext.{Mixture, Similarity}
 object Round13iQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val KSeeds = 4
 

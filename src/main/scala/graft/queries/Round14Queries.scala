@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.Pq
 
 /** Round-14 first batch: the FULL-DIMENSION product-quantization stack
@@ -22,7 +23,7 @@ import graft.ext.Pq
 object Round14Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   /** Bounded documents-stream harness — [[StreamingQueries
     * .runEventsStream]]'s symlink-scratch-dir pattern over
@@ -267,7 +268,8 @@ object Round14Queries {
 
   /** q344's saved-model parquet path, one per sf dir for the process
     * lifetime (same keying as [[hiCache]]): repeated invocations reload
-    * the SAME persisted model instead of leaking a temp dir per call.
+    * the SAME persisted model instead of leaking a temp dir per call,
+    * and a shutdown hook removes that one dir when the JVM exits.
     */
   private val savedModelCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -330,8 +332,9 @@ object Round14Queries {
     "q344_pq_model_roundtrip" -> ((s, dir) => {
       val model = hiModel(s, dir)
       val path = savedModelCache.computeIfAbsent(dir, _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("q344_model_").resolve("pq").toString
+        val root = java.nio.file.Files.createTempDirectory("q344_model_")
+        sys.addShutdownHook(graft.engine.Pipeline.deleteRecursively(root))
+        val p = root.resolve("pq").toString
         Pq.saveModel(s, model, p)
         p
       })

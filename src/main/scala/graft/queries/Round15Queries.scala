@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.Pq
 
 /** Round-15 batch: the two ANN operating points the round-14 verdict
@@ -39,7 +40,7 @@ import graft.ext.Pq
 object Round15Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   /** ≤ 32-byte config: m=32 subspaces × 8-bit codes (k=256) over the
     * raw coordinate order — the sweep's capacity-beats-permutation

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.KMeans
 
 /** Round-15 continuation batch — the q354 re-learning gate generalized
@@ -28,7 +29,7 @@ import graft.ext.KMeans
 object Round15bQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val K = 4
   private val Iters = 3

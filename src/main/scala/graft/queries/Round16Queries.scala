@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 import graft.ext.{Dedup, LangModel, Mixture}
 
 /** Round-16 batch: the REWRITE half of exact-substring dedup (cut the
@@ -20,7 +21,7 @@ import graft.ext.{Dedup, LangModel, Mixture}
 object Round16Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
   private def hash60Sql(e: String): String =

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 
 /** Round-17 batch: the token-ID corpus materialization — the table an
   * LLM pipeline actually ships to training once curation ends (q354
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
 object Round17Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Readers
 
 /** Round-18 batch: production-vocabulary BPE (the round-17 verdict's
   * top task). The word-level tokenizer family (q354/q355/q376/q377) is
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
 object Round18Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Readers.table(s, dir, name)
 
   private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 

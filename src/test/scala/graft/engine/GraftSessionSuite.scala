@@ -2,9 +2,10 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.scalatest.funspec.AnyFunSpec
+import org.apache.spark.metrics.source.CodegenMetrics
+import graft.SparkSpec
 
-class GraftSessionSuite extends AnyFunSpec {
+class GraftSessionSuite extends SparkSpec {
 
   describe("GraftSession.cpuCount") {
     it("rejects a blank, non-integer or non-positive value, naming the variable") {
@@ -40,6 +41,26 @@ class GraftSessionSuite extends AnyFunSpec {
         .filter(p => p != home && Files.readString(p).contains(needle))
       assert(offenders.isEmpty,
         s"$needle outside $home: ${offenders.mkString(", ")}")
+    }
+  }
+
+  describe("the generated-class cache") {
+    it("keeps a working set past Spark's default 100 classes, so a warm pass compiles nothing") {
+      // The bound only takes effect if it was set before the JVM's first
+      // compile, so this checks the behavior, not the conf string. Each
+      // plan inlines distinct literals, so each generates distinct code;
+      // a fresh Dataset per pass re-plans and re-generates, as a warm
+      // query run does.
+      def pass(): Long = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        (1 to 150).foreach { i =>
+          spark.range(4).selectExpr(s"id * $i + ${1000 + i} AS v").collect()
+        }
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      val cold = pass()
+      assert(cold > 100, s"the cold pass compiled only $cold classes")
+      assert(pass() == 0)
     }
   }
 }
