@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph propagation beyond [[DedupGroups]]' label propagation:
@@ -30,10 +30,11 @@ object Graph {
 
   val Scale = 1000000L
 
-  /** Partition count for the pre-partitioned loop invariants — the
-    * session's shuffle-partition setting, so the layout is scale-adaptive
-    * (the bench session sets it to the core count; a cluster job sets it
-    * to its own sizing) rather than a constant tuned for either.
+  /** The rank and label loops' edge table, persisted in `scope` and
+    * hash-partitioned by src into P partitions, P being the session's
+    * shuffle-partition setting, so the layout is scale-adaptive (the
+    * bench session sets it to the core count; a cluster job sets it to
+    * its own sizing) rather than a constant tuned for either.
     *
     * Round-19 (guide §2.4 "remove shuffles outright"): every iterative
     * loop here re-reads its edge table once per iteration, and the old
@@ -54,8 +55,22 @@ object Graph {
     * contract as the outdeg table; P follows
     * `spark.sql.shuffle.partitions` so it scales with the session.
     */
-  private def loopPartitions(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
+  private def loopEdges(scope: Checkpoints.Scope,
+                        edges: DataFrame): DataFrame =
+    scope.persist(edges.repartition(
+      edges.sparkSession.sessionState.conf.numShufflePartitions, col("src")))
+
+  /** Every node of a [[loopEdges]] table, once. Plain distinct:
+    * partial-agg shrinks the union BEFORE its node exchange (§2.3), and
+    * the cached aggregate already carries hash(node, P) —
+    * canChangeCachedPlanOutputPartitioning=false pins cached-plan
+    * partitioning — so the per-iteration state join needs no exchange on
+    * this side.
+    */
+  private def loopNodes(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .distinct()
 
   /** Fixed-iteration integer PageRank. `edges` needs (src, dst) columns
     * (parallel edges should be pre-deduplicated if unwanted); returns
@@ -67,69 +82,12 @@ object Graph {
     * pinned in storage memory for the rest of the session per call.
     * `DataFrame.unpersist()` does NOT free it (checkpoint blocks live on
     * the RDD, not in the CacheManager): long-lived sessions that are done
-    * reading the result must call [[releaseRanks]] on it.
+    * reading the result must call [[Checkpoints.release]] on it.
     */
   def pagerankInt(edges: DataFrame, iterations: Int,
-                  dampingPct: Int = 85): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0, 100], got $dampingPct")
-    // Persist the loop INVARIANTS — without this, every iteration
-    // re-evaluates the caller's edge lineage (for q123 that is a full
-    // orders⋈lineitem + distinct, three times per iteration via edges /
-    // nodes / outdeg): measured 19 s/run at sf0.1, ~3 s/run persisted.
-    // The connectedComponents discipline (DedupGroups.scala): persist
-    // inputs, checkpoint the evolving state, unpersist on exit.
-    // Round-19: invariants are pre-partitioned by their per-iteration
-    // join key and the state joins pinned shuffled-hash — see
-    // [[loopPartitions]]' scaladoc for the full §2.4 argument.
-    val p = loopPartitions(edges)
-    val e = edges.repartition(p, col("src")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      // plain distinct: partial-agg shrinks the union BEFORE its node
-      // exchange (§2.3), and the cached aggregate already carries
-      // hash(node, p) — canChangeCachedPlanOutputPartitioning=false
-      // pins cached-plan partitioning — so the per-iteration state join
-      // needs no exchange on this side
-      .distinct().persist()
-    // e is hash(src)-partitioned, so this aggregate needs no exchange and
-    // its cached output is already laid out for the per-iteration join
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist()
-    val base = lit(Scale * (100 - dampingPct) / 100)
-    var ranks = nodes.withColumn("rank", lit(Scale))
-    var checkpointed: Option[DataFrame] = None
-    try {
-      for (it <- 1 to iterations) {
-        val contrib = e
-          .join(ranks.withColumnRenamed("node", "src")
-            .hint("shuffle_hash"), "src")
-          .join(outdeg.withColumnRenamed("node", "src")
-            .hint("shuffle_hash"), "src")
-          .select(col("dst").as("node"),
-            expr("rank div outdeg").as("c"))
-          .groupBy("node").agg(sum("c").as("csum"))
-        val next = nodes.join(contrib.hint("shuffle_hash"),
-            Seq("node"), "left")
-          .select(col("node"),
-            (base + expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
-              .as("rank"))
-        ranks = next.localCheckpoint()
-        // free the PREVIOUS iteration's checkpoint blocks now that the
-        // new one is materialized — leaked checkpoint blocks pin storage
-        // memory for the rest of the session. Must go through
-        // Checkpoints.release: Dataset.unpersist() is a CacheManager
-        // no-op on checkpointed frames and frees nothing.
-        checkpointed.foreach(Checkpoints.release)
-        checkpointed = Some(ranks)
-      }
-    } finally {
-      e.unpersist(); nodes.unpersist(); outdeg.unpersist()
-    }
-    ranks
-  }
+                  dampingPct: Int = 85): DataFrame =
+    pagerankLoop(edges, iterations, dampingPct, count(lit(1)),
+      "rank div outw", seeds = None)
 
   /** Fixed-iteration integer PERSONALIZED PageRank: teleport mass flows
     * only to `seeds` (a one-column DataFrame of node ids), so ranks
@@ -143,66 +101,106 @@ object Graph {
     * is the |seeds|-scaled personalization vector (a relative signal —
     * callers wanting the probability-normalized PPR divide by |seeds|).
     * Exact 64-bit integer ops throughout: bit-identical under any
-    * partitioning and engine.
+    * partitioning and engine. With every node seeded it is
+    * [[pagerankInt]].
     *
     * RETENTION: as [[pagerankInt]] — the result is backed by the final
-    * iteration's `localCheckpoint`; call [[releaseRanks]] when done.
+    * iteration's `localCheckpoint`; call [[Checkpoints.release]] when
+    * done.
     */
   def personalizedPagerankInt(edges: DataFrame, seeds: DataFrame,
                               iterations: Int,
-                              dampingPct: Int = 85): DataFrame = {
+                              dampingPct: Int = 85): DataFrame =
+    pagerankLoop(edges, iterations, dampingPct, count(lit(1)),
+      "rank div outw", Some(seeds))
+
+  /** WEIGHTED fixed-iteration integer PageRank: each node's rank flows
+    * to its out-neighbors PROPORTIONALLY TO EDGE WEIGHT —
+    * `(rank · w) div Σw(src)` per edge instead of [[pagerankInt]]'s
+    * uniform `rank div outdeg` — the importance measure for graphs
+    * whose links carry volume (trade value, click counts, citation
+    * counts). Same integer micro-unit discipline: every division is
+    * integral, so ranks are bit-identical under any partitioning and
+    * the oracle unrolls the same iterations as CTEs. Same loop and
+    * retention as [[pagerankInt]]. Overflow budget: rank · w must fit
+    * int64 — ranks are ~10⁶–10⁷ micro-units, so weights up to ~10¹⁰ are
+    * safe.
+    *
+    * `edges` needs (src, dst, w) with positive LongType weights.
+    */
+  def pagerankWeightedInt(edges: DataFrame, iterations: Int,
+                          dampingPct: Int = 85): DataFrame =
+    pagerankLoop(edges.select("src", "dst", "w"), iterations, dampingPct,
+      sum(col("w")), "(rank * w) div outw", seeds = None)
+
+  /** The one PageRank loop behind the three public variants. Each
+    * iteration sends every node's rank along its out-edges — `share`
+    * per edge, over the columns `rank`, `outw` (the `outWeight`
+    * aggregate of the source's out-edges) and the edge's own columns —
+    * sums the shares per destination, damps them, and adds the
+    * teleport rank. Without `seeds` every node starts at [[Scale]] and
+    * receives the `Scale*(100-dampingPct)/100` teleport; with `seeds`
+    * only seeds do, and every other node starts and teleports at 0.
+    * The teleport rank is read from the node table (its seed flag), so
+    * the rotated rank state is (node, rank) alone.
+    */
+  private def pagerankLoop(edges: DataFrame, iterations: Int,
+                           dampingPct: Int, outWeight: Column,
+                           share: String,
+                           seeds: Option[DataFrame]): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
-    // same §2.4 layout as [[pagerankInt]]: invariants pre-partitioned by
-    // the per-iteration join key, state joins pinned shuffled-hash
-    val p = loopPartitions(edges)
-    val e = edges.repartition(p, col("src")).persist()
-    val seedSet = seeds.select(col(seeds.columns.head).as("node"))
-      .distinct().withColumn("__seed", lit(true))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      // plain distinct: partial-agg shrinks the union BEFORE its node
-      // exchange (§2.3), and the cached aggregate already carries
-      // hash(node, p) — canChangeCachedPlanOutputPartitioning=false
-      // pins cached-plan partitioning — so the per-iteration state join
-      // needs no exchange on this side
-      .distinct()
-      .join(seedSet, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__seed"), lit(false)).as("is_seed"))
-      .persist()
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist()
-    val base = lit(Scale * (100 - dampingPct) / 100)
-    var ranks = nodes.select(col("node"), col("is_seed"),
-      when(col("is_seed"), lit(Scale)).otherwise(lit(0L)).as("rank"))
-    var checkpointed: Option[DataFrame] = None
-    try {
-      for (it <- 1 to iterations) {
-        val contrib = e
-          .join(ranks.select(col("node").as("src"), col("rank"))
-            .hint("shuffle_hash"), "src")
-          .join(outdeg.withColumnRenamed("node", "src")
-            .hint("shuffle_hash"), "src")
-          .select(col("dst").as("node"),
-            expr("rank div outdeg").as("c"))
-          .groupBy("node").agg(sum("c").as("csum"))
-        val next = nodes.join(contrib.hint("shuffle_hash"),
-            Seq("node"), "left")
-          .select(col("node"), col("is_seed"),
-            (when(col("is_seed"), base).otherwise(lit(0L)) +
-              expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
-              .as("rank"))
-        ranks = next.localCheckpoint()
-        checkpointed.foreach(Checkpoints.release)
-        checkpointed = Some(ranks)
+    Checkpoints.scoped { scope =>
+      // Persist the loop INVARIANTS — without this, every iteration
+      // re-evaluates the caller's edge lineage (for q123 that is a full
+      // orders⋈lineitem + distinct, three times per iteration via edges /
+      // nodes / outdeg): measured 19 s/run at sf0.1, ~3 s/run persisted.
+      // Round-19: invariants are pre-partitioned by their per-iteration
+      // join key and the state joins pinned shuffled-hash — see
+      // [[loopEdges]]' scaladoc for the full §2.4 argument.
+      val e = loopEdges(scope, edges)
+      val all = loopNodes(e)
+      val seedTeleport = lit(Scale * (100 - dampingPct) / 100)
+      val (nodes, start, teleport) = seeds match {
+        case None => (scope.persist(all), lit(Scale), seedTeleport)
+        case Some(sd) =>
+          val seedSet = sd.select(col(sd.columns.head).as("node"))
+            .distinct().withColumn("__seed", lit(true))
+          val n = all.join(seedSet, Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("__seed"), lit(false)).as("is_seed"))
+          (scope.persist(n),
+            when(col("is_seed"), lit(Scale)).otherwise(lit(0L)),
+            when(col("is_seed"), seedTeleport).otherwise(lit(0L)))
       }
-    } finally {
-      e.unpersist(); nodes.unpersist(); outdeg.unpersist()
+      // e is hash(src)-partitioned, so this aggregate needs no exchange and
+      // its cached output is already laid out for the per-iteration join
+      val outw = scope.persist(e.groupBy(col("src").as("node"))
+        .agg(outWeight.as("outw")))
+      var ranks = nodes.select(col("node"), start.as("rank"))
+      for (_ <- 1 to iterations) {
+        val contrib = e
+          .join(ranks.withColumnRenamed("node", "src")
+            .hint("shuffle_hash"), "src")
+          .join(outw.withColumnRenamed("node", "src")
+            .hint("shuffle_hash"), "src")
+          .select(col("dst").as("node"), expr(share).as("c"))
+          .groupBy("node").agg(sum("c").as("csum"))
+        val next = scope.checkpoint(
+          nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
+            .select(col("node"),
+              (teleport +
+                expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
+                .as("rank")))
+        // free the PREVIOUS iteration's checkpoint blocks now that the
+        // new one is materialized — leaked checkpoint blocks pin storage
+        // memory for the rest of the session
+        scope.release(ranks)
+        ranks = next
+      }
+      ranks
     }
-    ranks.drop("is_seed")
   }
 
   /** Fixed-round synchronous label propagation: spread labels from a
@@ -220,39 +218,27 @@ object Graph {
     * (per-(node,label) count, then a `min(struct(-cnt, label))` argmax
     * — never a per-node window), so a celebrity node with 10^8 labeled
     * in-neighbors partial-aggregates map-side. Label tables are O(V),
-    * rotated through `localCheckpoint` and released via
-    * [[Checkpoints.release]] each round.
+    * rotated through [[Checkpoints.scoped]] generations.
     *
     * RETENTION: the returned frame is backed by the final round's
-    * checkpoint — call [[releaseRanks]] once consumed.
+    * checkpoint — call [[Checkpoints.release]] once consumed.
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
                        rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // same §2.4 layout as [[pagerankInt]]: the edge table is partitioned
-    // by src once and streams through every round's vote join with no
-    // exchange and no sort; only the O(V) label table moves per round
-    // (plus the two combinable vote aggregates)
-    val p = loopPartitions(edges)
-    val e = edges.repartition(p, col("src")).persist()
-    val sd = seeds
-      .select(col(seeds.columns.head).as("node"),
-        col(seeds.columns(1)).as("__seed_label"))
-      .groupBy("node").agg(min("__seed_label").as("__seed_label"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      // plain distinct: partial-agg shrinks the union BEFORE its node
-      // exchange (§2.3), and the cached aggregate already carries
-      // hash(node, p) — canChangeCachedPlanOutputPartitioning=false
-      // pins cached-plan partitioning — so the per-iteration state join
-      // needs no exchange on this side
-      .distinct()
-      .join(sd, Seq("node"), "left")
-      .persist()
-    var cur = nodes.select(col("node"), col("__seed_label").as("label"))
-    var checkpointed: Option[DataFrame] = None
-    try {
-      for (round <- 1 to rounds) {
+    Checkpoints.scoped { scope =>
+      // same §2.4 layout as [[pagerankInt]]: the edge table is partitioned
+      // by src once and streams through every round's vote join with no
+      // exchange and no sort; only the O(V) label table moves per round
+      // (plus the two combinable vote aggregates)
+      val e = loopEdges(scope, edges)
+      val sd = seeds
+        .select(col(seeds.columns.head).as("node"),
+          col(seeds.columns(1)).as("__seed_label"))
+        .groupBy("node").agg(min("__seed_label").as("__seed_label"))
+      val nodes = scope.persist(loopNodes(e).join(sd, Seq("node"), "left"))
+      var cur = nodes.select(col("node"), col("__seed_label").as("label"))
+      for (_ <- 1 to rounds) {
         val votes = e
           .join(cur.filter(col("label").isNotNull)
             .select(col("node").as("src"), col("label"))
@@ -263,18 +249,15 @@ object Graph {
           .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
             .as("w"))
           .select(col("node"), col("w.l").as("__vote"))
-        val next = nodes.join(votes.hint("shuffle_hash"),
-            Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__seed_label"), col("__vote")).as("label"))
-        cur = next.localCheckpoint()
-        checkpointed.foreach(Checkpoints.release)
-        checkpointed = Some(cur)
+        val next = scope.checkpoint(
+          nodes.join(votes.hint("shuffle_hash"), Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("__seed_label"), col("__vote")).as("label")))
+        scope.release(cur)
+        cur = next
       }
-    } finally {
-      e.unpersist(); nodes.unpersist()
+      cur
     }
-    cur
   }
 
   /** Bounded-round k-core peeling: iteratively remove nodes of degree
@@ -293,59 +276,50 @@ object Graph {
     *
     * RETENTION: the result is an eager `localCheckpoint` of the final
     * (node, deg) aggregate — O(survivors) rows; all intermediate
-    * checkpoints (the 2|E| edge table, survivor sets) are released
-    * before returning. Callers free the result via
+    * checkpoints (the 2|E| edge table, survivor sets) are released by
+    * [[Checkpoints.scoped]] before returning. Callers free the result via
     * [[Checkpoints.release]] once consumed.
     */
   def kcoreRounds(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // symmetric distinct edge list (also drops self-loops), materialized
-    // ONCE — every round re-reads it, and leaving it lazy would
-    // re-evaluate the union+distinct per consumer
-    val base = edges.select(col("src").as("a"), col("dst").as("b"))
-      .filter(col("a") =!= col("b"))
-      .unionAll(edges.select(col("dst").as("a"), col("src").as("b"))
-        .filter(col("a") =!= col("b")))
-      .distinct()
-      .localCheckpoint()
-    // Rotate survivor NODE sets, not edge sets: the induced subgraph of
-    // round r is base ⋈ keep_r ⋈ keep_r (both endpoints surviving), so
-    // each round is one pass over base + a degree aggregate, and the
-    // only rotated state is a node list — ~|E|/avg-degree rows instead
-    // of the 2|E| rows an edge-set checkpoint would re-materialize per
-    // round (the first cut did exactly that: 22.5M-row checkpoints per
-    // round tipped the 100M-row kcore_peel shape into memory-pressure
-    // superlinearity, ratio 2.6).
-    var keep: Option[DataFrame] = None // None = all nodes survive so far
-    for (_ <- 1 to rounds) {
-      val induced = keep match {
-        case None => base
-        case Some(kp) =>
-          base.join(kp, "a").join(kp.select(col("a").as("b")), "b")
+    Checkpoints.scoped { scope =>
+      // symmetric distinct edge list (also drops self-loops), materialized
+      // ONCE — every round re-reads it, and leaving it lazy would
+      // re-evaluate the union+distinct per consumer
+      val base = scope.checkpoint(
+        edges.select(col("src").as("a"), col("dst").as("b"))
+          .filter(col("a") =!= col("b"))
+          .unionAll(edges.select(col("dst").as("a"), col("src").as("b"))
+            .filter(col("a") =!= col("b")))
+          .distinct())
+      // Rotate survivor NODE sets, not edge sets: the induced subgraph of
+      // round r is base ⋈ keep_r ⋈ keep_r (both endpoints surviving), so
+      // each round is one pass over base + a degree aggregate, and the
+      // only rotated state is a node list — ~|E|/avg-degree rows instead
+      // of the 2|E| rows an edge-set checkpoint would re-materialize per
+      // round (the first cut did exactly that: 22.5M-row checkpoints per
+      // round tipped the 100M-row kcore_peel shape into memory-pressure
+      // superlinearity, ratio 2.6).
+      def induced(keep: DataFrame): DataFrame =
+        base.join(keep, "a").join(keep.select(col("a").as("b")), "b")
+      var keep: Option[DataFrame] = None // None = all nodes survive so far
+      for (_ <- 1 to rounds) {
+        val next = scope.checkpoint(keep.fold(base)(induced)
+          .groupBy("a").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select("a"))
+        keep.foreach(scope.release)
+        keep = Some(next)
       }
-      val next = induced.groupBy("a").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("a")
-        .localCheckpoint()
-      keep.foreach(Checkpoints.release)
-      keep = Some(next)
-    }
-    val kp = keep.get
-    val out = base.join(kp, "a").join(kp.select(col("a").as("b")), "b")
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-      .orderBy("node")
       // eager checkpoint materializes the (node, deg) aggregate — one
-      // row per SURVIVING node — so the 2|E| symmetric edge table and
-      // the final survivor set can be released here instead of pinning
-      // per call (a bench loop calling this 2×reps+warmup times was
-      // accumulating both per invocation).
-      .localCheckpoint()
-    Checkpoints.release(base)
-    Checkpoints.release(kp)
-    // RETENTION: the returned frame pins ONE O(survivors) checkpoint;
-    // callers release it via Checkpoints.release once consumed (and
-    // must not read it afterwards).
-    out
+      // row per SURVIVING node — so the scope can release the 2|E|
+      // symmetric edge table and the final survivor set on exit instead
+      // of pinning them per call (a bench loop calling this
+      // 2×reps+warmup times was accumulating both per invocation).
+      scope.checkpoint(induced(keep.get)
+        .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
+        .orderBy("node"))
+    }
   }
 
   /** Co-occurrence edges: one (src, dst) row with src < dst for every
@@ -411,39 +385,9 @@ object Graph {
     * Input needs (src, dst) columns; self-loops and duplicate/reverse
     * edges are cleaned first. Returns one row: (n_triangles).
     */
-  def triangleCount(edges: DataFrame): DataFrame = {
-    // canonical undirected edge set: a < b, no self-loops, distinct
-    val canon = edges.select(
-      least(col("src"), col("dst")).as("a"),
-      greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val deg = canon.select(col("a").as("node"))
-      .unionAll(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    // orient from lower (deg, id) to higher — the rank is a total order
-    // because id breaks degree ties
-    val withDeg = canon
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("a"))
-        .otherwise(col("b")).as("u"),
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("b"))
-        .otherwise(col("a")).as("v"))
-    // wedges at apex u: unordered {v, w} pairs of out-neighbors
-    val e1 = oriented.select(col("u"), col("v").as("x"))
-    val e2 = oriented.select(col("u"), col("v").as("y"))
-    val wedges = e1.join(e2, "u").filter(col("x") < col("y"))
-    // close the wedge: {x, y} must be an edge — wedge pairs are ordered
-    // by id (x < y), which is exactly the canonical edge form, so the
-    // closing join runs against `canon` directly
-    wedges.join(canon.select(col("a").as("x"), col("b").as("y")),
-      Seq("x", "y"))
+  def triangleCount(edges: DataFrame): DataFrame =
+    closedWedges(edges, checkpoint = false)._1
       .agg(count(lit(1)).as("n_triangles"))
-  }
 
   /** Per-node local clustering coefficient — [[triangleCount]]'s
     * degree-oriented wedge-closing pipeline, but instead of folding the
@@ -463,31 +407,7 @@ object Graph {
     // betting each consumer on the exchange-reuse race (§2.4/§5); deg
     // (O(V)) likewise feeds three joins. RETENTION: both are leaves of
     // the returned plan, released by the bench via Checkpoints.release.
-    val canon = edges.select(
-      least(col("src"), col("dst")).as("a"),
-      greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val deg = canon.select(col("a").as("node"))
-      .unionAll(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val withDeg = canon
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("a"))
-        .otherwise(col("b")).as("u"),
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("b"))
-        .otherwise(col("a")).as("v"))
-    val e1 = oriented.select(col("u"), col("v").as("x"))
-    val e2 = oriented.select(col("u"), col("v").as("y"))
-    val closed = e1.join(e2, "u").filter(col("x") < col("y"))
-      .join(canon.select(col("a").as("x"), col("b").as("y")),
-        Seq("x", "y"))
+    val (closed, deg) = closedWedges(edges, checkpoint = true)
     val tri = closed.select(col("u").as("node"))
       .unionAll(closed.select(col("x").as("node")))
       .unionAll(closed.select(col("y").as("node")))
@@ -498,6 +418,49 @@ object Graph {
         when(col("deg") >= 2L,
           (coalesce(col("tri"), lit(0L)) * 2L).cast("double") /
             (col("deg") * (col("deg") - 1L)).cast("double")).as("coef"))
+  }
+
+  /** The pipeline [[triangleCount]] and [[localClustering]] share: the
+    * canonical undirected edge set (a < b, no self-loops, distinct), its
+    * per-node degree table (node, deg), and every triangle as one closed
+    * wedge (x, y, u) at its lowest-ranked apex u. Returns (closed wedges,
+    * deg). With `checkpoint` the edge set and the degree table are each
+    * eagerly `localCheckpoint`ed, and both stay leaves of the result.
+    */
+  private def closedWedges(edges: DataFrame,
+                           checkpoint: Boolean): (DataFrame, DataFrame) = {
+    def pin(df: DataFrame): DataFrame =
+      if (checkpoint) df.localCheckpoint() else df
+    val canon = pin(edges.select(
+      least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct())
+    val deg = pin(canon.select(col("a").as("node"))
+      .unionAll(canon.select(col("b").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg")))
+    // orient from lower (deg, id) to higher — the rank is a total order
+    // because id breaks degree ties
+    val withDeg = canon
+      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+    val oriented = withDeg.select(
+      when(col("da") < col("db") ||
+        (col("da") === col("db") && col("a") < col("b")), col("a"))
+        .otherwise(col("b")).as("u"),
+      when(col("da") < col("db") ||
+        (col("da") === col("db") && col("a") < col("b")), col("b"))
+        .otherwise(col("a")).as("v"))
+    // wedges at apex u: unordered {v, w} pairs of out-neighbors
+    val e1 = oriented.select(col("u"), col("v").as("x"))
+    val e2 = oriented.select(col("u"), col("v").as("y"))
+    // close the wedge: {x, y} must be an edge — wedge pairs are ordered
+    // by id (x < y), which is exactly the canonical edge form, so the
+    // closing join runs against `canon` directly
+    val closed = e1.join(e2, "u").filter(col("x") < col("y"))
+      .join(canon.select(col("a").as("x"), col("b").as("y")),
+        Seq("x", "y"))
+    (closed, deg)
   }
 
   /** Minimum hop distance from a seed set, by frontier-expanding BFS
@@ -516,14 +479,14 @@ object Graph {
     * its out-degree once; AQE splits the hub's shuffle partition like
     * any other skewed join. Early exit when a frontier empties.
     *
-    * Loop hygiene follows [[pagerankInt]]: edges persisted as the loop
-    * invariant; each depth's newly-discovered generation is
-    * `localCheckpoint`'d once (never recomputed), and the result is
-    * their union — unlike the rank loops, every generation is part of
-    * the answer, so nothing is rotated away mid-loop.
+    * Loop hygiene follows [[pagerankInt]] ([[Checkpoints.scoped]]): edges
+    * persisted as the loop invariant; each depth's newly-discovered
+    * generation is `localCheckpoint`'d once (never recomputed), and the
+    * result is their union — unlike the rank loops, every generation is
+    * part of the answer, so nothing is rotated away mid-loop.
     *
     * RETENTION: the result is backed by ALL generations' checkpoint
-    * blocks (O(V) rows total); call [[releaseRanks]] when done
+    * blocks (O(V) rows total); call [[Checkpoints.release]] when done
     * reading it.
     *
     * `edges` needs (src, dst); `seeds` is one column named `node`.
@@ -543,120 +506,59 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
               broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    val e = edges.select("src", "dst").persist()
-    // each GENERATION (nodes first reached at depth d) is checkpointed
-    // once and never recomputed; `dist` is their lazy union — O(V) rows
-    // of cached blocks total, plan depth bounded by maxDepth. Generations
-    // are stored SERIALIZED: the default deserialized level pins one row
-    // OBJECT per node, and a 10⁸-node generation of boxed rows overruns a
-    // shared local heap (measured OOM in the `bfs_hub` shape) where the
-    // compact serialized form spills cleanly.
-    val gen = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("hops", lit(0L))
-      .localCheckpoint(true, gen)
-    var frontier = dist
-    // (rows, estimated broadcast bytes) of a cached generation, in ONE
-    // pass ([[keyedFrameStats]]): variable-width keys measure their
-    // actual byte payload; the 16-byte addend per row is hash-relation
-    // entry overhead (pointer + hash + alignment), deliberately rough —
-    // this gates a broadcast decision, not an allocation
-    try {
+    Checkpoints.scoped { scope =>
+      val e = scope.persist(edges.select("src", "dst"))
+      // each GENERATION (nodes first reached at depth d) is checkpointed
+      // once and never recomputed; `dist` is their lazy union — O(V) rows
+      // of cached blocks total, plan depth bounded by maxDepth
+      var dist = scope.checkpoint(seeds.select(col("node")).distinct()
+        .withColumn("hops", lit(0L)), SerializedGeneration)
+      var frontier = dist
       var depth = 1
       var (frontierRows, frontierBytes) = keyedFrameStats(frontier, "node")
       while (depth <= maxDepth && frontierRows > 0) {
-        // the frontier must be the JOIN BUILD SIDE: left to its own
-        // devices Catalyst sort-merges (checkpoint stats are unknown),
-        // and codegen SMJ buffers ALL of a streamed row's matches in
-        // heap — a mega-hub in a 1-row frontier appends its entire
-        // out-edge list to one in-memory buffer (measured OOM in
-        // `bfs_hub`). Broadcasting a small frontier (or hash-building a
-        // large one) keeps the edge side STREAMING: the hub's edges
-        // probe a tiny hash map one row at a time.
-        // The cutoff is BYTES, not rows: the generation is cached, so
-        // measuring its actual key payload costs one cheap agg, and a
-        // byte bound holds for kilobyte string keys where a row count
-        // would not; larger frontiers hash-build per partition instead
-        val f =
-          if (frontierBytes <= broadcastBytes) broadcast(frontier)
-          else frontier.hint("shuffle_hash")
-        val next = f
+        val f = frontierBuild(frontier, frontierBytes, broadcastBytes)
+        val next = scope.checkpoint(f
           .join(e, f("node") === e("src"))
           .select(col("dst").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
-          .withColumn("hops", lit(depth.toLong))
-          .localCheckpoint(true, gen)
+          .withColumn("hops", lit(depth.toLong)), SerializedGeneration)
         val st = keyedFrameStats(next, "node")
         frontierRows = st._1
         frontierBytes = st._2
         if (frontierRows > 0) { dist = dist.unionByName(next); frontier = next }
         depth += 1
       }
-    } finally e.unpersist()
-    dist
+      dist
+    }
   }
 
-  /** WEIGHTED fixed-iteration integer PageRank: each node's rank flows
-    * to its out-neighbors PROPORTIONALLY TO EDGE WEIGHT —
-    * `(rank · w) div Σw(src)` per edge instead of [[pagerankInt]]'s
-    * uniform `rank div outdeg` — the importance measure for graphs
-    * whose links carry volume (trade value, click counts, citation
-    * counts). Same integer micro-unit discipline: every division is
-    * integral, so ranks are bit-identical under any partitioning and
-    * the oracle unrolls the same iterations as CTEs. Same loop hygiene
-    * (invariants persisted, generations rotated via released
-    * localCheckpoints). Overflow budget: rank · w must fit int64 —
-    * ranks are ~10⁶–10⁷ micro-units, so weights up to ~10¹⁰ are safe.
-    *
-    * `edges` needs (src, dst, w) with positive LongType weights.
+  /** Storage level of the frontier loops' generations: SERIALIZED,
+    * because the default deserialized level pins one row OBJECT per node,
+    * and a 10⁸-node generation of boxed rows overruns a shared local heap
+    * (measured OOM in the `bfs_hub` shape) where the compact serialized
+    * form spills cleanly.
     */
-  def pagerankWeightedInt(edges: DataFrame, iterations: Int,
-                          dampingPct: Int = 85): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0, 100], got $dampingPct")
-    // same §2.4 layout as [[pagerankInt]]
-    val p = loopPartitions(edges)
-    val e = edges.select("src", "dst", "w")
-      .repartition(p, col("src")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      // plain distinct: partial-agg shrinks the union BEFORE its node
-      // exchange (§2.3), and the cached aggregate already carries
-      // hash(node, p) — canChangeCachedPlanOutputPartitioning=false
-      // pins cached-plan partitioning — so the per-iteration state join
-      // needs no exchange on this side
-      .distinct().persist()
-    val outw = e.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("sw"))
-      .persist()
-    val base = lit(Scale * (100 - dampingPct) / 100)
-    var ranks = nodes.withColumn("rank", lit(Scale))
-    var checkpointed: Option[DataFrame] = None
-    try {
-      for (it <- 1 to iterations) {
-        val contrib = e
-          .join(ranks.withColumnRenamed("node", "src")
-            .hint("shuffle_hash"), "src")
-          .join(outw.withColumnRenamed("node", "src")
-            .hint("shuffle_hash"), "src")
-          .select(col("dst").as("node"),
-            expr("(rank * w) div sw").as("c"))
-          .groupBy("node").agg(sum("c").as("csum"))
-        val next = nodes.join(contrib.hint("shuffle_hash"),
-            Seq("node"), "left")
-          .select(col("node"),
-            (base + expr(s"($dampingPct * coalesce(csum, 0L)) div 100"))
-              .as("rank"))
-        ranks = next.localCheckpoint()
-        checkpointed.foreach(Checkpoints.release)
-        checkpointed = Some(ranks)
-      }
-    } finally {
-      e.unpersist(); nodes.unpersist(); outw.unpersist()
-    }
-    ranks
-  }
+  private val SerializedGeneration =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+
+  /** A frontier as the JOIN BUILD SIDE of [[bfsHops]] and [[ssspHops]].
+    * Left to its own devices Catalyst sort-merges (checkpoint stats are
+    * unknown), and codegen SMJ buffers ALL of a streamed row's matches in
+    * heap — a mega-hub in a 1-row frontier appends its entire out-edge
+    * list to one in-memory buffer (measured OOM in `bfs_hub`).
+    * Broadcasting a small frontier (or hash-building a large one) keeps
+    * the edge side STREAMING: the hub's edges probe a tiny hash map one
+    * row at a time. The cutoff is BYTES, not rows (`bytes` from
+    * [[keyedFrameStats]]): the generation is cached, so measuring its
+    * actual key payload costs one cheap agg, and a byte bound holds for
+    * kilobyte string keys where a row count would not; larger frontiers
+    * hash-build per partition instead.
+    */
+  private def frontierBuild(frontier: DataFrame, bytes: Long,
+                            broadcastBytes: Long): DataFrame =
+    if (bytes <= broadcastBytes) broadcast(frontier)
+    else frontier.hint("shuffle_hash")
 
   /** (rows, estimated broadcast bytes) of a cached one-key-column frame —
     * the [[bfsHops]] byte model: measured `octet_length` payload for
@@ -703,14 +605,16 @@ object Graph {
     * node), never O(paths) — the naive k-fold join materializes every
     * path and dies combinatorially.
     *
-    * Loop hygiene: edges persisted as the loop invariant; the standing
-    * distance table and the frontier are `localCheckpoint`'d SERIALIZED
-    * per round and the superseded generation released ([[pagerankInt]]'s
-    * rotation — unlike [[bfsHops]], generations here REPLACE each other,
-    * so only the final table stays pinned). Frontier forced to the join
-    * build side under the same measured-bytes broadcast cutoff as BFS
-    * (the edge list must always stream). RETENTION: the result is one
-    * checkpointed table; [[releaseRanks]] when done.
+    * Loop hygiene ([[Checkpoints.scoped]]): edges persisted as the loop
+    * invariant; the standing distance table and the frontier are
+    * `localCheckpoint`'d SERIALIZED per round and the superseded
+    * generation released ([[pagerankInt]]'s rotation — unlike
+    * [[bfsHops]], generations here REPLACE each other, so only the final
+    * table stays pinned). Frontier forced to the join build side under
+    * the same measured-bytes broadcast cutoff as BFS
+    * ([[frontierBuild]]: the edge list must always stream). RETENTION:
+    * the result is one checkpointed table; [[Checkpoints.release]] when
+    * done.
     *
     * `edges` needs (src, dst, w) with LongType `w`; `seeds` is one
     * column `node`. Directed — symmetrize for undirected costs.
@@ -718,29 +622,24 @@ object Graph {
   def ssspHops(edges: DataFrame, seeds: DataFrame, maxIter: Int,
                broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
     require(maxIter >= 0, s"maxIter must be >= 0, got $maxIter")
-    val e = edges.select("src", "dst", "w").persist()
-    val gen = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true, gen)
-    var frontier = dist
-    try {
+    Checkpoints.scoped { scope =>
+      val e = scope.persist(edges.select("src", "dst", "w"))
+      var dist = scope.checkpoint(seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)), SerializedGeneration)
+      var frontier = dist
       var round = 1
       var (fRows, fBytes) = keyedFrameStats(frontier, "node")
       while (round <= maxIter && fRows > 0) {
-        val f =
-          if (fBytes <= broadcastBytes) broadcast(frontier)
-          else frontier.hint("shuffle_hash")
+        val f = frontierBuild(frontier, fBytes, broadcastBytes)
         val cand = f.join(e, f("node") === e("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("cd"))
           .groupBy("node").agg(min("cd").as("cd"))
         val standing = dist.select(col("node").as("__dnode"),
           col("dist").as("__dbest"))
-        val improved = cand
+        val improved = scope.checkpoint(cand
           .join(standing, cand("node") === col("__dnode"), "left")
           .filter(col("__dbest").isNull || col("cd") < col("__dbest"))
-          .select(col("node"), col("cd").as("dist"))
-          .localCheckpoint(true, gen)
+          .select(col("node"), col("cd").as("dist")), SerializedGeneration)
         val st = keyedFrameStats(improved, "node")
         if (st._1 > 0) {
           // anti-join build side: broadcast `improved` while it is small
@@ -755,34 +654,25 @@ object Graph {
           val ik =
             if (st._2 <= broadcastBytes) broadcast(improved.select("node"))
             else improved.select("node")
-          val newDist = dist.join(ik, Seq("node"), "left_anti")
-            .unionByName(improved)
-            .localCheckpoint(true, gen)
+          val newDist = scope.checkpoint(
+            dist.join(ik, Seq("node"), "left_anti").unionByName(improved),
+            SerializedGeneration)
           // rotate: the new table is materialized, the old one and the
-          // PREVIOUS frontier are dead (improved stays — it is the next
-          // frontier; its rows were copied, not referenced, by newDist)
-          if (!(frontier eq dist)) Checkpoints.release(frontier)
-          Checkpoints.release(dist)
+          // PREVIOUS frontier (the old table itself in round 1) are dead;
+          // improved stays — it is the next frontier, and its rows were
+          // copied, not referenced, by newDist
+          scope.release(dist)
+          scope.release(frontier)
           dist = newDist
-        } else {
-          // nothing improved: the empty `improved` becomes the final
-          // frontier and is released by the post-loop sweep
-          if (!(frontier eq dist)) Checkpoints.release(frontier)
         }
+        // a round that improved nothing ends the loop; its empty frontier
+        // and the one before it are released when the scope exits
         frontier = improved
         fRows = st._1
         fBytes = st._2
         round += 1
       }
-      if (!(frontier eq dist)) Checkpoints.release(frontier)
-    } finally e.unpersist()
-    dist
+      dist
+    }
   }
-
-  /** Free the checkpoint blocks backing a [[pagerankInt]] result (see
-    * [[Checkpoints.release]]). The DataFrame must not be used after
-    * release: `localCheckpoint` truncated its lineage, so the rows cannot
-    * be recomputed.
-    */
-  def releaseRanks(ranks: DataFrame): Unit = Checkpoints.release(ranks)
 }

@@ -143,28 +143,14 @@ object Round11Queries {
     // "Within k links of a trusted node" is the graph-trust curation
     // gate at corpus scale.
     "q183_bfs_hops" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      // int-pair distinct before node ids (§2.3), and the frontier loop
-      // runs on LONG node ids (ck·2 / sk·2+1 — the q123 round-19
-      // encoding): per-depth joins and the distinct hash 8-byte longs,
-      // and the frontier's broadcast-bytes estimate uses the fixed
-      // numeric key width. String ids decode once in the final O(V)
-      // projection — identical output (both encodings injective).
-      val pairs = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("ck"),
-          col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .select((col("ck") * 2L).as("c"), (col("sk") * 2L + 1L).as("sup"))
-      val edges = pairs.select(col("c").as("src"), col("sup").as("dst"))
-        .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst")))
+      // on long node ids the frontier's broadcast-bytes estimate uses the
+      // fixed numeric key width
+      val edges = TradeGraph.edges(t(s, dir, "orders"), t(s, dir, "lineitem"))
       val seeds = t(s, dir, "supplier")
         .filter(col("s_suppkey") % 10 === 0)
-        .select((col("s_suppkey").cast("long") * 2L + 1L).as("node"))
+        .select(TradeGraph.supplier(col("s_suppkey")).as("node"))
       Graph.bfsHops(edges, seeds, BfsMaxDepth)
-        .withColumn("node",
-          expr("CASE WHEN node % 2 = 0 THEN concat('c:', node div 2) " +
-            "ELSE concat('s:', node div 2) END"))
+        .withColumn("node", TradeGraph.decode("node"))
         .orderBy("node")
     }),
 

@@ -53,32 +53,15 @@ object Round12Queries {
     // hops from the seed suppliers — frontier Bellman–Ford with a
     // combinable per-destination MIN, O(V) state, never O(paths).
     "q202_sssp" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      // int-pair distinct before node ids (§2.3), and the Bellman–Ford
-      // rounds run on LONG node ids (ck·2 / sk·2+1 — the q123 round-19
-      // encoding): the per-round relax join, MIN aggregate and distance
-      // join hash 8-byte longs; w is a function of the keys computed
-      // before the encode, and the per-destination MIN never orders by
-      // node, so the encoding is result-invisible. String ids decode
-      // once in the final O(V) projection — identical output.
-      val pairs = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("ck"),
-          col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .select((col("ck") * 2L).as("c"), (col("sk") * 2L + 1L).as("sup"),
-          (lit(1L) + (col("ck") + col("sk")) % 5L).as("w"))
-      val edges = pairs.select(col("c").as("src"), col("sup").as("dst"),
-          col("w"))
-        .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst"),
-          col("w")))
+      // the per-destination MIN never orders by node, so the long node
+      // ids are result-invisible
+      val edges = TradeGraph.weightedEdges(t(s, dir, "orders"),
+        t(s, dir, "lineitem"))
       val seeds = t(s, dir, "supplier")
         .filter(col("s_suppkey") % 10 === 0)
-        .select((col("s_suppkey").cast("long") * 2L + 1L).as("node"))
+        .select(TradeGraph.supplier(col("s_suppkey")).as("node"))
       Graph.ssspHops(edges, seeds, SsspMaxIter)
-        .withColumn("node",
-          expr("CASE WHEN node % 2 = 0 THEN concat('c:', node div 2) " +
-            "ELSE concat('s:', node div 2) END"))
+        .withColumn("node", TradeGraph.decode("node"))
         .orderBy("node")
     }),
 
@@ -535,27 +518,10 @@ object Round12Queries {
     // importance measure; integer micro-units end to end, oracle
     // unrolls the same three iterations as CTEs.
     "q226_weighted_pagerank" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      // int-pair distinct before node ids (§2.3, see q202), and the
-      // loop runs on LONG node ids (ck·2 / sk·2+1 — the q123 round-19
-      // encoding): per-iteration joins/aggregates hash 8-byte longs,
-      // the string ids decode once in the final O(V) projection.
-      // Identical output (both encodings injective; w is a function of
-      // the keys computed before the encode).
-      val pairs = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("ck"),
-          col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .select((col("ck") * 2L).as("c"), (col("sk") * 2L + 1L).as("sup"),
-          (lit(1L) + (col("ck") + col("sk")) % 5L).as("w"))
-      val edges = pairs.select(col("c").as("src"), col("sup").as("dst"),
-          col("w"))
-        .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst"),
-          col("w")))
+      val edges = TradeGraph.weightedEdges(t(s, dir, "orders"),
+        t(s, dir, "lineitem"))
       Graph.pagerankWeightedInt(edges, iterations = 3)
-        .select(expr("CASE WHEN node % 2 = 0 THEN concat('c:', node div 2) " +
-          "ELSE concat('s:', node div 2) END").as("node"), col("rank"))
+        .select(TradeGraph.decode("node").as("node"), col("rank"))
         .orderBy("node")
     }),
 

@@ -204,26 +204,9 @@ object Round7Queries {
     // evolves): 3 fixed iterations in micro-units — bit-identical under
     // any partitioning, reproduced by the oracle's unrolled CTEs.
     "q123_pagerank" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      // distinct on the 8-byte int pair BEFORE building node ids (§2.3
-      // narrower types), and — round 19, same section — the LOOP runs
-      // on LONG node ids (ck·2 / sk·2+1, an injective encoding of the
-      // two key spaces): every per-iteration hash join, repartition and
-      // aggregate hashes/compares 8-byte longs instead of prefixed
-      // strings, and the per-iteration shuffles move narrower rows. The
-      // prefixed string ids the oracle hashes are decoded in ONE final
-      // O(V) projection — identical output (both encodings injective).
-      val pairs = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("ck"),
-          col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .select((col("ck") * 2L).as("c"), (col("sk") * 2L + 1L).as("sup"))
-      val edges = pairs.select(col("c").as("src"), col("sup").as("dst"))
-        .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst")))
+      val edges = TradeGraph.edges(t(s, dir, "orders"), t(s, dir, "lineitem"))
       Graph.pagerankInt(edges, iterations = 3)
-        .select(expr("CASE WHEN node % 2 = 0 THEN concat('c:', node div 2) " +
-          "ELSE concat('s:', node div 2) END").as("node"), col("rank"))
+        .select(TradeGraph.decode("node").as("node"), col("rank"))
         .orderBy("node")
     }),
 

@@ -81,6 +81,15 @@ object Round8Queries {
     */
   private val CoSupplierCap = 8
 
+  /** The q133/q143 co-supplier graph: suppliers sharing an order, over
+    * the rare high-quantity lines only (see q133), per-order cap
+    * [[CoSupplierCap]].
+    */
+  private def coSupplierEdges(s: SparkSession, dir: String): DataFrame =
+    Graph.cooccurrenceEdges(
+      t(s, dir, "lineitem").filter(col("l_quantity") >= 48),
+      "l_orderkey", "l_suppkey", CoSupplierCap)
+
   /** q134 synthesizes the shard-stitching artifact from the corpus
     * itself: each document ≥ 32 tokens is split into two overlapping
     * records — tokens [1, 20] and [13, 32] — so record 2i's 8-token tail
@@ -150,9 +159,7 @@ object Round8Queries {
     // constant in sf (24 / 403 / 4387 edges at sf0.001/0.01/0.1) — the
     // shape real co-occurrence graphs (co-citation, co-purchase) have.
     "q133_triangles" -> ((s, dir) =>
-      Graph.triangleCount(Graph.cooccurrenceEdges(
-        t(s, dir, "lineitem").filter(col("l_quantity") >= 48),
-        "l_orderkey", "l_suppkey", CoSupplierCap))),
+      Graph.triangleCount(coSupplierEdges(s, dir))),
 
     // Shard-stitching boundary overlaps: tail-k == head-k pairs over the
     // synthesized split-record corpus (one pair per split document); the
@@ -278,10 +285,7 @@ object Round8Queries {
     // signal, budgeted like pagerank's fixed iterations and reproduced
     // by the oracle's unrolled round CTEs.
     "q143_kcore" -> ((s, dir) =>
-      Graph.kcoreRounds(Graph.cooccurrenceEdges(
-        t(s, dir, "lineitem").filter(col("l_quantity") >= 48),
-        "l_orderkey", "l_suppkey", CoSupplierCap),
-        KcoreK, KcoreRounds)),
+      Graph.kcoreRounds(coSupplierEdges(s, dir), KcoreK, KcoreRounds)),
 
     // Quality-aware dedup representative: per near-dup component keep
     // the LONGEST member (score = token count, ties to lowest id) — the

@@ -266,25 +266,12 @@ object Round9Queries {
     // (random-walk proximity to a vetted set). Same integer micro-unit
     // arithmetic as q123; the oracle unrolls the seeded recursion.
     "q156_seeded_pagerank" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      // int-pair distinct before node ids (§2.3), and the loop runs on
-      // LONG node ids (ck·2 / sk·2+1 — the q123 round-19 encoding):
-      // per-iteration joins/aggregates hash 8-byte longs and shuffle
-      // narrower rows; the string ids decode once in the final O(V)
-      // projection. Identical output (both encodings injective).
-      val pairs = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("ck"),
-          col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .select((col("ck") * 2L).as("c"), (col("sk") * 2L + 1L).as("sup"))
-      val edges = pairs.select(col("c").as("src"), col("sup").as("dst"))
-        .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst")))
+      val o = t(s, dir, "orders")
+      val edges = TradeGraph.edges(o, t(s, dir, "lineitem"))
       val seeds = o.filter(col("o_custkey") % 20 === 0)
-        .select((col("o_custkey").cast("long") * 2L).as("node"))
+        .select(TradeGraph.customer(col("o_custkey")).as("node"))
       Graph.personalizedPagerankInt(edges, seeds, iterations = 3)
-        .select(expr("CASE WHEN node % 2 = 0 THEN concat('c:', node div 2) " +
-          "ELSE concat('s:', node div 2) END").as("node"), col("rank"))
+        .select(TradeGraph.decode("node").as("node"), col("rank"))
         .orderBy("node")
     }),
 
@@ -299,28 +286,15 @@ object Round9Queries {
     // 10th customer is "human-labeled" with its market segment; two
     // synchronous majority-vote rounds label suppliers, then the rest.
     "q158_label_propagation" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      // int-pair distinct before node ids (§2.3), and the rounds run on
-      // LONG node ids (ck·2 / sk·2+1 — the q123 round-19 encoding); the
-      // majority vote and its lexicographic label tiebreak never order
-      // by node, so the encoding is result-invisible. String ids decode
-      // once in the final O(V) projection — identical output.
-      val pairs = o.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("ck"),
-          col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .select((col("ck") * 2L).as("c"), (col("sk") * 2L + 1L).as("sup"))
-      val edges = pairs.select(col("c").as("src"), col("sup").as("dst"))
-        .unionAll(pairs.select(col("sup").as("src"), col("c").as("dst")))
+      // the majority vote and its lexicographic label tiebreak never
+      // order by node, so the long node ids are result-invisible
+      val edges = TradeGraph.edges(t(s, dir, "orders"), t(s, dir, "lineitem"))
       val seeds = t(s, dir, "customer")
         .filter(col("c_custkey") % 10 === 0)
-        .select((col("c_custkey").cast("long") * 2L).as("node"),
+        .select(TradeGraph.customer(col("c_custkey")).as("node"),
           col("c_mktsegment").as("label"))
       Graph.labelPropagation(edges, seeds, rounds = 2)
-        .withColumn("node",
-          expr("CASE WHEN node % 2 = 0 THEN concat('c:', node div 2) " +
-            "ELSE concat('s:', node div 2) END"))
+        .withColumn("node", TradeGraph.decode("node"))
         .orderBy("node")
     }),
 

@@ -32,7 +32,7 @@ class BenchHygieneSuite extends SparkSpec {
       benchOnce(DedupGroups.connectedComponents(chainEdges(64), maxIter = 12)
         .orderBy("id"))
       // q123 shape: pagerank (release via the generic leaf walk, the
-      // Bench path — Graph.releaseRanks also exists for callers)
+      // Bench path)
       val e = chainEdges(64).select(col("doc_a").as("src"),
         col("doc_b").as("dst"))
       benchOnce(Graph.pagerankInt(e, iterations = 3).orderBy("node"))

@@ -1,0 +1,60 @@
+package graft
+
+import scala.util.hashing.MurmurHash3
+import graft.ext.Checkpoints
+
+/** Tier-1 slice of the query registry: the graph queries and the
+  * connected-component queries, run through [[SparkEntry.queries]] at
+  * sf0.001 on the shared test session. Each query must give the same
+  * order-insensitive row hash on two runs, and once its frames are passed
+  * to `Checkpoints.release` (the Bench path) it must leave no persistent
+  * RDD and no cached relation behind.
+  *
+  * The tables are perfbench's copy of the seed-42 sf0.001 set, which is
+  * byte-identical to the set the oracle is checked on.
+  */
+class GraphRegistrySuite extends SparkSpec {
+
+  private val sfDir = "perfbench/data/sf0.001"
+
+  private val graphQueries = Seq("q123_pagerank", "q133_triangles",
+    "q143_kcore", "q156_seeded_pagerank", "q158_label_propagation",
+    "q183_bfs_hops", "q202_sssp", "q226_weighted_pagerank",
+    "q259_local_clustering")
+
+  private val componentQueries = Seq("q65_dedup_groups",
+    "q141_dedup_keep_best", "q149_leakage_free_split",
+    "q212_entity_resolution", "q293_dedup_cluster_census",
+    "q367_winnow_components")
+
+  /** One run: collect, release, and hash the rows in any order. */
+  private def runOnce(name: String): Int = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    val rows = df.collect()
+    Checkpoints.release(df)
+    MurmurHash3.unorderedHash(rows.map(_.toString))
+  }
+
+  /** Relations in the CacheManager (`numCachedEntries` is `private[sql]`
+    * in Scala but public in the bytecode).
+    */
+  private def cachedEntries: Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  for ((group, names) <- Seq("graph" -> graphQueries,
+      "connected-component" -> componentQueries); name <- names)
+    describe(s"registry $group query $name") {
+      it("is deterministic and releases everything it pins") {
+        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+        val cachedBefore = cachedEntries
+        val first = runOnce(name)
+        assert(runOnce(name) == first, "two runs hashed differently")
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+        assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+        assert(cachedEntries == cachedBefore, "cached relations left behind")
+      }
+    }
+}

@@ -14,10 +14,22 @@ class Round11Suite extends SparkSpec {
       // but it appears once at its MIN depth; 9 is unreachable
       val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
         (9L, 9L)).toDF("src", "dst")
-      val got = Graph.bfsHops(edges, Seq(1L).toDF("node"), maxDepth = 10)
-        .as[(Long, Long)].collect().sorted.toSeq
+      val hops = Graph.bfsHops(edges, Seq(1L).toDF("node"), maxDepth = 10)
+      val got = hops.as[(Long, Long)].collect().sorted.toSeq
       assert(got == Seq((1L, 0L), (2L, 1L), (3L, 1L), (4L, 2L), (5L, 3L)))
-      Graph.releaseRanks(Seq.empty[(Long, Long)].toDF("node", "hops"))
+      Checkpoints.release(hops)
+    }
+
+    it("pins only its answer's generations once the frontier empties") {
+      // depth 2 finds nothing new; that empty generation is not part of
+      // the answer, so releasing the answer must leave nothing pinned
+      val edges = Seq((1L, 2L)).toDF("src", "dst")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val hops = Graph.bfsHops(edges, Seq(1L).toDF("node"), maxDepth = 5)
+      assert(hops.count() == 2)
+      Checkpoints.release(hops)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"generations left pinned: $leaked")
     }
 
     it("respects the depth budget and multi-seed minimum") {

@@ -232,7 +232,7 @@ class Round7Suite extends SparkSpec {
       assert(got == Map("a" -> 638750L, "b" -> 421468L, "c" -> 421468L))
     }
 
-    it("rotates intermediate checkpoints and releaseRanks frees the last") {
+    it("rotates intermediate checkpoints and Checkpoints.release frees the last") {
       // compare RDD-id SETS, not sizes: the ContextCleaner reaps earlier
       // tests' unreferenced checkpoints on GC, so absolute counts race
       val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
@@ -245,9 +245,9 @@ class Round7Suite extends SparkSpec {
       val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(pinned.size == 1,
         s"exactly the final rank checkpoint should be pinned, got $pinned")
-      Graph.releaseRanks(ranks)
+      Checkpoints.release(ranks)
       assert((spark.sparkContext.getPersistentRDDs.keySet & pinned).isEmpty,
-        "releaseRanks must unpin the checkpoint blocks")
+        "Checkpoints.release must unpin the checkpoint blocks")
     }
 
     it("total rank mass never exceeds the starting mass") {
@@ -257,6 +257,43 @@ class Round7Suite extends SparkSpec {
         .agg(sum("rank")).as[Long].collect().head
       // integer truncation only ever DROPS mass vs the ideal 3e6
       assert(total <= 3L * Graph.Scale && total > 2L * Graph.Scale)
+    }
+
+    // a cycle, a fork, a self-loop and a dangling node
+    def mixedGraph = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"),
+      ("d", "d"), ("b", "e")).toDF("src", "dst")
+
+    def ranksOf(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      val got = df.as[(String, Long)].collect().toMap
+      Checkpoints.release(df)
+      got
+    }
+
+    it("weighted: matches hand-computed integer ranks on a 3-node graph") {
+      // a→b w=1, a→c w=3, b→a w=2: Σw(a)=4, Σw(b)=2, c dangling;
+      // share = (rank · w) div Σw(src), rank = 150000 + (85·Σshare) div 100
+      val edges = Seq(("a", "b", 1L), ("a", "c", 3L), ("b", "a", 2L))
+        .toDF("src", "dst", "w")
+      // r1: a=150000+850000, b=150000+85*250000/100, c=150000+85*750000/100
+      // r2: a=150000+85*362500/100=458125, b=362500, c=787500
+      // r3: b=150000+(85*(458125 div 4)) div 100=247351,
+      //     c=150000+(85*(458125*3 div 4)) div 100=442054, a=458125
+      assert(ranksOf(Graph.pagerankWeightedInt(edges, 3)) ==
+        Map("a" -> 458125L, "b" -> 247351L, "c" -> 442054L))
+    }
+
+    it("weighted with uniform weights equals the unweighted ranks") {
+      val plain = ranksOf(Graph.pagerankInt(mixedGraph, 4))
+      assert(ranksOf(Graph.pagerankWeightedInt(
+        mixedGraph.withColumn("w", lit(1L)), 4)) == plain)
+    }
+
+    it("personalized with every node seeded equals the unweighted ranks") {
+      val e = mixedGraph
+      val every = e.select(col("src").as("n")).union(e.select("dst"))
+      val plain = ranksOf(Graph.pagerankInt(e, 4, dampingPct = 70))
+      assert(ranksOf(Graph.personalizedPagerankInt(e, every, 4,
+        dampingPct = 70)) == plain)
     }
   }
 
@@ -272,6 +309,26 @@ class Round7Suite extends SparkSpec {
         s"intermediate rounds' checkpoints must be released in the loop, got $pinned")
       Checkpoints.release(labels)
       assert((spark.sparkContext.getPersistentRDDs.keySet & pinned).isEmpty)
+    }
+
+    it("releases every round's checkpoint when it does not converge") {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val chain = (1L to 6L).map(i => (i, i + 1L)).toDF("doc_a", "doc_b")
+      intercept[IllegalStateException] {
+        DedupGroups.connectedComponents(chain, maxIter = 1)
+      }
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"the throw path must release, leaked $leaked")
+    }
+
+    it("never releases the caller's checkpointed pairs") {
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L))
+        .toDF("doc_a", "doc_b").localCheckpoint()
+      val labels = DedupGroups.connectedComponents(pairs)
+      assert(labels.count() == 6)
+      Checkpoints.release(labels)
+      assert(pairs.count() == 4)
+      Checkpoints.release(pairs)
     }
   }
 

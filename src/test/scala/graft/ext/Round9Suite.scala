@@ -441,7 +441,7 @@ class Round9Suite extends SparkSpec {
       val r2 = Graph.labelPropagation(edges, seeds, rounds = 2)
         .as[(String, Option[String])].collect().toMap
       assert(r2("d").contains("X") && r2("a").contains("X"))
-      Graph.releaseRanks(
+      Checkpoints.release(
         Graph.labelPropagation(edges, seeds, rounds = 1))
     }
 
@@ -466,7 +466,7 @@ class Round9Suite extends SparkSpec {
       val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(pinned.size == 1,
         s"exactly the final label checkpoint should be pinned, got $pinned")
-      Graph.releaseRanks(out)
+      Checkpoints.release(out)
       assert((spark.sparkContext.getPersistentRDDs.keySet & pinned).isEmpty)
     }
   }
@@ -484,7 +484,7 @@ class Round9Suite extends SparkSpec {
       // r2: a=150000+85*(850000 div 2) div 100=511250,
       //     b=85*150000 div 100=127500, c=85*425000 div 100=361250
       assert(got == Map("a" -> 511250L, "b" -> 127500L, "c" -> 361250L))
-      Graph.releaseRanks(
+      Checkpoints.release(
         Graph.personalizedPagerankInt(edges, seeds, iterations = 1))
     }
 
@@ -498,10 +498,10 @@ class Round9Suite extends SparkSpec {
       val byNode = ranks.as[(String, Long)].collect().toMap
       assert(byNode("x") == 0L && byNode("y") == 0L)
       assert(byNode("a") > 0L && byNode("b") > 0L)
-      Graph.releaseRanks(ranks)
+      Checkpoints.release(ranks)
     }
 
-    it("rotates checkpoints; releaseRanks frees the final one") {
+    it("rotates checkpoints; Checkpoints.release frees the final one") {
       val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val ranks = Graph.personalizedPagerankInt(
@@ -510,7 +510,7 @@ class Round9Suite extends SparkSpec {
       val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(pinned.size == 1,
         s"exactly the final rank checkpoint should be pinned, got $pinned")
-      Graph.releaseRanks(ranks)
+      Checkpoints.release(ranks)
       assert((spark.sparkContext.getPersistentRDDs.keySet & pinned).isEmpty)
     }
 
@@ -521,7 +521,7 @@ class Round9Suite extends SparkSpec {
         edges, Seq("a", "b").toDF("n"), iterations = 4)
       val total = ranks.agg(sum("rank")).as[Long].collect().head
       assert(total <= 2L * Graph.Scale && total > Graph.Scale)
-      Graph.releaseRanks(ranks)
+      Checkpoints.release(ranks)
     }
   }
 }
