@@ -15,9 +15,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // release whatever the query pinned once its rows are written
+      try {
+        val df = fn(spark, sfDir)
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally graft.ext.Checkpoints.release(df)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

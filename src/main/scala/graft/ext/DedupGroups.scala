@@ -128,7 +128,7 @@ object DedupGroups {
     */
   def keepBestPerComponent(pairs: DataFrame, scores: DataFrame): DataFrame = {
     val labels = connectedComponents(pairs)
-    val out = labels.join(scores, labels("id") === scores("doc_id"))
+    try labels.join(scores, labels("id") === scores("doc_id"))
       .groupBy("component")
       .agg(count(lit(1)).as("n_members"),
         min(struct((-col("score")).as("ns"), col("doc_id").as("id")))
@@ -137,11 +137,11 @@ object DedupGroups {
         col("best").getField("id").as("kept_doc_id"),
         (-col("best").getField("ns")).as("kept_score"))
       // eager checkpoint materializes the per-component rows NOW, so the
-      // O(nodes) labels checkpoint can be released here instead of
-      // pinning one label table per call for the rest of the session
+      // O(nodes) labels checkpoint can be released here, on every exit
+      // path, instead of pinning one label table per call for the rest
+      // of the session
       .localCheckpoint()
-    Checkpoints.release(labels)
-    out
+    finally Checkpoints.release(labels)
   }
 
   /** Keep-one-per-group: given docs and near-dup pairs, return docs minus

@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow,
+  SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -29,13 +31,84 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * sorters' execution memory and failed at 10^8 rows (docs/PLANS.md,
   * lessons 1-2: per-row ratio 1.48 boxed+cached; tasks died with
   * UNABLE_TO_ACQUIRE_MEMORY cached-unsafe; ~1.0 on this uncached path).
-  * The appended column is written with a reused JoinedRow +
-  * UnsafeProjection — no boxing anywhere.
+  * The appended columns are written with a reused JoinedRow +
+  * UnsafeProjection over a reused mutable row — no boxing anywhere.
   *
   * The sort columns MUST form a total order (include a unique tiebreaker):
   * range boundaries are only deterministic when no two rows compare equal.
+  *
+  * The per-key operators ([[withFillForward]], [[withRunningTotalPerKey]],
+  * [[withRunningTotalsPerKey]], [[withLagPerKey]],
+  * [[withRunningMaxPerKey]]) are the hot-key-safe form of a
+  * `Window.partitionBy(key).orderBy(ts)` frame, which sorts each key's
+  * whole timeline in one task. They range-partition on (key, ts, tie)
+  * instead, so a hot key's rows stay CONTIGUOUS in range order but
+  * spread over many partitions, and each is one [[KeyFold]] over that
+  * order. The boundary stitch is written once, in [[perKeyFold]]: job 1
+  * reports each partition's first key, last key and the fold state of
+  * its last key's run; the driver threads a carry (key, state) through
+  * the partitions in range order — the carry EXTENDS through a partition
+  * (`combine`) only while that partition reads one key equal to the
+  * carry's, and otherwise RESTARTS from the partition's last run (empty
+  * partitions pass it on); job 2 re-scans each partition from its carry,
+  * which applies only while the partition still reads the carry's key.
+  * `keyCol`/`tsCol` are non-null LongType and (key, ts, tieCols) must be
+  * a total order.
   */
 object GlobalOrder {
+
+  /** `df` range-partitioned on `sortCols` into `partitions` (0 = the
+    * session's shuffle partitions) and sorted within each: the one
+    * uncached lineage both jobs of an operator read. `schema` is the
+    * input schema plus the LongType `outs`.
+    */
+  private final case class RangeSorted(spark: SparkSession,
+                                       rows: RDD[InternalRow],
+                                       schema: StructType, width: Int)
+
+  private def rangeSort(df: DataFrame, sortCols: Seq[Column],
+                        partitions: Int, outs: Seq[String],
+                        nullable: Boolean): RangeSorted = {
+    val spark = df.sparkSession
+    val p = if (partitions > 0) partitions
+    else spark.sessionState.conf.numShufflePartitions
+    val sorted = df.repartitionByRange(p, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+    RangeSorted(spark, sorted.queryExecution.toRdd, StructType(
+      sorted.schema.fields ++ outs.map(StructField(_, LongType, nullable))),
+      outs.length)
+  }
+
+  /** Job 2 of every operator here: re-scan each range partition, where
+    * `scan(i)` builds partition i's per-row writer of the appended slots.
+    * The slots ride in a reused mutable row joined onto the input row.
+    */
+  private def appendScan(s: RangeSorted)(
+      scan: Int => (InternalRow, InternalRow) => Unit): DataFrame = {
+    val schema = s.schema // the task closure must not capture `s`
+    val width = s.width
+    val rdd = s.rows.mapPartitionsWithIndex { (i, it) =>
+      val write = scan(i)
+      val extra = new SpecificInternalRow(Seq.fill(width)(LongType))
+      val joined = new JoinedRow
+      val proj = UnsafeProjection.create(schema)
+      it.map { row =>
+        write(row, extra)
+        proj(joined(row, extra)): InternalRow
+      }
+    }
+    GraftShim.internalCreateDataFrame(s.spark, rdd, schema)
+  }
+
+  /** Field index of `name`, which must be LongType; `need` leads the
+    * failure message.
+    */
+  private def longField(df: DataFrame, name: String, need: String): Int = {
+    val i = df.schema.fieldIndex(name)
+    require(df.schema(i).dataType == LongType,
+      s"$need; $name is ${df.schema(i).dataType}")
+    i
+  }
 
   /** Range-sort `df` on `sortCols`, then append `out` = the inclusive
     * prefix fold of `step(row)` under the commutative-associative monoid
@@ -50,44 +123,23 @@ object GlobalOrder {
                              out: String, partitions: Int, zero: Long,
                              step: InternalRow => Long,
                              op: (Long, Long) => Long): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    // Both jobs run on the SAME RDD lineage, so the range shuffle is
-    // written once and each job re-reads the shuffle files, paying only
-    // the reduce-side in-partition sort twice. Deliberately NOT cached:
-    // persisting the sorted rows (any storage level) makes storage
-    // compete with the 32 concurrent sorters' execution memory — at 10^8
-    // rows on an 8 GB heap that contention killed tasks with
-    // UNABLE_TO_ACQUIRE_MEMORY, while the double re-sort is a few percent
-    // of the pass and needs no storage at all.
-    val rdd0 = sorted.queryExecution.toRdd
+    val sorted = rangeSort(df, sortCols, partitions, Seq(out),
+      nullable = false)
     // job 1: per-partition folds -> per-partition seed values in range
     // order (p longs to the driver — the only global state)
-    val stats = rdd0
+    val stats = sorted.rows
       .mapPartitionsWithIndex((i, it) =>
         Iterator((i, it.foldLeft(zero)((acc, r) => op(acc, step(r))))))
       .collect().sortBy(_._1).map(_._2)
     val offsets = stats.scanLeft(zero)(op)
-    // job 2: per-partition prefix scan seeded with the offset; the scan
-    // value rides in a reused 1-field row joined onto the input row
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
+    val appended = appendScan(sorted) { i =>
       var acc = offsets(i)
-      val extra = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
+      (row, extra) => {
         acc = op(acc, step(row))
-        extra.update(0, acc)
-        proj(joined(row, extra)): InternalRow
+        extra.setLong(0, acc)
       }
     }
-    (GraftShim.internalCreateDataFrame(spark, rdd, schema),
-      stats.foldLeft(zero)(op))
+    (appended, stats.foldLeft(zero)(op))
   }
 
   /** [[scanAppendFold]] under the (0, +) monoid: running totals. */
@@ -100,6 +152,81 @@ object GlobalOrder {
   private def numbered(df: DataFrame, sortCols: Seq[Column], out: String,
                        partitions: Int): (DataFrame, Long) =
     scanAppend(df, sortCols, out, partitions, _ => 1L)
+
+  /** One per-key operator as a fold: the state is a fixed-width
+    * `Array[Long]` starting at `identity`; `add` folds one row in place;
+    * `combine(a, b)` is the state of run a followed by run b — associative,
+    * called only by the driver; `emit` writes the appended slots, before
+    * `add` when `emitFirst` (the exclusive forms). No allocation per row.
+    */
+  private final case class KeyFold(
+      identity: Array[Long],
+      add: (Array[Long], InternalRow) => Unit,
+      combine: (Array[Long], Array[Long]) => Array[Long],
+      emit: (Array[Long], InternalRow) => Unit,
+      emitFirst: Boolean = false)
+
+  /** Run `fold` (built from the value columns' indices) over the (key,
+    * ts, tieCols) range order, appending `outs`: the boundary stitch of
+    * the object doc. `op` names the operator in the LongType checks.
+    */
+  private def perKeyFold(df: DataFrame, op: String, keyCol: String,
+                         tsCol: String, valueCols: Seq[String],
+                         tieCols: Seq[Column], outs: Seq[String],
+                         nullable: Boolean, partitions: Int)(
+                         fold: Array[Int] => KeyFold): DataFrame = {
+    requireFresh(df, outs: _*)
+    val need = s"$op needs LongType columns"
+    val ki = longField(df, keyCol, need)
+    longField(df, tsCol, need)
+    val f = fold(valueCols.map(longField(df, _, need)).toArray)
+    val sorted = rangeSort(df, col(keyCol) +: col(tsCol) +: tieCols,
+      partitions, outs, nullable)
+    // job 1: per non-empty partition — first key, last key, and the
+    // state of the last key's run within the partition
+    val stats = sorted.rows.mapPartitionsWithIndex { (i, it) =>
+      var seen = false
+      var fk = 0L; var lk = 0L
+      val st = f.identity.clone()
+      it.foreach { r =>
+        val k = r.getLong(ki)
+        if (!seen) { fk = k; seen = true }
+        else if (k != lk) System.arraycopy(f.identity, 0, st, 0, st.length)
+        lk = k
+        f.add(st, r)
+      }
+      Iterator((i, if (seen) Some((fk, lk, st)) else None))
+    }.collect().sortBy(_._1).map(_._2)
+    // driver: carries(i) = the (key, state) carried into partition i
+    val carries = stats.scanLeft(Option.empty[(Long, Array[Long])]) {
+      case (carry, None) => carry
+      case (Some((ck, cst)), Some((fk, lk, st))) if ck == fk && lk == fk =>
+        Some((lk, f.combine(cst, st)))
+      case (_, Some((_, lk, st))) => Some((lk, st))
+    }
+    // job 2: per-partition re-scan seeded with the carry
+    appendScan(sorted) { i =>
+      var curSet = carries(i).isDefined
+      var curKey = carries(i).fold(0L)(_._1)
+      val st = carries(i).fold(f.identity)(_._2).clone()
+      (row, extra) => {
+        val k = row.getLong(ki)
+        if (!curSet || k != curKey) {
+          curKey = k; curSet = true
+          System.arraycopy(f.identity, 0, st, 0, st.length)
+        }
+        if (f.emitFirst) f.emit(st, extra)
+        f.add(st, row)
+        if (!f.emitFirst) f.emit(st, extra)
+      }
+    }
+  }
+
+  /** The nullable folds' emit: state slot 0 when slot 1 (has a value)
+    * is set, else null.
+    */
+  private val emitIfSet: (Array[Long], InternalRow) => Unit =
+    (st, o) => if (st(1) != 0L) o.setLong(0, st(0)) else o.setNullAt(0)
 
   /** Reject inputs that already carry an output / internal working column
     * name: the append would otherwise produce a duplicate or ambiguous
@@ -138,10 +265,8 @@ object GlobalOrder {
                        out: String = "running_total",
                        partitions: Int = 0): DataFrame = {
     requireFresh(df, out)
-    val vi = df.schema.fieldIndex(valueCol)
-    require(df.schema(vi).dataType == LongType,
-      s"withRunningTotal needs a LongType value column; " +
-        s"$valueCol is ${df.schema(vi).dataType}")
+    val vi = longField(df, valueCol,
+      "withRunningTotal needs a LongType value column")
     scanAppend(df, sortCols, out, partitions,
       r => if (r.isNullAt(vi)) 0L else r.getLong(vi))._1
   }
@@ -164,10 +289,8 @@ object GlobalOrder {
                      out: String = "running_max",
                      partitions: Int = 0): DataFrame = {
     requireFresh(df, out)
-    val vi = df.schema.fieldIndex(valueCol)
-    require(df.schema(vi).dataType == LongType,
-      s"withRunningMax needs a LongType value column; " +
-        s"$valueCol is ${df.schema(vi).dataType}")
+    val vi = longField(df, valueCol,
+      "withRunningMax needs a LongType value column")
     scanAppendFold(df, sortCols, out, partitions, Long.MinValue,
       r => if (r.isNullAt(vi)) Long.MinValue else r.getLong(vi),
       math.max)._1
@@ -183,17 +306,14 @@ object GlobalOrder {
     * `Window.partitionBy(key).orderBy(ts)` (q38) — buffers and sorts
     * each key's whole timeline in one task, so a hot key (a bot account
     * with half the event log) becomes the straggler no config can fix.
-    * Here the timeline is range-partitioned on (key, ts, tie) instead: a
-    * hot key's events stay CONTIGUOUS in range order but spread over
-    * many partitions, and the session numbering distributes by the
-    * [[withRowNumber]] recipe — per partition, job 1 reports the
-    * boundary rows (first/last key and timestamp) plus the count of
-    * interior session breaks; the driver resolves each partition-
-    * boundary break and prefix-sums break counts into per-partition
-    * session-id offsets (2p longs of global state); job 2 re-scans and
-    * assigns ids with a reused JoinedRow + UnsafeProjection. Same
-    * uncached two-job-one-shuffle discipline as [[withRowNumber]] (see
-    * the object doc for why NOT caching the sorted rows is load-bearing).
+    * Here the timeline is range-partitioned on (key, ts, tie) as for the
+    * per-key operators (object doc), but the ids count breaks GLOBALLY,
+    * so the stitch is the [[withRowNumber]] recipe: per partition, job 1
+    * reports the boundary rows (first/last key and timestamp) plus the
+    * count of interior session breaks; the driver resolves each
+    * partition-boundary break and prefix-sums break counts into
+    * per-partition session-id offsets (2p longs of global state); job 2
+    * re-scans and assigns ids.
     *
     * `keyCol`/`tsCol` must be non-null LongType (hash or dictionary-
     * encode other key types; convert timestamps with `unix_micros`);
@@ -206,28 +326,17 @@ object GlobalOrder {
                     partitions: Int = 0): DataFrame = {
     requireFresh(df, out)
     require(gap >= 0, s"gap must be >= 0, got $gap")
-    val ki = df.schema.fieldIndex(keyCol)
-    val ti = df.schema.fieldIndex(tsCol)
-    require(df.schema(ki).dataType == LongType,
-      s"withSessionId needs a LongType key column; " +
-        s"$keyCol is ${df.schema(ki).dataType}")
-    require(df.schema(ti).dataType == LongType,
-      s"withSessionId needs a LongType time column; " +
-        s"$tsCol is ${df.schema(ti).dataType}")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sortCols = col(keyCol) +: col(tsCol) +: tieCols
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    val rdd0 = sorted.queryExecution.toRdd
+    val ki = longField(df, keyCol,
+      "withSessionId needs a LongType key column")
+    val ti = longField(df, tsCol,
+      "withSessionId needs a LongType time column")
+    val sorted = rangeSort(df, col(keyCol) +: col(tsCol) +: tieCols,
+      partitions, Seq(out), nullable = false)
     // job 1: per-partition boundary rows + interior break count. The
     // break status of each partition's FIRST row depends on the previous
     // partition's last row, which only the driver sees — everything else
     // is partition-local.
-    val stats = rdd0.mapPartitionsWithIndex { (i, it) =>
+    val stats = sorted.rows.mapPartitionsWithIndex { (i, it) =>
       var seen = false
       var fk = 0L; var ft = 0L; var pk = 0L; var pt = 0L; var inner = 0L
       it.foreach { r =>
@@ -257,25 +366,20 @@ object GlobalOrder {
       }
     }
     // job 2: per-partition re-scan assigning ids from the offset
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
+    appendScan(sorted) { i =>
       var sid = offsets(i)
       var seen = false
       var pk = 0L; var pt = 0L
-      val extra = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
+      (row, extra) => {
         val k = row.getLong(ki); val t = row.getLong(ti)
         val brk =
           if (!seen) firstBreak(i)
           else k != pk || t - pt > gap
         if (brk) sid += 1
         seen = true; pk = k; pt = t
-        extra.update(0, sid)
-        proj(joined(row, extra)): InternalRow
+        extra.setLong(0, sid)
       }
     }
-    GraftShim.internalCreateDataFrame(spark, rdd, schema)
   }
 
   /** Distributed fill-forward (last observation carried forward): append
@@ -284,84 +388,21 @@ object GlobalOrder {
     * first observation stay null. Same semantics as
     * `last(value, ignoreNulls).over(Window.partitionBy(key).orderBy(ts))`
     * — and the same hot-key problem: a sensor/user emitting half the
-    * rows serializes its whole timeline into one window task. Same cure
-    * as [[withSessionId]]: range-partition on (key, ts, tie), resolve
-    * partition boundaries with a per-partition stats job (the carry into
-    * partition i is the last non-null of i−1's LAST key, which only
-    * applies while i still reads that key), then fill in one Tungsten
-    * re-scan. `keyCol`/`tsCol` non-null LongType; `valueCol` nullable
-    * LongType; (key, ts, tieCols) must be a total order.
+    * rows serializes its whole timeline into one window task. A per-key
+    * fold (object doc) whose state is (last non-null, seen one);
+    * `valueCol` nullable LongType.
     */
   def withFillForward(df: DataFrame, keyCol: String, tsCol: String,
                       valueCol: String, tieCols: Seq[Column],
                       out: String = "filled",
-                      partitions: Int = 0): DataFrame = {
-    requireFresh(df, out)
-    val ki = df.schema.fieldIndex(keyCol)
-    val ti = df.schema.fieldIndex(tsCol)
-    val vi = df.schema.fieldIndex(valueCol)
-    for ((c, i) <- Seq(keyCol -> ki, tsCol -> ti, valueCol -> vi))
-      require(df.schema(i).dataType == LongType,
-        s"withFillForward needs LongType columns; " +
-          s"$c is ${df.schema(i).dataType}")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sortCols = col(keyCol) +: col(tsCol) +: tieCols
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(out, LongType, nullable = true))
-    val rdd0 = sorted.queryExecution.toRdd
-    // job 1: per partition — first key, last key, and the last non-null
-    // value observed for the last key WITHIN the partition (if any)
-    val stats = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var seen = false
-      var fk = 0L; var lk = 0L; var lv = 0L; var lvSet = false
-      it.foreach { r =>
-        val k = r.getLong(ki)
-        if (!seen) { fk = k; seen = true }
-        else if (k != lk) { lv = 0L; lvSet = false }
-        lk = k
-        if (!r.isNullAt(vi)) { lv = r.getLong(vi); lvSet = true }
-      }
-      Iterator((i, seen, fk, lk, lv, lvSet))
-    }.collect().sortBy(_._1)
-    // driver: thread the carry (key, last non-null) across partitions in
-    // range order. A partition whose last key saw no non-null either
-    // extends an incoming carry for that same key (single-key partition)
-    // or kills it (the key started inside this partition).
-    val carryKey = Array.ofDim[Long](stats.length)
-    val carryVal = Array.ofDim[Long](stats.length)
-    val carrySet = Array.ofDim[Boolean](stats.length)
-    var ck = 0L; var cv = 0L; var cs = false
-    for (((_, seen, fk, lk, lv, lvSet), i) <- stats.zipWithIndex) {
-      carryKey(i) = ck; carryVal(i) = cv; carrySet(i) = cs
-      if (seen) {
-        if (lvSet) { ck = lk; cv = lv; cs = true }
-        else if (!(cs && ck == fk && lk == fk)) cs = false
-      }
+                      partitions: Int = 0): DataFrame =
+    perKeyFold(df, "withFillForward", keyCol, tsCol, Seq(valueCol), tieCols,
+        Seq(out), nullable = true, partitions) { case Array(vi) =>
+      KeyFold(Array(0L, 0L),
+        (st, r) => if (!r.isNullAt(vi)) { st(0) = r.getLong(vi); st(1) = 1L },
+        (a, b) => if (b(1) != 0L) b else a,
+        emitIfSet)
     }
-    // job 2: per-partition fill seeded with the carry
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var curKey = carryKey(i)
-      var curVal = carryVal(i)
-      var curSet = carrySet(i)
-      val extra = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
-        val k = row.getLong(ki)
-        if (!curSet || k != curKey) { curKey = k; curSet = false }
-        if (!row.isNullAt(vi)) {
-          curVal = row.getLong(vi); curSet = true; curKey = k
-        }
-        if (curSet) extra.update(0, curVal) else extra.setNullAt(0)
-        proj(joined(row, extra)): InternalRow
-      }
-    }
-    GraftShim.internalCreateDataFrame(spark, rdd, schema)
-  }
 
   /** Exact GLOBAL median of a LongType column at any scale — the order
     * statistic `percentile(value, 0.5)` computes by buffering all values
@@ -380,10 +421,7 @@ object GlobalOrder {
   def medianOfLong(df: DataFrame, valueCol: String,
                    tieCols: Seq[Column]): DataFrame = {
     requireFresh(df, "__graft_rn")
-    val vi = df.schema.fieldIndex(valueCol)
-    require(df.schema(vi).dataType == LongType,
-      s"medianOfLong needs a LongType value column; " +
-        s"$valueCol is ${df.schema(vi).dataType}")
+    longField(df, valueCol, "medianOfLong needs a LongType value column")
     val (rn, n) = numbered(df, col(valueCol) +: tieCols, "__graft_rn", 0)
     require(n > 0, "medianOfLong needs a non-empty input")
     val lo = (n + 1) / 2
@@ -398,83 +436,18 @@ object GlobalOrder {
     * sum of `valueCol` over the SAME key's rows at or before each row in
     * (key, ts, tieCols) order — the
     * `sum(v).over(Window.partitionBy(key).orderBy(ts))` semantics
-    * without the hot-key single-task sort. Third member of the
-    * boundary-stitch family ([[withSessionId]], [[withFillForward]]):
-    * job 1 reports each partition's first/last key and the last key's
-    * within-partition value total, the driver threads the carry (a carry
-    * extends only while a single-key partition continues its own key),
-    * job 2 re-scans and accumulates. Combined with
+    * without the hot-key single-task sort: [[withRunningTotalsPerKey]]
+    * with one column. Combined with
     * [[graft.ext.AsofJoin.leftAsofBig]] this gives rolling-window
     * aggregates (rolling = T(t) − T(t−W) via an as-of probe) at any key
-    * skew. `keyCol`/`tsCol` non-null LongType; `valueCol` LongType,
-    * nulls count as 0 (SQL SUM).
+    * skew. `valueCol` LongType, nulls count as 0 (SQL SUM).
     */
   def withRunningTotalPerKey(df: DataFrame, keyCol: String, tsCol: String,
                              valueCol: String, tieCols: Seq[Column],
                              out: String = "running_total",
-                             partitions: Int = 0): DataFrame = {
-    requireFresh(df, out)
-    val ki = df.schema.fieldIndex(keyCol)
-    val ti = df.schema.fieldIndex(tsCol)
-    val vi = df.schema.fieldIndex(valueCol)
-    for ((c, i) <- Seq(keyCol -> ki, tsCol -> ti, valueCol -> vi))
-      require(df.schema(i).dataType == LongType,
-        s"withRunningTotalPerKey needs LongType columns; " +
-          s"$c is ${df.schema(i).dataType}")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sortCols = col(keyCol) +: col(tsCol) +: tieCols
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    val rdd0 = sorted.queryExecution.toRdd
-    // job 1: per partition — first/last key and the value total of the
-    // LAST key's rows within this partition
-    val stats = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var seen = false
-      var fk = 0L; var lk = 0L; var tot = 0L
-      it.foreach { r =>
-        val k = r.getLong(ki)
-        if (!seen) { fk = k; seen = true }
-        else if (k != lk) tot = 0L
-        lk = k
-        if (!r.isNullAt(vi)) tot += r.getLong(vi)
-      }
-      Iterator((i, seen, fk, lk, tot))
-    }.collect().sortBy(_._1)
-    // driver: thread the carry (key, total-so-far) across partitions
-    val carryKey = Array.ofDim[Long](stats.length)
-    val carryTot = Array.ofDim[Long](stats.length)
-    val carrySet = Array.ofDim[Boolean](stats.length)
-    var ck = 0L; var ct = 0L; var cs = false
-    for (((_, seen, fk, lk, tot), i) <- stats.zipWithIndex) {
-      carryKey(i) = ck; carryTot(i) = ct; carrySet(i) = cs
-      if (seen) {
-        val carryIn = if (cs && ck == fk) ct else 0L
-        if (lk == fk) { ck = lk; ct = carryIn + tot; cs = true }
-        else { ck = lk; ct = tot; cs = true }
-      }
-    }
-    // job 2: per-partition accumulation seeded with the carry
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var curKey = carryKey(i)
-      var acc = if (carrySet(i)) carryTot(i) else 0L
-      var curSet = carrySet(i)
-      val extra = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
-        val k = row.getLong(ki)
-        if (!curSet || k != curKey) { curKey = k; acc = 0L; curSet = true }
-        if (!row.isNullAt(vi)) acc += row.getLong(vi)
-        extra.update(0, acc)
-        proj(joined(row, extra)): InternalRow
-      }
-    }
-    GraftShim.internalCreateDataFrame(spark, rdd, schema)
-  }
+                             partitions: Int = 0): DataFrame =
+    sumsPerKey(df, "withRunningTotalPerKey", keyCol, tsCol, Seq(valueCol),
+      tieCols, Seq(out), partitions)
 
   /** Multi-column variant of [[withRunningTotalPerKey]]: append one
     * inclusive per-key running total PER entry of `valueCols` (out
@@ -484,9 +457,8 @@ object GlobalOrder {
     * running value AND a running rank — pays one ordered pass instead
     * of one per measure; the measured difference on the 10⁸-row
     * pareto_hot_group shape is a 1.30 → ~1.0 per-row ratio (each
-    * extra stitch re-sorts the whole input). Same contracts as the
-    * single-column form: non-null LongType key/ts, LongType values
-    * (nulls count 0), (key, ts, tie) a total order.
+    * extra stitch re-sorts the whole input). LongType values, nulls
+    * count 0.
     */
   def withRunningTotalsPerKey(df: DataFrame, keyCol: String, tsCol: String,
                               valueCols: Seq[String], tieCols: Seq[Column],
@@ -494,180 +466,67 @@ object GlobalOrder {
                               partitions: Int = 0): DataFrame = {
     require(valueCols.nonEmpty && valueCols.length == outs.length,
       s"valueCols/outs must align, got $valueCols vs $outs")
-    requireFresh(df, outs: _*)
-    val ki = df.schema.fieldIndex(keyCol)
-    val ti = df.schema.fieldIndex(tsCol)
-    val vis = valueCols.map(df.schema.fieldIndex).toArray
-    for ((c, i) <- (keyCol -> ki) +: (tsCol -> ti) +:
-        valueCols.zip(vis.toSeq))
-      require(df.schema(i).dataType == LongType,
-        s"withRunningTotalsPerKey needs LongType columns; " +
-          s"$c is ${df.schema(i).dataType}")
-    val m = vis.length
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sortCols = col(keyCol) +: col(tsCol) +: tieCols
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(sorted.schema.fields ++
-      outs.map(o => StructField(o, LongType, nullable = false)))
-    val rdd0 = sorted.queryExecution.toRdd
-    // job 1: per partition — first/last key and the LAST key's
-    // within-partition totals, one slot per measure
-    val stats = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var seen = false
-      var fk = 0L; var lk = 0L
-      val tot = Array.ofDim[Long](m)
-      it.foreach { r =>
-        val k = r.getLong(ki)
-        if (!seen) { fk = k; seen = true }
-        else if (k != lk) java.util.Arrays.fill(tot, 0L)
-        lk = k
-        var j = 0
-        while (j < m) {
-          if (!r.isNullAt(vis(j))) tot(j) += r.getLong(vis(j))
-          j += 1
-        }
-      }
-      Iterator((i, seen, fk, lk, tot))
-    }.collect().sortBy(_._1)
-    // driver: thread the per-measure carry vector across partitions
-    val carryKey = Array.ofDim[Long](stats.length)
-    val carryTot = Array.ofDim[Array[Long]](stats.length)
-    val carrySet = Array.ofDim[Boolean](stats.length)
-    var ck = 0L; var ct = Array.ofDim[Long](m); var cs = false
-    for (((_, seen, fk, lk, tot), i) <- stats.zipWithIndex) {
-      carryKey(i) = ck; carryTot(i) = ct; carrySet(i) = cs
-      if (seen) {
-        val carryIn =
-          if (cs && ck == fk) ct else Array.ofDim[Long](m)
-        ck = lk
-        ct = if (lk == fk) Array.tabulate(m)(j => carryIn(j) + tot(j))
-        else tot
-        cs = true
-      }
-    }
-    // job 2: per-partition accumulation seeded with the carry vector
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var curKey = carryKey(i)
-      val acc =
-        if (carrySet(i)) carryTot(i).clone() else Array.ofDim[Long](m)
-      var curSet = carrySet(i)
-      val extra = new GenericInternalRow(m)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
-        val k = row.getLong(ki)
-        if (!curSet || k != curKey) {
-          curKey = k; java.util.Arrays.fill(acc, 0L); curSet = true
-        }
-        var j = 0
-        while (j < m) {
-          if (!row.isNullAt(vis(j))) acc(j) += row.getLong(vis(j))
-          extra.update(j, acc(j))
-          j += 1
-        }
-        proj(joined(row, extra)): InternalRow
-      }
-    }
-    GraftShim.internalCreateDataFrame(spark, rdd, schema)
+    sumsPerKey(df, "withRunningTotalsPerKey", keyCol, tsCol, valueCols,
+      tieCols, outs, partitions)
   }
+
+  /** The per-key sum fold: one running total per value column. */
+  private def sumsPerKey(df: DataFrame, op: String, keyCol: String,
+                         tsCol: String, valueCols: Seq[String],
+                         tieCols: Seq[Column], outs: Seq[String],
+                         partitions: Int): DataFrame =
+    perKeyFold(df, op, keyCol, tsCol, valueCols, tieCols, outs,
+        nullable = false, partitions) { vis =>
+      val m = vis.length
+      KeyFold(Array.ofDim[Long](m),
+        (st, r) => {
+          var j = 0
+          while (j < m) {
+            if (!r.isNullAt(vis(j))) st(j) += r.getLong(vis(j))
+            j += 1
+          }
+        },
+        (a, b) => Array.tabulate(m)(j => a(j) + b(j)),
+        (st, o) => {
+          var j = 0
+          while (j < m) { o.setLong(j, st(j)); j += 1 }
+        })
+    }
 
   /** Per-key LAG(1), hot-key-safe: append `out` = the IMMEDIATELY
     * previous row's `valueCol` within the same key in (key, ts, tieCols)
     * order, null for each key's first row — the
     * `lag(value, 1).over(Window.partitionBy(key).orderBy(ts))` window-nav
-    * semantics without the hot-key single-task sort. Fourth member of
-    * the boundary-stitch family ([[withSessionId]], [[withFillForward]],
-    * [[withRunningTotalPerKey]]) and the simplest carry of all: job 1
-    * reports each partition's final row (key, value, null-ness), the
-    * driver threads it forward (a carry survives empty partitions and is
-    * consulted only while the next partition continues the same key),
-    * job 2 re-scans holding one previous row. Unlike fill-forward the
-    * carried value may itself be null — lag of a null is null, not the
-    * previous non-null. `keyCol`/`tsCol` non-null LongType; `valueCol`
-    * nullable LongType; (key, ts, tieCols) must be a total order.
+    * semantics without the hot-key single-task sort. A per-key fold
+    * (object doc) whose state is the last row seen, emitted before the
+    * current row is added. Unlike fill-forward the carried value may
+    * itself be null — lag of a null is null, not the previous non-null.
+    * `valueCol` nullable LongType.
     */
   def withLagPerKey(df: DataFrame, keyCol: String, tsCol: String,
                     valueCol: String, tieCols: Seq[Column],
                     out: String = "lagged",
-                    partitions: Int = 0): DataFrame = {
-    requireFresh(df, out)
-    val ki = df.schema.fieldIndex(keyCol)
-    val ti = df.schema.fieldIndex(tsCol)
-    val vi = df.schema.fieldIndex(valueCol)
-    for ((c, i) <- Seq(keyCol -> ki, tsCol -> ti, valueCol -> vi))
-      require(df.schema(i).dataType == LongType,
-        s"withLagPerKey needs LongType columns; " +
-          s"$c is ${df.schema(i).dataType}")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sortCols = col(keyCol) +: col(tsCol) +: tieCols
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(out, LongType, nullable = true))
-    val rdd0 = sorted.queryExecution.toRdd
-    // job 1: per partition — the FINAL row's (key, value, value-null)
-    val stats = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var seen = false
-      var lk = 0L; var lv = 0L; var lvNull = true
-      it.foreach { r =>
-        seen = true
-        lk = r.getLong(ki)
-        lvNull = r.isNullAt(vi)
-        lv = if (lvNull) 0L else r.getLong(vi)
-      }
-      Iterator((i, seen, lk, lv, lvNull))
-    }.collect().sortBy(_._1)
-    // driver: the carry into partition i is the final row of the nearest
-    // non-empty partition before it
-    val carryKey = Array.ofDim[Long](stats.length)
-    val carryVal = Array.ofDim[Long](stats.length)
-    val carryNull = Array.ofDim[Boolean](stats.length)
-    val carrySet = Array.ofDim[Boolean](stats.length)
-    var ck = 0L; var cv = 0L; var cn = true; var cs = false
-    for (((_, seen, lk, lv, lvNull), i) <- stats.zipWithIndex) {
-      carryKey(i) = ck; carryVal(i) = cv; carryNull(i) = cn
-      carrySet(i) = cs
-      if (seen) { ck = lk; cv = lv; cn = lvNull; cs = true }
+                    partitions: Int = 0): DataFrame =
+    perKeyFold(df, "withLagPerKey", keyCol, tsCol, Seq(valueCol), tieCols,
+        Seq(out), nullable = true, partitions) { case Array(vi) =>
+      // (value, value non-null, seen a row)
+      KeyFold(Array(0L, 0L, 0L),
+        (st, r) => {
+          val isNull = r.isNullAt(vi)
+          st(0) = if (isNull) 0L else r.getLong(vi)
+          st(1) = if (isNull) 0L else 1L
+          st(2) = 1L
+        },
+        (a, b) => if (b(2) != 0L) b else a,
+        emitIfSet, emitFirst = true)
     }
-    // job 2: per-partition scan holding one previous row
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var havePrev = carrySet(i)
-      var pk = carryKey(i)
-      var pv = carryVal(i)
-      var pvNull = carryNull(i)
-      val extra = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
-        val k = row.getLong(ki)
-        if (havePrev && pk == k && !pvNull) extra.update(0, pv)
-        else extra.setNullAt(0)
-        havePrev = true
-        pk = k
-        pvNull = row.isNullAt(vi)
-        pv = if (pvNull) 0L else row.getLong(vi)
-        proj(joined(row, extra)): InternalRow
-      }
-    }
-    GraftShim.internalCreateDataFrame(spark, rdd, schema)
-  }
 
   /** Per-key running MAX over a total order, hot-key-safe: append `out` =
     * the maximum of `valueCol` over the same key's rows up to (and, when
     * `inclusive`, including) the current row in (key, ts, tieCols) order —
     * `max(value).over(Window.partitionBy(key).orderBy(ts)
     * [.rowsBetween(unboundedPreceding, -1)])` without the hot-key
-    * single-task sort. Fifth member of the boundary-stitch family
-    * ([[withSessionId]], [[withFillForward]], [[withRunningTotalPerKey]],
-    * [[withLagPerKey]]): job 1 reports each partition's first/last key and
-    * the LAST key's within-partition max, the driver threads the carry (a
-    * carry extends only while a partition continues its own key), job 2
-    * re-scans and folds.
+    * single-task sort, as a per-key fold (object doc).
     *
     * The EXCLUSIVE mode (`inclusive = false`) is the interval-merge
     * primitive: a new merged segment starts exactly when a row's start
@@ -675,99 +534,28 @@ object GlobalOrder {
     * ([[graft.ext.TimeSeries.intervalCoverage]]). `out` is nullable —
     * null while the (exclusive) prefix holds no non-null value, matching
     * the SQL window frame's empty-frame null. Nulls in `valueCol` are
-    * ignored (SQL MAX). `keyCol`/`tsCol` non-null LongType; (key, ts,
-    * tieCols) must be a total order.
+    * ignored (SQL MAX).
     */
   def withRunningMaxPerKey(df: DataFrame, keyCol: String, tsCol: String,
                            valueCol: String, tieCols: Seq[Column],
                            out: String = "running_max",
                            inclusive: Boolean = true,
-                           partitions: Int = 0): DataFrame = {
-    requireFresh(df, out)
-    val ki = df.schema.fieldIndex(keyCol)
-    val ti = df.schema.fieldIndex(tsCol)
-    val vi = df.schema.fieldIndex(valueCol)
-    for ((c, i) <- Seq(keyCol -> ki, tsCol -> ti, valueCol -> vi))
-      require(df.schema(i).dataType == LongType,
-        s"withRunningMaxPerKey needs LongType columns; " +
-          s"$c is ${df.schema(i).dataType}")
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-    else spark.sessionState.conf.numShufflePartitions
-    val sortCols = col(keyCol) +: col(tsCol) +: tieCols
-    val sorted = df.repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = StructType(
-      sorted.schema.fields :+ StructField(out, LongType, nullable = true))
-    val rdd0 = sorted.queryExecution.toRdd
-    // job 1: per partition — first/last key and the LAST key's max
-    // (has-flag tracks an all-null run; Long has no clean -inf sentinel)
-    val stats = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var seen = false
-      var fk = 0L; var lk = 0L; var mx = 0L; var has = false
-      it.foreach { r =>
-        val k = r.getLong(ki)
-        if (!seen) { fk = k; seen = true }
-        else if (k != lk) { mx = 0L; has = false }
-        lk = k
-        if (!r.isNullAt(vi)) {
+                           partitions: Int = 0): DataFrame =
+    perKeyFold(df, "withRunningMaxPerKey", keyCol, tsCol, Seq(valueCol),
+        tieCols, Seq(out), nullable = true, partitions) { case Array(vi) =>
+      // (max, seen a non-null) — Long has no clean -inf sentinel
+      KeyFold(Array(0L, 0L),
+        (st, r) => if (!r.isNullAt(vi)) {
           val v = r.getLong(vi)
-          mx = if (has) math.max(mx, v) else v
-          has = true
-        }
-      }
-      Iterator((i, seen, fk, lk, mx, has))
-    }.collect().sortBy(_._1)
-    // driver: thread the carry (key, max-so-far, has-value) forward
-    val carryKey = Array.ofDim[Long](stats.length)
-    val carryMax = Array.ofDim[Long](stats.length)
-    val carryHas = Array.ofDim[Boolean](stats.length)
-    val carrySet = Array.ofDim[Boolean](stats.length)
-    var ck = 0L; var cm = 0L; var ch = false; var cs = false
-    for (((_, seen, fk, lk, mx, has), i) <- stats.zipWithIndex) {
-      carryKey(i) = ck; carryMax(i) = cm; carryHas(i) = ch; carrySet(i) = cs
-      if (seen) {
-        val inHas = cs && ck == fk && ch
-        if (lk == fk) {
-          ck = lk
-          cm = if (inHas && has) math.max(cm, mx)
-          else if (has) mx else cm
-          ch = inHas || has
-        } else { ck = lk; cm = mx; ch = has }
-        cs = true
-      }
+          st(0) = if (st(1) != 0L) math.max(st(0), v) else v
+          st(1) = 1L
+        },
+        (a, b) =>
+          if (a(1) == 0L) b
+          else if (b(1) == 0L) a
+          else Array(math.max(a(0), b(0)), 1L),
+        emitIfSet, emitFirst = !inclusive)
     }
-    // job 2: per-partition fold seeded with the carry; exclusive mode
-    // emits BEFORE folding the current row
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var curKey = carryKey(i)
-      var curSet = carrySet(i)
-      var has = carrySet(i) && carryHas(i)
-      var mx = carryMax(i)
-      val extra = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(schema)
-      it.map { row =>
-        val k = row.getLong(ki)
-        if (!curSet || k != curKey) {
-          curKey = k; curSet = true; has = false; mx = 0L
-        }
-        if (!inclusive) {
-          if (has) extra.update(0, mx) else extra.setNullAt(0)
-        }
-        if (!row.isNullAt(vi)) {
-          val v = row.getLong(vi)
-          mx = if (has) math.max(mx, v) else v
-          has = true
-        }
-        if (inclusive) {
-          if (has) extra.update(0, mx) else extra.setNullAt(0)
-        }
-        proj(joined(row, extra)): InternalRow
-      }
-    }
-    GraftShim.internalCreateDataFrame(spark, rdd, schema)
-  }
 
   /** Per-group percent rank (feature normalization to [0, 1]),
     * hot-group-safe: `out` = (rank − 1)/(n − 1) with rank = the row's
@@ -853,10 +641,7 @@ object GlobalOrder {
   def groupMedianOfLong(df: DataFrame, groupCol: String, valueCol: String,
                         tieCols: Seq[Column]): DataFrame = {
     requireFresh(df, "__rn", "__lo", "n")
-    val vi = df.schema.fieldIndex(valueCol)
-    require(df.schema(vi).dataType == LongType,
-      s"groupMedianOfLong needs a LongType value column; " +
-        s"$valueCol is ${df.schema(vi).dataType}")
+    longField(df, valueCol, "groupMedianOfLong needs a LongType value column")
     val rn = withRowNumber(df,
       col(groupCol) +: col(valueCol) +: tieCols, "__rn")
     val bounds = rn.groupBy(groupCol)
@@ -901,10 +686,8 @@ object GlobalOrder {
     require(pPct >= 0 && pPct <= 100,
       s"pPct must be in [0, 100], got $pPct")
     requireFresh(df, out, "__rn", "__lo", "n")
-    val vi = df.schema.fieldIndex(valueCol)
-    require(df.schema(vi).dataType == LongType,
-      s"groupQuantileOfLong needs a LongType value column; " +
-        s"$valueCol is ${df.schema(vi).dataType}")
+    longField(df, valueCol,
+      "groupQuantileOfLong needs a LongType value column")
     val rn = withRowNumber(df,
       col(groupCol) +: col(valueCol) +: tieCols, "__rn")
     val picks = rn.groupBy(groupCol)

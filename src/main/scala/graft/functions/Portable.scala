@@ -47,7 +47,7 @@ object Portable {
   def hash30(c: Column): Column = hash60(c).bitwiseAND(lit(Hash30Mask))
 
   /** Whitespace tokenization shared by the text operators; DuckDB:
-    * `string_split_regex(trim(text), '\s+')`.
+    * [[graft.queries.OracleSql.tokSql]].
     */
   def wsTokens(text: Column): Column =
     split(trim(text), "\\s+")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.functions.Portable.wsTokens
+import OracleSql.tokSql
 
 /** Breadth batch 3: term weighting, decile histograms, pivot tables, and
   * regex extraction. The TF-IDF variant uses a rational (log-free) IDF so
@@ -15,8 +16,6 @@ object BreadthQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.functions.Portable.wsTokens
+import OracleSql.tokSql
 
 /** Corpus-level analytics a training-data pipeline runs before/after
   * filtering: n-gram frequency tables, vocabulary statistics, and a
@@ -13,8 +14,6 @@ object CorpusQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, Similarity, TextAnalysis}
+import OracleSql.tokSql
 
 /** Training-data-pipeline operators (dedup, similarity search, text
   * analysis) over the `documents` and `embeddings` tables. Oracles for the
@@ -20,9 +21,6 @@ object ExtensionQueries {
     Readers.table(s, dir, "embeddings")
 
   // ---- shared oracle SQL fragments (DuckDB) -------------------------------
-
-  /** string tokens of `text`, as in Portable.wsTokens. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   /** 60-bit md5 hash of a string SQL expression, as in Portable.hash60. */
   private def hashSql(e: String): String =

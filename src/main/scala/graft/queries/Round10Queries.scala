@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Warehouse}
 import graft.ext.{Analytics, GlobalOrder, Stats, TextAnalysis, TimeSeries}
+import OracleSql.tokSql
 
 /** Round-10 batch: retrieval/BI analyses composed from the scalable
   * primitives — capped inverted index, OHLC resampling, cohort
@@ -16,9 +17,6 @@ object Round10Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  /** DuckDB twin of [[graft.functions.Portable.wsTokens]]. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   /** q163 posting-list cap. */
   private val PostingsK = 10

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Audits, Readers, Warehouse}
 import graft.ext.{Analytics, AsofJoin, GlobalOrder, Graph, IvfIndex, Stats, TextAnalysis}
+import OracleSql.{centsSql, tokSql}
 
 /** Round-11 batch (q182–q201): experimentation / IR / lifecycle
   * analyses composed from the scalable primitives — audience overlap,
@@ -21,13 +22,6 @@ object Round11Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  /** DuckDB twin of [[graft.functions.Portable.wsTokens]]. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
 
   /** q183 BFS depth budget. */
   private val BfsMaxDepth = 3

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Audits, Readers}
 import graft.ext.{Graph, Profile, Stats, TimeSeries}
+import OracleSql.centsSql
 
 /** Round-12 operators: weighted shortest paths, interval-union coverage,
   * per-group OLS trend fits, Benford first-digit auditing, CUSUM
@@ -20,10 +21,6 @@ object Round12Queries {
     Readers.eventsNanos(s, dir).select(
       col("user_id"), expr("ts div 1000").as("tsu"),
       col("event_id"), col("event_type"), col("value"))
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
 
   /** q202 hop budget (q183's depth). */
   private val SsspMaxIter = 3

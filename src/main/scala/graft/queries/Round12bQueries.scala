@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, GlobalOrder, Similarity, Stats, TimeSeries}
+import OracleSql.centsSql
 
 /** Round-12 continuation batch: ranking-quality (ROC AUC), monotonic
   * association (Spearman), concentration (Pareto top-share), and
@@ -22,10 +23,6 @@ object Round12bQueries {
     Readers.eventsNanos(s, dir).select(
       col("user_id"), expr("ts div 1000").as("tsu"),
       col("event_id"), col("event_type"), col("value"))
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
 
   /** q238 cohort modulus (the q223 user-sharding convention). */
   private val AucCohorts = 8L

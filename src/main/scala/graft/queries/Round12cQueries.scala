@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Stats, Survival, TextAnalysis, TimeSeries}
+import OracleSql.centsSql
 
 /** Round-12 third batch: right-censored survival (Kaplan–Meier risk
   * table), forecasting floor (seasonal-naive backtest), randomness and
@@ -20,10 +21,6 @@ object Round12cQueries {
     Readers.eventsNanos(s, dir).select(
       col("user_id"), expr("ts div 1000").as("tsu"),
       col("event_id"), col("event_type"), col("value"))
-
-  /** DuckDB twin of [[graft.ext.Stats.cents]]. */
-  private def centsSql(e: String, scale: Int = 100): String =
-    s"CAST(floor($e * $scale + 0.5) AS BIGINT)"
 
   private val DayUs = 86400000000L
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.Dedup
+import OracleSql.{hash60Sql, tokSql}
 
 /** Round-13 batch: exact substring-level dedup (the suffix-gram
   * re-expression of Lee et al. 2022's exact-substring dedup — the one
@@ -18,11 +19,6 @@ object Round13Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
   /** Window length (tokens) for the exact-substring queries. Lee et al.
     * use 50 BPE tokens on web corpora; the synthetic documents run

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Analytics, Dedup, GlobalOrder, Sampling, Stats, TextAnalysis}
 import graft.functions.Portable.wsTokens
+import OracleSql.{hash60Sql, tokSql}
 
 /** Round-13 second batch: the training-run data-path primitives around
   * the new exact-substring family — cross-source duplication flow
@@ -19,11 +20,6 @@ object Round13bQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
   private val SpanL = 8
   private val RrfK = 60

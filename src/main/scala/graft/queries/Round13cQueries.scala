@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, Stats}
 import graft.functions.Portable.wsTokens
+import OracleSql.{hash60Sql, tokSql}
 
 /** Round-13 third batch: distribution surgery and corpus-growth
   * diagnostics — cross-cohort quantile normalization (batch-effect
@@ -17,11 +18,6 @@ object Round13cQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
   private val SpanL = 8
   private val RefLang = "en"

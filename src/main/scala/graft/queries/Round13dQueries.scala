@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Stats, TextAnalysis}
+import OracleSql.{centsSql, hash60Sql, tokSql}
 
 /** Round-13 fourth batch: corpus-audit and distribution-shape
   * primitives — Cohen's κ (chance-corrected classifier agreement), χ²
@@ -17,14 +18,6 @@ object Round13dQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
-
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
 
   private val Chi2Target = "src0"
   private val KeywordK = 10

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Analytics, Dedup, Stats}
 import graft.functions.Portable.hash60
+import OracleSql.tokSql
 
 /** Round-13 fifth batch: behavioral-sequence and corpus-overlap
   * primitives — consecutive event-type trigram motifs (two chained
@@ -20,8 +21,6 @@ object Round13eQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   private val CalBins = 10
   private val EnWords: Seq[String] =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, Pq, Sampling}
 import graft.functions.Portable.hash60
+import OracleSql.tokSql
 
 /** Round-13 sixth batch: the memory-compressed half of the ANN stack
   * and submodular source selection — product-quantization codebooks
@@ -30,8 +31,6 @@ object Round13fQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
 
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
   private val Dim = 8
   private val M = 2
   private val K = 16
@@ -39,7 +38,6 @@ object Round13fQueries {
   private val AdcK = 3
   private val CoverSteps = 3
   private val IvfProbe = 4
-  private val RecallK = 20
 
   /** One PQ fit per sf dir (the q64 centroid-cache discipline: query
     * and generated oracle must see the same codebooks within a run).
@@ -101,35 +99,11 @@ object Round13fQueries {
     // the code-only ADC ranking recovers, per query — the in-gate
     // quality number behind the PQ compression choice.
     "q319_pq_recall" -> ((s, dir) => {
-      import graft.functions.VectorFunctions.dot
       val e = t(s, dir, "embeddings")
       val model = pqModel(s, dir)
-      val q = e.filter(col("vec_id") < AdcQueries)
-      val adc = Pq.adcKnn(q, Pq.encode(e, model), model, RecallK)
-        .select(col("query_id"), col("neighbor_id"))
-      val qv = q.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"))
-      val exactD = e.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        .crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          floor((dot(col("v"), col("v")) -
-            lit(2.0) * dot(col("v"), col("qv")) +
-            dot(col("qv"), col("qv"))) * 1e6 + lit(0.5)).cast("long")
-            .as("d_micro"))
-      val exact = graft.functions.TopKFunctions.topkPerGroup(exactD,
-          Seq(col("query_id")), -col("d_micro"), col("vec_id"), RecallK)
-        .select(col("query_id"), col("id").as("neighbor_id"))
-      exact.join(adc.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("__hit")), lit(0L)).as("n_overlap"))
-        .select(col("query_id"), col("n_exact"), col("n_overlap"),
-          (col("n_overlap").cast("double") /
-            col("n_exact").cast("double")).as("recall"))
-        .orderBy("query_id")
+      Round14Queries.recallFrame(e,
+        Pq.adcKnn(e.filter(col("vec_id") < AdcQueries), Pq.encode(e, model),
+          model, Round14Queries.RecallK))
     }),
   )
 
@@ -226,28 +200,17 @@ object Round13fQueries {
                   FROM a0 JOIN a1 USING (vec_id))"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
-    Map(
-      "q315_pq_error" -> ((s, dir) => {
-        val model = pqModel(s, dir)
-        s"""WITH ${codesSql(model)}
-            SELECT CAST(code0 AS BIGINT) AS code0,
-                   CAST(code1 AS BIGINT) AS code1,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(err_micro) AS BIGINT) AS err_micro_sum,
-                   CAST(sum(err_micro) AS DOUBLE) /
-                     CAST(count(*) AS DOUBLE) AS mean_err_micro
-            FROM codes GROUP BY 1, 2 ORDER BY 1, 2"""
-      }),
-
-      "q316_pq_adc" -> ((s, dir) => {
-        val model = pqModel(s, dir)
-        def d2(vs: String, cv: String) =
-          s"list_dot_product($vs, $vs) - 2 * list_dot_product($vs, $cv)" +
-            s" + list_dot_product($cv, $cv)"
-        val half = Dim / M
-        def sub(s0: Int) = s"v[${s0 * half + 1}:${(s0 + 1) * half}]"
-        s"""WITH ${codesSql(model)},
+  /** ADC prelude of q316 and q319: the code table, the query rows `q`,
+    * both subspaces' micro lookup tables, and `dist` (query_id, vec_id,
+    * dist_micro) over every non-query vector.
+    */
+  private def adcDistSql(model: Pq.Model): String = {
+    def d2(vs: String, cv: String) =
+      s"list_dot_product($vs, $vs) - 2 * list_dot_product($vs, $cv)" +
+        s" + list_dot_product($cv, $cv)"
+    val half = Dim / M
+    def sub(s0: Int) = s"v[${s0 * half + 1}:${(s0 + 1) * half}]"
+    s"""${codesSql(model)},
             q AS (SELECT vec_id AS query_id, v FROM e
                   WHERE vec_id < $AdcQueries),
             l0 AS (SELECT query_id, code,
@@ -264,15 +227,32 @@ object Round13fQueries {
                      JOIN l0 ON l0.code = c.code0
                      JOIN l1 ON l1.code = c.code1
                        AND l1.query_id = l0.query_id
-                     WHERE c.vec_id <> l0.query_id),
+                     WHERE c.vec_id <> l0.query_id)"""
+  }
+
+  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+    Map(
+      "q315_pq_error" -> ((s, dir) => {
+        val model = pqModel(s, dir)
+        s"""WITH ${codesSql(model)}
+            SELECT CAST(code0 AS BIGINT) AS code0,
+                   CAST(code1 AS BIGINT) AS code1,
+                   CAST(count(*) AS BIGINT) AS n,
+                   CAST(sum(err_micro) AS BIGINT) AS err_micro_sum,
+                   CAST(sum(err_micro) AS DOUBLE) /
+                     CAST(count(*) AS DOUBLE) AS mean_err_micro
+            FROM codes GROUP BY 1, 2 ORDER BY 1, 2"""
+      }),
+
+      "q316_pq_adc" -> ((s, dir) =>
+        s"""WITH ${adcDistSql(pqModel(s, dir))},
             r AS (SELECT query_id, vec_id AS neighbor_id, dist_micro,
                          row_number() OVER (PARTITION BY query_id
                            ORDER BY dist_micro ASC, vec_id ASC) AS rnk
                   FROM dist)
             SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id,
                    dist_micro
-            FROM r WHERE rnk <= $AdcK ORDER BY query_id, rnk"""
-      }),
+            FROM r WHERE rnk <= $AdcK ORDER BY query_id, rnk"""),
 
       "q318_ivf_pq" -> ((s, dir) => {
         val model = pqModel(s, dir)
@@ -336,59 +316,6 @@ object Round13fQueries {
             FROM r WHERE rnk <= $AdcK ORDER BY query_id, rnk"""
       }),
 
-      "q319_pq_recall" -> ((s, dir) => {
-        val model = pqModel(s, dir)
-        def d2(vs: String, cv: String) =
-          s"list_dot_product($vs, $vs) - 2 * list_dot_product($vs, $cv)" +
-            s" + list_dot_product($cv, $cv)"
-        val half = Dim / M
-        def sub(s0: Int) = s"v[${s0 * half + 1}:${(s0 + 1) * half}]"
-        s"""WITH ${codesSql(model)},
-            q AS (SELECT vec_id AS query_id, v FROM e
-                  WHERE vec_id < $AdcQueries),
-            l0 AS (SELECT query_id, code,
-                          CAST(floor((${d2(sub(0), "b0.cv")}) * 1000000.0
-                            + 0.5) AS BIGINT) AS d
-                   FROM q CROSS JOIN b0),
-            l1 AS (SELECT query_id, code,
-                          CAST(floor((${d2(sub(1), "b1.cv")}) * 1000000.0
-                            + 0.5) AS BIGINT) AS d
-                   FROM q CROSS JOIN b1),
-            adist AS (SELECT l0.query_id, c.vec_id,
-                             CAST(l0.d + l1.d AS BIGINT) AS dist_micro
-                      FROM codes c
-                      JOIN l0 ON l0.code = c.code0
-                      JOIN l1 ON l1.code = c.code1
-                        AND l1.query_id = l0.query_id
-                      WHERE c.vec_id <> l0.query_id),
-            adc AS (SELECT query_id, vec_id FROM (
-                      SELECT query_id, vec_id,
-                             row_number() OVER (PARTITION BY query_id
-                               ORDER BY dist_micro ASC, vec_id ASC) AS rnk
-                      FROM adist) t WHERE rnk <= $RecallK),
-            edist AS (SELECT q.query_id, c.vec_id,
-                             CAST(floor((list_dot_product(c.v, c.v)
-                               - 2 * list_dot_product(c.v, q.v)
-                               + list_dot_product(q.v, q.v)) * 1000000.0
-                               + 0.5) AS BIGINT) AS d_micro
-                      FROM e c CROSS JOIN q
-                      WHERE c.vec_id <> q.query_id),
-            exact AS (SELECT query_id, vec_id FROM (
-                        SELECT query_id, vec_id,
-                               row_number() OVER (PARTITION BY query_id
-                                 ORDER BY d_micro ASC, vec_id ASC) AS rnk
-                        FROM edist) t WHERE rnk <= $RecallK)
-            SELECT ex.query_id,
-                   CAST(count(*) AS BIGINT) AS n_exact,
-                   CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_overlap,
-                   CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
-                                 THEN 1 ELSE 0 END) AS DOUBLE)
-                     / CAST(count(*) AS DOUBLE) AS recall
-            FROM exact ex
-            LEFT JOIN adc ON adc.query_id = ex.query_id
-              AND adc.vec_id = ex.vec_id
-            GROUP BY 1 ORDER BY 1"""
-      }))
+      "q319_pq_recall" -> ((s, dir) =>
+        Round14Queries.recallSql(adcDistSql(pqModel(s, dir)), None)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Analytics, Stats, TimeSeries}
 import graft.functions.Portable.hash60
+import OracleSql.centsSql
 
 /** Round-13 eighth batch: forecast-trust and preference-learning
   * primitives — split-conformal interval backtesting for the seasonal-
@@ -22,9 +23,6 @@ object Round13hQueries {
   private val CalLo = 19730L; private val CalHi = 19744L
   private val TestLo = 19745L; private val TestHi = 19752L
   private val CovPct = 90
-
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
 
   private def eventsUs(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)

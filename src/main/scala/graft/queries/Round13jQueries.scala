@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.TextAnalysis
 import graft.functions.TopKFunctions
+import OracleSql.tokSql
 
 /** Round-13 tenth batch: curation-knob evidence — the quality-score
   * yield curve (docs/tokens retained per threshold, per source; the
@@ -16,8 +17,6 @@ object Round13jQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   private val QualityCuts = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
   private val HnQueries = 5

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.Pq
+import OracleSql.{hash60Sql, tokSql}
 
 /** Round-14 first batch: the FULL-DIMENSION product-quantization stack
   * at usable recall. Round 13 gated an 8-of-64-dimension PQ demo whose
@@ -93,40 +94,10 @@ object Round14Queries {
     // Recall@20 of the full-dim packed ADC ranking against the exact
     // 64-dim L2 top-20, GATED at 0.7 per query: the number that makes
     // the PQ stack an operator instead of a demo.
-    "q330_pq_hi_recall" -> ((s, dir) => {
-      import graft.functions.VectorFunctions.dot
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < NQ)
-      val adc = hiAdc(s, dir, RecallK, Pq.DefaultMaxLutRows)
-        .select(col("query_id"), col("neighbor_id"))
-      val qv = q.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"))
-      val exactD = e.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        .crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          floor((dot(col("v"), col("v")) -
-            lit(2.0) * dot(col("v"), col("qv")) +
-            dot(col("qv"), col("qv"))) * 1e6 + lit(0.5)).cast("long")
-            .as("d_micro"))
-      val exact = graft.functions.TopKFunctions.topkPerGroup(exactD,
-          Seq(col("query_id")), -col("d_micro"), col("vec_id"), RecallK)
-        .select(col("query_id"), col("id").as("neighbor_id"))
-      exact.join(adc.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("__hit")), lit(0L)).as("n_overlap"))
-        .select(col("query_id"), col("n_exact"), col("n_overlap"),
-          when(col("n_overlap").cast("double") /
-              col("n_exact").cast("double") >= RecallFloor,
-            col("n_overlap").cast("double") / col("n_exact").cast("double"))
-            .otherwise(raise_error(concat(
-              lit(s"pq hi recall below $RecallFloor for query "),
-              col("query_id")))).as("recall"))
-        .orderBy("query_id")
-    }),
+    "q330_pq_hi_recall" -> ((s, dir) =>
+      recallFrame(t(s, dir, "embeddings"),
+        hiAdc(s, dir, RecallK, Pq.DefaultMaxLutRows), Some(RecallFloor),
+        "pq hi")),
 
     // The packed ADC top-k itself: per-query LUT arrays broadcast, one
     // codegen'd loop per (query, code-row) pair, exact integer ranking.
@@ -221,36 +192,10 @@ object Round14Queries {
     // coverage (nProbe/nCells of the corpus), and the audit exists to
     // expose exactly that trade next to q330's.
     "q337_residual_recall" -> ((s, dir) => {
-      import graft.functions.VectorFunctions.dot
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < NQ)
-      val adc = Pq.ivfAdcResidualKnn(e, q,
-          Round2Queries.ivfCentroids(s, dir), hiModel(s, dir),
-          RecallK, IvfProbe)
-        .select(col("query_id"), col("neighbor_id"))
-      val qv = q.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"))
-      val exactD = e.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        .crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          floor((dot(col("v"), col("v")) -
-            lit(2.0) * dot(col("v"), col("qv")) +
-            dot(col("qv"), col("qv"))) * 1e6 + lit(0.5)).cast("long")
-            .as("d_micro"))
-      val exact = graft.functions.TopKFunctions.topkPerGroup(exactD,
-          Seq(col("query_id")), -col("d_micro"), col("vec_id"), RecallK)
-        .select(col("query_id"), col("id").as("neighbor_id"))
-      exact.join(adc.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("__hit")), lit(0L)).as("n_overlap"))
-        .select(col("query_id"), col("n_exact"), col("n_overlap"),
-          (col("n_overlap").cast("double") /
-            col("n_exact").cast("double")).as("recall"))
-        .orderBy("query_id")
+      recallFrame(e, Pq.ivfAdcResidualKnn(e,
+        e.filter(col("vec_id") < NQ), Round2Queries.ivfCentroids(s, dir),
+        hiModel(s, dir), RecallK, IvfProbe))
     }),
   )
 
@@ -382,46 +327,14 @@ object Round14Queries {
         .orderBy("doc_id")
     }),
 
-    "q339_opq_recall" -> ((s, dir) => {
-      import graft.functions.VectorFunctions.dot
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < NQ)
-      val adc = opqAdc(s, dir, RecallK)
-        .select(col("query_id"), col("neighbor_id"))
-      val qv = q.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"))
-      val exactD = e.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        .crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          floor((dot(col("v"), col("v")) -
-            lit(2.0) * dot(col("v"), col("qv")) +
-            dot(col("qv"), col("qv"))) * 1e6 + lit(0.5)).cast("long")
-            .as("d_micro"))
-      val exact = graft.functions.TopKFunctions.topkPerGroup(exactD,
-          Seq(col("query_id")), -col("d_micro"), col("vec_id"), RecallK)
-        .select(col("query_id"), col("id").as("neighbor_id"))
-      exact.join(adc.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("__hit")), lit(0L)).as("n_overlap"))
-        .select(col("query_id"), col("n_exact"), col("n_overlap"),
-          (col("n_overlap").cast("double") /
-            col("n_exact").cast("double")).as("recall"))
-        .orderBy("query_id")
-    }),
+    "q339_opq_recall" -> ((s, dir) =>
+      recallFrame(t(s, dir, "embeddings"), opqAdc(s, dir, RecallK))),
   )
 
   /** q295's window length — the merge queries must re-derive the SAME
     * spans the full-corpus query gates, so the parameter is shared.
     */
   private[queries] val SpanL = 8
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
   /** Full-corpus substring-dedup recompute (q295's oracle verbatim,
     * with an optional final doc filter): the merged-shard queries must
@@ -771,47 +684,102 @@ object Round14Queries {
                dist_micro
         FROM r WHERE rnk <= $k ORDER BY query_id, rnk"""
 
+  /** Recall@RecallK of `adc` (query_id, neighbor_id) against the exact
+    * 64-dim L2 top-RecallK over the embeddings table `e`; with a floor,
+    * any query below it raises on the Spark side (the q330 fail-loud
+    * discipline). */
+  private[queries] def recallFrame(e: DataFrame, adc: DataFrame,
+                                   gateFloor: Option[Double] = None,
+                                   gateLabel: String = ""): DataFrame = {
+    import graft.functions.VectorFunctions.dot
+    val q = e.filter(col("vec_id") < NQ)
+    val qv = q.select(col("vec_id").as("query_id"),
+      col("embedding").cast("array<double>").as("qv"))
+    val exactD = e.select(col("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+      .crossJoin(broadcast(qv))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        floor((dot(col("v"), col("v")) -
+          lit(2.0) * dot(col("v"), col("qv")) +
+          dot(col("qv"), col("qv"))) * 1e6 + lit(0.5)).cast("long")
+          .as("d_micro"))
+    val exact = graft.functions.TopKFunctions.topkPerGroup(exactD,
+        Seq(col("query_id")), -col("d_micro"), col("vec_id"),
+        RecallK)
+      .select(col("query_id"), col("id").as("neighbor_id"))
+    val ratio = col("n_overlap").cast("double") / col("n_exact").cast("double")
+    val recall: Column = gateFloor match {
+      case Some(f) => when(ratio >= f, ratio).otherwise(
+        raise_error(concat(lit(s"$gateLabel recall below $f for query "),
+          col("query_id"))))
+      case None => ratio
+    }
+    exact.join(adc.select(col("query_id"), col("neighbor_id"))
+          .withColumn("__hit", lit(1L)),
+        Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("n_exact"),
+        coalesce(sum(col("__hit")), lit(0L)).as("n_overlap"))
+      .select(col("query_id"), col("n_exact"), col("n_overlap"),
+        recall.as("recall"))
+      .orderBy("query_id")
+  }
+
+  /** Gated-or-plain recall SQL over a prelude that defines `e` (vec_id,
+    * v), `q` (query_id, v) and `dist` (query_id, vec_id, dist_micro) —
+    * the q330/q337 rendering generalized: ADC top-RecallK from `dist`,
+    * exact top-RecallK from `e`×`q`, per-query overlap, and optionally
+    * DuckDB's error() below the floor.
+    */
+  private[queries] def recallSql(prelude: String, floor: Option[Double],
+                        distCte: String = "dist"): String = {
+    val k = RecallK
+    val recallExpr = floor match {
+      case Some(f) =>
+        s"""CASE WHEN CAST(n_overlap AS DOUBLE)
+                   / CAST(n_exact AS DOUBLE) >= $f
+                 THEN CAST(n_overlap AS DOUBLE) / CAST(n_exact AS DOUBLE)
+                 ELSE CAST(error('recall below floor') AS DOUBLE)
+            END"""
+      case None =>
+        "CAST(n_overlap AS DOUBLE) / CAST(n_exact AS DOUBLE)"
+    }
+    s"""WITH $prelude,
+        adc AS (SELECT query_id, vec_id FROM (
+                  SELECT query_id, vec_id,
+                         row_number() OVER (PARTITION BY query_id
+                           ORDER BY dist_micro ASC, vec_id ASC) AS rnk
+                  FROM $distCte) t WHERE rnk <= $k),
+        edist AS (SELECT q.query_id, c.vec_id,
+                         CAST(floor((list_dot_product(c.v, c.v)
+                           - 2 * list_dot_product(c.v, q.v)
+                           + list_dot_product(q.v, q.v)) * 1000000.0
+                           + 0.5) AS BIGINT) AS d_micro
+                  FROM e c CROSS JOIN q
+                  WHERE c.vec_id <> q.query_id),
+        exact AS (SELECT query_id, vec_id FROM (
+                    SELECT query_id, vec_id,
+                           row_number() OVER (PARTITION BY query_id
+                             ORDER BY d_micro ASC, vec_id ASC) AS rnk
+                    FROM edist) t WHERE rnk <= $k),
+        rec AS (SELECT ex.query_id,
+                       CAST(count(*) AS BIGINT) AS n_exact,
+                       CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
+                                     THEN 1 ELSE 0 END) AS BIGINT)
+                         AS n_overlap
+                FROM exact ex
+                LEFT JOIN adc ON adc.query_id = ex.query_id
+                  AND adc.vec_id = ex.vec_id
+                GROUP BY 1)
+        SELECT query_id, n_exact, n_overlap, $recallExpr AS recall
+        FROM rec ORDER BY query_id"""
+  }
+
   val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
-      "q330_pq_hi_recall" -> ((s, dir) => {
-        val model = hiModel(s, dir)
-        s"""WITH ${packedSql(model)},
-            adc AS (SELECT query_id, vec_id FROM (
-                      SELECT query_id, vec_id,
-                             row_number() OVER (PARTITION BY query_id
-                               ORDER BY dist_micro ASC, vec_id ASC) AS rnk
-                      FROM dist) t WHERE rnk <= $RecallK),
-            edist AS (SELECT q.query_id, c.vec_id,
-                             CAST(floor((list_dot_product(c.v, c.v)
-                               - 2 * list_dot_product(c.v, q.v)
-                               + list_dot_product(q.v, q.v)) * 1000000.0
-                               + 0.5) AS BIGINT) AS d_micro
-                      FROM e c CROSS JOIN q
-                      WHERE c.vec_id <> q.query_id),
-            exact AS (SELECT query_id, vec_id FROM (
-                        SELECT query_id, vec_id,
-                               row_number() OVER (PARTITION BY query_id
-                                 ORDER BY d_micro ASC, vec_id ASC) AS rnk
-                        FROM edist) t WHERE rnk <= $RecallK),
-            rec AS (SELECT ex.query_id,
-                           CAST(count(*) AS BIGINT) AS n_exact,
-                           CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
-                                         THEN 1 ELSE 0 END) AS BIGINT)
-                             AS n_overlap
-                    FROM exact ex
-                    LEFT JOIN adc ON adc.query_id = ex.query_id
-                      AND adc.vec_id = ex.vec_id
-                    GROUP BY 1)
-            SELECT query_id, n_exact, n_overlap,
-                   CASE WHEN CAST(n_overlap AS DOUBLE)
-                          / CAST(n_exact AS DOUBLE) >= $RecallFloor
-                        THEN CAST(n_overlap AS DOUBLE)
-                          / CAST(n_exact AS DOUBLE)
-                        ELSE CAST(error('pq hi recall below floor')
-                                  AS DOUBLE)
-                   END AS recall
-            FROM rec ORDER BY query_id"""
-      }),
+      "q330_pq_hi_recall" -> ((s, dir) =>
+        recallSql(packedSql(hiModel(s, dir)), Some(RecallFloor))),
 
       "q331_pq_hi_adc" -> ((s, dir) => adcTopkSql(hiModel(s, dir), AdcK)),
 
@@ -885,40 +853,9 @@ object Round14Queries {
             FROM r WHERE rnk <= $AdcK ORDER BY query_id, rnk"""
       }),
 
-      "q337_residual_recall" -> ((s, dir) => {
-        val prelude = residualSql(hiModel(s, dir),
-          Round2Queries.ivfCentroids(s, dir))
-        s"""WITH $prelude,
-            adc AS (SELECT query_id, vec_id FROM (
-                      SELECT query_id, vec_id,
-                             row_number() OVER (PARTITION BY query_id
-                               ORDER BY dist_micro ASC, vec_id ASC) AS rnk
-                      FROM dist) t WHERE rnk <= $RecallK),
-            edist AS (SELECT q.query_id, c.vec_id,
-                             CAST(floor((list_dot_product(c.v, c.v)
-                               - 2 * list_dot_product(c.v, q.v)
-                               + list_dot_product(q.v, q.v)) * 1000000.0
-                               + 0.5) AS BIGINT) AS d_micro
-                      FROM e c CROSS JOIN q
-                      WHERE c.vec_id <> q.query_id),
-            exact AS (SELECT query_id, vec_id FROM (
-                        SELECT query_id, vec_id,
-                               row_number() OVER (PARTITION BY query_id
-                                 ORDER BY d_micro ASC, vec_id ASC) AS rnk
-                        FROM edist) t WHERE rnk <= $RecallK)
-            SELECT ex.query_id,
-                   CAST(count(*) AS BIGINT) AS n_exact,
-                   CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_overlap,
-                   CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
-                                 THEN 1 ELSE 0 END) AS DOUBLE)
-                     / CAST(count(*) AS DOUBLE) AS recall
-            FROM exact ex
-            LEFT JOIN adc ON adc.query_id = ex.query_id
-              AND adc.vec_id = ex.vec_id
-            GROUP BY 1 ORDER BY 1"""
-      }))
+      "q337_residual_recall" -> ((s, dir) =>
+        recallSql(residualSql(hiModel(s, dir),
+          Round2Queries.ivfCentroids(s, dir)), None)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     coreQueries ++ opqQueries

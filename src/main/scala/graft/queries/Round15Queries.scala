@@ -1,9 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.Pq
+import OracleSql.{hash60Sql, tokSql}
+import Round14Queries.{recallFrame, recallSql}
 
 /** Round-15 batch: the two ANN operating points the round-14 verdict
   * asked to push over the recall bar, the streaming restart-recovery
@@ -66,48 +68,6 @@ object Round15Queries {
     val model = pq32Model(s, dir)
     Pq.adcKnnPacked(e.filter(col("vec_id") < Round14Queries.NQ),
       Pq.encodePacked(e, model), model, k)
-  }
-
-  /** Recall@RecallK of `adc` (query_id, neighbor_id) against the exact
-    * 64-dim L2 top-RecallK; with a floor, any query below it raises on
-    * the Spark side (the q330 fail-loud discipline). */
-  private def recallFrame(s: SparkSession, dir: String, adc: DataFrame,
-                          gateFloor: Option[Double], gateLabel: String)
-  : DataFrame = {
-    import graft.functions.VectorFunctions.dot
-    val e = t(s, dir, "embeddings")
-    val q = e.filter(col("vec_id") < Round14Queries.NQ)
-    val qv = q.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qv"))
-    val exactD = e.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .crossJoin(broadcast(qv))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        floor((dot(col("v"), col("v")) -
-          lit(2.0) * dot(col("v"), col("qv")) +
-          dot(col("qv"), col("qv"))) * 1e6 + lit(0.5)).cast("long")
-          .as("d_micro"))
-    val exact = graft.functions.TopKFunctions.topkPerGroup(exactD,
-        Seq(col("query_id")), -col("d_micro"), col("vec_id"),
-        Round14Queries.RecallK)
-      .select(col("query_id"), col("id").as("neighbor_id"))
-    val ratio = col("n_overlap").cast("double") / col("n_exact").cast("double")
-    val recall: Column = gateFloor match {
-      case Some(f) => when(ratio >= f, ratio).otherwise(
-        raise_error(concat(lit(s"$gateLabel recall below $f for query "),
-          col("query_id"))))
-      case None => ratio
-    }
-    exact.join(adc.select(col("query_id"), col("neighbor_id"))
-          .withColumn("__hit", lit(1L)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("__hit")), lit(0L)).as("n_overlap"))
-      .select(col("query_id"), col("n_exact"), col("n_overlap"),
-        recall.as("recall"))
-      .orderBy("query_id")
   }
 
   /** Bounded documents stream split across TWO query generations sharing
@@ -180,7 +140,8 @@ object Round15Queries {
     // The 32-byte config's recall@20, GATED at 0.7 per query on both
     // engines — the floor that round 14's ≤ 32-byte candidates missed.
     "q346_pq32_recall" -> ((s, dir) =>
-      recallFrame(s, dir, pq32Adc(s, dir, Round14Queries.RecallK),
+      recallFrame(t(s, dir, "embeddings"),
+        pq32Adc(s, dir, Round14Queries.RecallK),
         Some(Round14Queries.RecallFloor), "pq32")),
 
     // Residual IVFADC at the GATED probe point (nProbe=12 of 16): the
@@ -204,8 +165,8 @@ object Round15Queries {
         e.filter(col("vec_id") < Round14Queries.NQ),
         Round2Queries.ivfCentroids(s, dir), Round14Queries.hiModel(s, dir),
         Round14Queries.RecallK, ResProbe)
-      recallFrame(s, dir, adc, Some(Round14Queries.RecallFloor),
-        "residual nProbe=12")
+      recallFrame(t(s, dir, "embeddings"), adc,
+        Some(Round14Queries.RecallFloor), "residual nProbe=12")
     }),
 
     // Kill-restart ≡ uninterrupted ≡ batch: the gram-stats census after
@@ -290,7 +251,8 @@ object Round15Queries {
       val refined = Pq.adcRefineKnn(
         e.filter(col("vec_id") < Round14Queries.NQ), e,
         Pq.encodePacked(e, model), model, Round14Queries.RecallK, RefineSL)
-      recallFrame(s, dir, refined, Some(RefineFloor), "refine")
+      recallFrame(t(s, dir, "embeddings"), refined, Some(RefineFloor),
+        "refine")
     }))
 
   /** Hybrid/refine constants: per-system ranking depth, fused depth, the
@@ -303,56 +265,6 @@ object Round15Queries {
   private val RefineSL = 60
   private val RefineFloor = 0.9
   private val LexDfCap = 1000L
-
-  /** Gated-or-plain recall SQL over a prelude that defines `e` (vec_id,
-    * v), `q` (query_id, v) and `dist` (query_id, vec_id, dist_micro) —
-    * the q330/q337 rendering generalized: ADC top-RecallK from `dist`,
-    * exact top-RecallK from `e`×`q`, per-query overlap, and optionally
-    * DuckDB's error() below the floor.
-    */
-  private def recallSql(prelude: String, floor: Option[Double],
-                        distCte: String = "dist"): String = {
-    val k = Round14Queries.RecallK
-    val recallExpr = floor match {
-      case Some(f) =>
-        s"""CASE WHEN CAST(n_overlap AS DOUBLE)
-                   / CAST(n_exact AS DOUBLE) >= $f
-                 THEN CAST(n_overlap AS DOUBLE) / CAST(n_exact AS DOUBLE)
-                 ELSE CAST(error('recall below floor') AS DOUBLE)
-            END"""
-      case None =>
-        "CAST(n_overlap AS DOUBLE) / CAST(n_exact AS DOUBLE)"
-    }
-    s"""WITH $prelude,
-        adc AS (SELECT query_id, vec_id FROM (
-                  SELECT query_id, vec_id,
-                         row_number() OVER (PARTITION BY query_id
-                           ORDER BY dist_micro ASC, vec_id ASC) AS rnk
-                  FROM $distCte) t WHERE rnk <= $k),
-        edist AS (SELECT q.query_id, c.vec_id,
-                         CAST(floor((list_dot_product(c.v, c.v)
-                           - 2 * list_dot_product(c.v, q.v)
-                           + list_dot_product(q.v, q.v)) * 1000000.0
-                           + 0.5) AS BIGINT) AS d_micro
-                  FROM e c CROSS JOIN q
-                  WHERE c.vec_id <> q.query_id),
-        exact AS (SELECT query_id, vec_id FROM (
-                    SELECT query_id, vec_id,
-                           row_number() OVER (PARTITION BY query_id
-                             ORDER BY d_micro ASC, vec_id ASC) AS rnk
-                    FROM edist) t WHERE rnk <= $k),
-        rec AS (SELECT ex.query_id,
-                       CAST(count(*) AS BIGINT) AS n_exact,
-                       CAST(sum(CASE WHEN adc.vec_id IS NOT NULL
-                                     THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n_overlap
-                FROM exact ex
-                LEFT JOIN adc ON adc.query_id = ex.query_id
-                  AND adc.vec_id = ex.vec_id
-                GROUP BY 1)
-        SELECT query_id, n_exact, n_overlap, $recallExpr AS recall
-        FROM rec ORDER BY query_id"""
-  }
 
   private[queries] val BpeSteps = 8
 
@@ -381,7 +293,6 @@ object Round15Queries {
     * (fertility with the learned vocabulary) build on.
     */
   private[queries] def bpeStagesSql(steps: Int): String = {
-    val tokSql = raw"string_split_regex(trim(text), '\s+')"
     // Every stage CTE is MATERIALIZED: DuckDB 1.0 inlines plain CTEs, so
     // w_i's three references to w_{i-1} (direct + the two argmax scalar
     // subqueries) would re-evaluate the whole chain 3^steps times —
@@ -429,7 +340,6 @@ object Round15Queries {
     * merges are re-learned by the same stage prelude, never echoed.
     */
   private def bpeFertilitySql(steps: Int): String = {
-    val tokSql = raw"string_split_regex(trim(text), '\s+')"
     s"""WITH ${bpeStagesSql(steps)},
         pieces AS (SELECT replace(trim(state, '|'), '|', '') AS w,
                           CAST(len(string_split(trim(state, '|'), '|'))
@@ -458,9 +368,6 @@ object Round15Queries {
     // census is the batch recompute with doubled counts
     "q349_stream_gram_restart" -> {
       val spanL = Round14Queries.SpanL
-      val tokSql = raw"string_split_regex(trim(text), '\s+')"
-      def hash60Sql(e: String): String =
-        s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
       s"""WITH w AS (SELECT doc_id, $tokSql AS w FROM documents),
           p AS (SELECT doc_id,
                        ${hash60Sql(s"array_to_string(w[i:i+${spanL - 1}], ' ')")} AS g
@@ -514,7 +421,6 @@ object Round15Queries {
       // lexical CTEs are q140's weighting verbatim; the ADC half rides
       // the packed prelude; fusion is pure integer arithmetic
       "q351_hybrid_rrf" -> ((s, dir) => {
-        val tokSql = raw"string_split_regex(trim(text), '\s+')"
         s"""WITH ${Round14Queries.packedSql(Round14Queries.hiModel(s, dir))},
             annR AS (SELECT query_id, vec_id AS id, rnk FROM (
                        SELECT query_id, vec_id,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.KMeans
+import OracleSql.tokSql
 
 /** Round-15 continuation batch — the q354 re-learning gate generalized
   * to every trainer shape, plus guarantee-carrying dedup/sketch
@@ -392,7 +393,7 @@ object Round15bQueries {
     */
   private def winnowStagesSql(n: Int, w: Int): String =
     s"""t AS MATERIALIZED (
-          SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+          SELECT doc_id, $tokSql AS w
           FROM documents),
         g AS MATERIALIZED (
           SELECT doc_id,
@@ -517,7 +518,7 @@ object Round15bQueries {
 
     "q360_kn_bigram" ->
       s"""WITH w AS MATERIALIZED (
-            SELECT list_filter(string_split_regex(trim(text), '\\s+'),
+            SELECT list_filter($tokSql,
                      x -> regexp_matches(x, '^[a-z0-9]+$$')) AS w
             FROM documents),
           cvw AS MATERIALIZED (
@@ -626,7 +627,7 @@ object Round15bQueries {
 
     "q368_mg_heavy_hitters" ->
       s"""WITH tok AS (SELECT unnest(list_filter(
-            string_split_regex(trim(text), '\\s+'),
+            $tokSql,
             x -> regexp_matches(x, '^[a-z0-9]+$$'))) AS w FROM documents),
           c AS (SELECT w, CAST(count(*) AS BIGINT) AS cnt
                 FROM tok GROUP BY w),

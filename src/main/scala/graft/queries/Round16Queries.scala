@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, LangModel, Mixture}
+import OracleSql.{hash60Sql, tokSql}
 
 /** Round-16 batch: the REWRITE half of exact-substring dedup (cut the
   * duplicated spans and re-emit the cleaned corpus — the step an LLM
@@ -22,10 +23,6 @@ object Round16Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
   /** Window length for the span rewrite — q295's SpanL (8 whitespace
     * tokens: long enough that chance collisions are nil at every SF,
@@ -205,7 +202,7 @@ object Round16Queries {
     "q374_kn_doc_score" ->
       s"""WITH w AS MATERIALIZED (
             SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\\s+'),
+                   list_filter($tokSql,
                      x -> regexp_matches(x, '^[a-z0-9]+$$')) AS w
             FROM documents),
           cvwd AS MATERIALIZED (

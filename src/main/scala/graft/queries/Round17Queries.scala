@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
+import OracleSql.tokSql
 
 /** Round-17 batch: the token-ID corpus materialization — the table an
   * LLM pipeline actually ships to training once curation ends (q354
@@ -14,8 +15,6 @@ object Round17Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Readers.table(s, dir, name)
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -6,6 +6,7 @@ import graft.engine.Readers
 import graft.ext.AsofJoin
 import graft.functions.Portable
 import graft.streaming.EventStream
+import OracleSql.tokSql
 
 /** Round-2 batch: two-table as-of join (union-interleave, oracle = native
   * DuckDB ASOF JOIN), streaming session windows run bounded against a
@@ -308,7 +309,6 @@ object Round2Queries {
   val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q64_ann_ivf" -> ((s, dir) => ivfOracle(ivfCentroids(s, dir), k = 5, nProbe = 4)))
 
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
   private def hash30Sql(e: String): String =
     s"(CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT) & ${Portable.Hash30Mask})"
 

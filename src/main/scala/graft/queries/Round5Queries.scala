@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Decontaminate, Packing, Sampling, TextAnalysis}
 import graft.functions.Portable
+import OracleSql.tokSql
 
 /** Round-5 batch: the training-data-pipeline operators a 100 TB corpus
   * build needs beyond dedup/ANN — sequence packing (concat-and-chunk),
@@ -251,8 +252,6 @@ object Round5Queries {
         .orderBy("bin")
     })
   )
-
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   val oracleSql: Map[String, String] = Map(
 

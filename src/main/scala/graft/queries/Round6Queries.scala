@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Batching, Dedup, Profile, Quantize, SemDedup, Stats, TimeSeries}
 import graft.functions.Portable
+import OracleSql.{centsSql, tokSql}
 
 /** Round-6 batch: reproducible statistics and similarity primitives —
   * blocked edit-distance near-dup, exact-moment correlation/z-score
@@ -213,13 +214,6 @@ object Round6Queries {
   private val ProfileCols =
     Seq("l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
       "l_linestatus")
-
-  // Engine-portable integer cents: floor(x*100 + 0.5) — see Stats.cents.
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-
-  // DuckDB twin of Portable.wsTokens (same regex as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     graft.engine.Pipeline.deleteRecursively(p)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Warehouse}
 import graft.ext.{Sampling, Stats, TextAnalysis}
+import OracleSql.{centsSql, hash60Sql, tokSql}
 
 /** Round-6 second batch: dimension history (SCD-2), corpus-curation
   * scoring (n-gram novelty, PMI collocations, token-budget selection),
@@ -112,13 +113,6 @@ object Round6bQueries {
     })
   )
 
-  // DuckDB twins of Portable.wsTokens / Stats.cents / Portable.hash60
-  // (same fragments as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-  private def hash60Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
   private val enIn = TextAnalysis.enStopwords
     .map(w => s"'$w'").mkString("(", ", ", ")")
 

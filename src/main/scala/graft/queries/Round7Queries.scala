@@ -6,6 +6,7 @@ import graft.engine.{Readers, Warehouse}
 import graft.ext.{Dedup, Drift, GlobalOrder, Graph, Stats}
 import graft.queries.ExtensionQueries.shingleCte
 import graft.streaming.EventStream
+import OracleSql.{centsSql, tokSql}
 
 /** Round-7 batch: scale-guard variants of existing operators, each
   * oracle-gated — the capped blocked edit-distance (the blockCap pruning
@@ -301,13 +302,6 @@ object Round7Queries {
       graft.ext.IvfIndex.cellRepresentatives(model)
     })
   )
-
-  // Engine-portable integer cents: floor(x*100 + 0.5) — see Stats.cents.
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
-
-  // DuckDB twin of Portable.wsTokens (same regex as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   val oracleSql: Map[String, String] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, Graph, Stats, TextAnalysis, TimeSeries}
+import OracleSql.{centsSql, tokSql}
 
 /** Round-8 batch: retrieval scoring, exact-arithmetic text statistics,
   * graph structure, and sweep-line concurrency — every float in a
@@ -329,12 +330,6 @@ object Round8Queries {
         .orderBy("l_returnflag", "rnk")
     })
   )
-
-  // DuckDB twin of Portable.wsTokens (same regex as the other rounds).
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
-
-  private def centsSql(e: String): String =
-    s"CAST(floor($e * 100 + 0.5) AS BIGINT)"
 
   val oracleSql: Map[String, String] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Warehouse}
 import graft.ext.{Dedup, DedupGroups, GlobalOrder, Graph, RangeJoin, Sampling, Stats, TextAnalysis}
+import OracleSql.tokSql
 
 /** Round-9 batch: hot-key-safe formulations of per-key timeline
   * operators. Floats in compared columns follow the q110 discipline
@@ -20,9 +21,6 @@ object Round9Queries {
   private def events(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
-  /** DuckDB twin of [[graft.functions.Portable.wsTokens]]. */
-  private val tokSql = raw"string_split_regex(trim(text), '\s+')"
 
   /** q147 session gap (30 min in epoch micros — q38's constant). */
   private val SessionGapUs = 30L * 60 * 1000000
@@ -517,7 +515,7 @@ object Round9Queries {
 
     "q157_segment_dedup" ->
       raw"""WITH w AS (SELECT doc_id,
-                   string_split_regex(trim(text), '\s+') AS w
+                   $tokSql AS w
                  FROM documents),
           b AS (SELECT doc_id, w, (len(w) - 1) // 3 + 1 AS n_segs FROM w),
           s AS (SELECT doc_id, i AS seg_id,

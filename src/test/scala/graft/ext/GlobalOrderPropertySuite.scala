@@ -8,8 +8,10 @@ import graft.SparkSpec
 
 /** Randomized seam coverage for the boundary-stitch family
   * ([[GlobalOrder.withSessionId]] / [[GlobalOrder.withFillForward]] /
-  * [[GlobalOrder.withRunningTotalPerKey]] and
-  * [[AsofJoin.leftAsofBig]]). The deterministic Round9Suite tests pin
+  * [[GlobalOrder.withRunningTotalPerKey]] /
+  * [[GlobalOrder.withRunningTotalsPerKey]] /
+  * [[GlobalOrder.withLagPerKey]] / [[GlobalOrder.withRunningMaxPerKey]]
+  * and [[AsofJoin.leftAsofBig]]). The deterministic Round9Suite tests pin
   * the hot-key shapes; these sweep RANDOM datasets — heavy (key, ts)
   * ties, null runs, singleton keys — across partition counts 1..7, the
   * axis that moves every partition seam the driver-side carry logic
@@ -102,6 +104,48 @@ class GlobalOrderPropertySuite extends SparkSpec {
       val w = Window.partitionBy("k").orderBy("t", "id")
       val want = df.withColumn("lg", lag("v", 1).over(w))
         .select("id", "lg").as[(Long, Option[Long])].collect().toMap
+      assert(got == want, s"seed=$seed partitions=$p")
+    }
+  }
+
+  it("withRunningMaxPerKey matches the max window on random tied data") {
+    for (seed <- 21L to 24L; p <- Seq(1, 2, 3, 7)) {
+      val df = rows(seed, 120).zipWithIndex
+        .map { case ((k, t, v), i) => (k, t, v, i.toLong) }
+        .toDF("k", "t", "v", "id")
+      val byKey = Window.partitionBy("k").orderBy("t", "id")
+      for ((inclusive, end) <- Seq(true -> Window.currentRow, false -> -1L)) {
+        val got = GlobalOrder
+          .withRunningMaxPerKey(df, "k", "t", "v", Seq(col("id")),
+            inclusive = inclusive, partitions = p)
+          .select("id", "running_max").as[(Long, Option[Long])]
+          .collect().toMap
+        val w = byKey.rowsBetween(Window.unboundedPreceding, end)
+        val want = df.withColumn("mx", max("v").over(w))
+          .select("id", "mx").as[(Long, Option[Long])].collect().toMap
+        assert(got == want,
+          s"seed=$seed partitions=$p inclusive=$inclusive")
+      }
+    }
+  }
+
+  it("withRunningTotalsPerKey matches two window sums on random tied data") {
+    for (seed <- 25L to 28L; p <- Seq(1, 2, 3, 7)) {
+      val df = rows(seed, 120).zip(rows(seed + 100, 120)).zipWithIndex
+        .map { case (((k, t, v), (_, _, w)), i) => (k, t, v, w, i.toLong) }
+        .toDF("k", "t", "v", "w", "id")
+      val got = GlobalOrder
+        .withRunningTotalsPerKey(df, "k", "t", Seq("v", "w"),
+          Seq(col("id")), Seq("rv", "rw"), partitions = p)
+        .select("id", "rv", "rw").as[(Long, Long, Long)].collect()
+        .map { case (id, a, b) => id -> (a, b) }.toMap
+      val win = Window.partitionBy("k").orderBy("t", "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val want = df
+        .withColumn("sv", coalesce(sum("v").over(win), lit(0L)))
+        .withColumn("sw", coalesce(sum("w").over(win), lit(0L)))
+        .select("id", "sv", "sw").as[(Long, Long, Long)].collect()
+        .map { case (id, a, b) => id -> (a, b) }.toMap
       assert(got == want, s"seed=$seed partitions=$p")
     }
   }

@@ -363,6 +363,17 @@ class Round8Suite extends SparkSpec {
       // component 1: {1,2,3}, best score 9 tied between 2 and 3 -> 2
       assert(got == Set((1L, 3L, 2L, 9L), (7L, 2L, 7L, 4L)))
     }
+
+    it("releases the component labels when building the result throws") {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+      val noScore = Seq((1L, 5L)).toDF("doc_id", "quality")
+      intercept[org.apache.spark.sql.AnalysisException] {
+        DedupGroups.keepBestPerComponent(pairs, noScore)
+      }
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"the throw path must release, leaked $leaked")
+    }
   }
 
   describe("Dedup.minhashCandidatesIncremental") {
