@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, Readers}
 
 /** Driver benchmark: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints a one-line JSON artifact per completed sweep (the LAST line is the
@@ -83,7 +83,7 @@ object Bench {
     StallMeter.start()
     // absorb one-time JVM/codegen/scan-setup cost outside the timed loop
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
+    Readers.table(spark, sfDir, "lineitem").limit(1).collect()
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq

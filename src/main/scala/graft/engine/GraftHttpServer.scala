@@ -5,6 +5,7 @@ import java.net.InetSocketAddress
 import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.logging.log4j.LogManager
 
 import org.apache.spark.sql.graftshim.ArrowBridge
 
@@ -30,9 +31,13 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * Framing: each Arrow IPC batch (schema embedded) is preceded by its
   * 4-byte big-endian length; the stream ends at EOF. Auth failures map to
   * 401 with the service's uniform AUTHENTICATION_FAILED (no client-id
-  * enumeration), other rejections to 400, unexpected errors to 500.
+  * enumeration), other rejections to 400, unexpected errors to 500. A 500
+  * body is `INTERNAL_ERROR <id>`; the same id heads the error's log line,
+  * which carries the stack trace, so a caller's report finds the cause.
   */
 final class GraftHttpServer(service: GraftService, port: Int = 0) {
+
+  private val log = LogManager.getLogger(classOf[GraftHttpServer])
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -55,7 +60,10 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
       case e: IllegalArgumentException =>
         respondText(ex, 400, String.valueOf(e.getMessage))
       case e: Throwable =>
-        respondText(ex, 500, s"${e.getClass.getSimpleName}")
+        val id = java.util.UUID.randomUUID().toString
+        log.error(s"request $id failed: ${ex.getRequestMethod} " +
+          ex.getRequestURI.getPath, e)
+        respondText(ex, 500, s"INTERNAL_ERROR $id")
     } finally ex.close()
 
   private def route(ex: HttpExchange): Unit = {

@@ -34,7 +34,7 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     // contract table name is a pure function of the industry (M-contract,
     // `serve_flight.py:285-286`)
     val fct = s"${tenant.industryType}.fct_${tenant.industryType}"
-    spark.read.parquet(warehouse.resolve(fct).toString)
+    Readers.parquet(spark, warehouse.resolve(fct).toString)
   }
 
   private def auth(clientId: String, password: String): Tenancy.Tenant =

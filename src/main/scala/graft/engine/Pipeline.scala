@@ -114,7 +114,9 @@ object Pipeline {
         val out = tmp.resolve(m.name).toString
         m.build(spark, built).write.mode("overwrite").parquet(out)
         // read back the materialized table so downstream models consume the
-        // written parquet, not a re-computed plan (FULL semantics)
+        // written parquet, not a re-computed plan (FULL semantics); a plain
+        // read, since this per-build scratch path would only grow the
+        // schema catalog — its schema is pinned under the final path below
         val table = spark.read.parquet(out)
         // audits run on the written data, inside the build — a failing
         // audit aborts BEFORE the swap, so it can never go live
@@ -130,8 +132,12 @@ object Pipeline {
           throw e
       }
       if (hadOld) deleteRecursively(old)
-      built.map { case (n, _) =>
-        n -> spark.read.parquet(warehouse.resolve(n).toString)
+      // the rename moved the very files each read-back scanned: pin its
+      // schema under the live path, so reads after the swap infer nothing
+      built.map { case (n, table) =>
+        val live = warehouse.resolve(n).toString
+        Readers.pinSchema(spark, live, table.schema)
+        n -> Readers.parquet(spark, live)
       }
     } finally {
       deleteRecursively(tmp) // M8: no corrupt half-built leftovers
@@ -198,7 +204,13 @@ object Pipeline {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.update(modelNames.mkString(",").getBytes("UTF-8"))
     md.update(Files.size(source).toString.getBytes("UTF-8"))
-    md.update(Files.readAllBytes(source))
+    // streamed in fixed-size chunks: the heap holds one buffer, not the
+    // whole upload
+    val in = new java.security.DigestInputStream(Files.newInputStream(source), md)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      while (in.read(buf) != -1) ()
+    } finally in.close()
     md.digest().map("%02x".format(_)).mkString
   }
 
@@ -215,7 +227,7 @@ object Pipeline {
     if (Files.exists(marker) &&
       new String(Files.readAllBytes(marker), "UTF-8") == fp) {
       models.map(n =>
-        n -> spark.read.parquet(warehouse.resolve(n).toString)).toMap
+        n -> Readers.parquet(spark, warehouse.resolve(n).toString)).toMap
     } else {
       val built = ingest(spark, storageBase, users, clientId, password,
         filename, sourceCsv, now)

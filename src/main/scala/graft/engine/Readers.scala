@@ -1,7 +1,10 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
+import org.apache.spark.sql.types.StructType
 
 /** Sources (SURVEY.md §2.1).
   *
@@ -13,6 +16,20 @@ import org.apache.spark.sql.functions.{col, lit, unix_micros}
   * Spark's CSV source, which is distributed and predicate/projection-pruned
   * by Catalyst out of the box: at 100 TB the CSV scan splits by file and by
   * range within splittable files, so no custom reader work is needed.
+  *
+  * Parquet tables are read through one schema catalog ([[parquet]]).
+  * Spark infers a parquet schema with a Spark job on every read, even of
+  * one file; the catalog infers once per table state and pins the schema
+  * on later reads, which then run no job. Its key is the table's absolute
+  * path. Each entry holds the schema with the fingerprint it was inferred
+  * under: the name, length and modification time of every file under the
+  * path, and the value of every SQL conf that parquet schema inference
+  * reads. A read whose fingerprint differs from the entry's (a rewrite, an
+  * added or removed file, a flipped conf) infers again and replaces the
+  * entry, so there is nothing to invalidate by hand. Entries are never
+  * evicted: the map holds one entry per distinct steady-state path read.
+  * Scratch round trips whose paths are unique per run read with plain
+  * `spark.read.parquet`, so they never grow it.
   */
 object Readers {
 
@@ -73,7 +90,94 @@ object Readers {
 
   /** S6-analog — parquet table scan from a warehouse/testdata directory. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** What a schema was inferred under: every file under the path as
+    * (relative name, length, modification time), and the inference confs.
+    */
+  private final case class Fingerprint(files: Seq[(String, Long, Long)],
+                                       confs: Seq[Option[String]])
+
+  private final case class Pinned(fingerprint: Fingerprint,
+                                  schema: StructType)
+
+  /** Every SQL conf Spark 4.1.2's parquet schema inference reads
+    * (`ParquetUtils.inferSchema`, `ParquetFileFormat.readSchema` /
+    * `mergeSchemasInParallel`, `SchemaMergeUtils`, the
+    * `ParquetToSparkSchemaConverter` defaults), plus the partition-column
+    * type inference that types a partitioned table's directory columns.
+    * events' `ts` changes type with `nanosAsLong`.
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** The schema catalog: absolute path -> the schema last inferred there.
+    * Concurrent because the service reads from several request threads;
+    * two threads missing at once both infer, and either result is right.
+    */
+  private val schemas = new ConcurrentHashMap[String, Pinned]()
+
+  /** A parquet table read through the schema catalog: a hit passes the
+    * pinned schema (`spark.read.schema(s).parquet`, no Spark job), a miss
+    * infers it and records it under the path's current fingerprint. A
+    * missing path reads plainly, so the caller sees Spark's own error.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((key, fp)) =>
+        val hit = schemas.get(key)
+        if (hit != null && hit.fingerprint == fp)
+          spark.read.schema(hit.schema).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemas.put(key, Pinned(fp, df.schema))
+          df
+        }
+    }
+
+  /** Record `schema` for `path` as it stands now, when the caller already
+    * knows it: a writer that just read the same files back under another
+    * name pins them here, so the first [[parquet]] read of them is a hit.
+    */
+  def pinSchema(spark: SparkSession, path: String, schema: StructType): Unit =
+    fingerprint(spark, path).foreach { case (key, fp) =>
+      schemas.put(key, Pinned(fp, schema))
+    }
+
+  /** The catalog key and fingerprint of `path`, listed through the path's
+    * own Hadoop `FileSystem`; None when the path does not exist. Hidden
+    * (dot-prefixed) names are skipped: Spark never reads them.
+    */
+  private def fingerprint(spark: SparkSession, path: String)
+      : Option[(String, Fingerprint)] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val top =
+      try fs.getFileStatus(root)
+      catch { case _: java.io.FileNotFoundException => return None }
+    def files(st: FileStatus, rel: String): Seq[(String, Long, Long)] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq
+          .filterNot(_.getPath.getName.startsWith("."))
+          .flatMap(c => files(c, s"$rel/${c.getPath.getName}"))
+      else Seq((rel, st.getLen, st.getModificationTime))
+    val confs = inferenceConfs.map(spark.conf.getOption)
+    Some((fs.makeQualified(root).toString,
+      Fingerprint(files(top, "").sortBy(_._1), confs)))
+  }
 
   /** The events table scan, normalized to the engine-wide contract that
     * `ts` is a NANOSECOND epoch long (consumers convert with
@@ -138,9 +242,9 @@ object Readers {
     * EVOLVING schemas (a column added mid-corpus), reconciled by column
     * name — rows from pre-evolution files null-fill the new columns.
     * `mergeSchema` reads every file's footer at planning time, which is
-    * the right trade for an ingest/reconcile step; a steady-state 100 TB
-    * table should instead pin the superset schema explicitly (or keep it
-    * in a catalog) so planning stays O(1) in file count.
+    * the right trade for an ingest/reconcile step. A steady-state table
+    * is read through [[parquet]] instead, whose catalog infers its schema
+    * once per table state and pins it on every later read.
     */
   def parquetMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)

@@ -374,6 +374,8 @@ object Warehouse {
     val safeName = "." + path.getFileName.toString.replace('=', '_')
     val tmp = path.resolveSibling(
       safeName + ".compact-" + java.util.UUID.randomUUID().toString.take(8))
+    // plain read: these files are replaced by the swap below, so a
+    // catalog entry for them would be stale as soon as it was made
     spark.read.parquet(dir).repartition(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     val old = path.resolveSibling(tmp.getFileName.toString + ".old")
@@ -495,6 +497,8 @@ object Warehouse {
         aggCols.map(a => col(s"sum($a)").as(a))): _*)
     val next = last match {
       case Some((_, genDir)) =>
+        // plain read: each batch writes a new generation dir, so caching
+        // the schemas of these one-use paths would only grow the catalog
         refreshAdditiveAgg(spark.read.parquet(genDir), partial,
           keyCols, aggCols, countCol)
       case None => partial
@@ -671,6 +675,8 @@ object Warehouse {
     else {
       val lines = new String(java.nio.file.Files.readAllBytes(committed),
         java.nio.charset.StandardCharsets.UTF_8).trim.split("\n")
+      // plain read: generation dirs are one per batch (see
+      // durableAdditiveMvFold), too short-lived for the schema catalog
       Some(spark.read.parquet(lines(1)))
     }
   }

@@ -196,7 +196,7 @@ object Pq {
     */
   def loadModel(spark: SparkSession, path: String): Model = {
     import spark.implicits._
-    val rows = spark.read.parquet(path)
+    val rows = graft.engine.Readers.parquet(spark, path)
       .select(col("s").cast("int"), col("code").cast("int"),
         col("cv").cast("array<double>"), col("dim").cast("int"),
         col("model_hash"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
+import Tables.t
 
 /** Second wave of relational coverage: exact percentiles, conditional
   * aggregation, string/date scalar functions, window-based dedup
@@ -13,9 +14,6 @@ import graft.engine.Readers
   * (portable to the oracle, and shuffle-free beyond the per-key sort).
   */
 object AdvancedQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** events with the nanosecond timestamp read as long and converted. */
   private def events(s: SparkSession, dir: String): DataFrame =

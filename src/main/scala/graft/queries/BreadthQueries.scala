@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.functions.Portable.wsTokens
 import OracleSql.tokSql
+import Tables.t
 
 /** Breadth batch 3: term weighting, decile histograms, pivot tables, and
   * regex extraction. The TF-IDF variant uses a rational (log-free) IDF so
@@ -13,9 +13,6 @@ import OracleSql.tokSql
   * tolerance; a production scorer would wrap `ln()` around the same ratio.
   */
 object BreadthQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -5,15 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.functions.Portable.wsTokens
 import OracleSql.tokSql
+import Tables.t
 
 /** Corpus-level analytics a training-data pipeline runs before/after
   * filtering: n-gram frequency tables, vocabulary statistics, and a
   * user-funnel rollup over the events stream.
   */
 object CorpusQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Reports}
 import graft.engine.models.Corporate
+import Tables.t
 
 /** Operator-parity queries (SURVEY.md §2) expressed over the harness
   * testdata tables, each paired with ANSI SQL the driver runs in DuckDB on
@@ -17,9 +18,6 @@ import graft.engine.models.Corporate
   * programs, part feeds name normalization and top-k.
   */
 object ParityQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** lineitem mapped to the fct contract (job_title, total_amount). */
   def lineitemFact(s: SparkSession, dir: String): DataFrame =

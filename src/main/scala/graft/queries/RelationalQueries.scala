@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
+import Tables.t
 
 /** Relational operators beyond the reference's own surface (the reference
   * has no joins/windows/set-ops — SURVEY.md §2.4/§2.6/§2.8) exercised the
@@ -21,9 +22,6 @@ import graft.engine.Readers
   *    differences between engines cannot affect the compare.
   */
 object RelationalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Warehouse}
 import graft.ext.{Analytics, GlobalOrder, Stats, TextAnalysis, TimeSeries}
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-10 batch: retrieval/BI analyses composed from the scalable
   * primitives — capped inverted index, OHLC resampling, cohort
@@ -14,9 +15,6 @@ import OracleSql.tokSql
   * pure selection/one final IEEE formula).
   */
 object Round10Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** q163 posting-list cap. */
   private val PostingsK = 10

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Audits, Readers, Warehouse}
 import graft.ext.{Analytics, AsofJoin, GlobalOrder, Graph, IvfIndex, Stats, TextAnalysis}
 import OracleSql.{centsSql, tokSql}
+import Tables.{eventsUs, t}
 
 /** Round-11 batch (q182–q201): experimentation / IR / lifecycle
   * analyses composed from the scalable primitives — audience overlap,
@@ -19,9 +20,6 @@ import OracleSql.{centsSql, tokSql}
   * the oracle).
   */
 object Round11Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** q183 BFS depth budget. */
   private val BfsMaxDepth = 3
@@ -112,11 +110,6 @@ object Round11Queries {
       }
       (labels, cents)
     })
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Audits, Readers}
 import graft.ext.{Graph, Profile, Stats, TimeSeries}
 import OracleSql.centsSql
+import Tables.{eventsUs, t}
 
 /** Round-12 operators: weighted shortest paths, interval-union coverage,
   * per-group OLS trend fits, Benford first-digit auditing, CUSUM
@@ -13,14 +14,6 @@ import OracleSql.centsSql
   * oracle on the driver's parquet tables.
   */
 object Round12Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
 
   /** q202 hop budget (q183's depth). */
   private val SsspMaxIter = 3

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Dedup, GlobalOrder, Similarity, Stats, TimeSeries}
 import OracleSql.centsSql
+import Tables.{eventsUs, t}
 
 /** Round-12 continuation batch: ranking-quality (ROC AUC), monotonic
   * association (Spearman), concentration (Pareto top-share), and
@@ -15,14 +16,6 @@ import OracleSql.centsSql
   * the few derived doubles are one fixed IEEE formula on both engines.
   */
 object Round12bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
 
   /** q238 cohort modulus (the q223 user-sharding convention). */
   private val AucCohorts = 8L

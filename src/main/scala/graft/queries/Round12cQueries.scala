@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Stats, Survival, TextAnalysis, TimeSeries}
 import OracleSql.centsSql
+import Tables.eventsUs
 
 /** Round-12 third batch: right-censored survival (Kaplan–Meier risk
   * table), forecasting floor (seasonal-naive backtest), randomness and
@@ -16,11 +17,6 @@ import OracleSql.centsSql
   * fixed IEEE formula on both engines).
   */
 object Round12cQueries {
-
-  private def eventsUs(s: SparkSession, dir: String): DataFrame =
-    Readers.eventsNanos(s, dir).select(
-      col("user_id"), expr("ts div 1000").as("tsu"),
-      col("event_id"), col("event_type"), col("value"))
 
   private val DayUs = 86400000000L
 

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.Dedup
 import OracleSql.{hash60Sql, tokSql}
+import Tables.t
 
 /** Round-13 batch: exact substring-level dedup (the suffix-gram
   * re-expression of Lee et al. 2022's exact-substring dedup — the one
@@ -16,9 +16,6 @@ import OracleSql.{hash60Sql, tokSql}
   * (docs/PLANS.md).
   */
 object Round13Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** Window length (tokens) for the exact-substring queries. Lee et al.
     * use 50 BPE tokens on web corpora; the synthetic documents run

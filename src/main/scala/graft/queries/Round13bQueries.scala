@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Analytics, Dedup, GlobalOrder, Sampling, Stats, TextAnalysis}
 import graft.functions.Portable.wsTokens
 import OracleSql.{hash60Sql, tokSql}
+import Tables.t
 
 /** Round-13 second batch: the training-run data-path primitives around
   * the new exact-substring family — cross-source duplication flow
@@ -17,9 +17,6 @@ import OracleSql.{hash60Sql, tokSql}
   * DuckDB-gated.
   */
 object Round13bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val SpanL = 8
   private val RrfK = 60

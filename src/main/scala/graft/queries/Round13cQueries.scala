@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Dedup, Stats}
 import graft.functions.Portable.wsTokens
 import OracleSql.{hash60Sql, tokSql}
+import Tables.t
 
 /** Round-13 third batch: distribution surgery and corpus-growth
   * diagnostics — cross-cohort quantile normalization (batch-effect
@@ -15,9 +15,6 @@ import OracleSql.{hash60Sql, tokSql}
   * DuckDB-gated.
   */
 object Round13cQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val SpanL = 8
   private val RefLang = "en"

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Stats, TextAnalysis}
 import OracleSql.{centsSql, hash60Sql, tokSql}
+import Tables.t
 
 /** Round-13 fourth batch: corpus-audit and distribution-shape
   * primitives — Cohen's κ (chance-corrected classifier agreement), χ²
@@ -15,9 +15,6 @@ import OracleSql.{centsSql, hash60Sql, tokSql}
   * integer-exact at every shuffle, DuckDB-gated.
   */
 object Round13dQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val Chi2Target = "src0"
   private val KeywordK = 10

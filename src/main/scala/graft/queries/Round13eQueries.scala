@@ -6,6 +6,7 @@ import graft.engine.Readers
 import graft.ext.{Analytics, Dedup, Stats}
 import graft.functions.Portable.hash60
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-13 fifth batch: behavioral-sequence and corpus-overlap
   * primitives — consecutive event-type trigram motifs (two chained
@@ -18,9 +19,6 @@ import OracleSql.tokSql
   * recomputed independently.
   */
 object Round13eQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val CalBins = 10
   private val EnWords: Seq[String] =

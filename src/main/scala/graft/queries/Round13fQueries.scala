@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Dedup, Pq, Sampling}
 import graft.functions.Portable.hash60
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-13 sixth batch: the memory-compressed half of the ANN stack
   * and submodular source selection — product-quantization codebooks
@@ -27,9 +27,6 @@ import OracleSql.tokSql
   * is gated ≥ 0.7.
   */
 object Round13fQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val Dim = 8
   private val M = 2

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Analytics, Stats}
 import graft.functions.Portable
+import Tables.t
 
 /** Round-13 seventh batch: Markov removal-effect attribution (the
   * first-principles channel-credit model, solved exactly with driver
@@ -13,9 +14,6 @@ import graft.functions.Portable
   * probabilities render into a dynamic oracle.
   */
 object Round13gQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** hash60('purchase') as a compile-side constant — must equal the
     * engine expression conv(substr(md5(x),1,15),16,10).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
 import graft.ext.{Mixture, Similarity}
+import Tables.t
 
 /** Round-13 ninth batch: data-selection primitives — k-center greedy
   * diversity seeds over the embedding space (the coreset selector; the
@@ -13,9 +14,6 @@ import graft.ext.{Mixture, Similarity}
   * of proportional allocation).
   */
 object Round13iQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val KSeeds = 4
 

@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.TextAnalysis
 import graft.functions.TopKFunctions
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-13 tenth batch: curation-knob evidence — the quality-score
   * yield curve (docs/tokens retained per threshold, per source; the
@@ -14,9 +14,6 @@ import OracleSql.tokSql
   * neighbors — the contrastive-training pair generator).
   */
 object Round13jQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val QualityCuts = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
   private val HnQueries = 5

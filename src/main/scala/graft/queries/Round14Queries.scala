@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.Pq
 import OracleSql.{hash60Sql, tokSql}
+import Tables.t
 
 /** Round-14 first batch: the FULL-DIMENSION product-quantization stack
   * at usable recall. Round 13 gated an 8-of-64-dimension PQ demo whose
@@ -22,9 +22,6 @@ import OracleSql.{hash60Sql, tokSql}
   * scan turns the round red instead of silently degrading quality.
   */
 object Round14Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** Bounded documents-stream harness — [[StreamingQueries
     * .runEventsStream]]'s symlink-scratch-dir pattern over

@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.Pq
 import OracleSql.{hash60Sql, tokSql}
 import Round14Queries.{recallFrame, recallSql}
+import Tables.t
 
 /** Round-15 batch: the two ANN operating points the round-14 verdict
   * asked to push over the recall bar, the streaming restart-recovery
@@ -40,9 +40,6 @@ import Round14Queries.{recallFrame, recallSql}
   *    Round15Suite).
   */
 object Round15Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** ≤ 32-byte config: m=32 subspaces × 8-bit codes (k=256) over the
     * raw coordinate order — the sweep's capacity-beats-permutation

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.KMeans
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-15 continuation batch — the q354 re-learning gate generalized
   * to every trainer shape, plus guarantee-carrying dedup/sketch
@@ -28,9 +28,6 @@ import OracleSql.tokSql
   *    estimator's quality measured exactly.
   */
 object Round15bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private val K = 4
   private val Iters = 3

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Dedup, LangModel, Mixture}
 import OracleSql.{hash60Sql, tokSql}
+import Tables.t
 
 /** Round-16 batch: the REWRITE half of exact-substring dedup (cut the
   * duplicated spans and re-emit the cleaned corpus — the step an LLM
@@ -20,9 +20,6 @@ import OracleSql.{hash60Sql, tokSql}
   * [[graft.ext.LangModel.knDocScoreBits]].
   */
 object Round16Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** Window length for the span rewrite — q295's SpanL (8 whitespace
     * tokens: long enough that chance collisions are nil at every SF,

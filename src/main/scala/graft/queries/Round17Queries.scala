@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-17 batch: the token-ID corpus materialization — the table an
   * LLM pipeline actually ships to training once curation ends (q354
@@ -12,9 +12,6 @@ import OracleSql.tokSql
   * [[graft.ext.TextAnalysis.bpeEncode]].
   */
 object Round17Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -2,8 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-18 batch: production-vocabulary BPE (the round-17 verdict's
   * top task). The word-level tokenizer family (q354/q355/q376/q377) is
@@ -22,9 +22,6 @@ import OracleSql.tokSql
   * hash-fails.
   */
 object Round18Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** Contract constants: 12 stages x up to 32 merges over the top-512
     * candidate pairs per census — >= 256 learned merges at every SF

@@ -7,6 +7,7 @@ import graft.ext.AsofJoin
 import graft.functions.Portable
 import graft.streaming.EventStream
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-2 batch: two-table as-of join (union-interleave, oracle = native
   * DuckDB ASOF JOIN), streaming session windows run bounded against a
@@ -14,9 +15,6 @@ import OracleSql.tokSql
   * positions, and a polynomial rolling-hash fingerprint.
   */
 object Round2Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
+import Tables.t
 
 /** Round-4 batch: driver-gate coverage for the last components that were
   * ScalaTest-only — sketches (within-error-bound check), the salted skew
@@ -11,9 +12,6 @@ import graft.engine.Readers
   * hence SQL-expressible value checks, like q67's decode).
   */
 object Round4Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

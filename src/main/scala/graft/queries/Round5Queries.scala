@@ -6,6 +6,7 @@ import graft.engine.Readers
 import graft.ext.{Decontaminate, Packing, Sampling, TextAnalysis}
 import graft.functions.Portable
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-5 batch: the training-data-pipeline operators a 100 TB corpus
   * build needs beyond dedup/ANN — sequence packing (concat-and-chunk),
@@ -14,9 +15,6 @@ import OracleSql.tokSql
   * paths. Every entry is hash-checked against a DuckDB oracle.
   */
 object Round5Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** Chunk size for q78 — small enough that sf0.01 docs span chunk
     * boundaries both ways (many docs per chunk AND docs crossing chunks).

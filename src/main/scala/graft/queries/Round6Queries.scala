@@ -6,6 +6,7 @@ import graft.engine.Readers
 import graft.ext.{Batching, Dedup, Profile, Quantize, SemDedup, Stats, TimeSeries}
 import graft.functions.Portable
 import OracleSql.{centsSql, tokSql}
+import Tables.t
 
 /** Round-6 batch: reproducible statistics and similarity primitives —
   * blocked edit-distance near-dup, exact-moment correlation/z-score
@@ -17,9 +18,6 @@ import OracleSql.{centsSql, tokSql}
   * the run's trained centroids (the q64 pattern).
   */
 object Round6Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** q93 params: prefix-4 blocking keeps candidate pairs ~1k at sf0.01
     * (vs 125k all-pairs); distance over the first 60 chars at maxDist 35

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Warehouse}
 import graft.ext.{Sampling, Stats, TextAnalysis}
 import OracleSql.{centsSql, hash60Sql, tokSql}
+import Tables.t
 
 /** Round-6 second batch: dimension history (SCD-2), corpus-curation
   * scoring (n-gram novelty, PMI collocations, token-budget selection),
@@ -15,9 +16,6 @@ import OracleSql.{centsSql, hash60Sql, tokSql}
   * are bit-identical across engines.
   */
 object Round6bQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** q110: a bigram must occur this often to be a collocation candidate. */
   private val PmiMinCount = 20L

@@ -2,11 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Readers, Warehouse}
+import graft.engine.Warehouse
 import graft.ext.{Dedup, Drift, GlobalOrder, Graph, Stats}
 import graft.queries.ExtensionQueries.shingleCte
 import graft.streaming.EventStream
 import OracleSql.{centsSql, tokSql}
+import Tables.t
 
 /** Round-7 batch: scale-guard variants of existing operators, each
   * oracle-gated — the capped blocked edit-distance (the blockCap pruning
@@ -17,9 +18,6 @@ import OracleSql.{centsSql, tokSql}
   * TRUE flags, the q69/q107 pattern).
   */
 object Round7Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** q115 params: prefix-1 blocking makes blocks big enough that at
     * sf0.01 exactly one (lang, prefix) block exceeds the cap (38 docs vs
@@ -163,6 +161,7 @@ object Round7Queries {
           .select("l_orderkey", "l_returnflag", "l_quantity",
             "l_extendedprice")
         Warehouse.writePartitioned(li, s"$tmp/li", "l_returnflag")
+        // plain read: a per-run temp dir would only grow the schema catalog
         val agg = s.read.parquet(s"$tmp/li")
           .filter(col("l_returnflag") === "R")
           .agg(count(lit(1)).as("n"),
@@ -188,6 +187,7 @@ object Round7Queries {
         Warehouse.writePartitioned(li.repartition(16), s"$tmp/li",
           "l_returnflag")
         Warehouse.compact(s, s"$tmp/li")
+        // plain read: a per-run temp dir would only grow the schema catalog
         val agg = s.read.parquet(s"$tmp/li")
           .groupBy("l_returnflag")
           .agg(count(lit(1)).as("n"),

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Readers
 import graft.ext.{Dedup, Graph, Stats, TextAnalysis, TimeSeries}
 import OracleSql.{centsSql, tokSql}
+import Tables.t
 
 /** Round-8 batch: retrieval scoring, exact-arithmetic text statistics,
   * graph structure, and sweep-line concurrency — every float in a
@@ -14,9 +14,6 @@ import OracleSql.{centsSql, tokSql}
   * bit-reproducible across engines.
   */
 object Round8Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** q130 query terms: mid-frequency corpus vocabulary, so tf/df vary
     * across documents and all BM25 factors are exercised.
@@ -270,6 +267,7 @@ object Round8Queries {
           Stats.cents(col("l_quantity")).as("qty_cents"))
         graft.ext.ZOrder.writeZOrdered(li, s"$tmp/z", col("pk"), col("sk"),
           bits = 10, partitions = 8)
+        // plain read: a per-run temp dir would only grow the schema catalog
         val agg = s.read.parquet(s"$tmp/z")
           .filter(col("pk").between(100, 400) && col("sk").between(20, 60))
           .groupBy(expr("z div 65536").as("z_bucket"))

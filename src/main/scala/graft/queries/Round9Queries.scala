@@ -5,15 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Readers, Warehouse}
 import graft.ext.{Dedup, DedupGroups, GlobalOrder, Graph, RangeJoin, Sampling, Stats, TextAnalysis}
 import OracleSql.tokSql
+import Tables.t
 
 /** Round-9 batch: hot-key-safe formulations of per-key timeline
   * operators. Floats in compared columns follow the q110 discipline
   * (exact integer aggregates only).
   */
 object Round9Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Readers.table(s, dir, name)
 
   /** events with the nanosecond timestamp read as long and converted
     * (the q38 recipe — Spark cannot scan TIMESTAMP(NANOS) directly).

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.BusDrain
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funspec.AnyFunSpec
 import graft.engine.{GraftSession, Pipeline}
@@ -21,6 +23,24 @@ trait SparkSpec extends AnyFunSpec with BeforeAndAfterAll {
     val d = Files.createTempDirectory(prefix)
     tempDirs.add(d)
     d
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener; the
+    * bus is drained on both sides, so no job of an earlier step counts.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    BusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      BusDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
   }
 
   override def afterAll(): Unit =

@@ -229,6 +229,74 @@ class ServiceSuite extends SparkSpec {
     } finally http.stop()
   }
 
+  it("reports on the new fct after an overwrite upload of the same filename") {
+    val header = "Row ID,Year,Department Title,Job Class Title,Employment " +
+      "Type,Base Pay,Overtime Pay,Longevity Bonus Pay,Average Benefit Cost"
+    def upload(src: String, rows: Seq[(String, Int)]): Unit = {
+      val body = rows.zipWithIndex.map { case ((title, pay), i) =>
+        s"${i + 1},2013,D,$title,FT,$$$pay.00,,,"
+      }
+      svc.upload("LA", "p1", "corporate_swap.csv",
+        writeCsv(src, (header +: body).mkString("", "\n", "\n")))
+    }
+    def totals(rows: Array[org.apache.spark.sql.Row]): (Long, Double) =
+      (rows.map(_.getAs[Long]("total_employee")).sum,
+        rows.map(_.getAs[Double]("total_budget")).sum)
+    upload("swap_1.csv", Seq("A" -> 100, "A" -> 200, "B" -> 300))
+    val before = svc.budgetReport("LA", "p1", "corporate_swap.csv").collect()
+    assert(totals(before) == ((3L, 600.0)))
+    upload("swap_2.csv",
+      Seq("C" -> 1000, "D" -> 2000, "D" -> 3000, "E" -> 10, "C" -> 5))
+    val after = svc.budgetReport("LA", "p1", "corporate_swap.csv").collect()
+    val tenant = users.find(_.clientId == "LA").get
+    val fct = Tenancy.cleanDir(storage, tenant, "corporate_swap.csv")
+      .resolve("corporate.fct_corporate").toString
+    val fresh = Reports.budgetReport(
+      SparkSpec.session.read.parquet(fct)).collect()
+    assert(after.map(_.toSeq).toSeq == fresh.map(_.toSeq).toSeq)
+    assert(totals(after) == ((5L, 6015.0)))
+    assert(after.map(_.getAs[String]("job_title")).toSeq ==
+      Seq("D", "C", "E"))
+  }
+
+  it("answers an unexpected error with INTERNAL_ERROR and an id the log carries") {
+    import java.net.{HttpURLConnection, URI}
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.toImmutable)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[GraftHttpServer])
+      .asInstanceOf[Logger]
+    logger.addAppender(capture)
+    val http = new GraftHttpServer(svc)
+    val port = http.start()
+    try {
+      // a report on a file never uploaded: the read of its missing fct
+      // fails inside Spark, an error no route maps to a status
+      val c = new URI(s"http://127.0.0.1:$port/files/never_uploaded.csv/report")
+        .toURL.openConnection().asInstanceOf[HttpURLConnection]
+      c.setRequestProperty("X-Graft-Client", "LA")
+      c.setRequestProperty("X-Graft-Password", "p1")
+      assert(c.getResponseCode == 500)
+      val body = new String(c.getErrorStream.readAllBytes(), "UTF-8")
+      val id = "INTERNAL_ERROR ([0-9a-f-]{36})".r.findFirstMatchIn(body)
+        .map(_.group(1)).getOrElse(fail(s"no request id in: $body"))
+      val line = logged.asScala.find(_.getMessage.getFormattedMessage
+        .contains(id)).getOrElse(fail(s"request $id not in the log"))
+      assert(line.getThrown != null, "the log line carries no stack trace")
+    } finally {
+      http.stop()
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   it("refuses cross-tenant access") {
     assertThrows[IllegalArgumentException](
       svc.budgetReport("LA", "wrong", "corporate_a.csv"))

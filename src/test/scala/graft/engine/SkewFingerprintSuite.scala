@@ -61,4 +61,24 @@ class SkewFingerprintSuite extends SparkSpec {
       assert(third("corporate.fct_corporate").count() == 2)
     }
   }
+
+  describe("Pipeline.inputFingerprint") {
+    it("streams the upload to the same SHA-256 as hashing its bytes at once") {
+      val dir = tempDir("graft_fp_stream")
+      val rnd = new scala.util.Random(7)
+      val models = Seq("corporate.stg_corporate", "corporate.fct_corporate")
+      // empty, under one chunk, and several chunks with a ragged tail
+      Seq(0, 1000, (3 << 16) + 123).foreach { size =>
+        val bytes = new Array[Byte](size)
+        rnd.nextBytes(bytes)
+        val src = Files.write(dir.resolve(s"u$size.csv"), bytes)
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        md.update(models.mkString(",").getBytes("UTF-8"))
+        md.update(size.toString.getBytes("UTF-8"))
+        md.update(bytes)
+        val reference = md.digest().map("%02x".format(_)).mkString
+        assert(Pipeline.inputFingerprint(src, models) == reference, s"$size B")
+      }
+    }
+  }
 }
