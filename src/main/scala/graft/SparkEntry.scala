@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{AdvancedQueries, BreadthQueries, CorpusQueries, ExtensionQueries, ParityQueries, RelationalQueries, Round2Queries, Round4Queries, Round5Queries, Round6Queries, Round6bQueries, Round7Queries, Round8Queries, Round9Queries, Round10Queries, Round11Queries, Round12Queries, Round12bQueries, Round12cQueries, Round13Queries, Round13bQueries, Round13cQueries, Round13dQueries, Round13eQueries, Round13fQueries, Round13gQueries, Round13hQueries, Round13iQueries, Round13jQueries, Round14Queries, Round15Queries, Round15bQueries, Round16Queries, Round17Queries, Round18Queries, StreamingQueries}
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -17,60 +17,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ParityQueries.queries("q01_budget_report")(spark, "/root/testdata/sf0.001")
 
+  /** Every object that contributes to the registry, each named once. */
+  private[graft] def querySets: Seq[QuerySet] = Seq(
+    ParityQueries, RelationalQueries, ExtensionQueries, AdvancedQueries,
+    CorpusQueries, BreadthQueries, StreamingQueries, Round2Queries,
+    Round4Queries, Round5Queries, Round6Queries, Round6bQueries,
+    Round7Queries, Round8Queries, Round9Queries, Round10Queries,
+    Round11Queries, Round12Queries, Round12bQueries, Round12cQueries,
+    Round13Queries, Round13bQueries, Round13cQueries, Round13dQueries,
+    Round13eQueries, Round13fQueries, Round13gQueries, Round13hQueries,
+    Round13iQueries, Round13jQueries, Round14Queries, Round15Queries,
+    Round15bQueries, Round16Queries, Round17Queries, Round18Queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ RelationalQueries.queries ++
-      ExtensionQueries.queries ++ AdvancedQueries.queries ++
-      CorpusQueries.queries ++ BreadthQueries.queries ++
-      StreamingQueries.queries ++ Round2Queries.queries ++
-      Round4Queries.queries ++ Round5Queries.queries ++
-      Round6Queries.queries ++ Round6bQueries.queries ++
-      Round7Queries.queries ++ Round8Queries.queries ++
-      Round9Queries.queries ++ Round10Queries.queries ++ Round11Queries.queries ++
-      Round12Queries.queries ++ Round12bQueries.queries ++
-      Round12cQueries.queries ++ Round13Queries.queries ++
-      Round13bQueries.queries ++ Round13cQueries.queries ++
-      Round13dQueries.queries ++ Round13eQueries.queries ++
-      Round13fQueries.queries ++ Round13gQueries.queries ++
-      Round13hQueries.queries ++ Round13iQueries.queries ++
-      Round13jQueries.queries ++ Round14Queries.queries ++
-      Round15Queries.queries ++ Round15bQueries.queries ++
-      Round16Queries.queries ++ Round17Queries.queries ++
-      Round18Queries.queries
+    querySets.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ParityQueries.oracleSql ++ RelationalQueries.oracleSql ++
-      ExtensionQueries.oracleSql ++ AdvancedQueries.oracleSql ++
-      CorpusQueries.oracleSql ++ BreadthQueries.oracleSql ++
-      StreamingQueries.oracleSql ++ Round2Queries.oracleSql ++
-      Round4Queries.oracleSql ++ Round5Queries.oracleSql ++
-      Round6Queries.oracleSql ++ Round6bQueries.oracleSql ++
-      Round7Queries.oracleSql ++ Round8Queries.oracleSql ++
-      Round9Queries.oracleSql ++ Round10Queries.oracleSql ++ Round11Queries.oracleSql ++
-      Round12Queries.oracleSql ++ Round12bQueries.oracleSql ++
-      Round12cQueries.oracleSql ++ Round13Queries.oracleSql ++
-      Round13bQueries.oracleSql ++ Round13cQueries.oracleSql ++
-      Round13dQueries.oracleSql ++ Round13eQueries.oracleSql ++
-      Round13fQueries.oracleSql ++ Round13gQueries.oracleSql ++
-      Round13hQueries.oracleSql ++ Round13iQueries.oracleSql ++
-      Round13jQueries.oracleSql ++ Round14Queries.oracleSql ++
-      Round15Queries.oracleSql ++ Round15bQueries.oracleSql ++
-      Round16Queries.oracleSql ++ Round17Queries.oracleSql ++
-      Round18Queries.oracleSql
+  def oracleSql: Map[String, String] = querySets.flatMap(_.oracleSql).toMap
 
   /** Oracles whose SQL depends on run-time-learned parameters (q64's
     * k-means centroids): rendered per (session, sfDir) when Verify dumps
     * oracle_sql.json, so the driver's DuckDB check covers them too.
     */
   def dynamicOracleSql: Map[String, (SparkSession, String) => String] =
-    Round2Queries.dynamicOracleSql ++ Round4Queries.dynamicOracleSql ++
-      Round6Queries.dynamicOracleSql ++ Round7Queries.dynamicOracleSql ++
-      Round10Queries.dynamicOracleSql ++ Round11Queries.dynamicOracleSql ++
-      Round12Queries.dynamicOracleSql ++ Round12cQueries.dynamicOracleSql ++
-      Round13eQueries.dynamicOracleSql ++ Round13fQueries.dynamicOracleSql ++
-      Round13gQueries.dynamicOracleSql ++ Round13hQueries.dynamicOracleSql ++
-      Round13iQueries.dynamicOracleSql ++ Round14Queries.dynamicOracleSql ++
-      Round15Queries.dynamicOracleSql
+    querySets.flatMap(_.dynamicOracleSql).toMap
 }

@@ -31,7 +31,8 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * Framing: each Arrow IPC batch (schema embedded) is preceded by its
   * 4-byte big-endian length; the stream ends at EOF. Auth failures map to
   * 401 with the service's uniform AUTHENTICATION_FAILED (no client-id
-  * enumeration), other rejections to 400, unexpected errors to 500. A 500
+  * enumeration), a report or export of a file never uploaded to 404,
+  * other rejections to 400, unexpected errors to 500. A 500
   * body is `INTERNAL_ERROR <id>`; the same id heads the error's log line,
   * which carries the stack trace, so a caller's report finds the cause.
   */
@@ -59,6 +60,8 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
         respondText(ex, 401, "AUTHENTICATION_FAILED")
       case e: IllegalArgumentException =>
         respondText(ex, 400, String.valueOf(e.getMessage))
+      case e: NoSuchElementException if e.getMessage == "NOT_FOUND" =>
+        respondText(ex, 404, "NOT_FOUND")
       case e: Throwable =>
         val id = java.util.UUID.randomUUID().toString
         log.error(s"request $id failed: ${ex.getRequestMethod} " +

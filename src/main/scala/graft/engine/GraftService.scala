@@ -29,12 +29,16 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     Pipeline.ingest(spark, storageBase, users, clientId, password,
       filename, sourceCsv, now)
 
+  /** The tenant's fct for `filename`; NOT_FOUND when no upload of that
+    * name has been built.
+    */
   private def fctOf(tenant: Tenancy.Tenant, filename: String): DataFrame = {
-    val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
     // contract table name is a pure function of the industry (M-contract,
     // `serve_flight.py:285-286`)
-    val fct = s"${tenant.industryType}.fct_${tenant.industryType}"
-    Readers.parquet(spark, warehouse.resolve(fct).toString)
+    val fct = Tenancy.cleanDir(storageBase, tenant, filename)
+      .resolve(s"${tenant.industryType}.fct_${tenant.industryType}")
+    if (!Files.exists(fct)) throw new NoSuchElementException("NOT_FOUND")
+    Readers.parquet(spark, fct.toString)
   }
 
   private def auth(clientId: String, password: String): Tenancy.Tenant =

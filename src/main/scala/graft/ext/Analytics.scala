@@ -337,47 +337,47 @@ object Analytics {
                  maxPerBasket: Int, minPairBaskets: Long): DataFrame = {
     require(maxPerBasket >= 2, s"maxPerBasket must be >= 2, got $maxPerBasket")
     GlobalOrder.requireFresh(df, "__g", "__i", "__n")
-    // the distinct basket-item table fans out to every downstream
-    // consumer (basket census, kept set -> both self-join sides, item
-    // census), and its upstream is the caller's join — one eager
-    // localCheckpoint materializes it once instead of betting each
-    // consumer on the exchange-reuse race (round 19, §2.4/§5).
-    // RETENTION: a leaf of the returned plan, released by the bench via
-    // Checkpoints.release.
-    val m = df.select(col(basketCol).as("__g"), col(itemCol).as("__i"))
-      .distinct()
-      .localCheckpoint()
-    val keptBaskets = m.groupBy("__g").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxPerBasket)
-      .select("__g")
-    val kept = m.join(keptBaskets, Seq("__g"))
-    val nBaskets = keptBaskets.agg(count(lit(1)).as("n_baskets"))
-    val itemN = kept.groupBy("__i").agg(count(lit(1)).as("__c"))
-    // Apriori prune (result-invariant): a pair's support is bounded by
-    // its rarer item's support, so items under `minPairBaskets` cannot
-    // appear in any reported pair — dropping them BEFORE the self-join
-    // keeps the pair-group cardinality proportional to the frequent
-    // catalog, not the long tail (which at web scale is most of it).
-    val frequent = itemN.filter(col("__c") >= minPairBaskets).select("__i")
-    val keptF = kept.join(frequent, Seq("__i"), "left_semi")
-    val pairs = keptF.select(col("__g"), col("__i").as("item_a"))
-      .join(keptF.select(col("__g"), col("__i").as("item_b")), "__g")
-      .filter(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b")
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= minPairBaskets)
-    pairs
-      .join(itemN.select(col("__i").as("item_a"), col("__c").as("n_a")),
-        "item_a")
-      .join(itemN.select(col("__i").as("item_b"), col("__c").as("n_b")),
-        "item_b")
-      .crossJoin(broadcast(nBaskets))
-      .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"),
-        col("n_b"), col("n_baskets"),
-        (col("n_ab").cast("double") / col("n_a")).as("confidence"),
-        (col("n_ab").cast("double") * col("n_baskets") /
-          (col("n_a").cast("double") * col("n_b").cast("double")))
-          .as("lift"))
+    Checkpoints.scoped { scope =>
+      // the distinct basket-item table fans out to every downstream
+      // consumer (basket census, kept set -> both self-join sides, item
+      // census), and its upstream is the caller's join — one eager
+      // checkpoint materializes it once, a leaf of the returned plan,
+      // instead of betting each consumer on the exchange-reuse race
+      // (round 19, §2.4/§5).
+      val m = scope.checkpoint(
+        df.select(col(basketCol).as("__g"), col(itemCol).as("__i")).distinct())
+      val keptBaskets = m.groupBy("__g").agg(count(lit(1)).as("__n"))
+        .filter(col("__n") <= maxPerBasket)
+        .select("__g")
+      val kept = m.join(keptBaskets, Seq("__g"))
+      val nBaskets = keptBaskets.agg(count(lit(1)).as("n_baskets"))
+      val itemN = kept.groupBy("__i").agg(count(lit(1)).as("__c"))
+      // Apriori prune (result-invariant): a pair's support is bounded by
+      // its rarer item's support, so items under `minPairBaskets` cannot
+      // appear in any reported pair — dropping them BEFORE the self-join
+      // keeps the pair-group cardinality proportional to the frequent
+      // catalog, not the long tail (which at web scale is most of it).
+      val frequent = itemN.filter(col("__c") >= minPairBaskets).select("__i")
+      val keptF = kept.join(frequent, Seq("__i"), "left_semi")
+      val pairs = keptF.select(col("__g"), col("__i").as("item_a"))
+        .join(keptF.select(col("__g"), col("__i").as("item_b")), "__g")
+        .filter(col("item_a") < col("item_b"))
+        .groupBy("item_a", "item_b")
+        .agg(count(lit(1)).as("n_ab"))
+        .filter(col("n_ab") >= minPairBaskets)
+      pairs
+        .join(itemN.select(col("__i").as("item_a"), col("__c").as("n_a")),
+          "item_a")
+        .join(itemN.select(col("__i").as("item_b"), col("__c").as("n_b")),
+          "item_b")
+        .crossJoin(broadcast(nBaskets))
+        .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"),
+          col("n_b"), col("n_baskets"),
+          (col("n_ab").cast("double") / col("n_a")).as("confidence"),
+          (col("n_ab").cast("double") * col("n_baskets") /
+            (col("n_a").cast("double") * col("n_b").cast("double")))
+            .as("lift"))
+    }
   }
 
   /** Reciprocal rank fusion over any number of ranked lists: each list

@@ -2,12 +2,13 @@ package graft.ext
 
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Block-storage release for `localCheckpoint`'d DataFrames, and the one
-  * lifecycle every iterative operator runs its loop in.
+/** The one pin lifecycle: every `localCheckpoint` and `cache` an
+  * operator or query takes runs through a [[Checkpoints.Scope]], which
+  * frees it.
   *
   * `Dataset.unpersist()` goes through the CacheManager, which only knows
   * about `persist()`'d queries — on a checkpointed DataFrame it is a
@@ -15,20 +16,20 @@ import org.apache.spark.storage.StorageLevel
   * after it). The blocks are held by the RDD inside the plan's LogicalRDD
   * leaf, so freeing them means unpersisting THAT RDD.
   *
-  * [[scoped]] owns that bookkeeping for the loops in [[Graph]] and
-  * [[DedupGroups]]. Its guarantee:
-  *  - loop invariants persisted through the scope are unpersisted when
-  *    the scope exits, normally or by an exception;
-  *  - generations checkpointed through the scope are eager
-  *    `localCheckpoint`s, recorded by their RDD;
-  *  - [[Scope.release]] frees a recorded generation as soon as the loop
-  *    rotates past it;
-  *  - on normal exit every recorded generation that is not a leaf of the
-  *    returned frame is released, and on an exception all of them are;
+  * [[scoped]] runs a body inside a scope. Its guarantee:
+  *  - frames cached through the scope are unpersisted when the scope
+  *    exits, normally or by an exception;
+  *  - frames checkpointed through the scope are eager `localCheckpoint`s,
+  *    recorded by their RDD;
+  *  - [[Scope.release]] frees a recorded frame as soon as the body is
+  *    done with it (a loop rotating past a generation);
+  *  - on normal exit a `DataFrame` result keeps the recorded checkpoints
+  *    that are leaves of its plan and every other one is released; any
+  *    other result keeps nothing; on an exception all are released;
   *  - it never releases a frame it did not create: the caller's inputs
   *    stay pinned however they were built.
-  * What the returned frame still pins is the caller's to free, with
-  * [[release]], once consumed.
+  * What a returned frame still pins is the caller's to free, with
+  * [[release]], once consumed; Bench and Verify do so for every query.
   */
 object Checkpoints {
 
@@ -40,33 +41,39 @@ object Checkpoints {
   def release(df: DataFrame): Unit =
     checkpointRdds(df).foreach(_.unpersist(blocking = false))
 
-  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+  /** Each checkpointed RDD under `df` once, however many leaves read it
+    * (q292's union reads one 31 times).
+    */
+  private def checkpointRdds(df: Dataset[_]): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectLeaves().collect {
       case l: LogicalRDD => l.rdd
-    }
+    }.distinct
 
-  /** Run one iterative operator's loop inside a [[Scope]] and return its
-    * result; see the object scaladoc for what the scope releases when.
+  /** Run `body` inside a [[Scope]] and return its result; see the object
+    * scaladoc for what the scope releases when.
     */
-  def scoped(body: Scope => DataFrame): DataFrame = {
+  def scoped[A](body: Scope => A): A = {
     val scope = new Scope
     val out =
       try body(scope)
       catch { case t: Throwable => scope.close(keep = Set.empty); throw t }
-    scope.close(keep = checkpointRdds(out).map(_.id).toSet)
+    scope.close(keep = out match {
+      case ds: Dataset[_] => checkpointRdds(ds).map(_.id).toSet
+      case _ => Set.empty
+    })
     out
   }
 
-  /** The frames one loop pinned: persisted invariants and checkpointed
+  /** The frames one body pinned: cached invariants and checkpointed
     * generations.
     */
   final class Scope private[Checkpoints] () {
     private val invariants = mutable.ArrayBuffer.empty[DataFrame]
     private val generations = mutable.LinkedHashMap.empty[Int, RDD[_]]
 
-    /** `df.persist()`, unpersisted when the scope exits. */
-    def persist(df: DataFrame): DataFrame = {
-      invariants += df.persist()
+    /** `df.cache()`, unpersisted when the scope exits. */
+    def cache(df: DataFrame): DataFrame = {
+      invariants += df.cache()
       df
     }
 
@@ -78,8 +85,8 @@ object Checkpoints {
       record(df.localCheckpoint(true, level))
 
     /** Free what this scope pinned for `df` — an invariant from
-      * [[persist]] or the generation(s) from [[checkpoint]] it reads —
-      * once the loop has rotated past it. Releasing twice, or releasing
+      * [[cache]] or the generation(s) from [[checkpoint]] it reads —
+      * once the body is done with it. Releasing twice, or releasing
       * a frame the scope did not pin, is a no-op.
       */
     def release(df: DataFrame): Unit = {

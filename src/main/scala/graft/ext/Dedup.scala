@@ -577,16 +577,14 @@ object Dedup {
       // checkpoint it so the prefix branch (whose first pass IS this
       // exact census) reuses it instead of re-shingling the corpus
       // (round-19, §1.2; measured ~1.2 s of q118's sf0.1 cost). The
-      // plain branch has no use for it: release immediately.
-      // RETENTION (prefix case): the census checkpoint is a leaf of the
-      // returned plan, released by the caller via Checkpoints.release.
-      val census = censusOf(docs).localCheckpoint()
-      val (pf, rf) = statsOf(census)
-      val usePrefix = pf > 0 && (if (pf == 0) 0.0 else rf / pf) > passBudget
-      if (usePrefix) jaccardPairsPrefixImpl(docs, threshold, n, Some(census))
-      else {
-        Checkpoints.release(census)
-        jaccardPairs(docs, threshold, n)
+      // plain branch has no use for it, so the scope frees it there; in
+      // the prefix case it is a leaf of the returned plan.
+      Checkpoints.scoped { scope =>
+        val census = scope.checkpoint(censusOf(docs))
+        val (pf, rf) = statsOf(census)
+        val usePrefix = pf > 0 && (if (pf == 0) 0.0 else rf / pf) > passBudget
+        if (usePrefix) jaccardPairsPrefixImpl(docs, threshold, n, Some(census))
+        else jaccardPairs(docs, threshold, n)
       }
     }
   }

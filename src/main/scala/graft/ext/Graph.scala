@@ -57,7 +57,7 @@ object Graph {
     */
   private def loopEdges(scope: Checkpoints.Scope,
                         edges: DataFrame): DataFrame =
-    scope.persist(edges.repartition(
+    scope.cache(edges.repartition(
       edges.sparkSession.sessionState.conf.numShufflePartitions, col("src")))
 
   /** Every node of a [[loopEdges]] table, once. Plain distinct:
@@ -78,11 +78,8 @@ object Graph {
     * micro-units starting from 1.0 per node.
     *
     * RETENTION: the returned DataFrame is backed by the final iteration's
-    * `localCheckpoint` — one cached rank table (O(nodes) rows) stays
-    * pinned in storage memory for the rest of the session per call.
-    * `DataFrame.unpersist()` does NOT free it (checkpoint blocks live on
-    * the RDD, not in the CacheManager): long-lived sessions that are done
-    * reading the result must call [[Checkpoints.release]] on it.
+    * checkpoint — one rank table (O(nodes) rows) pinned per call until
+    * the caller frees it ([[Checkpoints]]).
     */
   def pagerankInt(edges: DataFrame, iterations: Int,
                   dampingPct: Int = 85): DataFrame =
@@ -104,9 +101,7 @@ object Graph {
     * partitioning and engine. With every node seeded it is
     * [[pagerankInt]].
     *
-    * RETENTION: as [[pagerankInt]] — the result is backed by the final
-    * iteration's `localCheckpoint`; call [[Checkpoints.release]] when
-    * done.
+    * RETENTION: as [[pagerankInt]].
     */
   def personalizedPagerankInt(edges: DataFrame, seeds: DataFrame,
                               iterations: Int,
@@ -163,20 +158,20 @@ object Graph {
       val all = loopNodes(e)
       val seedTeleport = lit(Scale * (100 - dampingPct) / 100)
       val (nodes, start, teleport) = seeds match {
-        case None => (scope.persist(all), lit(Scale), seedTeleport)
+        case None => (scope.cache(all), lit(Scale), seedTeleport)
         case Some(sd) =>
           val seedSet = sd.select(col(sd.columns.head).as("node"))
             .distinct().withColumn("__seed", lit(true))
           val n = all.join(seedSet, Seq("node"), "left")
             .select(col("node"),
               coalesce(col("__seed"), lit(false)).as("is_seed"))
-          (scope.persist(n),
+          (scope.cache(n),
             when(col("is_seed"), lit(Scale)).otherwise(lit(0L)),
             when(col("is_seed"), seedTeleport).otherwise(lit(0L)))
       }
       // e is hash(src)-partitioned, so this aggregate needs no exchange and
       // its cached output is already laid out for the per-iteration join
-      val outw = scope.persist(e.groupBy(col("src").as("node"))
+      val outw = scope.cache(e.groupBy(col("src").as("node"))
         .agg(outWeight.as("outw")))
       var ranks = nodes.select(col("node"), start.as("rank"))
       for (_ <- 1 to iterations) {
@@ -221,7 +216,7 @@ object Graph {
     * rotated through [[Checkpoints.scoped]] generations.
     *
     * RETENTION: the returned frame is backed by the final round's
-    * checkpoint — call [[Checkpoints.release]] once consumed.
+    * checkpoint, the caller's to free ([[Checkpoints]]).
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
                        rounds: Int): DataFrame = {
@@ -236,7 +231,7 @@ object Graph {
         .select(col(seeds.columns.head).as("node"),
           col(seeds.columns(1)).as("__seed_label"))
         .groupBy("node").agg(min("__seed_label").as("__seed_label"))
-      val nodes = scope.persist(loopNodes(e).join(sd, Seq("node"), "left"))
+      val nodes = scope.cache(loopNodes(e).join(sd, Seq("node"), "left"))
       var cur = nodes.select(col("node"), col("__seed_label").as("label"))
       for (_ <- 1 to rounds) {
         val votes = e
@@ -277,8 +272,8 @@ object Graph {
     * RETENTION: the result is an eager `localCheckpoint` of the final
     * (node, deg) aggregate — O(survivors) rows; all intermediate
     * checkpoints (the 2|E| edge table, survivor sets) are released by
-    * [[Checkpoints.scoped]] before returning. Callers free the result via
-    * [[Checkpoints.release]] once consumed.
+    * [[Checkpoints.scoped]] before returning; the result is the caller's
+    * to free.
     */
   def kcoreRounds(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -386,7 +381,7 @@ object Graph {
     * edges are cleaned first. Returns one row: (n_triangles).
     */
   def triangleCount(edges: DataFrame): DataFrame =
-    closedWedges(edges, checkpoint = false)._1
+    closedWedges(edges, identity)._1
       .agg(count(lit(1)).as("n_triangles"))
 
   /** Per-node local clustering coefficient — [[triangleCount]]'s
@@ -405,32 +400,32 @@ object Graph {
     // construction — for q259 a full co-occurrence expansion. One eager
     // localCheckpoint materializes the distinct edge set once instead of
     // betting each consumer on the exchange-reuse race (§2.4/§5); deg
-    // (O(V)) likewise feeds three joins. RETENTION: both are leaves of
-    // the returned plan, released by the bench via Checkpoints.release.
-    val (closed, deg) = closedWedges(edges, checkpoint = true)
-    val tri = closed.select(col("u").as("node"))
-      .unionAll(closed.select(col("x").as("node")))
-      .unionAll(closed.select(col("y").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("tri"))
-    deg.join(tri, Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("tri"), lit(0L)).as("tri"),
-        when(col("deg") >= 2L,
-          (coalesce(col("tri"), lit(0L)) * 2L).cast("double") /
-            (col("deg") * (col("deg") - 1L)).cast("double")).as("coef"))
+    // (O(V)) likewise feeds three joins. Both are leaves of the result.
+    Checkpoints.scoped { scope =>
+      val (closed, deg) = closedWedges(edges, scope.checkpoint)
+      val tri = closed.select(col("u").as("node"))
+        .unionAll(closed.select(col("x").as("node")))
+        .unionAll(closed.select(col("y").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("tri"))
+      deg.join(tri, Seq("node"), "left")
+        .select(col("node"), col("deg"),
+          coalesce(col("tri"), lit(0L)).as("tri"),
+          when(col("deg") >= 2L,
+            (coalesce(col("tri"), lit(0L)) * 2L).cast("double") /
+              (col("deg") * (col("deg") - 1L)).cast("double")).as("coef"))
+    }
   }
 
   /** The pipeline [[triangleCount]] and [[localClustering]] share: the
     * canonical undirected edge set (a < b, no self-loops, distinct), its
     * per-node degree table (node, deg), and every triangle as one closed
     * wedge (x, y, u) at its lowest-ranked apex u. Returns (closed wedges,
-    * deg). With `checkpoint` the edge set and the degree table are each
-    * eagerly `localCheckpoint`ed, and both stay leaves of the result.
+    * deg). The edge set and the degree table each pass through `pin`
+    * (a scope's checkpoint, or identity), and both stay leaves of the
+    * result.
     */
-  private def closedWedges(edges: DataFrame,
-                           checkpoint: Boolean): (DataFrame, DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
+  private def closedWedges(edges: DataFrame, pin: DataFrame => DataFrame)
+      : (DataFrame, DataFrame) = {
     val canon = pin(edges.select(
       least(col("src"), col("dst")).as("a"),
       greatest(col("src"), col("dst")).as("b"))
@@ -486,8 +481,7 @@ object Graph {
     * part of the answer, so nothing is rotated away mid-loop.
     *
     * RETENTION: the result is backed by ALL generations' checkpoint
-    * blocks (O(V) rows total); call [[Checkpoints.release]] when done
-    * reading it.
+    * blocks (O(V) rows total), the caller's to free ([[Checkpoints]]).
     *
     * `edges` needs (src, dst); `seeds` is one column named `node`.
     * Edges are directed — symmetrize before calling for undirected
@@ -507,7 +501,7 @@ object Graph {
               broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     Checkpoints.scoped { scope =>
-      val e = scope.persist(edges.select("src", "dst"))
+      val e = scope.cache(edges.select("src", "dst"))
       // each GENERATION (nodes first reached at depth d) is checkpointed
       // once and never recomputed; `dist` is their lazy union — O(V) rows
       // of cached blocks total, plan depth bounded by maxDepth
@@ -613,8 +607,7 @@ object Graph {
     * table stays pinned). Frontier forced to the join build side under
     * the same measured-bytes broadcast cutoff as BFS
     * ([[frontierBuild]]: the edge list must always stream). RETENTION:
-    * the result is one checkpointed table; [[Checkpoints.release]] when
-    * done.
+    * the result is one checkpointed table, the caller's to free.
     *
     * `edges` needs (src, dst, w) with LongType `w`; `seeds` is one
     * column `node`. Directed — symmetrize for undirected costs.
@@ -623,7 +616,7 @@ object Graph {
                broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
     require(maxIter >= 0, s"maxIter must be >= 0, got $maxIter")
     Checkpoints.scoped { scope =>
-      val e = scope.persist(edges.select("src", "dst", "w"))
+      val e = scope.cache(edges.select("src", "dst", "w"))
       var dist = scope.checkpoint(seeds.select(col("node")).distinct()
         .withColumn("dist", lit(0L)), SerializedGeneration)
       var frontier = dist

@@ -78,8 +78,8 @@ object KMeans {
     require(iters >= 1 && iters <= 16, s"iters must be in [1, 16], got $iters")
     val spark = emb.sparkSession
     import spark.implicits._
-    val m = micro(emb).localCheckpoint()
-    try {
+    Checkpoints.scoped { scope =>
+      val m = scope.checkpoint(micro(emb))
       // init: the k lowest vec_ids' vectors (a bounded model read)
       var cents: Seq[(Int, Seq[Long])] = m.orderBy("vec_id").limit(k)
         .select(col("m")).as[Seq[Long]].collect().toSeq.zipWithIndex
@@ -104,7 +104,7 @@ object KMeans {
         }
       }
       cents
-    } finally Checkpoints.release(m)
+    }
   }
 
   /** Centroid grid as a DataFrame: (cid, dim, c_micro), dim 1-based. */

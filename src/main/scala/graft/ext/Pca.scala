@@ -44,8 +44,8 @@ object Pca {
     require(iters >= 1 && iters <= 8, s"iters must be in [1, 8], got $iters")
     val spark = emb.sparkSession
     import spark.implicits._
-    val m = KMeans.micro(emb).localCheckpoint()
-    try {
+    Checkpoints.scoped { scope =>
+      val m = scope.checkpoint(KMeans.micro(emb))
       val mu: Seq[Long] = m
         .select(posexplode(col("m")))
         .groupBy((col("pos") + 1).as("dim"))
@@ -78,7 +78,7 @@ object Pca {
         v = z.map(zd => (zd * Scale + mx * Scale) / mx - Scale)
       }
       (mu, v.map(_.toLong))
-    } finally Checkpoints.release(m)
+    }
   }
 
   /** Component table: (dim, mu_micro, v_micro), dim 1-based. */

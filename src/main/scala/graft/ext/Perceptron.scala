@@ -52,8 +52,8 @@ object Perceptron {
       s"epochs must be in [1, 8], got $epochs")
     val spark = emb.sparkSession
     import spark.implicits._
-    val f = features(emb, split).localCheckpoint()
-    try {
+    Checkpoints.scoped { scope =>
+      val f = scope.checkpoint(features(emb, split))
       // Derive the dimension and coordinate range from the DATA (one
       // cheap combinable aggregate on the checkpointed feature table)
       // instead of assuming 64 dims / |x| ≤ 1.3·10⁶: a ragged corpus
@@ -115,7 +115,7 @@ object Perceptron {
         out += ((e, w, miscl))
       }
       out.toSeq
-    } finally Checkpoints.release(f)
+    }
   }
 
   /** Trajectory table: (epoch, dim, w_micro, n_updates) — the weights

@@ -55,17 +55,18 @@ object Pq {
     val vecs = corpus.select(col("embedding").cast("array<double>").as("v"))
     val n = vecs.count()
     val frac = math.min(1.0, maxTrainVectors.toDouble / math.max(n, 1L))
-    val train = (if (frac >= 1.0) vecs
-                 else vecs.sample(withReplacement = false, frac, seed))
-      .cache()
-    val books = (0 until m).map { s =>
-      val slices = train.select(array_to_vector(
-        slice(col("v"), s * sub + 1, sub)).as("features"))
-      new KMeans().setK(k).setSeed(seed + s).setMaxIter(10)
-        .fit(slices).clusterCenters.toSeq.map(_.toArray.toSeq)
+    Checkpoints.scoped { scope =>
+      val train = scope.cache(
+        if (frac >= 1.0) vecs
+        else vecs.sample(withReplacement = false, frac, seed))
+      val books = (0 until m).map { s =>
+        val slices = train.select(array_to_vector(
+          slice(col("v"), s * sub + 1, sub)).as("features"))
+        new KMeans().setK(k).setSeed(seed + s).setMaxIter(10)
+          .fit(slices).clusterCenters.toSeq.map(_.toArray.toSeq)
+      }
+      Model(books, dim)
     }
-    train.unpersist()
-    Model(books, dim)
   }
 
   /** Learn codebooks with a DRIVER-LOCAL deterministic Lloyd solver over

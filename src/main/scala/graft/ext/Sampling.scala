@@ -267,9 +267,10 @@ object Sampling {
       s"steps must be in [1, 64], got $steps")
     val spark = df.sparkSession
     import spark.implicits._
-    val g = df.select(col(sliceCol).cast("string").as("__slice"),
-      col(elemCol).as("__e")).distinct().cache()
-    try {
+    Checkpoints.scoped { scope =>
+      val g = scope.cache(df.select(
+        col(sliceCol).cast("string").as("__slice"),
+        col(elemCol).as("__e")).distinct())
       val picks = scala.collection.mutable.ListBuffer
         .empty[(Long, String, Long, Long)]
       var cum = 0L
@@ -298,6 +299,6 @@ object Sampling {
       }
       spark.createDataset(picks.toSeq)
         .toDF("step", "slice", "gain", "cum_coverage")
-    } finally g.unpersist()
+    }
   }
 }

@@ -1260,32 +1260,29 @@ object Stats {
       (0 until k).map(b => sum(col(s"__c$b")).as(s"__n$b")).head,
       (0 until k).map(b => sum(col(s"__c$b")).as(s"__n$b")).tail: _*)
     val gapped = run.crossJoin(broadcast(tots))
-    // `maxes` is ONE row, but the per-bin output used to reference it
-    // from k-1 union branches — k-1 re-evaluations of the whole
-    // compact -> stitch -> crossJoin -> agg chain (or an exchange-reuse
-    // race). An eager localCheckpoint pins the single row; the union
-    // branches read it from storage (round 19, §2.4/§5). RETENTION:
-    // one 1-row checkpoint, a leaf of the returned plan — released by
-    // the bench via Checkpoints.release.
-    val maxes = gapped.agg(
-      (0 until k).map { b =>
+    Checkpoints.scoped { scope =>
+      // `maxes` is ONE row, but the per-bin output used to reference it
+      // from k-1 union branches — k-1 re-evaluations of the whole
+      // compact -> stitch -> crossJoin -> agg chain (or an exchange-reuse
+      // race). An eager checkpoint pins the single row, a leaf of the
+      // returned plan; the union branches read it from storage (round 19,
+      // §2.4/§5).
+      val gaps = (0 until k).map { b =>
         max(abs(col(s"__r$baselineBin") * col(s"__n$b") -
           col(s"__r$b") * col(s"__n$baselineBin"))).as(s"__g$b")
-      }.head,
-      (0 until k).map { b =>
-        max(abs(col(s"__r$baselineBin") * col(s"__n$b") -
-          col(s"__r$b") * col(s"__n$baselineBin"))).as(s"__g$b")
-      }.tail ++ (0 until k).map(b => max(col(s"__n$b")).as(s"__m$b")): _*)
-      .localCheckpoint()
-    (0 until k).filter(_ != baselineBin).map { b =>
-      maxes.select(lit(b.toLong).as("bin"), col(s"__m$b").as("n"),
-        col(s"__g$b").as("ks_num"),
-        when(col(s"__m$b") > 0L && col(s"__m$baselineBin") > 0L,
-          col(s"__g$b").cast("double") /
-            (col(s"__m$b").cast("double") *
-              col(s"__m$baselineBin").cast("double"))).as("ks"))
-    }.reduce(_ unionByName _)
-      .filter(col("n") > 0L)
+      }
+      val maxes = scope.checkpoint(gapped.agg(gaps.head, gaps.tail ++
+        (0 until k).map(b => max(col(s"__n$b")).as(s"__m$b")): _*))
+      (0 until k).filter(_ != baselineBin).map { b =>
+        maxes.select(lit(b.toLong).as("bin"), col(s"__m$b").as("n"),
+          col(s"__g$b").as("ks_num"),
+          when(col(s"__m$b") > 0L && col(s"__m$baselineBin") > 0L,
+            col(s"__g$b").cast("double") /
+              (col(s"__m$b").cast("double") *
+                col(s"__m$baselineBin").cast("double"))).as("ks"))
+      }.reduce(_ unionByName _)
+        .filter(col("n") > 0L)
+    }
   }
 
   /** Gauss-Jordan inverse with partial pivoting — driver-side, d ≤ a few

@@ -393,20 +393,18 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     // the word-TYPE table is the loop state: vocabulary-sized, so it is
-    // localCheckpoint'd once (k censuses read cached blocks instead of
-    // re-aggregating the corpus k times) and RELEASED before returning —
-    // the returned merge table is driver-built, so nothing downstream
-    // can reach the blocks (the Checkpoints discipline, self-contained)
-    val words = docs
-      .select(explode(wsTokens(col("text"))).as("w"))
-      .filter(col("w").rlike("^[a-z0-9]+$"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(concat(lit("|"),
-        regexp_replace(col("w"), "(.)", "$1|")).as("state"), col("cnt"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long)]
-    try {
+    // checkpointed once (k censuses read cached blocks instead of
+    // re-aggregating the corpus k times); the returned merge table is
+    // driver-built, so the scope frees the blocks on return
+    Checkpoints.scoped { scope =>
+      val words = scope.checkpoint(docs
+        .select(explode(wsTokens(col("text"))).as("w"))
+        .filter(col("w").rlike("^[a-z0-9]+$"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .select(concat(lit("|"),
+          regexp_replace(col("w"), "(.)", "$1|")).as("state"), col("cnt")))
+      val merges = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, String, String, String, Long)]
       var state = words
       var step = 1
       var exhausted = false
@@ -440,9 +438,9 @@ object TextAnalysis {
           step += 1
         }
       }
-    } finally Checkpoints.release(words)
-    require(merges.nonEmpty, "bpeTrain: no mergeable pair in the corpus")
-    merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_n")
+      require(merges.nonEmpty, "bpeTrain: no mergeable pair in the corpus")
+      merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_n")
+    }
   }
 
   /** Apply a learned BPE merge list ([[bpeTrain]]'s output order) to
@@ -1143,16 +1141,15 @@ object TextAnalysis {
     // identical arrays (probed: 0 mismatching rows over the corpus),
     // but the HOF's interpreted per-element dispatch is gone — measured
     // 1.8 s -> 0.4 s for the stage-0 build at sf0.1 (round 19, §1.2).
-    var state = docs
-      .select(bpeNormalize(col("text")).as("n"))
-      .filter(col("n") =!= "")
-      .groupBy("n").agg(count(lit(1)).as("cnt"))
-      .select(expr("slice(split(n, ''), 1, char_length(n))")
-        .as("sy"), col("cnt"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, String, String, String, Long)]
-    try {
+    Checkpoints.scoped { scope =>
+      var state = scope.checkpoint(docs
+        .select(bpeNormalize(col("text")).as("n"))
+        .filter(col("n") =!= "")
+        .groupBy("n").agg(count(lit(1)).as("cnt"))
+        .select(expr("slice(split(n, ''), 1, char_length(n))")
+          .as("sy"), col("cnt")))
+      val merges = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, String, String, String, Long)]
       var stage = 1
       var exhausted = false
       while (stage <= stages && !exhausted) {
@@ -1189,20 +1186,19 @@ object TextAnalysis {
           sel.foreach { case (a, b, c) =>
             merges += ((merges.length + 1L, stage.toLong, a, b, a + b, c))
           }
-          val next = state.select(
+          val next = scope.checkpoint(state.select(
             graft.functions.BpeFunctions
               .bpeApplyMerges(col("sy"), sel.toSeq.map(t => (t._1, t._2)))
-              .as("sy"), col("cnt"))
-            .localCheckpoint()
-          Checkpoints.release(state)
+              .as("sy"), col("cnt")))
+          scope.release(state)
           state = next
           stage += 1
         }
       }
-    } finally Checkpoints.release(state)
-    require(merges.nonEmpty, "bpeTrainBatched: no mergeable pair")
-    merges.toSeq
-      .toDF("rank", "stage", "left_sym", "right_sym", "merged", "pair_n")
+      require(merges.nonEmpty, "bpeTrainBatched: no mergeable pair")
+      merges.toSeq
+        .toDF("rank", "stage", "left_sym", "right_sym", "merged", "pair_n")
+    }
   }
 
   /** Tokenize the corpus under a learned corpus-level vocabulary with

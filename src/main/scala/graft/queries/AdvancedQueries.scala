@@ -13,7 +13,7 @@ import Tables.t
   * "latest prior event" join expressed as a running window maximum
   * (portable to the oracle, and shuffle-free beyond the per-key sort).
   */
-object AdvancedQueries {
+object AdvancedQueries extends QuerySet {
 
   /** events with the nanosecond timestamp read as long and converted. */
   private def events(s: SparkSession, dir: String): DataFrame =

@@ -12,7 +12,7 @@ import Tables.t
   * every value is exact integer-ratio arithmetic — engine-portable without
   * tolerance; a production scorer would wrap `ln()` around the same ratio.
   */
-object BreadthQueries {
+object BreadthQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import Tables.t
   * filtering: n-gram frequency tables, vocabulary statistics, and a
   * user-funnel rollup over the events stream.
   */
-object CorpusQueries {
+object CorpusQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -13,7 +13,7 @@ import OracleSql.tokSql
   * so even the LSH signatures are verified value-for-value in DuckDB, not
   * just row-counted.
   */
-object ExtensionQueries {
+object ExtensionQueries extends QuerySet {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Readers.table(s, dir, "documents")

@@ -17,7 +17,7 @@ import Tables.t
   * total_amount ≅ l_extendedprice), orders feeds the string-cleaning
   * programs, part feeds name normalization and top-k.
   */
-object ParityQueries {
+object ParityQueries extends QuerySet {
 
   /** lineitem mapped to the fct contract (job_title, total_amount). */
   def lineitemFact(s: SparkSession, dir: String): DataFrame =

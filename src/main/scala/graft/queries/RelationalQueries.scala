@@ -21,7 +21,7 @@ import Tables.t
   *  - rollup grouping columns are coalesced to a sentinel so null-ordering
   *    differences between engines cannot affect the compare.
   */
-object RelationalQueries {
+object RelationalQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -14,7 +14,7 @@ import Tables.t
   * columns follow the q110 discipline (exact integer aggregates, or
   * pure selection/one final IEEE formula).
   */
-object Round10Queries {
+object Round10Queries extends QuerySet {
 
   /** q163 posting-list cap. */
   private val PostingsK = 10
@@ -643,7 +643,7 @@ object Round10Queries {
     * mechanism). Shortest-round-trip double literals re-parse to the
     * same IEEE values in DuckDB.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q177_mahalanobis_outliers" -> ((s, dir) => {
       val e = Readers.table(s, dir, "embeddings")
       val (mu, inv) = Stats.mahalanobisModel(e, "vec_id", "embedding",

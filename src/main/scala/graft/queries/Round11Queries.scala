@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Audits, Readers, Warehouse}
-import graft.ext.{Analytics, AsofJoin, GlobalOrder, Graph, IvfIndex, Stats, TextAnalysis}
+import graft.ext.{Analytics, AsofJoin, Checkpoints, GlobalOrder, Graph, IvfIndex, Stats, TextAnalysis}
 import OracleSql.{centsSql, tokSql}
 import Tables.{eventsUs, t}
 
@@ -19,7 +19,7 @@ import Tables.{eventsUs, t}
   * integer aggregates, or one fixed IEEE formula mirrored verbatim in
   * the oracle).
   */
-object Round11Queries {
+object Round11Queries extends QuerySet {
 
   /** q183 BFS depth budget. */
   private val BfsMaxDepth = 3
@@ -217,7 +217,7 @@ object Round11Queries {
     // untouched keys pass through. The oracle rebuilds from the FULL
     // stream, so the gate proves merge ≡ rebuild (the q168 discipline,
     // for Type-2 dimensions).
-    "q188_scd2_merge" -> ((s, dir) => {
+    "q188_scd2_merge" -> ((s, dir) => Checkpoints.scoped { scope =>
       val changes = Readers.eventsNanos(s, dir)
         .select(col("user_id"), expr("ts div 1000").as("ver_us"),
           col("event_type"))
@@ -227,12 +227,10 @@ object Round11Queries {
       // + two joins over the pre-cutoff stream) ran 3x. One eager
       // localCheckpoint materializes it once (round 19, §2.4/§5) —
       // mirroring production, where the standing history IS a stored
-      // table, not a per-query rebuild. RETENTION: a leaf of the
-      // returned plan, released by the bench via Checkpoints.release.
-      val standing = Warehouse.scd2HistoryBig(
+      // table, not a per-query rebuild. A leaf of the returned plan.
+      val standing = scope.checkpoint(Warehouse.scd2HistoryBig(
         changes.filter(col("ver_us") <= Scd2CutoffUs), "user_id", "ver_us",
-        Seq("event_type"))
-        .localCheckpoint()
+        Seq("event_type")))
       Warehouse.scd2Merge(standing,
           changes.filter(col("ver_us") > Scd2CutoffUs), "user_id", "ver_us",
           Seq("event_type"))
@@ -465,30 +463,31 @@ object Round11Queries {
     "q200_streaming_mv_refresh" -> ((s, dir) =>
       StreamingQueries.runEventsStream(s, dir, "q200_events", copies = 3,
           options = Map("maxFilesPerTrigger" -> "1")) { raw =>
-        var standing: Option[DataFrame] = None
-        val q = raw
-          .select(col("event_type"),
-            Stats.cents(col("value")).as("vc"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val partial = batch.groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum("vc").as("vc_sum"))
-            // the fold output is materialized per batch (the input
-            // DataFrame is only valid inside this callback) and the
-            // previous generation's blocks are released — state held
-            // between batches is |event types| rows, nothing more
-            val next = standing
-              .map(st => Warehouse.refreshAdditiveAgg(st, partial,
-                Seq("event_type"), Seq("n", "vc_sum"), Some("n")))
-              .getOrElse(partial)
-              .localCheckpoint()
-            standing.foreach(graft.ext.Checkpoints.release)
-            standing = Some(next)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        standing.get.orderBy("event_type")
+        Checkpoints.scoped { scope =>
+          var standing: Option[DataFrame] = None
+          val q = raw
+            .select(col("event_type"),
+              Stats.cents(col("value")).as("vc"))
+            .writeStream
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val partial = batch.groupBy("event_type")
+                .agg(count(lit(1)).as("n"), sum("vc").as("vc_sum"))
+              // the fold output is materialized per batch (the input
+              // DataFrame is only valid inside this callback) and the
+              // previous generation's blocks are released — state held
+              // between batches is |event types| rows, nothing more
+              val next = scope.checkpoint(standing
+                .map(st => Warehouse.refreshAdditiveAgg(st, partial,
+                  Seq("event_type"), Seq("n", "vc_sum"), Some("n")))
+                .getOrElse(partial))
+              standing.foreach(scope.release)
+              standing = Some(next)
+            }
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          standing.get.orderBy("event_type")
+        }
       }),
 
     // Competing-risk funnel: for every click, the FIRST subsequent
@@ -891,7 +890,7 @@ object Round11Queries {
     * rendered as `'x'::DOUBLE` (string→double parses exactly; bare
     * decimal literals lose ulps through DECIMAL).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q194_label_confusion" -> ((s, dir) => {
       val (labels, cents) = labelCentroids(s, dir)
       val values = cents.zipWithIndex.map { case (c, i) =>

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Audits, Readers}
-import graft.ext.{Graph, Profile, Stats, TimeSeries}
+import graft.ext.{Checkpoints, Graph, Profile, Stats, TimeSeries}
 import OracleSql.centsSql
 import Tables.{eventsUs, t}
 
@@ -13,7 +13,7 @@ import Tables.{eventsUs, t}
   * as a library operator (`ext`/`engine`) and gated here against a DuckDB
   * oracle on the driver's parquet tables.
   */
-object Round12Queries {
+object Round12Queries extends QuerySet {
 
   /** q202 hop budget (q183's depth). */
   private val SsspMaxIter = 3
@@ -118,7 +118,7 @@ object Round12Queries {
     // doubled totals from scratch, so the gate proves restart + resume
     // ≡ batch — the failure-path claim q200's single-lifetime fold
     // can't make.
-    "q208_streaming_durable_mv" -> ((s, dir) => {
+    "q208_streaming_durable_mv" -> ((s, dir) => Checkpoints.scoped { scope =>
       import org.apache.spark.sql.streaming.Trigger
       Readers.enableNanosAsLong(s)
       val streamDir = java.nio.file.Files.createTempDirectory("q208_events")
@@ -155,11 +155,9 @@ object Round12Queries {
         lifetime() // lifetime 1: folds copy1, stops — the restart point
         StreamingQueries.linkTable(streamDir, target, 2)
         lifetime() // lifetime 2: same checkpoint — only copy2 may fold
-        // materialize off the mv directory before cleanup; Bench's
-        // post-measure Checkpoints.release frees the blocks
-        graft.engine.Warehouse.readDurableMv(s, mvDir.toString).get
-          .orderBy("event_type")
-          .localCheckpoint()
+        // materialize off the mv directory before cleanup
+        scope.checkpoint(graft.engine.Warehouse
+          .readDurableMv(s, mvDir.toString).get.orderBy("event_type"))
       } finally { rmTree(streamDir); rmTree(ckDir); rmTree(mvDir) }
     }),
 
@@ -814,7 +812,7 @@ object Round12Queries {
     * new-mean and shift arithmetic mirrors the Spark side's
     * fixed-order formula term by term.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q224_cohens_kappa" -> ((s, dir) => {
       val (labels, cents) = Round11Queries.labelCentroids(s, dir)
       val values = cents.zipWithIndex.map { case (c, i) =>

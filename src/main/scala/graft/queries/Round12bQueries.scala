@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Readers
-import graft.ext.{Dedup, GlobalOrder, Similarity, Stats, TimeSeries}
+import graft.ext.{Checkpoints, Dedup, GlobalOrder, Similarity, Stats, TimeSeries}
 import OracleSql.centsSql
 import Tables.{eventsUs, t}
 
@@ -15,7 +15,7 @@ import Tables.{eventsUs, t}
   * distributed aggregates are int64-exact under any partitioning and
   * the few derived doubles are one fixed IEEE formula on both engines.
   */
-object Round12bQueries {
+object Round12bQueries extends QuerySet {
 
   /** q238 cohort modulus (the q223 user-sharding convention). */
   private val AucCohorts = 8L
@@ -663,21 +663,19 @@ object Round12bQueries {
     // reinforcement rounds in integer micro-units, each sum-normalized
     // by ONE exact integer division (score·10⁶ div total) so every
     // intermediate is int64-exact and engine-identical.
-    "q267_hits" -> ((s, dir) => {
+    "q267_hits" -> ((s, dir) => Checkpoints.scoped { scope =>
       // The distinct edge set feeds THREE consumers (a1 census, h1 join,
       // a2 join); left lazy, each re-derives orders⋈lineitem+distinct
       // (or races for exchange reuse). One eager localCheckpoint
       // materializes it once — §2.4/§5 (don't recompute what you can
       // hold; the pair set is O(customers×suppliers)-bounded, far below
-      // corpus scale). RETENTION: released by the bench via
-      // Checkpoints.release on the returned plan's LogicalRDD leaves.
-      val e = t(s, dir, "orders")
+      // corpus scale). A leaf of the returned plan.
+      val e = scope.checkpoint(t(s, dir, "orders")
         .join(t(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("ck"),
           col("l_suppkey").cast("long").as("sk"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       def normalized(df: DataFrame, key: String, v: String,
                      out: String): DataFrame = {
         val tot = df.agg(sum(col(v)).as("__t"))

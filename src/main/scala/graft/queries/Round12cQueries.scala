@@ -16,7 +16,7 @@ import Tables.eventsUs
   * (int64 aggregates under any partitioning; derived doubles are one
   * fixed IEEE formula on both engines).
   */
-object Round12cQueries {
+object Round12cQueries extends QuerySet {
 
   private val DayUs = 86400000000L
 
@@ -1167,7 +1167,7 @@ object Round12cQueries {
   /** q282's oracle depends on the run-time-learned label centroids —
     * rendered per (session, sfDir) like q215/q224 (the q64 mechanism).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q290_pca_projection" -> ((s, dir) => {
         val (means, vec, eig) = Stats.pcaPowerModel(

@@ -15,7 +15,7 @@ import Tables.t
   * adversarial shape: `substring_dedup_boilerplate`, ratio 0.29
   * (docs/PLANS.md).
   */
-object Round13Queries {
+object Round13Queries extends QuerySet {
 
   /** Window length (tokens) for the exact-substring queries. Lee et al.
     * use 50 BPE tokens on web corpora; the synthetic documents run

@@ -16,7 +16,7 @@ import Tables.t
   * window-free, all integer-exact up to one final IEEE division, all
   * DuckDB-gated.
   */
-object Round13bQueries {
+object Round13bQueries extends QuerySet {
 
   private val SpanL = 8
   private val RrfK = 60

@@ -14,7 +14,7 @@ import Tables.t
   * Heaps-law vocabulary growth census. Window-free, integer-exact,
   * DuckDB-gated.
   */
-object Round13cQueries {
+object Round13cQueries extends QuerySet {
 
   private val SpanL = 8
   private val RefLang = "en"

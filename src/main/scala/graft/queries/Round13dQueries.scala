@@ -14,7 +14,7 @@ import Tables.t
   * keyword extraction on the bounded top-k aggregate. Window-free,
   * integer-exact at every shuffle, DuckDB-gated.
   */
-object Round13dQueries {
+object Round13dQueries extends QuerySet {
 
   private val Chi2Target = "src0"
   private val KeywordK = 10

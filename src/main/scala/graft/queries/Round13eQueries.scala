@@ -18,7 +18,7 @@ import Tables.t
   * rendered into a dynamic oracle whose transition counts are
   * recomputed independently.
   */
-object Round13eQueries {
+object Round13eQueries extends QuerySet {
 
   private val CalBins = 10
   private val EnWords: Seq[String] =
@@ -154,7 +154,7 @@ object Round13eQueries {
     * SQL; the rational-solve π constants (not expressible in SQL) are
     * learned at render time and emitted as literals.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q312_markov_stationary" -> ((s, dir) => {
         val ev = codedEvents(s, dir)

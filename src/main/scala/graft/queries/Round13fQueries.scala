@@ -26,7 +26,7 @@ import Tables.t
   * ([[Round14Queries]] + [[graft.ext.Pq.encodePacked]]), whose recall
   * is gated ≥ 0.7.
   */
-object Round13fQueries {
+object Round13fQueries extends QuerySet {
 
   private val Dim = 8
   private val M = 2
@@ -227,7 +227,7 @@ object Round13fQueries {
                      WHERE c.vec_id <> l0.query_id)"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q315_pq_error" -> ((s, dir) => {
         val model = pqModel(s, dir)

@@ -13,7 +13,7 @@ import Tables.t
   * regression sums are integer-exact; only the solved chain
   * probabilities render into a dynamic oracle.
   */
-object Round13gQueries {
+object Round13gQueries extends QuerySet {
 
   /** hash60('purchase') as a compile-side constant — must equal the
     * engine expression conv(substr(md5(x),1,15),16,10).
@@ -174,7 +174,7 @@ object Round13gQueries {
     * the out_n column — recomputed independently with SQL windows; the
     * rational-solve probabilities render as per-channel literals.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q320_markov_attribution" -> ((s, dir) => {
         val ev = codedEvents(s, dir)

@@ -15,7 +15,7 @@ import OracleSql.centsSql
   * margins and residual quantiles verify in SQL; only the MM-fixed-
   * point scores render into a dynamic oracle.
   */
-object Round13hQueries {
+object Round13hQueries extends QuerySet {
 
   private val DayUs = 86400000000L
   // events span 2024-01-01 (day 19723) .. 2024-01-30 (day 19752);
@@ -112,7 +112,7 @@ object Round13hQueries {
     * SQL (exact cross-multiplied mean compare, ties excluded); the MM
     * strengths render as literals.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q324_bradley_terry" -> ((s, dir) => {
         val scored = queries("q324_bradley_terry")(s, dir)

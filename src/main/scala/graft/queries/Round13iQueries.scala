@@ -13,7 +13,7 @@ import Tables.t
   * allocation (uniform-up-to-availability, the anti-skew counterpart
   * of proportional allocation).
   */
-object Round13iQueries {
+object Round13iQueries extends QuerySet {
 
   private val KSeeds = 4
 
@@ -151,7 +151,7 @@ object Round13iQueries {
     * leftover (a k-element driver computation) render as literals, and
     * the allocation is re-derived in SQL as least(n, level).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q326_waterfill" -> ((s, dir) => {
         val one = queries("q326_waterfill")(s, dir)

@@ -13,7 +13,7 @@ import Tables.t
   * mining over the labeled embedding space (nearest DIFFERENT-label
   * neighbors — the contrastive-training pair generator).
   */
-object Round13jQueries {
+object Round13jQueries extends QuerySet {
 
   private val QualityCuts = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
   private val HnQueries = 5

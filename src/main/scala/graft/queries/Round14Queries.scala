@@ -21,7 +21,7 @@ import Tables.t
   * drops below 0.7, so a regression in training, encoding, or the ADC
   * scan turns the round red instead of silently degrading quality.
   */
-object Round14Queries {
+object Round14Queries extends QuerySet {
 
   /** Bounded documents-stream harness — [[StreamingQueries
     * .runEventsStream]]'s symlink-scratch-dir pattern over
@@ -773,7 +773,7 @@ object Round14Queries {
         FROM rec ORDER BY query_id"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q330_pq_hi_recall" -> ((s, dir) =>
         recallSql(packedSql(hiModel(s, dir)), Some(RecallFloor))),

@@ -39,7 +39,7 @@ import Tables.t
   *    result-invisible when models match; the mismatch arm is pinned by
   *    Round15Suite).
   */
-object Round15Queries {
+object Round15Queries extends QuerySet {
 
   /** ≤ 32-byte config: m=32 subspaces × 8-bit codes (k=256) over the
     * raw coordinate order — the sweep's capacity-beats-permutation
@@ -379,7 +379,7 @@ object Round15Queries {
           FROM g GROUP BY 1 ORDER BY cnt"""
     })
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] =
     Map(
       "q345_pq32_adc" -> ((s, dir) =>
         Round14Queries.adcTopkSql(pq32Model(s, dir), Round14Queries.AdcK)),

@@ -27,7 +27,7 @@ import Tables.t
   *  - q369/q370: hash-derived ±1 random projection with the JL
   *    estimator's quality measured exactly.
   */
-object Round15bQueries {
+object Round15bQueries extends QuerySet {
 
   private val K = 4
   private val Iters = 3

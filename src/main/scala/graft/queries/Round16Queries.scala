@@ -19,7 +19,7 @@ import Tables.t
   * [[graft.ext.Mixture.temperatureAllocation]] / [[graft.ext.Mixture.isqrt]],
   * [[graft.ext.LangModel.knDocScoreBits]].
   */
-object Round16Queries {
+object Round16Queries extends QuerySet {
 
   /** Window length for the span rewrite — q295's SpanL (8 whitespace
     * tokens: long enough that chance collisions are nil at every SF,

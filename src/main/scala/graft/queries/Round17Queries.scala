@@ -11,7 +11,7 @@ import Tables.t
   * q376 emits the tokenized result). Library operator:
   * [[graft.ext.TextAnalysis.bpeEncode]].
   */
-object Round17Queries {
+object Round17Queries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

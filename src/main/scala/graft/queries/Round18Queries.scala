@@ -21,7 +21,7 @@ import Tables.t
   * batch hazard, rank tie-break, or merge pass on either engine
   * hash-fails.
   */
-object Round18Queries {
+object Round18Queries extends QuerySet {
 
   /** Contract constants: 12 stages x up to 32 merges over the top-512
     * candidate pairs per census — >= 256 learned merges at every SF

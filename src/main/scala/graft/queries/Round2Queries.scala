@@ -14,7 +14,7 @@ import Tables.t
   * batch sessionization oracle, CUBE, correlated EXISTS, lateral token
   * positions, and a polynomial rolling-hash fingerprint.
   */
-object Round2Queries {
+object Round2Queries extends QuerySet {
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Readers.eventsNanos(s, dir)
@@ -304,7 +304,7 @@ object Round2Queries {
   /** Oracles that depend on run-time-learned parameters: generated per
     * (session, sfDir) at Verify dump time.
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q64_ann_ivf" -> ((s, dir) => ivfOracle(ivfCentroids(s, dir), k = 5, nProbe = 4)))
 
   private def hash30Sql(e: String): String =

@@ -11,7 +11,7 @@ import Tables.t
   * embed/resize/frame-sample paths (stub-codec outputs are md5-derived,
   * hence SQL-expressible value checks, like q67's decode).
   */
-object Round4Queries {
+object Round4Queries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -188,7 +188,7 @@ object Round4Queries {
   /** Oracles that depend on run-time-learned parameters (q72 shares q64's
     * trained-centroid oracle generator).
     */
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q72_ann_ivf_matrix" -> ((s, dir) =>
       Round2Queries.ivfOracle(Round2Queries.ivfCentroids(s, dir),
         k = 5, nProbe = 4)))

@@ -14,7 +14,7 @@ import Tables.t
   * scoring, quality-weighted sampling, and the JSONL + JSON-column source
   * paths. Every entry is hash-checked against a DuckDB oracle.
   */
-object Round5Queries {
+object Round5Queries extends QuerySet {
 
   /** Chunk size for q78 — small enough that sf0.01 docs span chunk
     * boundaries both ways (many docs per chunk AND docs crossing chunks).

@@ -17,7 +17,7 @@ import Tables.t
   * hash-checked against a DuckDB oracle; q99's oracle is generated from
   * the run's trained centroids (the q64 pattern).
   */
-object Round6Queries {
+object Round6Queries extends QuerySet {
 
   /** q93 params: prefix-4 blocking keeps candidate pairs ~1k at sf0.01
     * (vs 125k all-pairs); distance over the first 60 chars at maxDist 35
@@ -444,7 +444,7 @@ object Round6Queries {
         ORDER BY a.vec_id"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q99_semdedup" -> ((s, dir) =>
       semOracle(Round2Queries.ivfCentroids(s, dir), SemThreshold)))
 }

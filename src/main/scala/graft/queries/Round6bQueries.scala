@@ -15,7 +15,7 @@ import Tables.t
   * (·, /, integer-grid percentile midpoints), never libm calls, so they
   * are bit-identical across engines.
   */
-object Round6bQueries {
+object Round6bQueries extends QuerySet {
 
   /** q110: a bigram must occur this often to be a collocation candidate. */
   private val PmiMinCount = 20L

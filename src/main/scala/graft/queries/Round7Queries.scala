@@ -17,7 +17,7 @@ import Tables.t
   * hash-compared, sketch outputs asserted within documented bounds via
   * TRUE flags, the q69/q107 pattern).
   */
-object Round7Queries {
+object Round7Queries extends QuerySet {
 
   /** q115 params: prefix-1 blocking makes blocks big enough that at
     * sf0.01 exactly one (lang, prefix) block exceeds the cap (38 docs vs
@@ -539,7 +539,7 @@ object Round7Queries {
         WHERE r.rnk = 1 ORDER BY cell"""
   }
 
-  val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
+  override val dynamicOracleSql: Map[String, (SparkSession, String) => String] = Map(
     "q129_cell_representatives" -> ((s, dir) =>
       cellRepOracle(Round2Queries.ivfCentroids(s, dir))))
 }

@@ -13,7 +13,7 @@ import Tables.t
   * functions (log) are deliberately absent because they are not
   * bit-reproducible across engines.
   */
-object Round8Queries {
+object Round8Queries extends QuerySet {
 
   /** q130 query terms: mid-frequency corpus vocabulary, so tf/df vary
     * across documents and all BM25 factors are exercised.

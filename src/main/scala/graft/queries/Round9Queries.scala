@@ -11,7 +11,7 @@ import Tables.t
   * operators. Floats in compared columns follow the q110 discipline
   * (exact integer aggregates only).
   */
-object Round9Queries {
+object Round9Queries extends QuerySet {
 
   /** events with the nanosecond timestamp read as long and converted
     * (the q38 recipe — Spark cannot scan TIMESTAMP(NANOS) directly).

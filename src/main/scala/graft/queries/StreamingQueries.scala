@@ -13,7 +13,7 @@ import graft.streaming.EventStream
   * claim a streaming operator can make: identical answers to the batch
   * semantics, not just "rows came out".
   */
-object StreamingQueries {
+object StreamingQueries extends QuerySet {
 
   /** The stream's declared schema must match the parquet's PHYSICAL ts
     * type (a file stream source does no implicit cast), and events has

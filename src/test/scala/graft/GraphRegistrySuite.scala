@@ -3,9 +3,10 @@ package graft
 import scala.util.hashing.MurmurHash3
 import graft.ext.Checkpoints
 
-/** Tier-1 slice of the query registry: the graph queries and the
-  * connected-component queries, run through [[SparkEntry.queries]] at
-  * sf0.001 on the shared test session. Each query must give the same
+/** Tier-1 slice of the query registry: the graph queries, the
+  * connected-component queries and the other queries that pin through
+  * [[Checkpoints.scoped]], run through [[SparkEntry.queries]] at sf0.001
+  * on the shared test session. Each query must give the same
   * order-insensitive row hash on two runs, and once its frames are passed
   * to `Checkpoints.release` (the Bench path) it must leave no persistent
   * RDD and no cached relation behind.
@@ -27,6 +28,21 @@ class GraphRegistrySuite extends SparkSpec {
     "q212_entity_resolution", "q293_dedup_cluster_census",
     "q367_winnow_components")
 
+  /** Queries that reach a scoped pin outside the graph and CC loops: a
+    * query-level checkpoint (q188, q200, q208, q267) or an operator's
+    * (the q118 census, basketLift, ksDriftBins, trainCodebooks,
+    * greedyCoverage, bpeTrain, KMeans.lloyd, Pca, Perceptron,
+    * bpeTrainBatched).
+    */
+  private val scopedPinQueries = Seq("q118_jaccard_prefix",
+    "q188_scd2_merge", "q190_basket_lift", "q200_streaming_mv_refresh",
+    "q208_streaming_durable_mv", "q267_hits", "q292_ks_drift",
+    "q315_pq_error", "q317_greedy_coverage", "q354_bpe_train",
+    "q356_kmeans_centroids", "q361_pca_component", "q364_perceptron_train",
+    "q378_bpe_train_batched")
+
+  private val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** One run: collect, release, and hash the rows in any order. */
   private def runOnce(name: String): Int = {
     val df = SparkEntry.queries(name)(spark, sfDir)
@@ -35,26 +51,28 @@ class GraphRegistrySuite extends SparkSpec {
     MurmurHash3.unorderedHash(rows.map(_.toString))
   }
 
-  /** Relations in the CacheManager (`numCachedEntries` is `private[sql]`
-    * in Scala but public in the bytecode).
-    */
-  private def cachedEntries: Int = {
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
-  }
-
   for ((group, names) <- Seq("graph" -> graphQueries,
-      "connected-component" -> componentQueries); name <- names)
+      "connected-component" -> componentQueries,
+      "scoped-pin" -> scopedPinQueries); name <- names)
     describe(s"registry $group query $name") {
       it("is deterministic and releases everything it pins") {
-        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-        val cachedBefore = cachedEntries
-        val first = runOnce(name)
-        assert(runOnce(name) == first, "two runs hashed differently")
-        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
-        assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
-        assert(cachedEntries == cachedBefore, "cached relations left behind")
+        // the events readers turn nanosAsLong on for the session; put it
+        // back so later suites see the session as they left it
+        val nanos = spark.conf.getOption(nanosConf)
+        try {
+          val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+          val cachedBefore = cachedEntries
+          val first = runOnce(name)
+          assert(runOnce(name) == first, "two runs hashed differently")
+          val leaked =
+            spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+          assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+          assert(cachedEntries == cachedBefore,
+            "cached relations left behind")
+        } finally nanos match {
+          case Some(v) => spark.conf.set(nanosConf, v)
+          case None => spark.conf.unset(nanosConf)
+        }
       }
     }
 }

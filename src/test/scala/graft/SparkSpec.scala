@@ -43,6 +43,15 @@ trait SparkSpec extends AnyFunSpec with BeforeAndAfterAll {
     jobs.get()
   }
 
+  /** Relations in the CacheManager (`numCachedEntries` is `private[sql]`
+    * in Scala but public in the bytecode).
+    */
+  def cachedEntries: Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
   override def afterAll(): Unit =
     try super.afterAll()
     finally tempDirs.forEach(d => Pipeline.deleteRecursively(d))

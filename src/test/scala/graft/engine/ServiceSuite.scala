@@ -23,6 +23,11 @@ class ServiceSuite extends SparkSpec {
 
   private def svc = new GraftService(SparkSpec.session, storage, users, frozen)
 
+  /** The corporate CSV header (FIXTURES.md A1). */
+  private val header = "Row ID,Year,Department Title,Job Class Title," +
+    "Employment Type,Base Pay,Overtime Pay,Longevity Bonus Pay," +
+    "Average Benefit Cost"
+
   private def writeCsv(name: String, content: String) = {
     val p = storage.resolve(name)
     Files.write(p, content.stripMargin.getBytes("UTF-8"))
@@ -224,14 +229,13 @@ class ServiceSuite extends SparkSpec {
       // uniform auth failure over the wire
       val bad = conn("/files", "GET", auth = ("LA", "wrong"))
       assert(bad.getResponseCode == 401)
-      val missing = conn("/files/nope.csv/report", "GET")
-      assert(missing.getResponseCode == 500 || missing.getResponseCode == 400)
+      // a file never uploaded is not found, for a report and an export
+      assert(conn("/files/nope.csv/report", "GET").getResponseCode == 404)
+      assert(conn("/files/nope.csv/export", "GET").getResponseCode == 404)
     } finally http.stop()
   }
 
   it("reports on the new fct after an overwrite upload of the same filename") {
-    val header = "Row ID,Year,Department Title,Job Class Title,Employment " +
-      "Type,Base Pay,Overtime Pay,Longevity Bonus Pay,Average Benefit Cost"
     def upload(src: String, rows: Seq[(String, Int)]): Unit = {
       val body = rows.zipWithIndex.map { case ((title, pay), i) =>
         s"${i + 1},2013,D,$title,FT,$$$pay.00,,,"
@@ -274,12 +278,20 @@ class ServiceSuite extends SparkSpec {
     val logger = LogManager.getLogger(classOf[GraftHttpServer])
       .asInstanceOf[Logger]
     logger.addAppender(capture)
+    // an uploaded fct whose parquet files were truncated on disk: the
+    // read fails inside Spark, an error no route maps to a status
+    svc.upload("LA", "p1", "corporate_broken.csv", writeCsv("broken.csv",
+      s"$header\n1,2013,D,A,FT,$$100.00,,,\n"))
+    val fct = Tenancy.cleanDir(storage, users.find(_.clientId == "LA").get,
+      "corporate_broken.csv").resolve("corporate.fct_corporate")
+    val parts = Files.list(fct)
+    try parts.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .foreach(p => Files.write(p, Files.readAllBytes(p).take(16)))
+    finally parts.close()
     val http = new GraftHttpServer(svc)
     val port = http.start()
     try {
-      // a report on a file never uploaded: the read of its missing fct
-      // fails inside Spark, an error no route maps to a status
-      val c = new URI(s"http://127.0.0.1:$port/files/never_uploaded.csv/report")
+      val c = new URI(s"http://127.0.0.1:$port/files/corporate_broken.csv/report")
         .toURL.openConnection().asInstanceOf[HttpURLConnection]
       c.setRequestProperty("X-Graft-Client", "LA")
       c.setRequestProperty("X-Graft-Password", "p1")
