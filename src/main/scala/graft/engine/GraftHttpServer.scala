@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.InetSocketAddress
 import java.util.concurrent.Executors
 
@@ -22,17 +21,24 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * the credentials the reference's middleware checks):
   *
   *  - `PUT  /files/{filename}`         do_put: body = framed Arrow batches
-  *  - `GET  /files/{filename}/report`  do_get get_budget_report
+  *  - `GET  /files/{filename}/report`  do_get get_budget_report — the
+  *    report the upload's build stored beside its fct, streamed with no
+  *    Spark job ([[GraftService.budgetReportArrow]]; computed only for a
+  *    warehouse built before reports were stored)
   *  - `GET  /files/{filename}/export`  do_get get_full_clean — STREAMED
   *    via [[ArrowBridge.toArrowBatchIterator]], so a full export never
   *    materializes on the driver (chunked transfer encoding)
   *  - `GET  /files`                    do_action list_files (text listing)
   *
-  * Framing: each Arrow IPC batch (schema embedded) is preceded by its
-  * 4-byte big-endian length; the stream ends at EOF. Auth failures map to
-  * 401 with the service's uniform AUTHENTICATION_FAILED (no client-id
-  * enumeration), a report or export of a file never uploaded to 404,
-  * other rejections to 400, unexpected errors to 500. A 500
+  * Framing ([[ArrowBridge.writeFramed]]): each Arrow IPC batch (schema
+  * embedded) is preceded by its 4-byte big-endian length; the stream ends
+  * at EOF. An upload body is capped at [[GraftHttpServer.MaxBodyBytes]]
+  * (1 GiB, frame headers included): a declared `Content-Length` past the
+  * cap is answered 413 PAYLOAD_TOO_LARGE before the body is read, and so
+  * is a frame that would take the running total past it. Auth failures
+  * map to 401 with the service's uniform AUTHENTICATION_FAILED (no
+  * client-id enumeration), a report or export of a file never uploaded to
+  * 404, other rejections to 400, unexpected errors to 500. A 500
   * body is `INTERNAL_ERROR <id>`; the same id heads the error's log line,
   * which carries the stack trace, so a caller's report finds the cause.
   */
@@ -58,6 +64,9 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
       case e: IllegalArgumentException
           if e.getMessage == "AUTHENTICATION_FAILED" =>
         respondText(ex, 401, "AUTHENTICATION_FAILED")
+      case e: IllegalArgumentException
+          if e.getMessage == "PAYLOAD_TOO_LARGE" =>
+        respondText(ex, 413, "PAYLOAD_TOO_LARGE")
       case e: IllegalArgumentException =>
         respondText(ex, 400, String.valueOf(e.getMessage))
       case e: NoSuchElementException if e.getMessage == "NOT_FOUND" =>
@@ -96,21 +105,10 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
   }
 
   private def readFrames(ex: HttpExchange): Array[Array[Byte]] = {
-    val in = new DataInputStream(ex.getRequestBody)
-    val out = Array.newBuilder[Array[Byte]]
-    var done = false
-    while (!done) {
-      val len =
-        try in.readInt()
-        catch { case _: EOFException => done = true; -1 }
-      if (!done) {
-        require(len >= 0 && len <= (1 << 30), s"bad frame length $len")
-        val buf = new Array[Byte](len)
-        in.readFully(buf)
-        out += buf
-      }
-    }
-    out.result()
+    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+    if (declared.exists(_.trim.toLong > GraftHttpServer.MaxBodyBytes))
+      throw new IllegalArgumentException("PAYLOAD_TOO_LARGE")
+    ArrowBridge.readFramed(ex.getRequestBody, GraftHttpServer.MaxBodyBytes)
   }
 
   /** Chunked response: batches are written (and for the export, PULLED
@@ -120,8 +118,8 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
                             batches: Iterator[Array[Byte]]): Unit = {
     ex.getResponseHeaders.set("Content-Type", "application/x-graft-arrow")
     ex.sendResponseHeaders(200, 0) // length 0 => chunked
-    val out = new DataOutputStream(ex.getResponseBody)
-    try batches.foreach { b => out.writeInt(b.length); out.write(b) }
+    val out = ex.getResponseBody
+    try ArrowBridge.writeFramed(out, batches)
     finally out.close()
   }
 
@@ -134,4 +132,10 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
     try out.write(bytes)
     finally out.close()
   }
+}
+
+object GraftHttpServer {
+
+  /** Upload body cap in bytes, frame headers included (1 GiB). */
+  val MaxBodyBytes: Long = 1L << 30
 }

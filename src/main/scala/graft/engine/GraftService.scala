@@ -1,8 +1,9 @@
 package graft.engine
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, NoSuchFileException, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
+import org.apache.spark.sql.graftshim.ArrowBridge
 import scala.jdk.CollectionConverters._
 
 /** The reference's four service entry points (SURVEY.md §3) as a library
@@ -12,9 +13,17 @@ import scala.jdk.CollectionConverters._
   * boundaries efficiently via Spark's own Arrow paths when needed.
   *
   *  - do_put (upload+transform)        -> [[upload]]
-  *  - do_get get_budget_report         -> [[budgetReport]]
+  *  - do_get get_budget_report         -> [[budgetReport]] (DataFrame) /
+  *                                        [[budgetReportArrow]] (the bytes
+  *                                        the build stored)
   *  - do_get get_full_clean            -> [[fullExport]]
   *  - do_action list_files             -> [[listFiles]]
+  *
+  * Each upload's build stores its budget report beside the fct
+  * ([[Pipeline.BudgetReportFile]]), and both go live in one rename, so
+  * [[budgetReportArrow]] reads one build's whole report and runs no Spark
+  * job. The reference re-queries its DuckDB file on every do_get; only
+  * the result is the contract, and it is a pure function of the build.
   */
 final class GraftService(spark: SparkSession, storageBase: Path,
                          users: Seq[Tenancy.Tenant],
@@ -33,10 +42,8 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     * name has been built.
     */
   private def fctOf(tenant: Tenancy.Tenant, filename: String): DataFrame = {
-    // contract table name is a pure function of the industry (M-contract,
-    // `serve_flight.py:285-286`)
     val fct = Tenancy.cleanDir(storageBase, tenant, filename)
-      .resolve(s"${tenant.industryType}.fct_${tenant.industryType}")
+      .resolve(Pipeline.fctModel(tenant.industryType))
     if (!Files.exists(fct)) throw new NoSuchElementException("NOT_FOUND")
     Readers.parquet(spark, fct.toString)
   }
@@ -106,11 +113,30 @@ final class GraftService(spark: SparkSession, storageBase: Path,
 
   /** S7 — Arrow result stream: the budget report as Arrow IPC batches
     * (the reference's do_get wire format, `serve_flight.py:301,330`).
+    * Authenticates, then reads the report the build stored; only a
+    * warehouse with no stored report (built before reports were stored)
+    * computes it, and a filename never uploaded is NOT_FOUND. A stored
+    * report whose frames do not fit its file is an IllegalStateException.
     */
   def budgetReportArrow(clientId: String, password: String,
-                        filename: String): Array[Array[Byte]] =
-    org.apache.spark.sql.graftshim.ArrowBridge
-      .toArrowBatches(budgetReport(clientId, password, filename))
+                        filename: String): Array[Array[Byte]] = {
+    val tenant = auth(clientId, password)
+    val stored = Tenancy.cleanDir(storageBase, tenant, filename)
+      .resolve(Pipeline.BudgetReportFile)
+    // one open: a swap after it cannot mix two builds into the answer
+    val bytes =
+      try Some(Files.readAllBytes(stored))
+      catch { case _: NoSuchFileException => None }
+    bytes.fold(Reports.budgetReportArrow(fctOf(tenant, filename))) { b =>
+      // the build wrote these frames: one that does not fit the file is
+      // damage on disk, a server fault (500), not a client error
+      try ArrowBridge.readFramed(new java.io.ByteArrayInputStream(b), b.length)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalStateException(s"damaged stored report: $stored", e)
+      }
+    }
+  }
 
   /** List a tenant's raw uploads and built warehouses, sorted
     * (`serve_flight.py:337-363`, S11).

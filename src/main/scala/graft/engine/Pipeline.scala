@@ -1,9 +1,10 @@
 package graft.engine
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
+import org.apache.spark.sql.graftshim.ArrowBridge
 import graft.engine.models.{Corporate, Education, Hospital}
 
 /** Model DAG + materialization (SURVEY.md §2.12 M1-M8), re-created
@@ -72,6 +73,18 @@ object Pipeline {
     }
   }
 
+  /** The contract fact table's model name for an industry: a pure
+    * function of the industry (M-contract, `serve_flight.py:285-286`).
+    */
+  def fctModel(industry: String): String = s"$industry.fct_$industry"
+
+  /** The budget report of a warehouse's fct, framed Arrow IPC batches
+    * ([[ArrowBridge.writeFramed]]) at the warehouse root. Underscore-
+    * prefixed like `_fingerprint`, so Spark's file discovery and
+    * `listFiles` both skip it.
+    */
+  val BudgetReportFile = "_budget_report.arrow"
+
   /** Topological order of a model selection (M3 — selective plan). */
   def topoOrder(models: Seq[ModelSpec]): Seq[ModelSpec] = {
     val byName = models.map(m => m.name -> m).toMap
@@ -121,6 +134,15 @@ object Pipeline {
         // audits run on the written data, inside the build — a failing
         // audit aborts BEFORE the swap, so it can never go live
         Audits.enforce(table, m.audits)
+        // the report is a function of the audited fct alone: computed once
+        // here, it goes live in the same rename as the fct it was read from
+        if (m.name == fctModel(m.name.takeWhile(_ != '.'))) {
+          val out = new java.io.BufferedOutputStream(
+            Files.newOutputStream(tmp.resolve(BudgetReportFile)))
+          try ArrowBridge.writeFramed(out,
+            Reports.budgetReportArrow(table).iterator)
+          finally out.close()
+        }
         built += m.name -> table
       }
       val hadOld = Files.exists(warehouse)
@@ -144,14 +166,15 @@ object Pipeline {
     }
   }
 
-  /** Delete crashed builds' scratch dirs (`.{name}.tmp-*` / `.{name}.old-*`)
-    * for this warehouse. Age-gated so a CONCURRENT healthy build's scratch
-    * (which exists only for seconds) is never swept mid-swap.
+  /** Delete crashed writes' scratch (`.{name}.tmp-*` / `.{name}.old-*`)
+    * beside `target`: a warehouse's build dirs, a raw archive's copies.
+    * Age-gated so a CONCURRENT healthy write's scratch (which exists only
+    * for seconds) is never swept mid-swap.
     */
-  private def sweepStaleScratch(warehouse: Path,
+  private def sweepStaleScratch(target: Path,
                                 olderThanMs: Long = 60 * 60 * 1000L): Unit = {
-    val parent = warehouse.getParent
-    val name = warehouse.getFileName.toString
+    val parent = target.getParent
+    val name = target.getFileName.toString
     if (parent == null || !Files.isDirectory(parent)) return
     val cutoff = System.currentTimeMillis() - olderThanMs
     val ls = Files.list(parent)
@@ -170,7 +193,11 @@ object Pipeline {
   /** Entry point 1 (SURVEY.md §3.1) — upload + transform, end to end:
     * authenticate, validate the filename gate, copy the CSV into the Raw
     * zone, run the industry's stg+fct models FULL into the per-upload
-    * warehouse. Returns the built tables keyed by model name.
+    * warehouse. Returns the built tables keyed by model name. The raw copy
+    * is written to a dot-prefixed sibling and renamed over the archive, so
+    * a listing or a crash never sees a torn archive; a copy a crash left
+    * behind is swept by a later upload of the same name, as a crashed
+    * build's scratch is.
     */
   def ingest(spark: SparkSession, storageBase: Path,
              users: Seq[Tenancy.Tenant], clientId: String, password: String,
@@ -183,9 +210,15 @@ object Pipeline {
     Tenancy.validateFilename(tenant, filename)
       .fold(e => throw new IllegalArgumentException(e), identity)
     Tenancy.provisionStorage(storageBase, Seq(tenant))
-    val raw = Tenancy.rawPath(storageBase, tenant, filename)
-    Files.copy(sourceCsv, raw,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING) // S5 raw backup
+    val raw = Tenancy.rawPath(storageBase, tenant, filename) // S5 raw backup
+    sweepStaleScratch(raw) // copies a crash left between copy and rename
+    val part = raw.resolveSibling(
+      s".$filename.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    try {
+      Files.copy(sourceCsv, part)
+      Files.move(part, raw,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(part)
     val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
     materialize(spark,
       industryModels(tenant.industryType, raw.toString, now, audits),

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, DataInputStream, DataOutputStream,
+  EOFException, InputStream, OutputStream}
 import java.nio.channels.Channels
 
 import org.apache.arrow.vector.ipc.ReadChannel
@@ -84,5 +85,43 @@ object ArrowBridge {
         ArrowConverters.fromBatchWithSchemaIterator(it, TaskContext.get())._1
       }
     cs.internalCreateDataFrame(rdd, schema, isStreaming = false)
+  }
+
+  /** Framed form of a batch sequence, as the HTTP binding carries it and
+    * a build stores its budget report: each batch preceded by its 4-byte
+    * big-endian length, the sequence ending at EOF. Flushes, does not
+    * close `out`.
+    */
+  def writeFramed(out: OutputStream, batches: Iterator[Array[Byte]]): Unit = {
+    val d = new DataOutputStream(out)
+    batches.foreach { b => d.writeInt(b.length); d.write(b) }
+    d.flush()
+  }
+
+  /** Reads [[writeFramed]]'s form to EOF. A frame whose 4-byte header and
+    * body would take the running total past `maxBytes` is rejected with
+    * `PAYLOAD_TOO_LARGE` before its body is allocated; a negative length
+    * with `bad frame length`.
+    */
+  def readFramed(in: InputStream, maxBytes: Long): Array[Array[Byte]] = {
+    val d = new DataInputStream(in)
+    val out = Array.newBuilder[Array[Byte]]
+    var total = 0L
+    var done = false
+    while (!done) {
+      val len =
+        try d.readInt()
+        catch { case _: EOFException => done = true; -1 }
+      if (!done) {
+        require(len >= 0, s"bad frame length $len")
+        total += 4L + len
+        if (total > maxBytes)
+          throw new IllegalArgumentException("PAYLOAD_TOO_LARGE")
+        val buf = new Array[Byte](len)
+        d.readFully(buf)
+        out += buf
+      }
+    }
+    out.result()
   }
 }

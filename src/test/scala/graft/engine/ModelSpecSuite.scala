@@ -135,6 +135,14 @@ class ModelSpecSuite extends SparkSpec {
       assert(r.head.getAs[Long]("total_employee") == 1L)
       assert(r(1).getAs[Double]("total_budget") == 150.0)
     }
+    it("budget report breaks tied totals by job_title, nulls last") {
+      val tied = Seq(("C", 60.0), (null, 100.0), ("B", 100.0), ("A", 40.0),
+        ("C", 40.0), ("A", 60.0), ("D", 500.0)).toDF("job_title", "total_amount")
+        .repartition(4)
+      val r = Reports.budgetReport(tied).collect()
+      assert(r.map(_.getAs[String]("job_title")).toSeq ==
+        Seq("D", "A", "B", "C", null))
+    }
     it("full export sorts nulls last (DuckDB parity)") {
       val r = Reports.fullExport(fct).select("job_title").collect()
       assert(r.last.isNullAt(0))

@@ -2,6 +2,7 @@ package graft.engine
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.ArrowBridge
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
@@ -33,6 +34,45 @@ class ServiceSuite extends SparkSpec {
     Files.write(p, content.stripMargin.getBytes("UTF-8"))
     p
   }
+
+  private val la = users.find(_.clientId == "LA").get
+
+  /** Corporate upload rows (job title, base pay in dollars) as the CSV a
+    * tenant sends, and as the Arrow batches of the same cells.
+    */
+  private def corporateCsv(name: String, rows: Seq[(String, Int)]) =
+    writeCsv(name, (header +: rows.zipWithIndex.map { case ((title, pay), i) =>
+      s"${i + 1},2013,D,$title,FT,$$$pay.00,,,"
+    }).mkString("", "\n", "\n"))
+
+  private def corporateArrow(rows: Seq[(String, Int)]): Array[Array[Byte]] = {
+    import spark.implicits._
+    ArrowBridge.toArrowBatches(rows.zipWithIndex.map { case ((title, pay), i) =>
+      (s"${i + 1}", "2013", "D", title, "FT", s"$$$pay.00", "", "", "")
+    }.toDF(header.split(","): _*))
+  }
+
+  /** An fct audit every row violates: the build aborts before its swap. */
+  private val failingFctAudit = Map("corporate.fct_corporate" ->
+    Seq(Audits.Expression("never", lit(false))))
+
+  private def warehouse(filename: String) =
+    Tenancy.cleanDir(storage, la, filename)
+
+  private def storedReport(filename: String): Array[Array[Byte]] = {
+    val bytes = Files.readAllBytes(
+      warehouse(filename).resolve(Pipeline.BudgetReportFile))
+    ArrowBridge.readFramed(new java.io.ByteArrayInputStream(bytes), bytes.length)
+  }
+
+  private def rows(batches: Array[Array[Byte]]): Seq[Seq[Any]] =
+    ArrowBridge.fromArrowBatches(spark, batches).collect().map(_.toSeq).toSeq
+
+  /** A fresh computation of the report over the live fct. */
+  private def freshRows(filename: String): Seq[Seq[Any]] =
+    Reports.budgetReport(spark.read.parquet(
+      warehouse(filename).resolve("corporate.fct_corporate").toString))
+      .collect().map(_.toSeq).toSeq
 
   it("serves corporate upload -> report -> export -> list") {
     val csv = writeCsv("c.csv",
@@ -236,13 +276,8 @@ class ServiceSuite extends SparkSpec {
   }
 
   it("reports on the new fct after an overwrite upload of the same filename") {
-    def upload(src: String, rows: Seq[(String, Int)]): Unit = {
-      val body = rows.zipWithIndex.map { case ((title, pay), i) =>
-        s"${i + 1},2013,D,$title,FT,$$$pay.00,,,"
-      }
-      svc.upload("LA", "p1", "corporate_swap.csv",
-        writeCsv(src, (header +: body).mkString("", "\n", "\n")))
-    }
+    def upload(src: String, rows: Seq[(String, Int)]): Unit =
+      svc.upload("LA", "p1", "corporate_swap.csv", corporateCsv(src, rows))
     def totals(rows: Array[org.apache.spark.sql.Row]): (Long, Double) =
       (rows.map(_.getAs[Long]("total_employee")).sum,
         rows.map(_.getAs[Double]("total_budget")).sum)
@@ -252,15 +287,230 @@ class ServiceSuite extends SparkSpec {
     upload("swap_2.csv",
       Seq("C" -> 1000, "D" -> 2000, "D" -> 3000, "E" -> 10, "C" -> 5))
     val after = svc.budgetReport("LA", "p1", "corporate_swap.csv").collect()
-    val tenant = users.find(_.clientId == "LA").get
-    val fct = Tenancy.cleanDir(storage, tenant, "corporate_swap.csv")
-      .resolve("corporate.fct_corporate").toString
-    val fresh = Reports.budgetReport(
-      SparkSpec.session.read.parquet(fct)).collect()
-    assert(after.map(_.toSeq).toSeq == fresh.map(_.toSeq).toSeq)
+    assert(after.map(_.toSeq).toSeq == freshRows("corporate_swap.csv"))
     assert(totals(after) == ((5L, 6015.0)))
     assert(after.map(_.getAs[String]("job_title")).toSeq ==
       Seq("D", "C", "E"))
+  }
+
+  describe("the budget report stored with each build") {
+    it("is served with no Spark job") {
+      svc.upload("LA", "p1", "corporate_stored.csv",
+        corporateCsv("stored.csv", Seq("A" -> 100, "B" -> 300, "A" -> 50)))
+      val s = svc
+      var answer: Array[Array[Byte]] = null
+      assert(jobsDuring {
+        answer = s.budgetReportArrow("LA", "p1", "corporate_stored.csv")
+      } == 0)
+      assert(rows(answer) == freshRows("corporate_stored.csv"))
+    }
+
+    it("holds exactly the rows of its live fct, CSV and Arrow uploads alike") {
+      // tied totals: A, B and C all sum to 300, F and G to 10
+      val first = Seq("B" -> 300, "A" -> 100, "C" -> 300, "A" -> 200, "D" -> 50)
+      val second = Seq("G" -> 10, "E" -> 10, "F" -> 10, "E" -> 5)
+      def check(filename: String, titles: Seq[String]): Unit = {
+        val stored = rows(storedReport(filename))
+        assert(stored == freshRows(filename))
+        assert(stored.map(_.head) == titles)
+        assert(rows(svc.budgetReportArrow("LA", "p1", filename)) == stored)
+      }
+      val (csv, arrow) = ("corporate_csvstore.csv", "corporate_arrowstore.csv")
+      svc.upload("LA", "p1", csv, corporateCsv("store_1.csv", first))
+      check(csv, Seq("A", "B", "C", "D"))
+      svc.upload("LA", "p1", csv, corporateCsv("store_2.csv", second))
+      check(csv, Seq("E", "F", "G"))
+      svc.uploadArrow("LA", "p1", arrow, corporateArrow(first))
+      check(arrow, Seq("A", "B", "C", "D"))
+      svc.uploadArrow("LA", "p1", arrow, corporateArrow(second))
+      check(arrow, Seq("E", "F", "G"))
+    }
+
+    it("is computed when the warehouse holds no stored copy") {
+      val filename = "corporate_nostore.csv"
+      svc.upload("LA", "p1", filename,
+        corporateCsv("nostore.csv", Seq("A" -> 100, "B" -> 100, "C" -> 7)))
+      val stored = rows(storedReport(filename))
+      Files.delete(warehouse(filename).resolve(Pipeline.BudgetReportFile))
+      val s = svc
+      var answer: Array[Array[Byte]] = null
+      assert(jobsDuring {
+        answer = s.budgetReportArrow("LA", "p1", filename)
+      } > 0)
+      assert(rows(answer) == stored)
+      // a filename never uploaded has neither: NOT_FOUND, not a computation
+      assert(intercept[NoSuchElementException](
+        svc.budgetReportArrow("LA", "p1", "corporate_never.csv"))
+        .getMessage == "NOT_FOUND")
+    }
+
+    it("stays the old build's, paired with the old fct, when an fct audit fails") {
+      val filename = "corporate_audited.csv"
+      svc.upload("LA", "p1", filename,
+        corporateCsv("audited_1.csv", Seq("A" -> 100, "B" -> 200)))
+      val old = rows(storedReport(filename))
+      intercept[IllegalStateException](Pipeline.ingest(spark, storage, users,
+        "LA", "p1", filename,
+        corporateCsv("audited_2.csv", Seq("C" -> 5, "D" -> 6, "D" -> 7)),
+        frozen, failingFctAudit))
+      assert(rows(svc.budgetReportArrow("LA", "p1", filename)) == old)
+      assert(freshRows(filename) == old)
+    }
+
+    it("is read only after authentication") {
+      import java.net.{HttpURLConnection, URI}
+      val filename = "corporate_authfirst.csv"
+      svc.upload("LA", "p1", filename,
+        corporateCsv("authfirst.csv", Seq("A" -> 100)))
+      // an unreadable stored copy: reading it fails with an I/O error
+      val stored = warehouse(filename).resolve(Pipeline.BudgetReportFile)
+      Files.delete(stored)
+      Files.createDirectory(stored)
+      assert(intercept[IllegalArgumentException](
+        svc.budgetReportArrow("LA", "wrong", filename))
+        .getMessage == "AUTHENTICATION_FAILED")
+      val http = new GraftHttpServer(svc)
+      val port = http.start()
+      def status(password: String): Int = {
+        val c = new URI(s"http://127.0.0.1:$port/files/$filename/report")
+          .toURL.openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestProperty("X-Graft-Client", "LA")
+        c.setRequestProperty("X-Graft-Password", password)
+        c.getResponseCode
+      }
+      try {
+        assert(status("wrong") == 401)
+        assert(status("p1") == 500) // the right password does read it
+      } finally http.stop()
+    }
+
+    it("answers a damaged stored copy with INTERNAL_ERROR, not a client error") {
+      import java.net.{HttpURLConnection, URI}
+      val filename = "corporate_damaged.csv"
+      svc.upload("LA", "p1", filename,
+        corporateCsv("damaged.csv", Seq("A" -> 100, "B" -> 200)))
+      val stored = warehouse(filename).resolve(Pipeline.BudgetReportFile)
+      val bytes = Files.readAllBytes(stored)
+      val http = new GraftHttpServer(svc)
+      val port = http.start()
+      def answer(): (Int, String) = {
+        val c = new URI(s"http://127.0.0.1:$port/files/$filename/report")
+          .toURL.openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestProperty("X-Graft-Client", "LA")
+        c.setRequestProperty("X-Graft-Password", "p1")
+        val code = c.getResponseCode
+        (code, new String(c.getErrorStream.readAllBytes(), "UTF-8"))
+      }
+      try {
+        // cut after the first frame header: the frame runs past the file
+        Files.write(stored, bytes.take(4))
+        val (cut, cutBody) = answer()
+        assert(cut == 500 && cutBody.startsWith("INTERNAL_ERROR "), cutBody)
+        // a negative frame length
+        Files.write(stored, Array[Byte](-1, -1, -1, -1) ++ bytes.drop(4))
+        val (neg, negBody) = answer()
+        assert(neg == 500 && negBody.startsWith("INTERNAL_ERROR "), negBody)
+      } finally http.stop()
+    }
+
+    it("is one build's whole report while overwrite uploads race it") {
+      import java.util.concurrent.ConcurrentLinkedQueue
+      import java.util.concurrent.atomic.AtomicBoolean
+      val filename = "corporate_race.csv"
+      // build k: employees 2 + k, budget 107 * k + k
+      val builds = (1 to 3).map(k =>
+        Seq("A" -> 100 * k, "B" -> 7 * k) ++ Seq.fill(k)("C" -> 1))
+      def sums(r: Seq[Seq[Any]]): (Long, Double) =
+        (r.map(_(1).asInstanceOf[Long]).sum, r.map(_(2).asInstanceOf[Double]).sum)
+      val expected = builds.map(b => (b.size.toLong, b.map(_._2).sum.toDouble))
+      svc.upload("LA", "p1", filename, corporateCsv("race_0.csv", builds(0)))
+      val answers = new ConcurrentLinkedQueue[Either[String, Seq[Seq[Byte]]]]()
+      val stop = new AtomicBoolean(false)
+      val s = svc
+      val reader = new Thread(() =>
+        while (!stop.get) {
+          answers.add(
+            try Right(s.budgetReportArrow("LA", "p1", filename).map(_.toSeq).toSeq)
+            catch { case e: Throwable => Left(String.valueOf(e)) })
+          Thread.sleep(2)
+        })
+      reader.start()
+      try (1 to 6).foreach(i => s.upload("LA", "p1", filename,
+        corporateCsv(s"race_$i.csv", builds(i % 3))))
+      finally { stop.set(true); reader.join() }
+      val got = answers.asScala.toSeq
+      val errors = got.collect { case Left(e) => e }
+        .filterNot(_ == new NoSuchElementException("NOT_FOUND").toString)
+      assert(errors.isEmpty, s"answers neither a report nor NOT_FOUND: $errors")
+      val seen = got.collect { case Right(b) => b }.distinct
+        .map(b => sums(rows(b.map(_.toArray).toArray)))
+      assert(seen.forall(expected.contains),
+        s"an answer matches no build: $seen, builds $expected")
+      assert(seen.distinct.size > 1, s"the reader saw one build only: $seen")
+    }
+  }
+
+  it("archives each upload's raw bytes atomically and sweeps a crash's stale copy") {
+    val filename = "corporate_raw.csv"
+    val raw = Tenancy.rawPath(storage, la, filename)
+    def scratch: List[String] = {
+      val ls = Files.list(raw.getParent)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(".")).toList
+      finally ls.close()
+    }
+    val good = corporateCsv("raw_1.csv", Seq("A" -> 100))
+    svc.upload("LA", "p1", filename, good)
+    assert(scratch.isEmpty)
+    assert(Files.readAllBytes(raw).sameElements(Files.readAllBytes(good)))
+    val bad = corporateCsv("raw_2.csv", Seq("B" -> 200, "C" -> 5))
+    intercept[IllegalStateException](Pipeline.ingest(spark, storage, users,
+      "LA", "p1", filename, bad, frozen, failingFctAudit))
+    assert(scratch.isEmpty)
+    assert(Files.readAllBytes(raw).sameElements(Files.readAllBytes(bad)))
+    // a copy a crash left two hours ago is swept by the next upload of the
+    // name; a fresh one may be a concurrent upload's, and stays
+    val stale = raw.resolveSibling(s".$filename.tmp-dead0001")
+    val fresh = raw.resolveSibling(s".$filename.tmp-live0001")
+    Files.write(stale, "torn".getBytes("UTF-8"))
+    Files.setLastModifiedTime(stale, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 2 * 60 * 60 * 1000L))
+    Files.write(fresh, "copying".getBytes("UTF-8"))
+    svc.upload("LA", "p1", filename, good)
+    assert(scratch == List(fresh.getFileName.toString))
+    Files.delete(fresh)
+  }
+
+  it("answers 413 to an upload body past the cap, before reading it") {
+    import java.io.{BufferedReader, InputStreamReader}
+    val http = new GraftHttpServer(svc)
+    val port = http.start()
+    // the status line of a raw PUT whose headers are `head`, followed by
+    // `body` bytes and no more
+    def status(head: String, body: Array[Byte]): String = {
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        sock.setSoTimeout(30000)
+        val out = sock.getOutputStream
+        out.write(("PUT /files/corporate_big.csv HTTP/1.1\r\n" +
+          "Host: 127.0.0.1\r\nX-Graft-Client: LA\r\n" +
+          s"X-Graft-Password: p1\r\n$head\r\n\r\n").getBytes("US-ASCII"))
+        out.write(body)
+        out.flush()
+        new BufferedReader(new InputStreamReader(sock.getInputStream,
+          "US-ASCII")).readLine()
+      } finally sock.close()
+    }
+    try {
+      // a declared 2 GiB body: refused on the header, no byte of it sent
+      assert(status(s"Content-Length: ${1L << 31}", Array.emptyByteArray)
+        .startsWith("HTTP/1.1 413"))
+      // a chunked body whose first frame declares the whole cap: with its
+      // 4-byte header it is past the cap, refused before it is allocated
+      assert(status("Transfer-Encoding: chunked",
+        "4\r\n".getBytes("US-ASCII") ++ Array[Byte](0x40, 0, 0, 0) ++
+          "\r\n".getBytes("US-ASCII")).startsWith("HTTP/1.1 413"))
+    } finally http.stop()
   }
 
   it("answers an unexpected error with INTERNAL_ERROR and an id the log carries") {
@@ -279,7 +529,7 @@ class ServiceSuite extends SparkSpec {
       .asInstanceOf[Logger]
     logger.addAppender(capture)
     // an uploaded fct whose parquet files were truncated on disk: the
-    // read fails inside Spark, an error no route maps to a status
+    // export's read fails inside Spark, an error no route maps to a status
     svc.upload("LA", "p1", "corporate_broken.csv", writeCsv("broken.csv",
       s"$header\n1,2013,D,A,FT,$$100.00,,,\n"))
     val fct = Tenancy.cleanDir(storage, users.find(_.clientId == "LA").get,
@@ -291,7 +541,7 @@ class ServiceSuite extends SparkSpec {
     val http = new GraftHttpServer(svc)
     val port = http.start()
     try {
-      val c = new URI(s"http://127.0.0.1:$port/files/corporate_broken.csv/report")
+      val c = new URI(s"http://127.0.0.1:$port/files/corporate_broken.csv/export")
         .toURL.openConnection().asInstanceOf[HttpURLConnection]
       c.setRequestProperty("X-Graft-Client", "LA")
       c.setRequestProperty("X-Graft-Password", "p1")
