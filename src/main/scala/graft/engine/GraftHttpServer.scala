@@ -20,7 +20,8 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * Routes (auth via `X-Graft-Client` / `X-Graft-Password` headers, exactly
   * the credentials the reference's middleware checks):
   *
-  *  - `PUT  /files/{filename}`         do_put: body = framed Arrow batches
+  *  - `PUT  /files/{filename}`         do_put: body = framed Arrow batches,
+  *    pulled one frame at a time into the raw CSV after auth
   *  - `GET  /files/{filename}/report`  do_get get_budget_report — the
   *    report the upload's build stored beside its fct, streamed with no
   *    Spark job ([[GraftService.budgetReportArrow]]; computed only for a
@@ -37,8 +38,9 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * cap is answered 413 PAYLOAD_TOO_LARGE before the body is read, and so
   * is a frame that would take the running total past it. Auth failures
   * map to 401 with the service's uniform AUTHENTICATION_FAILED (no
-  * client-id enumeration), a report or export of a file never uploaded to
-  * 404, other rejections to 400, unexpected errors to 500. A 500
+  * client-id enumeration) before the body is read, a report or export of
+  * a file never uploaded to 404, other rejections to 400, unexpected
+  * errors to 500. A 500
   * body is `INTERNAL_ERROR <id>`; the same id heads the error's log line,
   * which carries the stack trace, so a caller's report finds the cause.
   */
@@ -90,8 +92,12 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
         respondText(ex, 200,
           (raw.map("raw/" + _) ++ clean.map("clean/" + _)).mkString("\n"))
       case ("PUT", List("files", filename)) =>
-        val batches = readFrames(ex)
-        service.uploadArrow(client, password, filename, batches)
+        val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+        if (declared.exists(_.trim.toLong > GraftHttpServer.MaxBodyBytes))
+          throw new IllegalArgumentException("PAYLOAD_TOO_LARGE")
+        // lazy: the service pulls frames only once the caller is let in
+        service.uploadArrow(client, password, filename,
+          ArrowBridge.framed(ex.getRequestBody, GraftHttpServer.MaxBodyBytes))
         respondText(ex, 200, "OK")
       case ("GET", List("files", filename, "report")) =>
         val batches = service.budgetReportArrow(client, password, filename)
@@ -102,13 +108,6 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
       case _ =>
         respondText(ex, 404, "NOT_FOUND")
     }
-  }
-
-  private def readFrames(ex: HttpExchange): Array[Array[Byte]] = {
-    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
-    if (declared.exists(_.trim.toLong > GraftHttpServer.MaxBodyBytes))
-      throw new IllegalArgumentException("PAYLOAD_TOO_LARGE")
-    ArrowBridge.readFramed(ex.getRequestBody, GraftHttpServer.MaxBodyBytes)
   }
 
   /** Chunked response: batches are written (and for the export, PULLED

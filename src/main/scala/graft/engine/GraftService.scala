@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * (SURVEY.md §7.2 PR3): DataFrames returned here already cross process
   * boundaries efficiently via Spark's own Arrow paths when needed.
   *
-  *  - do_put (upload+transform)        -> [[upload]]
+  *  - do_put (upload+transform)        -> [[upload]] (CSV) /
+  *                                        [[uploadArrow]] (Arrow batches)
   *  - do_get get_budget_report         -> [[budgetReport]] (DataFrame) /
   *                                        [[budgetReportArrow]] (the bytes
   *                                        the build stored)
@@ -48,20 +49,12 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     Readers.parquet(spark, fct.toString)
   }
 
-  private def auth(clientId: String, password: String): Tenancy.Tenant =
-    // Uniform failure message at the service boundary: distinguishing
-    // unknown-client from bad-password would enable client-id enumeration
-    // (the reference emits a single AUTHENTICATION_FAILED the same way).
-    Tenancy.authenticate(users, clientId, password)
-      .fold(_ => throw new IllegalArgumentException("AUTHENTICATION_FAILED"),
-        identity)
-
   /** Budget report over a prior upload (`serve_flight.py:295`), optionally
     * archived as `<base>_summary.csv` in Downloads (S8).
     */
   def budgetReport(clientId: String, password: String, filename: String,
                    saveCopy: Boolean = false): DataFrame = {
-    val tenant = auth(clientId, password)
+    val tenant = Tenancy.authenticated(users, clientId, password)
     val report = Reports.budgetReport(fctOf(tenant, filename))
     if (saveCopy) saveCsv(report, tenant, filename, "_summary")
     report
@@ -72,44 +65,25 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     */
   def fullExport(clientId: String, password: String, filename: String,
                  saveCopy: Boolean = false): DataFrame = {
-    val tenant = auth(clientId, password)
+    val tenant = Tenancy.authenticated(users, clientId, password)
     val export = Reports.fullExport(fctOf(tenant, filename))
     if (saveCopy) saveCsv(export, tenant, filename, "_full_export")
     export
   }
 
-  /** S4 — Arrow ingest: accept the upload as Arrow IPC record batches
-    * (the reference's do_put wire format), materialize to CSV in the Raw
-    * zone, and run the normal ingest path — mirroring the reference's
-    * arrow -> pandas -> csv sequence (`serve_flight.py:145-151`).
+  /** S4 — Arrow ingest: Arrow IPC record batches (the reference's do_put
+    * wire format) archived in the Raw zone as the stg reader's CSV
+    * ([[Readers.CsvDialect]]) and built like a CSV upload, as the
+    * reference's arrow -> pandas -> csv (`serve_flight.py:145-151`). The
+    * batches are pulled, after auth and the gate, and written on the
+    * driver with no Spark job; an empty or mixed-schema stream is an
+    * IllegalArgumentException that leaves nothing on disk.
     */
   def uploadArrow(clientId: String, password: String, filename: String,
-                  batches: Array[Array[Byte]]): Map[String, DataFrame] = {
-    // authenticate + gate BEFORE decoding anything — a bad caller must not
-    // cost a Spark job or leave payload bytes on disk
-    val tenant = auth(clientId, password)
-    Tenancy.validateFilename(tenant, filename)
-      .fold(e => throw new IllegalArgumentException(e), identity)
-    val df = org.apache.spark.sql.graftshim.ArrowBridge
-      .fromArrowBatches(spark, batches)
-    val tmp = Files.createTempDirectory("graft_arrow_upload")
-    try {
-      val csvDir = tmp.resolve("csv")
-      df.coalesce(1).write.option("header", "true").csv(csvDir.toString)
-      val ls = Files.list(csvDir)
-      val part =
-        try ls.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".csv"))
-          .getOrElse(throw new IllegalStateException("no csv part written"))
-        finally ls.close()
-      upload(clientId, password, filename, part)
-    } finally {
-      val walk = Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
-    }
-  }
+                  batches: IterableOnce[Array[Byte]]): Map[String, DataFrame] =
+    Pipeline.ingestWith(spark, storageBase, users, clientId, password,
+      filename, now, Map.empty)(
+      ArrowBridge.writeCsv(spark, batches.iterator, _, Readers.CsvDialect))
 
   /** S7 — Arrow result stream: the budget report as Arrow IPC batches
     * (the reference's do_get wire format, `serve_flight.py:301,330`).
@@ -120,7 +94,7 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     */
   def budgetReportArrow(clientId: String, password: String,
                         filename: String): Array[Array[Byte]] = {
-    val tenant = auth(clientId, password)
+    val tenant = Tenancy.authenticated(users, clientId, password)
     val stored = Tenancy.cleanDir(storageBase, tenant, filename)
       .resolve(Pipeline.BudgetReportFile)
     // one open: a swap after it cannot mix two builds into the answer
@@ -142,7 +116,7 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     * (`serve_flight.py:337-363`, S11).
     */
   def listFiles(clientId: String, password: String): (Seq[String], Seq[String]) = {
-    val tenant = auth(clientId, password)
+    val tenant = Tenancy.authenticated(users, clientId, password)
     def ls(sub: String): Seq[String] = {
       val dir = storageBase.resolve(tenant.clientId).resolve(sub)
       if (!Files.isDirectory(dir)) Seq.empty

@@ -104,10 +104,7 @@ object Pipeline {
     * `warehouse/<model_name>/` parquet dirs, built in dependency order.
     * The upload builds into a UNIQUE temp sibling (so concurrent retries
     * of the same upload cannot clobber each other's in-progress build),
-    * then swaps: old warehouse renamed aside, temp renamed in, old copy
-    * deleted last. Both renames are same-directory moves (atomic on POSIX
-    * filesystems); a failure between them restores the old warehouse, so
-    * at every point at least one complete copy exists.
+    * then [[swapIn]]s it.
     */
   def materialize(spark: SparkSession, models: Seq[ModelSpec],
                   warehouse: Path): Map[String, DataFrame] = {
@@ -119,7 +116,6 @@ object Pipeline {
     // warehouse. Stale scratch from earlier crashed builds of the SAME
     // warehouse is swept here (a crashed rename has no other cleanup path).
     val tmp = warehouse.resolveSibling(s".$name.tmp-$tag")
-    val old = warehouse.resolveSibling(s".$name.old-$tag")
     sweepStaleScratch(warehouse)
     try {
       var built = Map.empty[String, DataFrame]
@@ -137,23 +133,12 @@ object Pipeline {
         // the report is a function of the audited fct alone: computed once
         // here, it goes live in the same rename as the fct it was read from
         if (m.name == fctModel(m.name.takeWhile(_ != '.'))) {
-          val out = new java.io.BufferedOutputStream(
-            Files.newOutputStream(tmp.resolve(BudgetReportFile)))
-          try ArrowBridge.writeFramed(out,
-            Reports.budgetReportArrow(table).iterator)
-          finally out.close()
+          writeFile(tmp.resolve(BudgetReportFile))(ArrowBridge.writeFramed(_,
+            Reports.budgetReportArrow(table).iterator))
         }
         built += m.name -> table
       }
-      val hadOld = Files.exists(warehouse)
-      if (hadOld) Files.move(warehouse, old)
-      try Files.move(tmp, warehouse)
-      catch {
-        case e: Throwable =>
-          if (hadOld) Files.move(old, warehouse) // restore previous build
-          throw e
-      }
-      if (hadOld) deleteRecursively(old)
+      swapIn(tmp, warehouse)
       // the rename moved the very files each read-back scanned: pin its
       // schema under the live path, so reads after the swap infer nothing
       built.map { case (n, table) =>
@@ -167,16 +152,15 @@ object Pipeline {
   }
 
   /** Delete crashed writes' scratch (`.{name}.tmp-*` / `.{name}.old-*`)
-    * beside `target`: a warehouse's build dirs, a raw archive's copies.
+    * beside `target`: a warehouse's build dirs, an upload's raw scratch.
     * Age-gated so a CONCURRENT healthy write's scratch (which exists only
     * for seconds) is never swept mid-swap.
     */
-  private def sweepStaleScratch(target: Path,
-                                olderThanMs: Long = 60 * 60 * 1000L): Unit = {
+  private def sweepStaleScratch(target: Path): Unit = {
     val parent = target.getParent
     val name = target.getFileName.toString
     if (parent == null || !Files.isDirectory(parent)) return
-    val cutoff = System.currentTimeMillis() - olderThanMs
+    val cutoff = System.currentTimeMillis() - 60 * 60 * 1000L
     val ls = Files.list(parent)
     try {
       import scala.jdk.CollectionConverters._
@@ -190,39 +174,47 @@ object Pipeline {
     } finally ls.close()
   }
 
-  /** Entry point 1 (SURVEY.md §3.1) — upload + transform, end to end:
-    * authenticate, validate the filename gate, copy the CSV into the Raw
-    * zone, run the industry's stg+fct models FULL into the per-upload
-    * warehouse. Returns the built tables keyed by model name. The raw copy
-    * is written to a dot-prefixed sibling and renamed over the archive, so
-    * a listing or a crash never sees a torn archive; a copy a crash left
-    * behind is swept by a later upload of the same name, as a crashed
-    * build's scratch is.
-    */
+  /** Entry point 1 (SURVEY.md §3.1): [[ingestWith]] of a CSV file. */
   def ingest(spark: SparkSession, storageBase: Path,
              users: Seq[Tenancy.Tenant], clientId: String, password: String,
              filename: String, sourceCsv: Path,
              now: Column = current_timestamp(),
              audits: Map[String, Seq[Audits.Audit]] = Map.empty)
-  : Map[String, DataFrame] = {
-    val tenant = Tenancy.authenticate(users, clientId, password)
-      .fold(e => throw new IllegalArgumentException(e), identity)
+  : Map[String, DataFrame] =
+    ingestWith(spark, storageBase, users, clientId, password, filename, now,
+      audits)(Files.copy(sourceCsv, _))
+
+  /** Authenticate, gate the filename, archive the upload's CSV, which
+    * `write` puts on the stream it is given, and run the industry's stg+fct
+    * models FULL into the per-upload warehouse. `write` runs only after
+    * the gate, so a refused upload reads no byte of its body. The bytes
+    * land in this upload's own scratch dir, `Raw/.<f>.tmp-<tag>/<f>`; a
+    * hard link to them is renamed over `Raw/<f>` before the build, and the
+    * build reads the upload's own name, which a concurrent same-name upload
+    * cannot rename over. A failed write leaves no archive and no scratch; a
+    * crash's scratch is swept by a later upload of the name.
+    */
+  private[engine] def ingestWith(spark: SparkSession, storageBase: Path,
+      users: Seq[Tenancy.Tenant], clientId: String, password: String,
+      filename: String, now: Column, audits: Map[String, Seq[Audits.Audit]])(
+      write: java.io.OutputStream => Unit): Map[String, DataFrame] = {
+    val tenant = Tenancy.authenticated(users, clientId, password)
     Tenancy.validateFilename(tenant, filename)
       .fold(e => throw new IllegalArgumentException(e), identity)
     Tenancy.provisionStorage(storageBase, Seq(tenant))
     val raw = Tenancy.rawPath(storageBase, tenant, filename) // S5 raw backup
-    sweepStaleScratch(raw) // copies a crash left between copy and rename
-    val part = raw.resolveSibling(
-      s".$filename.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    sweepStaleScratch(raw)
+    val own = Files.createDirectory(raw.resolveSibling(
+      s".$filename.tmp-${java.util.UUID.randomUUID().toString.take(8)}"))
     try {
-      Files.copy(sourceCsv, part)
-      Files.move(part, raw,
+      val bytes = own.resolve(filename)
+      writeFile(bytes)(write)
+      Files.move(Files.createLink(own.resolve(".archive"), bytes), raw,
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(part)
-    val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
-    materialize(spark,
-      industryModels(tenant.industryType, raw.toString, now, audits),
-      warehouse)
+      materialize(spark,
+        industryModels(tenant.industryType, bytes.toString, now, audits),
+        Tenancy.cleanDir(storageBase, tenant, filename))
+    } finally deleteRecursively(own)
   }
 
   /** M5 — fingerprint-based rebuild skip (the Spark analog of SQLMesh's
@@ -251,8 +243,7 @@ object Pipeline {
                       users: Seq[Tenancy.Tenant], clientId: String,
                       password: String, filename: String, sourceCsv: Path,
                       now: Column = current_timestamp()): Map[String, DataFrame] = {
-    val tenant = Tenancy.authenticate(users, clientId, password)
-      .fold(e => throw new IllegalArgumentException(e), identity)
+    val tenant = Tenancy.authenticated(users, clientId, password)
     val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
     val marker = warehouse.resolve("_fingerprint")
     val models = industryModels(tenant.industryType, "unused", now).map(_.name)
@@ -269,14 +260,38 @@ object Pipeline {
     }
   }
 
+  /** Put the directory `tmp` live at `live`: the old `live` renamed aside,
+    * `tmp` renamed in (same-directory, atomic on POSIX), the old deleted
+    * last; a failure between the renames restores it, so one complete copy
+    * always exists. One lock, held microseconds, keeps concurrent swaps of
+    * a target from moving each other's directories.
+    */
+  private[graft] def swapIn(tmp: Path, live: Path): Unit = {
+    val old = tmp.resolveSibling(tmp.getFileName.toString + ".old")
+    val hadOld = synchronized {
+      val hadOld = Files.exists(live)
+      if (hadOld) Files.move(live, old)
+      try Files.move(tmp, live)
+      catch { case e: Throwable => if (hadOld) Files.move(old, live); throw e }
+      hadOld
+    }
+    if (hadOld) deleteRecursively(old)
+  }
+
+  private def writeFile(p: Path)(write: java.io.OutputStream => Unit): Unit = {
+    val out = new java.io.BufferedOutputStream(Files.newOutputStream(p))
+    try write(out) finally out.close()
+  }
+
   /** Recursive delete with the walk stream closed — the one shared copy
-    * (query-side gates delete their scratch corpora through this too).
+    * (query-side gates delete their scratch corpora through this too). A
+    * file already gone is skipped.
     */
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
+        .forEach(f => Files.deleteIfExists(f))
       finally walk.close()
     }
 }

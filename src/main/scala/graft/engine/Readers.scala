@@ -33,18 +33,22 @@ import org.apache.spark.sql.types.StructType
   */
 object Readers {
 
+  /** The raw archive's CSV dialect, read by [[csvAllVarchar]] and written
+    * by an Arrow upload: a header, RFC-4180 doubled quotes (like DuckDB and
+    * pandas), cells kept as sent (Spark's writer trims unless told not to).
+    */
+  val CsvDialect: Map[String, String] = Map(
+    "header" -> "true", "inferSchema" -> "false", "quote" -> "\"",
+    "escape" -> "\"", "ignoreLeadingWhiteSpace" -> "false",
+    "ignoreTrailingWhiteSpace" -> "false")
+
   /** S1 — all-varchar CSV scan. Spark's CSV reader already defaults every
     * column to StringType when schema inference is off, which is exactly
     * DuckDB's `all_varchar=True` semantics; a header pass resolves names at
     * runtime (same late-binding as the reference — SURVEY.md §4).
     */
   def csvAllVarchar(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"") // RFC-4180 doubled-quote escaping, like DuckDB
-      .option("inferSchema", "false")
-      .csv(path)
+    spark.read.options(CsvDialect).csv(path)
 
   /** S2 — DuckDB `normalize_names=True` column-name rule: trim, lowercase,
     * every run of non-alphanumerics becomes a single underscore, and leading/

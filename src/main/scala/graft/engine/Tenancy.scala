@@ -65,6 +65,14 @@ object Tenancy {
       case Some(t) => Right(t)
     }
 
+  /** [[authenticate]] with one uniform failure, as the reference's: an
+    * unknown client and a bad password look alike (no enumeration).
+    */
+  def authenticated(users: Seq[Tenant], clientId: String,
+                    password: String): Tenant =
+    authenticate(users, clientId, password).fold(_ =>
+      throw new IllegalArgumentException("AUTHENTICATION_FAILED"), identity)
+
   /** F1 — filename validation gate (`serve_flight.py:109-124`): the upload
     * filename must contain the tenant's industry keyword, case-insensitive.
     * Additionally the name must be a plain file name — no path separators

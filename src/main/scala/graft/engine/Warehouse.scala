@@ -378,16 +378,7 @@ object Warehouse {
     // catalog entry for them would be stale as soon as it was made
     spark.read.parquet(dir).repartition(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
-    val old = path.resolveSibling(tmp.getFileName.toString + ".old")
-    java.nio.file.Files.move(path, old)
-    try java.nio.file.Files.move(tmp, path)
-    catch { case e: Throwable =>
-      java.nio.file.Files.move(old, path); throw e
-    }
-    val walk2 = java.nio.file.Files.walk(old)
-    try walk2.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.delete(p))
-    finally walk2.close()
+    Pipeline.swapIn(tmp, path)
   }
 
   /** Point-in-time (AS OF) snapshot over an SCD-2 history
@@ -514,14 +505,7 @@ object Warehouse {
     // best-effort GC of superseded generations (never the committed one)
     last.foreach { case (_, old) =>
       val op = java.nio.file.Paths.get(old)
-      if (op != genPath && java.nio.file.Files.exists(op)) {
-        val walk = java.nio.file.Files.walk(op)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } finally walk.close()
-      }
+      if (op != genPath) Pipeline.deleteRecursively(op)
     }
   }
 

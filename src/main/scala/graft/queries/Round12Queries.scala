@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Audits, Readers}
+import graft.engine.{Audits, Pipeline, Readers}
 import graft.ext.{Checkpoints, Graph, Profile, Stats, TimeSeries}
 import OracleSql.centsSql
 import Tables.{eventsUs, t}
@@ -126,15 +126,6 @@ object Round12Queries extends QuerySet {
       val ckDir = java.nio.file.Files.createTempDirectory("q208_ck")
       val target = java.nio.file.Paths.get(dir).toAbsolutePath
         .resolve("events.parquet")
-      def rmTree(p: java.nio.file.Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally walk.close()
-        }
-      }
       try {
         def lifetime(): Unit = {
           val raw = Readers.toNanosLong(
@@ -158,7 +149,7 @@ object Round12Queries extends QuerySet {
         // materialize off the mv directory before cleanup
         scope.checkpoint(graft.engine.Warehouse
           .readDurableMv(s, mvDir.toString).get.orderBy("event_type"))
-      } finally { rmTree(streamDir); rmTree(ckDir); rmTree(mvDir) }
+      } finally Seq(streamDir, ckDir, mvDir).foreach(Pipeline.deleteRecursively)
     }),
 
     // One full Lloyd k-means iteration over the q64 model: assign every

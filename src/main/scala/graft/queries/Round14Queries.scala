@@ -45,19 +45,10 @@ object Round14Queries extends QuerySet {
     // symlink to a DIRECTORY-shaped table (Spark-written scale-ups like
     // testdata-sf1) would contribute zero files and the stream would
     // silently run on empty input — link each part file instead
-    val links = (1 to copies).flatMap { i =>
-      StreamingQueries.partFiles(target).zipWithIndex.map { case (src, j) =>
-        val l = streamDir.resolve(s"copy${i}_$j.parquet")
-        java.nio.file.Files.createSymbolicLink(l, src)
-        l
-      }
-    }
+    (1 to copies).foreach(StreamingQueries.linkTable(streamDir, target, _))
     try use(s.readStream.schema(schema).options(options)
       .parquet(streamDir.toString))
-    finally {
-      links.foreach(java.nio.file.Files.deleteIfExists(_))
-      java.nio.file.Files.deleteIfExists(streamDir)
-    }
+    finally graft.engine.Pipeline.deleteRecursively(streamDir)
   }
 
   private[queries] val Dim = 64

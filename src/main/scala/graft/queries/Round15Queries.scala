@@ -93,18 +93,7 @@ object Round15Queries extends QuerySet {
     // directory-shaped tables (Spark-written scale-ups) must be linked
     // per part file — the stream source lists non-recursively (see
     // Round14Queries.runDocsStream)
-    def link(i: Int): Unit = {
-      StreamingQueries.partFiles(target).zipWithIndex.foreach { case (src, j) =>
-        java.nio.file.Files.createSymbolicLink(
-          streamDir.resolve(s"copy${i}_$j.parquet"), src)
-      }
-    }
-    def rmTree(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    def link(i: Int): Unit = StreamingQueries.linkTable(streamDir, target, i)
     try {
       def phase(name: String): DataFrame =
         graft.streaming.EventStream.runToMemoryCheckpointed(
@@ -121,8 +110,8 @@ object Round15Queries extends QuerySet {
       s.createDataFrame(
         java.util.Arrays.asList(out.collect(): _*), out.schema)
     } finally {
-      rmTree(streamDir)
-      rmTree(ckptDir)
+      graft.engine.Pipeline.deleteRecursively(streamDir)
+      graft.engine.Pipeline.deleteRecursively(ckptDir)
     }
   }
 

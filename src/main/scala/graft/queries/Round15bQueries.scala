@@ -307,13 +307,7 @@ object Round15bQueries extends QuerySet {
     val streamDir = java.nio.file.Files.createTempDirectory(prefix)
     val target = java.nio.file.Paths.get(dir).toAbsolutePath
       .resolve("embeddings.parquet")
-    val links = (1 to copies).flatMap { i =>
-      StreamingQueries.partFiles(target).zipWithIndex.map { case (src, j) =>
-        val l = streamDir.resolve(s"copy${i}_$j.parquet")
-        java.nio.file.Files.createSymbolicLink(l, src)
-        l
-      }
-    }
+    (1 to copies).foreach(StreamingQueries.linkTable(streamDir, target, _))
     // one trigger per logical copy (the q366 harness lesson):
     // per-part-file triggers would multiply the complete-mode state
     // re-emission by the part count on directory-shaped scale-ups
@@ -321,10 +315,7 @@ object Round15bQueries extends QuerySet {
       .option("maxFilesPerTrigger",
         StreamingQueries.partFileCount(dir, "embeddings").toString)
       .parquet(streamDir.toString))
-    finally {
-      links.foreach(java.nio.file.Files.deleteIfExists(_))
-      java.nio.file.Files.deleteIfExists(streamDir)
-    }
+    finally graft.engine.Pipeline.deleteRecursively(streamDir)
   }
 
   private val percCache = new java.util.concurrent.ConcurrentHashMap[

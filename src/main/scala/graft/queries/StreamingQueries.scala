@@ -52,15 +52,12 @@ object StreamingQueries extends QuerySet {
     val streamDir = java.nio.file.Files.createTempDirectory(prefix)
     val target = java.nio.file.Paths.get(dir).toAbsolutePath
       .resolve("events.parquet")
-    val links = (1 to copies).flatMap(i => linkTable(streamDir, target, i))
+    (1 to copies).foreach(linkTable(streamDir, target, _))
     try use(graft.engine.Readers.toNanosLong(
       s.readStream.schema(eventsSchema(s, dir)).options(options)
         .parquet(streamDir.toString),
       "ts"))
-    finally {
-      links.foreach(java.nio.file.Files.deleteIfExists(_))
-      java.nio.file.Files.deleteIfExists(streamDir)
-    }
+    finally graft.engine.Pipeline.deleteRecursively(streamDir)
   }
 
   /** Fresh memory-sink name per run (the sink registry is session-global). */

@@ -1,23 +1,31 @@
 package org.apache.spark.sql.graftshim
 
 import java.io.{ByteArrayInputStream, DataInputStream, DataOutputStream,
-  EOFException, InputStream, OutputStream}
+  EOFException, InputStream, OutputStream, OutputStreamWriter}
 import java.nio.channels.Channels
+import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
-import org.apache.arrow.vector.ipc.ReadChannel
+import org.apache.arrow.vector.ipc.{ArrowStreamReader, ReadChannel}
 import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.execution.arrow.ArrowConverters
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
+import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector,
+  ColumnarBatch}
 
 /** Arrow IPC wire bridge (SURVEY.md §2.1 S4/S7): the reference ships
   * record batches over Arrow Flight (`serve_flight.py:148,330`); this
   * exposes the same wire format from Spark — each element is one Arrow
   * IPC batch WITH embedded schema, produced distributed (one stream per
   * partition) and collected at the driver, which is exactly a Flight
-  * do_get payload. Uses Spark's internal ArrowConverters (the machinery
-  * behind toPandas), hence lives in the graftshim access package.
+  * do_get payload. An upload's batches go the other way on the driver,
+  * straight to the raw archive's CSV ([[writeCsv]]). Uses Spark's internal
+  * ArrowConverters and CSV generator, hence the graftshim access package.
   */
 object ArrowBridge {
 
@@ -98,30 +106,69 @@ object ArrowBridge {
     d.flush()
   }
 
-  /** Reads [[writeFramed]]'s form to EOF. A frame whose 4-byte header and
-    * body would take the running total past `maxBytes` is rejected with
-    * `PAYLOAD_TOO_LARGE` before its body is allocated; a negative length
-    * with `bad frame length`.
+  /** Reads [[writeFramed]]'s form to EOF: [[framed]], collected. */
+  def readFramed(in: InputStream, maxBytes: Long): Array[Array[Byte]] =
+    framed(in, maxBytes).toArray
+
+  /** [[writeFramed]]'s form, one frame read off `in` per `next`. A frame
+    * whose header and body would take the running total past `maxBytes`
+    * is rejected with `PAYLOAD_TOO_LARGE` before its body is allocated; a
+    * negative length with `bad frame length`.
     */
-  def readFramed(in: InputStream, maxBytes: Long): Array[Array[Byte]] = {
+  def framed(in: InputStream, maxBytes: Long): Iterator[Array[Byte]] = {
     val d = new DataInputStream(in)
-    val out = Array.newBuilder[Array[Byte]]
     var total = 0L
-    var done = false
-    while (!done) {
-      val len =
-        try d.readInt()
-        catch { case _: EOFException => done = true; -1 }
-      if (!done) {
-        require(len >= 0, s"bad frame length $len")
-        total += 4L + len
-        if (total > maxBytes)
-          throw new IllegalArgumentException("PAYLOAD_TOO_LARGE")
-        val buf = new Array[Byte](len)
-        d.readFully(buf)
-        out += buf
-      }
+    Iterator.continually(
+      try Some(d.readInt()) catch { case _: EOFException => None }
+    ).takeWhile(_.isDefined).flatten.map { len =>
+      require(len >= 0, s"bad frame length $len")
+      total += 4L + len
+      if (total > maxBytes)
+        throw new IllegalArgumentException("PAYLOAD_TOO_LARGE")
+      val buf = new Array[Byte](len)
+      d.readFully(buf)
+      buf
     }
-    out.result()
+  }
+
+  /** Arrow IPC batches (schema embedded) -> CSV with a header on `out`,
+    * one batch at a time on the calling thread, no Spark job: Spark's own
+    * Arrow column vectors and CSV generator, so the text is what
+    * `df.write.options(options).csv` writes. No batch, a batch whose schema
+    * differs from the first's, or a column CSV cannot hold is an
+    * IllegalArgumentException. Flushes, does not close `out`.
+    */
+  def writeCsv(spark: SparkSession, batches: Iterator[Array[Byte]],
+               out: OutputStream, options: Map[String, String]): Unit = {
+    require(batches.hasNext,
+      "no Arrow batches: the sender must emit at least one (empty) batch")
+    val text = new OutputStreamWriter(out, StandardCharsets.UTF_8)
+    val allocator =
+      ArrowUtils.rootAllocator.newChildAllocator("csv", 0, Long.MaxValue)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    var first: StructType = null
+    lazy val csv =
+      new UnivocityGenerator(first, text, new CSVOptions(options, false, tz))
+    try batches.foreach { b =>
+      val reader = new ArrowStreamReader(new ByteArrayInputStream(b), allocator)
+      try {
+        val root = reader.getVectorSchemaRoot
+        val s = ArrowUtils.fromArrowSchema(root.getSchema)
+        if (first == null) {
+          val format = new CSVFileFormat()
+          require(s.forall(f => format.supportDataType(f.dataType)),
+            s"a column CSV cannot hold: $s")
+          first = s
+          csv.writeHeaders()
+        }
+        require(s == first, s"batch schema $s differs from the first, $first")
+        while (reader.loadNextBatch()) {
+          val cols = root.getFieldVectors.asScala.map(new ArrowColumnVector(_))
+          new ColumnarBatch(cols.toArray[ColumnVector], root.getRowCount)
+            .rowIterator().asScala.foreach(csv.write)
+        }
+      } finally reader.close()
+    } finally allocator.close()
+    csv.flush()
   }
 }

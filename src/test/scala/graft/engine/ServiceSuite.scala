@@ -481,26 +481,30 @@ class ServiceSuite extends SparkSpec {
     Files.delete(fresh)
   }
 
-  it("answers 413 to an upload body past the cap, before reading it") {
+  /** The status line of a raw PUT whose headers are `head`, followed by
+    * `body` bytes and no more; a server that waits for more times out.
+    */
+  private def rawPut(port: Int, head: String, body: Array[Byte],
+                     password: String = "p1"): String = {
     import java.io.{BufferedReader, InputStreamReader}
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(30000)
+      val out = sock.getOutputStream
+      out.write(("PUT /files/corporate_big.csv HTTP/1.1\r\n" +
+        "Host: 127.0.0.1\r\nX-Graft-Client: LA\r\n" +
+        s"X-Graft-Password: $password\r\n$head\r\n\r\n").getBytes("US-ASCII"))
+      out.write(body)
+      out.flush()
+      new BufferedReader(new InputStreamReader(sock.getInputStream,
+        "US-ASCII")).readLine()
+    } finally sock.close()
+  }
+
+  it("answers 413 to an upload body past the cap, before reading it") {
     val http = new GraftHttpServer(svc)
     val port = http.start()
-    // the status line of a raw PUT whose headers are `head`, followed by
-    // `body` bytes and no more
-    def status(head: String, body: Array[Byte]): String = {
-      val sock = new java.net.Socket("127.0.0.1", port)
-      try {
-        sock.setSoTimeout(30000)
-        val out = sock.getOutputStream
-        out.write(("PUT /files/corporate_big.csv HTTP/1.1\r\n" +
-          "Host: 127.0.0.1\r\nX-Graft-Client: LA\r\n" +
-          s"X-Graft-Password: p1\r\n$head\r\n\r\n").getBytes("US-ASCII"))
-        out.write(body)
-        out.flush()
-        new BufferedReader(new InputStreamReader(sock.getInputStream,
-          "US-ASCII")).readLine()
-      } finally sock.close()
-    }
+    def status(head: String, body: Array[Byte]) = rawPut(port, head, body)
     try {
       // a declared 2 GiB body: refused on the header, no byte of it sent
       assert(status(s"Content-Length: ${1L << 31}", Array.emptyByteArray)
@@ -511,6 +515,162 @@ class ServiceSuite extends SparkSpec {
         "4\r\n".getBytes("US-ASCII") ++ Array[Byte](0x40, 0, 0, 0) ++
           "\r\n".getBytes("US-ASCII")).startsWith("HTTP/1.1 413"))
     } finally http.stop()
+  }
+
+  it("answers 401 to a wrong password before reading the upload body") {
+    val http = new GraftHttpServer(svc)
+    val port = http.start()
+    // a declared 1 MiB body, none of it sent: a server that read the body
+    // before checking the caller would wait for it until the timeout
+    try assert(rawPut(port, "Content-Length: 1048576", Array.emptyByteArray,
+      password = "wrong").startsWith("HTTP/1.1 401"))
+    finally http.stop()
+  }
+
+  describe("an Arrow upload") {
+    /** Corporate cells with quotes, commas, empty strings, nulls (None) and
+      * padding, as Arrow batches and as the RFC-4180 CSV of the same cells.
+      */
+    val cells: Seq[Seq[Option[String]]] = Seq(
+      Seq("1", "2013", "Ops, North", "say \"hi\"", "FT", "$1,000.00", "", "", ""),
+      Seq("2", "2013", "", " pad ", " PT ", "$2,000.50", null, "$5.00", null),
+      Seq("3", "2013", null, "a \"b\", c", "FT", " $300.00 ", "$1.00", "", ""))
+      .map(_.map(Option(_)))
+    def arrowOf(rows: Seq[Seq[Option[String]]]): Array[Array[Byte]] = {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{StringType, StructField, StructType}
+      val schema = StructType(header.split(",").map(StructField(_, StringType)))
+      ArrowBridge.toArrowBatches(spark.createDataFrame(
+        java.util.Arrays.asList(rows.map(r => Row(r.map(_.orNull): _*)): _*),
+        schema))
+    }
+    def csvOf(name: String, rows: Seq[Seq[Option[String]]]) = {
+      def cell(c: Option[String]) = c.fold("")(v =>
+        if (v.exists("\",".contains(_)) || v.isEmpty)
+          "\"" + v.replace("\"", "\"\"") + "\"" else v)
+      writeCsv(name, (header +: rows.map(_.map(cell).mkString(",")))
+        .mkString("", "\n", "\n"))
+    }
+    def table(filename: String, model: String): Seq[Seq[Any]] =
+      spark.read.parquet(warehouse(filename).resolve(model).toString)
+        .orderBy("row_id").collect().map(_.toSeq).toSeq
+
+    it("and a CSV upload of the same cells build equal stg and fct rows") {
+      svc.upload("LA", "p1", "corporate_dialect_csv.csv",
+        csvOf("dialect.csv", cells))
+      svc.uploadArrow("LA", "p1", "corporate_dialect_arrow.csv", arrowOf(cells))
+      Seq("corporate.stg_corporate", "corporate.fct_corporate").foreach { m =>
+        val fromCsv = table("corporate_dialect_csv.csv", m)
+        assert(fromCsv.size == 3)
+        assert(table("corporate_dialect_arrow.csv", m) == fromCsv, m)
+      }
+      // the cells arrive as sent: quotes doubled in, padding kept
+      val stg = table("corporate_dialect_arrow.csv", "corporate.stg_corporate")
+      assert(stg.map(_(3)) == Seq("say \"hi\"", " pad ", "a \"b\", c"))
+      assert(stg.map(_(2)) == Seq("Ops, North", null, null))
+    }
+
+    it("runs the Spark jobs of a CSV upload of the same cells, and no more") {
+      val s = svc
+      val csv = csvOf("jobs.csv", cells)
+      val batches = arrowOf(cells)
+      // one upload of each first, so neither count includes a first build
+      s.upload("LA", "p1", "corporate_jobs_csv.csv", csv)
+      s.uploadArrow("LA", "p1", "corporate_jobs_arrow.csv", batches)
+      val csvJobs = jobsDuring(s.upload("LA", "p1", "corporate_jobs_csv.csv", csv))
+      val arrowJobs = jobsDuring(
+        s.uploadArrow("LA", "p1", "corporate_jobs_arrow.csv", batches))
+      assert(arrowJobs == csvJobs)
+      // and takes no detour through a DataFrame write and a temp dir
+      val src = Files.readString(
+        java.nio.file.Paths.get("src/main/scala/graft/engine/GraftService.scala"))
+      val from = src.indexOf("def uploadArrow")
+      val body = src.substring(from, src.indexOf("/**", from))
+      Seq("fromArrowBatches", "coalesce", "createTempDirectory", "Files.walk")
+        .foreach(n => assert(!body.contains(n), s"uploadArrow calls $n"))
+    }
+
+    it("with a batch whose schema differs from the first is 400 and leaves nothing") {
+      import java.io.DataOutputStream
+      import java.net.{HttpURLConnection, URI}
+      val filename = "corporate_mixed.csv"
+      val other = {
+        import spark.implicits._
+        ArrowBridge.toArrowBatches(Seq(("1", "x")).toDF("Row ID", "Year"))
+      }
+      def entries: List[String] = {
+        val ls = Files.list(Tenancy.rawPath(storage, la, filename).getParent)
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.contains(filename)).toList
+        finally ls.close()
+      }
+      val http = new GraftHttpServer(svc)
+      val port = http.start()
+      def put(batches: Seq[Array[Byte]]): (Int, String) = {
+        val c = new URI(s"http://127.0.0.1:$port/files/$filename").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestMethod("PUT")
+        c.setRequestProperty("X-Graft-Client", "LA")
+        c.setRequestProperty("X-Graft-Password", "p1")
+        c.setDoOutput(true)
+        val body = new DataOutputStream(c.getOutputStream)
+        ArrowBridge.writeFramed(body, batches.iterator)
+        body.close()
+        val code = c.getResponseCode
+        (code, new String(c.getErrorStream.readAllBytes(), "UTF-8"))
+      }
+      try {
+        val (mixed, why) = put(arrowOf(cells).toSeq ++ other)
+        assert(mixed == 400, why)
+        assert(why.contains("differs from the first"), why)
+        assert(entries.isEmpty)
+        val (empty, _) = put(Nil)
+        assert(empty == 400)
+        assert(entries.isEmpty)
+      } finally http.stop()
+    }
+  }
+
+  it("builds concurrent same-name uploads each from its own bytes") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicBoolean
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val filename = "corporate_samename.csv"
+    // upload k: 40 * k rows of title T, pay k each; totals differ per upload
+    val uploads = (1 to 4).map(k => Seq.fill(40 * k)("T" -> k))
+    val expected = uploads.map(u => (u.size.toLong, u.map(_._2).sum.toDouble))
+    val sources = uploads.zipWithIndex.map { case (u, k) =>
+      corporateCsv(s"samename_$k.csv", u) }
+    def totals(r: Seq[Seq[Any]]): (Long, Double) =
+      (r.map(_(1).asInstanceOf[Long]).sum, r.map(_(2).asInstanceOf[Double]).sum)
+    val s = svc
+    val seen = new ConcurrentLinkedQueue[Either[String, (Long, Double)]]()
+    val stop = new AtomicBoolean(false)
+    val reader = new Thread(() =>
+      while (!stop.get) {
+        try seen.add(Right(totals(rows(
+          s.budgetReportArrow("LA", "p1", filename)))))
+        catch {
+          case e: NoSuchElementException if e.getMessage == "NOT_FOUND" => ()
+          case e: Throwable => seen.add(Left(String.valueOf(e)))
+        }
+        Thread.sleep(5)
+      })
+    reader.start()
+    try {
+      val all = (0 until 2).flatMap(_ => sources.map(src =>
+        Future(s.upload("LA", "p1", filename, src))))
+      all.foreach(f => Await.result(f, 300.seconds))
+    } finally { stop.set(true); reader.join() }
+    seen.add(Right(totals(rows(storedReport(filename)))))
+    val errors = seen.asScala.toSeq.collect { case Left(e) => e }
+    assert(errors.isEmpty, s"answers neither a report nor NOT_FOUND: $errors")
+    val wrong = seen.asScala.toSeq.collect { case Right(t) => t }.distinct
+      .filterNot(expected.contains)
+    assert(wrong.isEmpty, s"reports matching no upload: $wrong, uploads $expected")
+    assert(rows(storedReport(filename)) == freshRows(filename))
   }
 
   it("answers an unexpected error with INTERNAL_ERROR and an id the log carries") {
