@@ -43,13 +43,28 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * errors to 500. A 500
   * body is `INTERNAL_ERROR <id>`; the same id heads the error's log line,
   * which carries the stack trace, so a caller's report finds the cause.
+  *
+  * Every accepted connection runs with `TCP_NODELAY`. The JDK server
+  * writes a response's headers and its body in separate writes; under
+  * Nagle the body waits for the ACK of the headers, and the client's
+  * delayed-ACK timer (40 ms on Linux) holds that ACK back, so every
+  * response — report, upload `OK`, listing, error, an export's last
+  * chunk — took about 44 ms on loopback whatever its size. The JDK's only
+  * switch is the system property `sun.net.httpserver.nodelay`, which
+  * `sun.net.httpserver.ServerConfig` reads once, in its static
+  * initializer, on the first `HttpServer.create` in the JVM; there is no
+  * per-socket API. The companion object sets it (unless `-D` already did)
+  * and is the one place a listener is created, so the property is in
+  * place before that first read.
   */
 final class GraftHttpServer(service: GraftService, port: Int = 0) {
 
   private val log = LogManager.getLogger(classOf[GraftHttpServer])
 
+  // through the companion: its initializer sets the no-delay property
+  // before the JDK's one read of it (see the class doc)
   private val server =
-    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    GraftHttpServer.listen(new InetSocketAddress("127.0.0.1", port))
   // small fixed pool: each request may run Spark jobs; unbounded request
   // concurrency would just queue on the cluster anyway
   server.setExecutor(Executors.newFixedThreadPool(4))
@@ -135,6 +150,14 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
 
 object GraftHttpServer {
 
+  // read once per JVM, on the first HttpServer.create: set here, before
+  // listen can run; an explicit -Dsun.net.httpserver.nodelay still wins
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+
   /** Upload body cap in bytes, frame headers included (1 GiB). */
   val MaxBodyBytes: Long = 1L << 30
+
+  /** The one `HttpServer.create`: a call initializes this object first. */
+  private def listen(addr: InetSocketAddress): HttpServer =
+    HttpServer.create(addr, 0)
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, NoSuchFileException, Path}
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 import org.apache.spark.sql.graftshim.ArrowBridge
@@ -89,25 +89,25 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     * (the reference's do_get wire format, `serve_flight.py:301,330`).
     * Authenticates, then reads the report the build stored; only a
     * warehouse with no stored report (built before reports were stored)
-    * computes it, and a filename never uploaded is NOT_FOUND. A stored
-    * report whose frames do not fit its file is an IllegalStateException.
+    * computes it, and a filename never uploaded is NOT_FOUND. A read
+    * racing a same-name swap is retried under the swap's lock
+    * ([[Pipeline.storedReport]]), so a live build is never NOT_FOUND. A
+    * stored report whose frames do not fit its file is an
+    * IllegalStateException.
     */
   def budgetReportArrow(clientId: String, password: String,
                         filename: String): Array[Array[Byte]] = {
     val tenant = Tenancy.authenticated(users, clientId, password)
-    val stored = Tenancy.cleanDir(storageBase, tenant, filename)
-      .resolve(Pipeline.BudgetReportFile)
+    val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
     // one open: a swap after it cannot mix two builds into the answer
-    val bytes =
-      try Some(Files.readAllBytes(stored))
-      catch { case _: NoSuchFileException => None }
+    val bytes = Pipeline.storedReport(warehouse)
     bytes.fold(Reports.budgetReportArrow(fctOf(tenant, filename))) { b =>
       // the build wrote these frames: one that does not fit the file is
       // damage on disk, a server fault (500), not a client error
       try ArrowBridge.readFramed(new java.io.ByteArrayInputStream(b), b.length)
       catch {
         case e: IllegalArgumentException =>
-          throw new IllegalStateException(s"damaged stored report: $stored", e)
+          throw new IllegalStateException(s"damaged stored report in $warehouse", e)
       }
     }
   }

@@ -1,10 +1,10 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
 import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
-import org.apache.spark.sql.graftshim.ArrowBridge
+import org.apache.spark.sql.graftshim.{ArrowBridge, GraftShim}
 import graft.engine.models.{Corporate, Education, Hospital}
 
 /** Model DAG + materialization (SURVEY.md §2.12 M1-M8), re-created
@@ -121,12 +121,16 @@ object Pipeline {
       var built = Map.empty[String, DataFrame]
       ordered.foreach { m =>
         val out = tmp.resolve(m.name).toString
-        m.build(spark, built).write.mode("overwrite").parquet(out)
+        val df = m.build(spark, built)
+        df.write.mode("overwrite").parquet(out)
         // read back the materialized table so downstream models consume the
-        // written parquet, not a re-computed plan (FULL semantics); a plain
-        // read, since this per-build scratch path would only grow the
-        // schema catalog — its schema is pinned under the final path below
-        val table = spark.read.parquet(out)
+        // written parquet, not a re-computed plan (FULL semantics), with
+        // the schema the write stored (df's, all nullable), so the read
+        // runs no inference job; not through the catalog, since this
+        // per-build scratch path would only grow it — the schema is pinned
+        // under the final path below
+        val table =
+          spark.read.schema(GraftShim.asNullable(df.schema)).parquet(out)
         // audits run on the written data, inside the build — a failing
         // audit aborts BEFORE the swap, so it can never go live
         Audits.enforce(table, m.audits)
@@ -258,6 +262,20 @@ object Pipeline {
       Files.write(marker, fp.getBytes("UTF-8"))
       built
     }
+  }
+
+  /** The bytes of the budget report stored in `warehouse`, or None when
+    * it holds none. A read that misses is retried once under [[swapIn]]'s
+    * lock: a same-name swap moves the live warehouse aside before it
+    * renames the new one in, and a read between the two renames would
+    * otherwise miss a report both builds have.
+    */
+  private[engine] def storedReport(warehouse: Path): Option[Array[Byte]] = {
+    val stored = warehouse.resolve(BudgetReportFile)
+    def read() =
+      try Some(Files.readAllBytes(stored))
+      catch { case _: NoSuchFileException => None }
+    read().orElse(synchronized(read()))
   }
 
   /** Put the directory `tmp` live at `live`: the old `live` renamed aside,

@@ -28,4 +28,10 @@ object GraftShim {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `StructType.asNullable` (private[spark]): the schema with every field,
+    * element and value nullable — what a file-source write stores.
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

@@ -133,8 +133,6 @@ class ReadersSuite extends SparkSpec {
     // Each allowed site reads a path that is unique per run or replaced
     // right after, so a catalog entry for it would only grow the map.
     val allowed = Map(
-      "engine/Pipeline.scala" ->
-        (1, "the per-build .tmp- read-back of each model before the swap"),
       "engine/Warehouse.scala" ->
         (3, "compaction input, and durable-MV generation dirs (two reads)"),
       "queries/Round7Queries.scala" -> (2, "q121 and q122 temp dirs"),

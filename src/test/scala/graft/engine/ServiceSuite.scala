@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.ArrowBridge
 import scala.jdk.CollectionConverters._
@@ -424,24 +424,32 @@ class ServiceSuite extends SparkSpec {
         (r.map(_(1).asInstanceOf[Long]).sum, r.map(_(2).asInstanceOf[Double]).sum)
       val expected = builds.map(b => (b.size.toLong, b.map(_._2).sum.toDouble))
       svc.upload("LA", "p1", filename, corporateCsv("race_0.csv", builds(0)))
+      // the reader spins, so reads land between a swap's two renames; it
+      // keeps an answer only when it differs from the one before
       val answers = new ConcurrentLinkedQueue[Either[String, Seq[Seq[Byte]]]]()
       val stop = new AtomicBoolean(false)
       val s = svc
-      val reader = new Thread(() =>
-        while (!stop.get) {
-          answers.add(
-            try Right(s.budgetReportArrow("LA", "p1", filename).map(_.toSeq).toSeq)
-            catch { case e: Throwable => Left(String.valueOf(e)) })
-          Thread.sleep(2)
-        })
+      val reader = new Thread(() => {
+        var last = Array.empty[AnyRef]
+        while (!stop.get)
+          try {
+            val b: Array[AnyRef] = s.budgetReportArrow("LA", "p1", filename)
+              .map(f => f: AnyRef)
+            if (!java.util.Arrays.deepEquals(b, last)) {
+              answers.add(Right(b.map(_.asInstanceOf[Array[Byte]].toSeq).toSeq))
+              last = b
+            }
+          } catch { case e: Throwable => answers.add(Left(String.valueOf(e))) }
+      })
       reader.start()
       try (1 to 6).foreach(i => s.upload("LA", "p1", filename,
         corporateCsv(s"race_$i.csv", builds(i % 3))))
       finally { stop.set(true); reader.join() }
       val got = answers.asScala.toSeq
+      // the first build went live before the reader started: every answer
+      // is some build's report, never NOT_FOUND
       val errors = got.collect { case Left(e) => e }
-        .filterNot(_ == new NoSuchElementException("NOT_FOUND").toString)
-      assert(errors.isEmpty, s"answers neither a report nor NOT_FOUND: $errors")
+      assert(errors.isEmpty, s"answers that are no build's report: $errors")
       val seen = got.collect { case Right(b) => b }.distinct
         .map(b => sums(rows(b.map(_.toArray).toArray)))
       assert(seen.forall(expected.contains),
@@ -716,6 +724,97 @@ class ServiceSuite extends SparkSpec {
       http.stop()
       logger.removeAppender(capture)
       capture.stop()
+    }
+  }
+
+  describe("a build's read-back of each model") {
+    it("is read with the schema a plain read of the written parquet infers") {
+      val uploads = Seq(
+        ("LA", "p1", "corporate_schema.csv",
+          corporateCsv("schema_c.csv", Seq("A" -> 1000, "B" -> 5))),
+        ("NJ", "p2", "education_schema.csv", writeCsv("schema_e.csv",
+          """last_name,first_name,district,school,primary_job,fte,experience_total,certificate,salary
+            |Smith,Ann,Newark,Lincoln,Teacher,,17,Std,64000
+            |""")),
+        ("US", "p3", "hospital_schema.csv", writeCsv("schema_h.csv",
+          """Provider Name,Provider City,Provider State,DRG Definition, Total Discharges , Average Total Payments ,Average Medicare Payments
+            |General,LA,CA,DRG X,10,1000.5,800.0
+            |""")))
+      uploads.foreach { case (client, password, filename, csv) =>
+        val tenant = users.find(_.clientId == client).get
+        val built = svc.upload(client, password, filename, csv)
+        assert(built.size == 2)
+        built.foreach { case (model, table) =>
+          val live = Tenancy.cleanDir(storage, tenant, filename).resolve(model)
+          assert(table.schema == spark.read.parquet(live.toString).schema,
+            model)
+        }
+      }
+    }
+
+    it("runs no Spark job, so a steady-state upload runs 5") {
+      val s = svc
+      val filename = "corporate_readback.csv"
+      val csv = corporateCsv("readback.csv", Seq("A" -> 100, "B" -> 200))
+      s.upload("LA", "p1", filename, csv)
+      // the raw CSV's header read, one job per model write and the stored
+      // report's two (aggregate, then its one-partition sort); a read-back
+      // that inferred its schema would add one job per model
+      assert(jobsDuring(s.upload("LA", "p1", filename, csv)) == 5)
+    }
+  }
+
+  describe("the HTTP listener") {
+    import java.net.{HttpURLConnection, URI}
+
+    it("answers a report and a listing in milliseconds, not a delayed ACK") {
+      val filename = "corporate_latency.csv"
+      svc.upload("LA", "p1", filename,
+        corporateCsv("latency.csv", Seq("A" -> 100, "B" -> 200, "A" -> 5)))
+      val http = new GraftHttpServer(svc)
+      val port = http.start()
+      // each body is read to its end and closed, so HttpURLConnection
+      // sends the next request on the same kept-alive connection
+      def get(path: String): Long = {
+        val start = System.nanoTime()
+        val c = new URI(s"http://127.0.0.1:$port$path").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestProperty("X-Graft-Client", "LA")
+        c.setRequestProperty("X-Graft-Password", "p1")
+        val in = c.getInputStream
+        try in.readAllBytes() finally in.close()
+        val took = System.nanoTime() - start
+        assert(c.getResponseCode == 200, path)
+        took
+      }
+      def medianMs(path: String): Double = {
+        (1 to 5).foreach(_ => get(path))
+        val took = (1 to 20).map(_ => get(path)).sorted
+        (took(9) + took(10)) / 2e6
+      }
+      try {
+        // a response stalled by Nagle behind the client's delayed ACK
+        // takes about 44 ms on Linux loopback, whatever its size
+        val report = medianMs(s"/files/$filename/report")
+        val listing = medianMs("/files")
+        assert(report < 20.0, s"report median $report ms")
+        assert(listing < 20.0, s"listing median $listing ms")
+      } finally http.stop()
+    }
+
+    it("is created only in GraftHttpServer.scala, where no-delay is set") {
+      val needle = "HttpServer.create"
+      val home = Paths.get("src/main/scala/graft/engine/GraftHttpServer.scala")
+      val walk = Files.walk(Paths.get("src/main"))
+      val main =
+        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally walk.close()
+      assert(main.contains(home))
+      assert(Files.readString(home).contains(needle))
+      val offenders =
+        main.filter(p => p != home && Files.readString(p).contains(needle))
+      assert(offenders.isEmpty,
+        s"$needle outside $home: ${offenders.mkString(", ")}")
     }
   }
 
