@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.net.InetSocketAddress
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.logging.log4j.LogManager
@@ -23,9 +23,9 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   *  - `PUT  /files/{filename}`         do_put: body = framed Arrow batches,
   *    pulled one frame at a time into the raw CSV after auth
   *  - `GET  /files/{filename}/report`  do_get get_budget_report — the
-  *    report the upload's build stored beside its fct, streamed with no
-  *    Spark job ([[GraftService.budgetReportArrow]]; computed only for a
-  *    warehouse built before reports were stored)
+  *    report stored with the live build, streamed with no Spark job; the
+  *    first request of a build computes and stores it
+  *    ([[GraftService.budgetReportArrow]])
   *  - `GET  /files/{filename}/export`  do_get get_full_clean — STREAMED
   *    via [[ArrowBridge.toArrowBatchIterator]], so a full export never
   *    materializes on the driver (chunked transfer encoding)
@@ -38,7 +38,10 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * cap is answered 413 PAYLOAD_TOO_LARGE before the body is read, and so
   * is a frame that would take the running total past it. Auth failures
   * map to 401 with the service's uniform AUTHENTICATION_FAILED (no
-  * client-id enumeration) before the body is read, a report or export of
+  * client-id enumeration) before the body is read; the unread rest of a
+  * refused body, up to [[GraftHttpServer.DrainBytes]], is then read and
+  * discarded before the connection closes, so a client still sending it
+  * reads its status instead of failing on the write. A report or export of
   * a file never uploaded to 404, other rejections to 400, unexpected
   * errors to 500. A 500
   * body is `INTERNAL_ERROR <id>`; the same id heads the error's log line,
@@ -55,7 +58,12 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   * initializer, on the first `HttpServer.create` in the JVM; there is no
   * per-socket API. The companion object sets it (unless `-D` already did)
   * and is the one place a listener is created, so the property is in
-  * place before that first read.
+  * place before that first read. The drain bound is a property of the
+  * same kind (`sun.net.httpserver.drainAmount`), set in the same place.
+  *
+  * [[stop]] closes the listener and then shuts down its request pool,
+  * waiting for the requests in flight, so a stopped server leaves no
+  * thread behind.
   */
 final class GraftHttpServer(service: GraftService, port: Int = 0) {
 
@@ -67,13 +75,21 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
     GraftHttpServer.listen(new InetSocketAddress("127.0.0.1", port))
   // small fixed pool: each request may run Spark jobs; unbounded request
   // concurrency would just queue on the cluster anyway
-  server.setExecutor(Executors.newFixedThreadPool(4))
+  private val pool = Executors.newFixedThreadPool(4)
+  server.setExecutor(pool)
   server.createContext("/files", (ex: HttpExchange) => handle(ex))
 
   /** Start listening; returns the bound port (ephemeral when 0). */
   def start(): Int = { server.start(); server.getAddress.getPort }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop listening, close every connection, and wait (up to a minute)
+    * for the requests in flight; then the pool's threads are gone.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(60, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
 
   private def handle(ex: HttpExchange): Unit =
     try route(ex)
@@ -150,12 +166,19 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
 
 object GraftHttpServer {
 
-  // read once per JVM, on the first HttpServer.create: set here, before
-  // listen can run; an explicit -Dsun.net.httpserver.nodelay still wins
-  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
-
   /** Upload body cap in bytes, frame headers included (1 GiB). */
   val MaxBodyBytes: Long = 1L << 30
+
+  /** How much of a request body the handler left unread (a refused
+    * upload's) is read and discarded before the connection closes (64 MiB).
+    */
+  val DrainBytes: Long = 64L << 20
+
+  // read once per JVM, on the first HttpServer.create: set here, before
+  // listen can run; an explicit -D of either still wins
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+  System.getProperties.putIfAbsent("sun.net.httpserver.drainAmount",
+    DrainBytes.toString)
 
   /** The one `HttpServer.create`: a call initializes this object first. */
   private def listen(addr: InetSocketAddress): HttpServer =

@@ -1,8 +1,10 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
 import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.current_timestamp
 import org.apache.spark.sql.graftshim.{ArrowBridge, GraftShim}
 import graft.engine.models.{Corporate, Education, Hospital}
@@ -79,11 +81,17 @@ object Pipeline {
   def fctModel(industry: String): String = s"$industry.fct_$industry"
 
   /** The budget report of a warehouse's fct, framed Arrow IPC batches
-    * ([[ArrowBridge.writeFramed]]) at the warehouse root. Underscore-
-    * prefixed like `_fingerprint`, so Spark's file discovery and
-    * `listFiles` both skip it.
+    * ([[ArrowBridge.writeFramed]]) at the warehouse root, stored by the
+    * first request for it ([[storeReport]]). Underscore-prefixed like
+    * `_fingerprint`, so Spark's file discovery and `listFiles` both skip
+    * it.
     */
   val BudgetReportFile = "_budget_report.arrow"
+
+  /** The id of a warehouse's build, written into it before its swap: a
+    * report stored for one build can then never go live in another.
+    */
+  val BuildFile = "_build"
 
   /** Topological order of a model selection (M3 — selective plan). */
   def topoOrder(models: Seq[ModelSpec]): Seq[ModelSpec] = {
@@ -104,7 +112,11 @@ object Pipeline {
     * `warehouse/<model_name>/` parquet dirs, built in dependency order.
     * The upload builds into a UNIQUE temp sibling (so concurrent retries
     * of the same upload cannot clobber each other's in-progress build),
-    * then [[swapIn]]s it.
+    * marks it with its id ([[BuildFile]]), then [[swapIn]]s it. Every
+    * `current_timestamp()` in the models reads the build's one instant,
+    * bound so that each build runs the same generated code (no compile
+    * per upload). Without audits the build runs one Spark job per model
+    * write and nothing else: the report is computed on its first request.
     */
   def materialize(spark: SparkSession, models: Seq[ModelSpec],
                   warehouse: Path): Map[String, DataFrame] = {
@@ -117,11 +129,12 @@ object Pipeline {
     // warehouse is swept here (a crashed rename has no other cleanup path).
     val tmp = warehouse.resolveSibling(s".$name.tmp-$tag")
     sweepStaleScratch(warehouse)
+    val instant = DateTimeUtils.instantToMicros(java.time.Instant.now())
     try {
       var built = Map.empty[String, DataFrame]
       ordered.foreach { m =>
         val out = tmp.resolve(m.name).toString
-        val df = m.build(spark, built)
+        val df = GraftShim.bindCurrentTimestamp(m.build(spark, built), instant)
         df.write.mode("overwrite").parquet(out)
         // read back the materialized table so downstream models consume the
         // written parquet, not a re-computed plan (FULL semantics), with
@@ -134,14 +147,10 @@ object Pipeline {
         // audits run on the written data, inside the build — a failing
         // audit aborts BEFORE the swap, so it can never go live
         Audits.enforce(table, m.audits)
-        // the report is a function of the audited fct alone: computed once
-        // here, it goes live in the same rename as the fct it was read from
-        if (m.name == fctModel(m.name.takeWhile(_ != '.'))) {
-          writeFile(tmp.resolve(BudgetReportFile))(ArrowBridge.writeFramed(_,
-            Reports.budgetReportArrow(table).iterator))
-        }
         built += m.name -> table
       }
+      Files.writeString(tmp.resolve(BuildFile),
+        java.util.UUID.randomUUID().toString)
       swapIn(tmp, warehouse)
       // the rename moved the very files each read-back scanned: pin its
       // schema under the live path, so reads after the swap infer nothing
@@ -265,17 +274,49 @@ object Pipeline {
   }
 
   /** The bytes of the budget report stored in `warehouse`, or None when
-    * it holds none. A read that misses is retried once under [[swapIn]]'s
-    * lock: a same-name swap moves the live warehouse aside before it
-    * renames the new one in, and a read between the two renames would
-    * otherwise miss a report both builds have.
+    * it holds none.
     */
-  private[engine] def storedReport(warehouse: Path): Option[Array[Byte]] = {
-    val stored = warehouse.resolve(BudgetReportFile)
+  private[engine] def storedReport(warehouse: Path): Option[Array[Byte]] =
+    readLive(warehouse.resolve(BudgetReportFile))
+
+  /** The id of the build live at `warehouse`, or None when none is. */
+  private[engine] def liveBuild(warehouse: Path): Option[String] =
+    readLive(warehouse.resolve(BuildFile)).map(new String(_, UTF_8))
+
+  /** A file of a live warehouse, or None when it is missing. A read that
+    * misses is retried once under [[swapIn]]'s lock: a same-name swap moves
+    * the live warehouse aside before it renames the new one in, and a read
+    * between the two renames would otherwise miss a file both builds have.
+    */
+  private def readLive(file: Path): Option[Array[Byte]] = {
     def read() =
-      try Some(Files.readAllBytes(stored))
+      try Some(Files.readAllBytes(file))
       catch { case _: NoSuchFileException => None }
     read().orElse(synchronized(read()))
+  }
+
+  /** Store `report`, computed from build `build` of `warehouse`, as that
+    * warehouse's [[BudgetReportFile]], if `build` is still the live one;
+    * returns whether it was stored. The frames are written beside the
+    * warehouse, where no swap deletes them mid-write (a crash's leftover is
+    * swept like a build's scratch), and renamed in under [[swapIn]]'s
+    * lock, so a report that lost a race with a swap is never stored over
+    * the newer build.
+    */
+  private[engine] def storeReport(warehouse: Path, build: String,
+                                  report: Array[Array[Byte]]): Boolean = {
+    val tmp = warehouse.resolveSibling(s".${warehouse.getFileName}.tmp-" +
+      s"report-${java.util.UUID.randomUUID().toString.take(8)}")
+    try {
+      writeFile(tmp)(ArrowBridge.writeFramed(_, report.iterator))
+      synchronized {
+        liveBuild(warehouse).contains(build) && {
+          Files.move(tmp, warehouse.resolve(BudgetReportFile),
+            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+          true
+        }
+      }
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Put the directory `tmp` live at `live`: the old `live` renamed aside,

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.StructType
 
 /** Sources (SURVEY.md §2.1).
@@ -42,13 +43,17 @@ object Readers {
     "escape" -> "\"", "ignoreLeadingWhiteSpace" -> "false",
     "ignoreTrailingWhiteSpace" -> "false")
 
-  /** S1 — all-varchar CSV scan. Spark's CSV reader already defaults every
-    * column to StringType when schema inference is off, which is exactly
-    * DuckDB's `all_varchar=True` semantics; a header pass resolves names at
-    * runtime (same late-binding as the reference — SURVEY.md §4).
+  /** S1 — all-varchar CSV scan: every column StringType, which is exactly
+    * DuckDB's `all_varchar=True` semantics, named from the file's header at
+    * runtime (same late-binding as the reference — SURVEY.md §4). The
+    * header is read on the driver with Spark's own header logic
+    * ([[GraftShim.csvHeaderSchema]]) and given to the scan as its schema,
+    * so the names are the ones Spark's header pass would give and the read
+    * runs no header job.
     */
   def csvAllVarchar(spark: SparkSession, path: String): DataFrame =
-    spark.read.options(CsvDialect).csv(path)
+    spark.read.schema(GraftShim.csvHeaderSchema(spark, path, CsvDialect))
+      .options(CsvDialect).csv(path)
 
   /** S2 — DuckDB `normalize_names=True` column-name rule: trim, lowercase,
     * every run of non-alphanumerics becomes a single underscore, and leading/

@@ -43,9 +43,8 @@ object Reports {
       .orderBy(desc("total_budget"), asc_nulls_last("job_title"))
 
   /** The budget report as Arrow IPC batches (S7's wire payload). The one
-    * encoding of the report: [[Pipeline.materialize]] stores it with each
-    * build, and [[GraftService.budgetReportArrow]] computes it only for a
-    * warehouse that holds no stored copy.
+    * encoding of the report: [[GraftService.budgetReportArrow]] computes it
+    * on a build's first report request and stores it with that build.
     */
   def budgetReportArrow(fct: DataFrame): Array[Array[Byte]] =
     ArrowBridge.toArrowBatches(budgetReport(fct))

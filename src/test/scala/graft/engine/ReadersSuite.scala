@@ -129,6 +129,73 @@ class ReadersSuite extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
+  describe("the all-varchar CSV read's driver header") {
+    /** Spark's own header pass over the same file: the read it replaces. */
+    def sparkPass(path: String) =
+      spark.read.options(Readers.CsvDialect).csv(path)
+    def csv(name: String, content: String): String = {
+      val p = tempDir("readers_csv").resolve(name)
+      Files.write(p, content.getBytes("UTF-8"))
+      p.toString
+    }
+    val cases = Seq(
+      "quoted.csv" -> ("\"a, b\",\"say \"\"hi\"\"\",plain\n" +
+        "1,2,3\n\"x, y\",\"q\"\"\",\n"),
+      "cased.csv" -> "Name,name,NAME,other\n1,2,3,4\n",
+      "emptyname.csv" -> "a,,c,\"\"\n1,2,3,4\n",
+      "hospital.csv" -> (" Provider Name , Total Discharges ,Average Total Payments \n" +
+        "General, 10 ,1000.5\n"),
+      "crlf.csv" -> "k,v\r\n1,2\r\n",
+      "headeronly.csv" -> "Row ID,Year,Job Class Title\n",
+      "blankfirst.csv" -> "\n  \nk,v\n1,2\n")
+
+    it("names the columns as Spark's header pass does, and reads the same rows") {
+      cases.foreach { case (name, content) =>
+        val path = csv(name, content)
+        val ours = Readers.csvAllVarchar(spark, path)
+        val theirs = sparkPass(path)
+        assert(ours.schema == theirs.schema, name)
+        assert(ours.collect().toSeq == theirs.collect().toSeq, name)
+        assert(Readers.normalizeColumns(ours).columns.toSeq ==
+          Readers.normalizeColumns(theirs).columns.toSeq, name)
+      }
+      // duplicates that differ only in case get their index, as in Spark
+      assert(Readers.csvAllVarchar(spark, csv("c.csv", cases(1)._2)).columns
+        .toSeq == Seq("Name0", "name1", "NAME2", "other"))
+    }
+
+    it("runs no Spark job to name the columns") {
+      val path = csv("jobs.csv", cases.head._2)
+      assert(jobsDuring(sparkPass(path).schema) >= 1)
+      assert(jobsDuring(Readers.csvAllVarchar(spark, path).schema) == 0)
+    }
+
+    it("fails an empty file's model as Spark's header pass does") {
+      val path = csv("empty.csv", "")
+      def outcome(raw: => org.apache.spark.sql.DataFrame) =
+        try Right(graft.engine.models.Corporate.stg(raw).schema)
+        catch { case e: org.apache.spark.sql.AnalysisException =>
+          Left(e.getCondition) }
+      val theirs = outcome(sparkPass(path))
+      assert(theirs.isLeft)
+      assert(outcome(Readers.csvAllVarchar(spark, path)) == theirs)
+    }
+  }
+
+  it("reads no CSV in src/main without a schema") {
+    // a CSV read given no schema runs Spark's header pass, one job per read
+    val read = """(?s)\.read(Stream)?\b((?!\.write)[^;{}])*?(\.csv\(|"csv"\))""".r
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val reads = sources.flatMap(p =>
+      read.findAllIn(Files.readString(p)).map(p.getFileName.toString -> _))
+    assert(reads.exists(_._1 == "Readers.scala"))
+    val bare = reads.filterNot(_._2.contains(".schema("))
+    assert(bare.isEmpty, s"CSV reads without a schema: $bare")
+  }
+
   it("keeps parquet reads in Readers, apart from named scratch round trips") {
     // Each allowed site reads a path that is unique per run or replaced
     // right after, so a catalog entry for it would only grow the map.

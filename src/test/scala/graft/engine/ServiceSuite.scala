@@ -294,15 +294,25 @@ class ServiceSuite extends SparkSpec {
   }
 
   describe("the budget report stored with each build") {
-    it("is served with no Spark job") {
-      svc.upload("LA", "p1", "corporate_stored.csv",
+    it("is computed and stored by the first request, and read by the next with no Spark job") {
+      val filename = "corporate_stored.csv"
+      svc.upload("LA", "p1", filename,
         corporateCsv("stored.csv", Seq("A" -> 100, "B" -> 300, "A" -> 50)))
+      val stored = warehouse(filename).resolve(Pipeline.BudgetReportFile)
+      // the build ran its model writes and nothing else
+      assert(!Files.exists(stored))
       val s = svc
-      var answer: Array[Array[Byte]] = null
+      var first: Array[Array[Byte]] = null
       assert(jobsDuring {
-        answer = s.budgetReportArrow("LA", "p1", "corporate_stored.csv")
+        first = s.budgetReportArrow("LA", "p1", filename)
+      } > 0)
+      assert(rows(first) == freshRows(filename))
+      assert(rows(storedReport(filename)) == rows(first))
+      var second: Array[Array[Byte]] = null
+      assert(jobsDuring {
+        second = s.budgetReportArrow("LA", "p1", filename)
       } == 0)
-      assert(rows(answer) == freshRows("corporate_stored.csv"))
+      assert(rows(second) == rows(first))
     }
 
     it("holds exactly the rows of its live fct, CSV and Arrow uploads alike") {
@@ -310,10 +320,14 @@ class ServiceSuite extends SparkSpec {
       val first = Seq("B" -> 300, "A" -> 100, "C" -> 300, "A" -> 200, "D" -> 50)
       val second = Seq("G" -> 10, "E" -> 10, "F" -> 10, "E" -> 5)
       def check(filename: String, titles: Seq[String]): Unit = {
+        // a new build goes live with no report: the last one's went with it
+        assert(!Files.exists(
+          warehouse(filename).resolve(Pipeline.BudgetReportFile)))
+        val answered = rows(svc.budgetReportArrow("LA", "p1", filename))
         val stored = rows(storedReport(filename))
         assert(stored == freshRows(filename))
         assert(stored.map(_.head) == titles)
-        assert(rows(svc.budgetReportArrow("LA", "p1", filename)) == stored)
+        assert(answered == stored)
       }
       val (csv, arrow) = ("corporate_csvstore.csv", "corporate_arrowstore.csv")
       svc.upload("LA", "p1", csv, corporateCsv("store_1.csv", first))
@@ -330,7 +344,7 @@ class ServiceSuite extends SparkSpec {
       val filename = "corporate_nostore.csv"
       svc.upload("LA", "p1", filename,
         corporateCsv("nostore.csv", Seq("A" -> 100, "B" -> 100, "C" -> 7)))
-      val stored = rows(storedReport(filename))
+      val stored = rows(svc.budgetReportArrow("LA", "p1", filename))
       Files.delete(warehouse(filename).resolve(Pipeline.BudgetReportFile))
       val s = svc
       var answer: Array[Array[Byte]] = null
@@ -338,6 +352,7 @@ class ServiceSuite extends SparkSpec {
         answer = s.budgetReportArrow("LA", "p1", filename)
       } > 0)
       assert(rows(answer) == stored)
+      assert(rows(storedReport(filename)) == stored)
       // a filename never uploaded has neither: NOT_FOUND, not a computation
       assert(intercept[NoSuchElementException](
         svc.budgetReportArrow("LA", "p1", "corporate_never.csv"))
@@ -348,7 +363,7 @@ class ServiceSuite extends SparkSpec {
       val filename = "corporate_audited.csv"
       svc.upload("LA", "p1", filename,
         corporateCsv("audited_1.csv", Seq("A" -> 100, "B" -> 200)))
-      val old = rows(storedReport(filename))
+      val old = rows(svc.budgetReportArrow("LA", "p1", filename))
       intercept[IllegalStateException](Pipeline.ingest(spark, storage, users,
         "LA", "p1", filename,
         corporateCsv("audited_2.csv", Seq("C" -> 5, "D" -> 6, "D" -> 7)),
@@ -364,7 +379,6 @@ class ServiceSuite extends SparkSpec {
         corporateCsv("authfirst.csv", Seq("A" -> 100)))
       // an unreadable stored copy: reading it fails with an I/O error
       val stored = warehouse(filename).resolve(Pipeline.BudgetReportFile)
-      Files.delete(stored)
       Files.createDirectory(stored)
       assert(intercept[IllegalArgumentException](
         svc.budgetReportArrow("LA", "wrong", filename))
@@ -389,6 +403,7 @@ class ServiceSuite extends SparkSpec {
       val filename = "corporate_damaged.csv"
       svc.upload("LA", "p1", filename,
         corporateCsv("damaged.csv", Seq("A" -> 100, "B" -> 200)))
+      svc.budgetReportArrow("LA", "p1", filename)
       val stored = warehouse(filename).resolve(Pipeline.BudgetReportFile)
       val bytes = Files.readAllBytes(stored)
       val http = new GraftHttpServer(svc)
@@ -429,7 +444,9 @@ class ServiceSuite extends SparkSpec {
       val answers = new ConcurrentLinkedQueue[Either[String, Seq[Seq[Byte]]]]()
       val stop = new AtomicBoolean(false)
       val s = svc
-      val reader = new Thread(() => {
+      // two readers, so a build's first report is often computed by one
+      // while the other reads what it stored, and a swap lands mid-compute
+      val readers = (1 to 2).map(_ => new Thread(() => {
         var last = Array.empty[AnyRef]
         while (!stop.get)
           try {
@@ -440,11 +457,15 @@ class ServiceSuite extends SparkSpec {
               last = b
             }
           } catch { case e: Throwable => answers.add(Left(String.valueOf(e))) }
-      })
-      reader.start()
+      }))
+      readers.foreach(_.start())
       try (1 to 6).foreach(i => s.upload("LA", "p1", filename,
         corporateCsv(s"race_$i.csv", builds(i % 3))))
-      finally { stop.set(true); reader.join() }
+      finally { stop.set(true); readers.foreach(_.join()) }
+      // no report computed from an older build was stored over the live one
+      assert(rows(s.budgetReportArrow("LA", "p1", filename)) ==
+        freshRows(filename))
+      assert(rows(storedReport(filename)) == freshRows(filename))
       val got = answers.asScala.toSeq
       // the first build went live before the reader started: every answer
       // is some build's report, never NOT_FOUND
@@ -455,6 +476,35 @@ class ServiceSuite extends SparkSpec {
       assert(seen.forall(expected.contains),
         s"an answer matches no build: $seen, builds $expected")
       assert(seen.distinct.size > 1, s"the reader saw one build only: $seen")
+    }
+
+    it("is never stored over a newer build by a computation that read the old one") {
+      val filename = "corporate_lostrace.csv"
+      val wh = warehouse(filename)
+      def scratch: List[String] = {
+        val ls = Files.list(wh.getParent)
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(s".$filename")).toList
+        finally ls.close()
+      }
+      svc.upload("LA", "p1", filename,
+        corporateCsv("lostrace_1.csv", Seq("A" -> 100, "B" -> 200)))
+      // a report computed from build 1, whose store comes after build 2's
+      // swap has landed
+      val old = Pipeline.liveBuild(wh).get
+      val oldReport = Reports.budgetReportArrow(spark.read.parquet(
+        wh.resolve("corporate.fct_corporate").toString))
+      svc.upload("LA", "p1", filename,
+        corporateCsv("lostrace_2.csv", Seq("C" -> 5, "D" -> 6, "D" -> 7)))
+      assert(Pipeline.liveBuild(wh).exists(_ != old))
+      assert(!Pipeline.storeReport(wh, old, oldReport))
+      assert(!Files.exists(wh.resolve(Pipeline.BudgetReportFile)))
+      assert(scratch.isEmpty)
+      // the live build's own report is computed, stored and served
+      assert(rows(svc.budgetReportArrow("LA", "p1", filename)) ==
+        freshRows(filename))
+      assert(rows(storedReport(filename)) == freshRows(filename))
+      assert(rows(oldReport) != freshRows(filename))
     }
   }
 
@@ -672,7 +722,7 @@ class ServiceSuite extends SparkSpec {
         Future(s.upload("LA", "p1", filename, src))))
       all.foreach(f => Await.result(f, 300.seconds))
     } finally { stop.set(true); reader.join() }
-    seen.add(Right(totals(rows(storedReport(filename)))))
+    seen.add(Right(totals(rows(s.budgetReportArrow("LA", "p1", filename)))))
     val errors = seen.asScala.toSeq.collect { case Left(e) => e }
     assert(errors.isEmpty, s"answers neither a report nor NOT_FOUND: $errors")
     val wrong = seen.asScala.toSeq.collect { case Right(t) => t }.distinct
@@ -752,15 +802,51 @@ class ServiceSuite extends SparkSpec {
       }
     }
 
-    it("runs no Spark job, so a steady-state upload runs 5") {
+    it("runs no Spark job, so a steady-state upload runs 2") {
       val s = svc
       val filename = "corporate_readback.csv"
       val csv = corporateCsv("readback.csv", Seq("A" -> 100, "B" -> 200))
       s.upload("LA", "p1", filename, csv)
-      // the raw CSV's header read, one job per model write and the stored
-      // report's two (aggregate, then its one-partition sort); a read-back
-      // that inferred its schema would add one job per model
-      assert(jobsDuring(s.upload("LA", "p1", filename, csv)) == 5)
+      // one job per model write and nothing else: the raw CSV's header is
+      // read on the driver and the report waits for its first request; a
+      // read-back that inferred its schema would add one job per model
+      assert(jobsDuring(s.upload("LA", "p1", filename, csv)) == 2)
+    }
+  }
+
+  it("compiles no class for a steady-state upload of each industry") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the service's own clock: processed_at is current_timestamp()
+    val live = new GraftService(SparkSpec.session, storage, users)
+    val uploads = Seq(
+      ("LA", "p1", "corporate_compiles.csv", "corporate.stg_corporate",
+        (k: Int) => corporateCsv(s"compiles_c$k.csv",
+          Seq("A" -> (100 + k), "B" -> 7))),
+      ("NJ", "p2", "education_compiles.csv", "education.stg_education",
+        (k: Int) => writeCsv(s"compiles_e$k.csv",
+          s"""last_name,first_name,district,school,primary_job,fte,experience_total,certificate,salary
+            |Smith,Ann,Newark,Lincoln,Teacher,,1$k,Std,6400$k
+            |""")),
+      ("US", "p3", "hospital_compiles.csv", "hospital.stg_hospital",
+        (k: Int) => writeCsv(s"compiles_h$k.csv",
+          s"""Provider Name,Provider City,Provider State,DRG Definition, Total Discharges , Average Total Payments ,Average Medicare Payments
+            |General,LA,CA,DRG X,1$k,1000.5,800.0
+            |""")))
+    uploads.foreach { case (client, password, filename, stg, csv) =>
+      (1 to 2).foreach(k => live.upload(client, password, filename, csv(k)))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val start = System.currentTimeMillis()
+      live.upload(client, password, filename, csv(3))
+      val end = System.currentTimeMillis()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0,
+        filename)
+      // every row carries the build's one instant, taken during the upload
+      val tenant = users.find(_.clientId == client).get
+      val stamps = spark.read.parquet(Tenancy.cleanDir(storage, tenant, filename)
+        .resolve(stg).toString).select("processed_at").distinct().collect()
+      assert(stamps.length == 1, filename)
+      val at = stamps.head.getTimestamp(0).getTime
+      assert(at >= start && at <= end, s"$filename stamped at $at")
     }
   }
 
@@ -799,6 +885,42 @@ class ServiceSuite extends SparkSpec {
         val listing = medianMs("/files")
         assert(report < 20.0, s"report median $report ms")
         assert(listing < 20.0, s"listing median $listing ms")
+      } finally http.stop()
+    }
+
+    it("leaves no non-daemon thread behind once stopped") {
+      def nonDaemon: Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && !t.isDaemon).toSet
+      val before = nonDaemon
+      val http = new GraftHttpServer(svc)
+      val port = http.start()
+      val c = new URI(s"http://127.0.0.1:$port/files").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      c.setRequestProperty("X-Graft-Client", "LA")
+      c.setRequestProperty("X-Graft-Password", "p1")
+      assert(c.getResponseCode == 200)
+      c.getInputStream.close()
+      http.stop()
+      val left = (nonDaemon -- before).map(_.getName)
+      assert(left.isEmpty, s"threads left running: $left")
+    }
+
+    it("lets a client still sending a refused 11 MiB upload read its 401") {
+      val http = new GraftHttpServer(svc)
+      val port = http.start()
+      try {
+        val c = new URI(s"http://127.0.0.1:$port/files/corporate_refused.csv")
+          .toURL.openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestMethod("PUT")
+        c.setRequestProperty("X-Graft-Client", "LA")
+        c.setRequestProperty("X-Graft-Password", "wrong")
+        c.setDoOutput(true)
+        val out = c.getOutputStream
+        out.write(new Array[Byte](11 << 20))
+        out.close()
+        assert(c.getResponseCode == 401)
+        assert(new String(c.getErrorStream.readAllBytes(), "UTF-8") ==
+          "AUTHENTICATION_FAILED")
       } finally http.stop()
     }
 
