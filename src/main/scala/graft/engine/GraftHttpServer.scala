@@ -27,8 +27,8 @@ import org.apache.spark.sql.graftshim.ArrowBridge
   *    first request of a build computes and stores it
   *    ([[GraftService.budgetReportArrow]])
   *  - `GET  /files/{filename}/export`  do_get get_full_clean — STREAMED
-  *    via [[ArrowBridge.toArrowBatchIterator]], so a full export never
-  *    materializes on the driver (chunked transfer encoding)
+  *    via [[GraftService.fullExportArrow]] under the warehouse's read lock,
+  *    never materialized on the driver (chunked transfer encoding)
   *  - `GET  /files`                    do_action list_files (text listing)
   *
   * Framing ([[ArrowBridge.writeFramed]]): each Arrow IPC batch (schema
@@ -134,8 +134,7 @@ final class GraftHttpServer(service: GraftService, port: Int = 0) {
         val batches = service.budgetReportArrow(client, password, filename)
         respondFrames(ex, batches.iterator)
       case ("GET", List("files", filename, "export")) =>
-        val export = service.fullExport(client, password, filename)
-        respondFrames(ex, ArrowBridge.toArrowBatchIterator(export))
+        service.fullExportArrow(client, password, filename)(respondFrames(ex, _))
       case _ =>
         respondText(ex, 404, "NOT_FOUND")
     }

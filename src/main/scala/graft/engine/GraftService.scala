@@ -4,9 +4,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
 import org.apache.spark.sql.graftshim.ArrowBridge
-import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
-import scala.util.{Failure, Success, Try}
 
 /** The reference's four service entry points (SURVEY.md §3) as a library
   * facade — a user of the reference's Flight endpoints maps 1:1 onto these
@@ -19,8 +17,11 @@ import scala.util.{Failure, Success, Try}
   *  - do_get get_budget_report         -> [[budgetReport]] (DataFrame) /
   *                                        [[budgetReportArrow]] (Arrow
   *                                        bytes, stored per build)
-  *  - do_get get_full_clean            -> [[fullExport]]
+  *  - do_get get_full_clean            -> [[fullExport]] / [[fullExportArrow]]
   *  - do_action list_files             -> [[listFiles]]
+  *
+  * The service is a library: its caller constructs it with its tenant
+  * list (`Tenancy.parseUsersJson` reads the reference's users.json).
   *
   * An upload runs only its build's model writes. The first budget report
   * request of a build computes the report and stores it in the build's
@@ -30,6 +31,11 @@ import scala.util.{Failure, Success, Try}
   * only the result is the contract, and it is a pure function of the
   * build, so reusing it across requests is safe for as long as that build
   * is live.
+  *
+  * A warehouse's reads here and its swaps share its read/write lock
+  * ([[Pipeline.reading]]), so a report or export is one build's; where the
+  * reference queues every upload behind one global lock
+  * (`serve_flight.py:38,159`), a swap waits only for its warehouse's reads.
   */
 final class GraftService(spark: SparkSession, storageBase: Path,
                          users: Seq[Tenancy.Tenant],
@@ -44,37 +50,56 @@ final class GraftService(spark: SparkSession, storageBase: Path,
     Pipeline.ingest(spark, storageBase, users, clientId, password,
       filename, sourceCsv, now)
 
-  /** The tenant's fct for `filename`; NOT_FOUND when no upload of that
+  /** `body` over the tenant's fct for `filename`, under its warehouse's
+    * read lock ([[Pipeline.reading]]); NOT_FOUND when no upload of that
     * name has been built.
     */
-  private def fctOf(tenant: Tenancy.Tenant, filename: String): DataFrame = {
-    val fct = Tenancy.cleanDir(storageBase, tenant, filename)
-      .resolve(Pipeline.fctModel(tenant.industryType))
-    if (!Files.exists(fct)) throw new NoSuchElementException("NOT_FOUND")
-    Readers.parquet(spark, fct.toString)
+  private def withFct[A](tenant: Tenancy.Tenant, filename: String)(
+      body: DataFrame => A): A = {
+    val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
+    Pipeline.reading(warehouse) {
+      val fct = warehouse.resolve(Pipeline.fctModel(tenant.industryType))
+      if (!Files.exists(fct)) throw new NoSuchElementException("NOT_FOUND")
+      body(Readers.parquet(spark, fct.toString))
+    }
   }
 
   /** Budget report over a prior upload (`serve_flight.py:295`), optionally
-    * archived as `<base>_summary.csv` in Downloads (S8).
+    * archived as `<base>_summary.csv` in Downloads (S8) under the read lock.
+    * Lazy and unlocked: it lists the build's files when it is made, so an
+    * action on it after a same-name swap fails.
     */
   def budgetReport(clientId: String, password: String, filename: String,
                    saveCopy: Boolean = false): DataFrame = {
     val tenant = Tenancy.authenticated(users, clientId, password)
-    val report = Reports.budgetReport(fctOf(tenant, filename))
-    if (saveCopy) saveCsv(report, tenant, filename, "_summary")
-    report
+    withFct(tenant, filename) { fct =>
+      val report = Reports.budgetReport(fct)
+      if (saveCopy) saveCsv(report, tenant, filename, "_summary")
+      report
+    }
   }
 
   /** Full export ordered by job_title (`serve_flight.py:291`), optionally
-    * archived as `<base>_full_export.csv` (S8).
+    * archived as `<base>_full_export.csv` (S8); lazy like [[budgetReport]].
     */
   def fullExport(clientId: String, password: String, filename: String,
                  saveCopy: Boolean = false): DataFrame = {
     val tenant = Tenancy.authenticated(users, clientId, password)
-    val export = Reports.fullExport(fctOf(tenant, filename))
-    if (saveCopy) saveCsv(export, tenant, filename, "_full_export")
-    export
+    withFct(tenant, filename) { fct =>
+      val export = Reports.fullExport(fct)
+      if (saveCopy) saveCsv(export, tenant, filename, "_full_export")
+      export
+    }
   }
+
+  /** The full export as Arrow IPC batches pulled one partition at a time
+    * by `consume`, which runs under the warehouse's read lock: the stream
+    * is one build's rows, and a same-name swap waits for `consume`.
+    */
+  def fullExportArrow[A](clientId: String, password: String, filename: String)(
+      consume: Iterator[Array[Byte]] => A): A =
+    withFct(Tenancy.authenticated(users, clientId, password), filename)(fct =>
+      consume(ArrowBridge.toArrowBatchIterator(Reports.fullExport(fct))))
 
   /** S4 — Arrow ingest: Arrow IPC record batches (the reference's do_put
     * wire format) archived in the Raw zone as the stg reader's CSV
@@ -92,44 +117,33 @@ final class GraftService(spark: SparkSession, storageBase: Path,
 
   /** S7 — Arrow result stream: the budget report as Arrow IPC batches
     * (the reference's do_get wire format, `serve_flight.py:301,330`).
-    * Authenticates, then reads the report stored with the live build. On
-    * a miss it computes the report from the live fct and stores it, only
-    * if the build it read is still live ([[Pipeline.storeReport]]); a
-    * report that lost a race with a same-name swap is answered, as that
-    * build's whole report, but not stored. A computation that fails after
-    * a swap replaced its build (the swap deletes the files it was reading)
-    * runs again on the new one. A filename never uploaded is NOT_FOUND. A
-    * stored report whose frames do not fit its file is an
-    * IllegalStateException.
+    * Authenticates, then, under the warehouse's read lock, reads the
+    * report stored with the live build, or on a miss computes it from the
+    * live fct and stores it ([[Pipeline.storeReport]]). A filename never
+    * uploaded is NOT_FOUND. A stored report whose frames do not fit its
+    * file is an IllegalStateException.
     */
   def budgetReportArrow(clientId: String, password: String,
                         filename: String): Array[Array[Byte]] = {
     val tenant = Tenancy.authenticated(users, clientId, password)
     val warehouse = Tenancy.cleanDir(storageBase, tenant, filename)
-    @tailrec def answer(attempts: Int): Array[Array[Byte]] =
-      // one open: a swap after it cannot mix two builds into the answer
-      Pipeline.storedReport(warehouse) match {
-        case Some(b) =>
-          // stored frames that do not fit their file are damage on disk,
-          // a server fault (500), not a client error
-          try ArrowBridge.readFramed(new java.io.ByteArrayInputStream(b), b.length)
-          catch {
-            case e: IllegalArgumentException =>
-              throw new IllegalStateException(s"damaged stored report in $warehouse", e)
-          }
-        case None =>
-          val build = Pipeline.liveBuild(warehouse)
-          Try(Reports.budgetReportArrow(fctOf(tenant, filename))) match {
-            case Success(report) =>
-              build.foreach(Pipeline.storeReport(warehouse, _, report))
-              report
-            case Failure(_) if attempts > 1 &&
-                Pipeline.liveBuild(warehouse) != build =>
-              answer(attempts - 1)
-            case Failure(e) => throw e
-          }
+    val stored = warehouse.resolve(Pipeline.BudgetReportFile)
+    Pipeline.reading(warehouse) {
+      if (Files.exists(stored)) {
+        val b = Files.readAllBytes(stored)
+        // stored frames that do not fit their file are damage on disk,
+        // a server fault (500), not a client error
+        try ArrowBridge.readFramed(new java.io.ByteArrayInputStream(b), b.length)
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalStateException(s"damaged stored report in $warehouse", e)
+        }
+      } else withFct(tenant, filename) { fct =>
+        val report = Reports.budgetReportArrow(fct)
+        Pipeline.storeReport(warehouse, report)
+        report
       }
-    answer(3)
+    }
   }
 
   /** List a tenant's raw uploads and built warehouses, sorted

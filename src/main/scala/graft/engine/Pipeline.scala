@@ -1,8 +1,9 @@
 package graft.engine
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.Comparator
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.locks.ReentrantReadWriteLock
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.current_timestamp
@@ -24,6 +25,8 @@ import graft.engine.models.{Corporate, Education, Hospital}
   * paths are disjoint by construction, so Spark's scheduler can run tenant
   * uploads concurrently — the reference's process-global env-var tenancy
   * hack (SURVEY.md §7.4.7) is designed out by passing paths as arguments.
+  * A live path's reads ([[reading]]) and swaps ([[swapIn]]) share one
+  * read/write lock, so a swap waits only for the reads of its own path.
   */
 object Pipeline {
 
@@ -88,11 +91,6 @@ object Pipeline {
     */
   val BudgetReportFile = "_budget_report.arrow"
 
-  /** The id of a warehouse's build, written into it before its swap: a
-    * report stored for one build can then never go live in another.
-    */
-  val BuildFile = "_build"
-
   /** Topological order of a model selection (M3 — selective plan). */
   def topoOrder(models: Seq[ModelSpec]): Seq[ModelSpec] = {
     val byName = models.map(m => m.name -> m).toMap
@@ -112,11 +110,11 @@ object Pipeline {
     * `warehouse/<model_name>/` parquet dirs, built in dependency order.
     * The upload builds into a UNIQUE temp sibling (so concurrent retries
     * of the same upload cannot clobber each other's in-progress build),
-    * marks it with its id ([[BuildFile]]), then [[swapIn]]s it. Every
-    * `current_timestamp()` in the models reads the build's one instant,
-    * bound so that each build runs the same generated code (no compile
-    * per upload). Without audits the build runs one Spark job per model
-    * write and nothing else: the report is computed on its first request.
+    * then [[swapIn]]s it. Every `current_timestamp()` in the models reads
+    * the build's one instant, bound so that each build runs the same
+    * generated code (no compile per upload). Without audits the build runs
+    * one Spark job per model write and nothing else: the report is
+    * computed on its first request.
     */
   def materialize(spark: SparkSession, models: Seq[ModelSpec],
                   warehouse: Path): Map[String, DataFrame] = {
@@ -149,8 +147,6 @@ object Pipeline {
         Audits.enforce(table, m.audits)
         built += m.name -> table
       }
-      Files.writeString(tmp.resolve(BuildFile),
-        java.util.UUID.randomUUID().toString)
       swapIn(tmp, warehouse)
       // the rename moved the very files each read-back scanned: pin its
       // schema under the live path, so reads after the swap infer nothing
@@ -273,61 +269,55 @@ object Pipeline {
     }
   }
 
-  /** The bytes of the budget report stored in `warehouse`, or None when
-    * it holds none.
+  /** Store `report`, computed from the fct of `warehouse`, as its
+    * [[BudgetReportFile]]: written to a dot-prefixed scratch file in the
+    * warehouse, then renamed in. Call under [[reading]], so the build the
+    * report was computed from is the one it is stored in.
     */
-  private[engine] def storedReport(warehouse: Path): Option[Array[Byte]] =
-    readLive(warehouse.resolve(BudgetReportFile))
-
-  /** The id of the build live at `warehouse`, or None when none is. */
-  private[engine] def liveBuild(warehouse: Path): Option[String] =
-    readLive(warehouse.resolve(BuildFile)).map(new String(_, UTF_8))
-
-  /** A file of a live warehouse, or None when it is missing. A read that
-    * misses is retried once under [[swapIn]]'s lock: a same-name swap moves
-    * the live warehouse aside before it renames the new one in, and a read
-    * between the two renames would otherwise miss a file both builds have.
-    */
-  private def readLive(file: Path): Option[Array[Byte]] = {
-    def read() =
-      try Some(Files.readAllBytes(file))
-      catch { case _: NoSuchFileException => None }
-    read().orElse(synchronized(read()))
-  }
-
-  /** Store `report`, computed from build `build` of `warehouse`, as that
-    * warehouse's [[BudgetReportFile]], if `build` is still the live one;
-    * returns whether it was stored. The frames are written beside the
-    * warehouse, where no swap deletes them mid-write (a crash's leftover is
-    * swept like a build's scratch), and renamed in under [[swapIn]]'s
-    * lock, so a report that lost a race with a swap is never stored over
-    * the newer build.
-    */
-  private[engine] def storeReport(warehouse: Path, build: String,
-                                  report: Array[Array[Byte]]): Boolean = {
-    val tmp = warehouse.resolveSibling(s".${warehouse.getFileName}.tmp-" +
-      s"report-${java.util.UUID.randomUUID().toString.take(8)}")
+  private[engine] def storeReport(warehouse: Path,
+                                  report: Array[Array[Byte]]): Unit = {
+    val tmp = warehouse.resolve(s".$BudgetReportFile.tmp-" +
+      java.util.UUID.randomUUID().toString.take(8))
     try {
       writeFile(tmp)(ArrowBridge.writeFramed(_, report.iterator))
-      synchronized {
-        liveBuild(warehouse).contains(build) && {
-          Files.move(tmp, warehouse.resolve(BudgetReportFile),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          true
-        }
-      }
+      Files.move(tmp, warehouse.resolve(BudgetReportFile),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** Each live path some thread reads or swaps: its fair read/write lock
+    * and the number of those threads. The first adds the entry and the last
+    * removes it, each in `compute`, so a path has one lock while in use and
+    * no entry after (compaction swaps a fresh path on every run).
+    */
+  private[engine] val liveLocks =
+    new ConcurrentHashMap[Path, (ReentrantReadWriteLock, Int)]()
+
+  private def locked[A](live: Path, write: Boolean)(body: => A): A = {
+    val key = live.toAbsolutePath.normalize
+    val (rw, _) = liveLocks.compute(key, (_, e) =>
+      if (e == null) (new ReentrantReadWriteLock(true), 1) else (e._1, e._2 + 1))
+    val lock = if (write) rw.writeLock else rw.readLock
+    try { lock.lock(); try body finally lock.unlock() }
+    finally liveLocks.compute(key, (_, e) =>
+      if (e._2 == 1) null else (e._1, e._2 - 1))
+  }
+
+  /** `body` under the read lock of the live path `warehouse`: no [[swapIn]]
+    * of it lands meanwhile, so every file `body` reads there is one build's.
+    */
+  private[engine] def reading[A](warehouse: Path)(body: => A): A =
+    locked(warehouse, write = false)(body)
 
   /** Put the directory `tmp` live at `live`: the old `live` renamed aside,
     * `tmp` renamed in (same-directory, atomic on POSIX), the old deleted
     * last; a failure between the renames restores it, so one complete copy
-    * always exists. One lock, held microseconds, keeps concurrent swaps of
-    * a target from moving each other's directories.
+    * always exists. The renames run under the write lock of `live`, so the
+    * swap waits for its [[reading]]s and for its concurrent swaps.
     */
   private[graft] def swapIn(tmp: Path, live: Path): Unit = {
     val old = tmp.resolveSibling(tmp.getFileName.toString + ".old")
-    val hadOld = synchronized {
+    val hadOld = locked(live, write = true) {
       val hadOld = Files.exists(live)
       if (hadOld) Files.move(live, old)
       try Files.move(tmp, live)

@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 
 /** Multi-tenant service layer (SURVEY.md §2.12 M9/M10, §2.3 F1), ported
@@ -39,9 +39,6 @@ object Tenancy {
         fields.getOrElse("industry_type", "corporate").toLowerCase)
     }.toSeq
   }
-
-  def loadUsers(path: Path): Seq[Tenant] =
-    parseUsersJson(new String(Files.readAllBytes(path), "UTF-8"))
 
   /** SHA-256 hex digest of the trimmed password (`serve_flight.py:47-52`:
     * the reference strips whitespace before hashing).

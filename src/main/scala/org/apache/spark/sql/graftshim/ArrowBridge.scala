@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ReadChannel}
 import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.execution.arrow.ArrowConverters
@@ -34,19 +35,8 @@ object ArrowBridge {
     * survives a zero-row round trip.
     */
   def toArrowBatches(df: DataFrame,
-                     maxRecordsPerBatch: Long = 10000): Array[Array[Byte]] = {
-    val schema = df.schema
-    val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    val batches = df.queryExecution.toRdd.mapPartitions { it =>
-      // signature: (rowIter, schema, maxRecordsPerBatch,
-      //             maxEstimatedBatchSize, timeZoneId, ...)
-      ArrowConverters.toBatchWithSchemaIterator(
-        it, schema, maxRecordsPerBatch, Long.MaxValue, tz,
-        true /* errorOnDuplicatedFieldNames */, false /* largeVarTypes */)
-    }.collect()
-    if (batches.nonEmpty) batches
-    else Array(ArrowConverters.createEmptyArrowBatch(schema, tz, true, false))
-  }
+                     maxRecordsPerBatch: Long = 10000): Array[Array[Byte]] =
+    encode(df, maxRecordsPerBatch)(_.collect().iterator).toArray
 
   /** DataFrame -> Arrow IPC batches as a lazily-pulled iterator: the
     * size-safe sibling of [[toArrowBatches]] for FULL exports.
@@ -57,13 +47,21 @@ object ArrowBridge {
     * instead of one job total, invisible at transport latencies.
     */
   def toArrowBatchIterator(df: DataFrame,
-                           maxRecordsPerBatch: Long = 10000): Iterator[Array[Byte]] = {
+                           maxRecordsPerBatch: Long = 10000): Iterator[Array[Byte]] =
+    encode(df, maxRecordsPerBatch)(_.toLocalIterator)
+
+  /** `df`'s batches, encoded per partition and pulled by `pull`; one empty
+    * schema-bearing batch when there are none.
+    */
+  private def encode(df: DataFrame, maxRecordsPerBatch: Long)(
+      pull: RDD[Array[Byte]] => Iterator[Array[Byte]]): Iterator[Array[Byte]] = {
     val schema = df.schema
     val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    val it = df.queryExecution.toRdd.mapPartitions { rows =>
+    // (rowIter, schema, maxRecordsPerBatch, maxEstimatedBatchSize,
+    //  timeZoneId, errorOnDuplicatedFieldNames, largeVarTypes)
+    val it = pull(df.queryExecution.toRdd.mapPartitions(
       ArrowConverters.toBatchWithSchemaIterator(
-        rows, schema, maxRecordsPerBatch, Long.MaxValue, tz, true, false)
-    }.toLocalIterator
+        _, schema, maxRecordsPerBatch, Long.MaxValue, tz, true, false)))
     if (it.hasNext) it
     else Iterator(ArrowConverters.createEmptyArrowBatch(schema, tz, true, false))
   }

@@ -135,4 +135,37 @@ class PipelineSuite extends SparkSpec {
       assertThrows[IllegalArgumentException](Pipeline.topoOrder(Seq(a, b)))
     }
   }
+
+  describe("a live path's read/write lock") {
+    it("is one lock per path while held or awaited, and no entry once released") {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val base = tempDir("graft_lock")
+      val live = Files.createDirectory(base.resolve("wh"))
+      Files.createDirectory(base.resolve("x"))
+      val tmp = Files.createDirectory(base.resolve(".wh.tmp-new"))
+      Files.writeString(tmp.resolve("marker"), "new")
+      val key = live.toAbsolutePath.normalize
+      def holders = Option(Pipeline.liveLocks.get(key)).fold(0)(_._2)
+      val swap = Pipeline.reading(live) {
+        assert(holders == 1)
+        // the same path spelled another way: the swap waits on this read
+        val f = Future(Pipeline.swapIn(tmp, base.resolve("x/../wh")))
+        val deadline = System.nanoTime + 30.seconds.toNanos
+        while (holders < 2) {
+          assert(System.nanoTime < deadline, "the swap never took the lock")
+          Thread.sleep(10)
+        }
+        Thread.sleep(200)
+        assert(!f.isCompleted && !Files.exists(live.resolve("marker")))
+        // a nested read of the path reuses the held lock
+        assert(Pipeline.reading(live)(holders) == 3)
+        f
+      }
+      Await.result(swap, 30.seconds)
+      assert(Files.readString(live.resolve("marker")) == "new")
+      assert(!Pipeline.liveLocks.containsKey(key))
+    }
+  }
 }

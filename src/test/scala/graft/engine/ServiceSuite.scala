@@ -478,34 +478,121 @@ class ServiceSuite extends SparkSpec {
       assert(seen.distinct.size > 1, s"the reader saw one build only: $seen")
     }
 
-    it("is never stored over a newer build by a computation that read the old one") {
-      val filename = "corporate_lostrace.csv"
+    it("is the old build's while a read holds off a finished overwrite, and goes with it at the swap") {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val filename = "corporate_held.csv"
       val wh = warehouse(filename)
-      def scratch: List[String] = {
+      val s = svc
+      s.upload("LA", "p1", filename,
+        corporateCsv("held_1.csv", Seq("A" -> 100, "B" -> 200)))
+      val old = freshRows(filename)
+      // the overwrite's scratch build beside the warehouse has its fct
+      def fctBuilt: Boolean = {
         val ls = Files.list(wh.getParent)
-        try ls.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith(s".$filename")).toList
-        finally ls.close()
+        try ls.iterator().asScala.exists { p =>
+          p.getFileName.toString.startsWith(s".${wh.getFileName}.tmp-") &&
+            Files.exists(p.resolve("corporate.fct_corporate/_SUCCESS"))
+        } finally ls.close()
       }
-      svc.upload("LA", "p1", filename,
-        corporateCsv("lostrace_1.csv", Seq("A" -> 100, "B" -> 200)))
-      // a report computed from build 1, whose store comes after build 2's
-      // swap has landed
-      val old = Pipeline.liveBuild(wh).get
-      val oldReport = Reports.budgetReportArrow(spark.read.parquet(
-        wh.resolve("corporate.fct_corporate").toString))
-      svc.upload("LA", "p1", filename,
-        corporateCsv("lostrace_2.csv", Seq("C" -> 5, "D" -> 6, "D" -> 7)))
-      assert(Pipeline.liveBuild(wh).exists(_ != old))
-      assert(!Pipeline.storeReport(wh, old, oldReport))
+      val overwrite = Pipeline.reading(wh) {
+        val f = Future(s.upload("LA", "p1", filename,
+          corporateCsv("held_2.csv", Seq("C" -> 5, "D" -> 6, "D" -> 7))))
+        val deadline = System.nanoTime + 120.seconds.toNanos
+        while (!fctBuilt) {
+          assert(System.nanoTime < deadline && !f.isCompleted,
+            "the overwrite never finished its build")
+          Thread.sleep(10)
+        }
+        Thread.sleep(200)
+        // built but not live: the old build's report, stored now, and rows
+        assert(rows(s.budgetReportArrow("LA", "p1", filename)) == old)
+        assert(rows(storedReport(filename)) == old)
+        assert(s.fullExport("LA", "p1", filename).count() == 2)
+        assert(!f.isCompleted)
+        f
+      }
+      Await.result(overwrite, 120.seconds)
+      // the report stored during the hold went with its build
       assert(!Files.exists(wh.resolve(Pipeline.BudgetReportFile)))
-      assert(scratch.isEmpty)
-      // the live build's own report is computed, stored and served
-      assert(rows(svc.budgetReportArrow("LA", "p1", filename)) ==
-        freshRows(filename))
-      assert(rows(storedReport(filename)) == freshRows(filename))
-      assert(rows(oldReport) != freshRows(filename))
+      val fresh = freshRows(filename)
+      assert(fresh != old)
+      assert(rows(s.budgetReportArrow("LA", "p1", filename)) == fresh)
+      assert(rows(storedReport(filename)) == fresh)
     }
+  }
+
+  it("streams one build's whole export to clients racing same-name uploads over HTTP") {
+    import java.io.{DataInputStream, DataOutputStream, EOFException}
+    import java.net.{HttpURLConnection, URI}
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicBoolean
+    val filename = "corporate_exportrace.csv"
+    // build k: 2 + 3 * k rows, every job title tagged with k
+    val builds = (1 to 3).map(k =>
+      Seq.tabulate(2 + 3 * k)(i => s"K$k-${i % 3}" -> (100 + i)))
+    val http = new GraftHttpServer(svc)
+    val port = http.start()
+    def conn(path: String): HttpURLConnection = {
+      val c = new URI(s"http://127.0.0.1:$port$path").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      c.setRequestProperty("X-Graft-Client", "LA")
+      c.setRequestProperty("X-Graft-Password", "p1")
+      c
+    }
+    def put(build: Seq[(String, Int)]): Int = {
+      val c = conn(s"/files/$filename")
+      c.setRequestMethod("PUT")
+      c.setDoOutput(true)
+      val body = new DataOutputStream(c.getOutputStream)
+      corporateArrow(build).foreach { b => body.writeInt(b.length); body.write(b) }
+      body.close()
+      c.getResponseCode
+    }
+    // an answer: its frames, or what went wrong
+    def export(): Either[String, Seq[Seq[Byte]]] =
+      try {
+        val c = conn(s"/files/$filename/export")
+        if (c.getResponseCode != 200) Left(s"status ${c.getResponseCode}")
+        else {
+          val d = new DataInputStream(c.getInputStream)
+          val frames = Seq.newBuilder[Seq[Byte]]
+          try while (true) {
+            val buf = new Array[Byte](d.readInt())
+            d.readFully(buf)
+            frames += buf.toSeq
+          } catch { case _: EOFException => () }
+          Right(frames.result())
+        }
+      } catch { case e: Throwable => Left(String.valueOf(e)) }
+    try {
+      assert(put(builds(0)) == 200)
+      val answers = new ConcurrentLinkedQueue[Either[String, Seq[Seq[Byte]]]]()
+      val stop = new AtomicBoolean(false)
+      val clients = (1 to 2).map(_ => new Thread(() =>
+        while (!stop.get) answers.add(export())))
+      clients.foreach(_.start())
+      try (1 to 6).foreach(i => assert(put(builds(i % 3)) == 200))
+      finally { stop.set(true); clients.foreach(_.join()) }
+      val got = answers.asScala.toSeq
+      val errors = got.collect { case Left(e) => e }
+      assert(errors.isEmpty,
+        s"${errors.size} of ${got.size} exports failed: ${errors.distinct}")
+      // each answer's titles name one build k, and it has k's row count
+      val seen = got.collect { case Right(f) => f }.distinct.map { f =>
+        val titles = ArrowBridge.fromArrowBatches(spark,
+          f.map(_.toArray).toArray).select("job_title").collect().map(_.getString(0))
+        (titles.map(_.takeWhile(_ != '-')).distinct.toSeq, titles.length)
+      }
+      val expected = builds.map(b =>
+        (Seq(b.head._1.takeWhile(_ != '-')), b.size))
+      assert(seen.forall(expected.contains),
+        s"an export is no one build's rows: $seen, builds $expected")
+      assert(seen.size > 1, s"the clients saw one build only: $seen")
+    } finally http.stop()
+    assert(!Pipeline.liveLocks.containsKey(
+      warehouse(filename).toAbsolutePath.normalize))
   }
 
   it("archives each upload's raw bytes atomically and sweeps a crash's stale copy") {
