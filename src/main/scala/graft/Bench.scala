@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import graft.engine.{GraftSession, Readers}
@@ -84,9 +83,8 @@ object Bench {
     // absorb one-time JVM/codegen/scan-setup cost outside the timed loop
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Readers.table(spark, sfDir, "lineitem").limit(1).collect()
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .toSeq
+    val selected = SparkEntry.queries.keys
+      .filter(name => only.forall(_.contains(name))).toSeq
     // Streaming queries run a real bounded micro-batch harness whose fixed
     // overhead (~1-2 s each: checkpoint churn, no AQE) dominates their
     // timings. Derive the set from the registry (every streaming query name
@@ -98,22 +96,22 @@ object Bench {
     // dropping sorts — q02's "full export" would time a bare row count.
     // Returns (elapsed, largest stall observed inside the measurement,
     // the DataFrame, (classes compiled, Janino ms) during it).
-    // After timing, release any localCheckpoint the query pinned
-    // (Checkpoints.release is a no-op for plans without a LogicalRDD
-    // leaf): q65/q123/q141/q143 pin one generation per run by documented
+    // After timing, SparkEntry.run releases any localCheckpoint the
+    // query pinned (a no-op for plans without a LogicalRDD leaf):
+    // q65/q123/q141/q143 pin one generation per run by documented
     // contract, so a 3-sweep bench would otherwise hold ~12 dead tables.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def once(name: String)
         : (Double, Double, org.apache.spark.sql.DataFrame, (Long, Double)) = {
       StallMeter.mark()
       val (n0, ms0) = codegenTotals()
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      df.queryExecution.toRdd.foreach(_ => ())
-      val t = (System.nanoTime() - t0) / 1e9
-      val stall = StallMeter.gapSec()
-      val (n1, ms1) = codegenTotals()
-      graft.ext.Checkpoints.release(df)
-      (t, stall, df, (n1 - n0, ms1 - ms0))
+      SparkEntry.run(spark, sfDir, name) { df =>
+        df.queryExecution.toRdd.foreach(_ => ())
+        val t = (System.nanoTime() - t0) / 1e9
+        val stall = StallMeter.gapSec()
+        val (n1, ms1) = codegenTotals()
+        (t, stall, df, (n1 - n0, ms1 - ms0))
+      }
     }
     // Physical-plan fingerprint per query ([[PlanFp.fp]]): round-over-round
     // diffs of this map separate "the plan changed" from "the data or the
@@ -146,11 +144,9 @@ object Bench {
     val sweepCompiles = scala.collection.mutable.ArrayBuffer.empty[Long]
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     def short(name: String): String = name.takeWhile(_ != '_')
-    def measure(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Unit = {
+    def measure(name: String): Unit = {
       try {
-        val (t, stall, df, codegen) = once(fn)
+        val (t, stall, df, codegen) = once(name)
         if (!planFps.contains(name)) planFps(name) = PlanFp.fp(df)
         if (t < times.getOrElse(name, Double.MaxValue)) {
           times(name) = t
@@ -231,9 +227,7 @@ object Bench {
     def fmt2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", v)
     def emit(): Unit = {
-      val results = selected.map { case (name, _) =>
-        name -> times.getOrElse(name, -1.0)
-      }
+      val results = selected.map(name => name -> times.getOrElse(name, -1.0))
       val total = results.map(_._2).filter(_ >= 0).sum
       val streaming = results.collect {
         case (k, v) if isStreaming(k) && v >= 0 => v
@@ -370,9 +364,8 @@ object Bench {
             .sortBy(-_._2)
           if (targets.isEmpty) go = false
           else {
-            val byName = selected.toMap
             for ((name, before) <- targets if elapsed() < deadline) {
-              measure(name, byName(name))
+              measure(name)
               retried += name
               // the min only moves DOWN: if the retry shaved <25% off,
               // the original measurement was honest — stop retrying
@@ -402,11 +395,10 @@ object Bench {
       val order =
         if (sweep == 1) selected
         else selected
-          .filter { case (name, _) => sweep == 2 || !isStreaming(name) }
-          .sortBy { case (name, _) => -times.getOrElse(name, 0.0) }
-      for ((name, fn) <- order
-           if times.getOrElse(name, 0.0) >= 0.0) {
-        measure(name, fn)
+          .filter(name => sweep == 2 || !isStreaming(name))
+          .sortBy(name => -times.getOrElse(name, 0.0))
+      for (name <- order if times.getOrElse(name, 0.0) >= 0.0) {
+        measure(name)
         done += 1
         if (done % 30 == 0) emit()
       }

@@ -18,7 +18,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.run(spark, sfDir, n)(_.explain("formatted"))
     }
     spark.stop()
   }

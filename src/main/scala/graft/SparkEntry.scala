@@ -33,6 +33,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     querySets.flatMap(_.queries).toMap
 
+  /** Builds query `name` over `sfDir`, passes it to `consume`, and then,
+    * however `consume` ends, releases what the query pinned
+    * ([[graft.ext.Checkpoints.release]]). Bench, Verify, Explain and the
+    * registry suite run every query through here.
+    */
+  def run[A](spark: SparkSession, sfDir: String, name: String)(
+      consume: DataFrame => A): A = {
+    val df = queries(name)(spark, sfDir)
+    try consume(df)
+    finally graft.ext.Checkpoints.release(df)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = querySets.flatMap(_.oracleSql).toMap

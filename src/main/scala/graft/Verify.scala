@@ -12,15 +12,11 @@ object Verify {
     val spark = GraftSession.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // release whatever the query pinned once its rows are written
-      try {
-        val df = fn(spark, sfDir)
-        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        finally graft.ext.Checkpoints.release(df)
-      } catch { case e: Throwable =>
+    SparkEntry.queries.keys.filter(name => only.forall(_.contains(name)))
+      .foreach { name =>
+      try SparkEntry.run(spark, sfDir, name)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   *
   *  - do_put (upload+transform)        -> [[upload]] (CSV) /
   *                                        [[uploadArrow]] (Arrow batches)
-  *  - do_get get_budget_report         -> [[budgetReport]] (DataFrame) /
+  *  - do_get get_budget_report         -> [[budgetReport]] (DataFrame,
+  *                                        read under the lock) /
   *                                        [[budgetReportArrow]] (Arrow
   *                                        bytes, stored per build)
   *  - do_get get_full_clean            -> [[fullExport]] / [[fullExportArrow]]
@@ -65,30 +66,33 @@ final class GraftService(spark: SparkSession, storageBase: Path,
   }
 
   /** Budget report over a prior upload (`serve_flight.py:295`), optionally
-    * archived as `<base>_summary.csv` in Downloads (S8) under the read lock.
-    * Lazy and unlocked: it lists the build's files when it is made, so an
-    * action on it after a same-name swap fails.
+    * archived as `<base>_summary.csv` in Downloads (S8), passed to
+    * `consume`. The archive and `consume` run under the warehouse's read
+    * lock, so every action on the report reads one build, and a same-name
+    * swap waits for `consume` to return. The frame lists that build's
+    * files: keep results, not the frame, past `consume`.
     */
-  def budgetReport(clientId: String, password: String, filename: String,
-                   saveCopy: Boolean = false): DataFrame = {
+  def budgetReport[A](clientId: String, password: String, filename: String,
+                      saveCopy: Boolean = false)(consume: DataFrame => A): A = {
     val tenant = Tenancy.authenticated(users, clientId, password)
     withFct(tenant, filename) { fct =>
       val report = Reports.budgetReport(fct)
       if (saveCopy) saveCsv(report, tenant, filename, "_summary")
-      report
+      consume(report)
     }
   }
 
   /** Full export ordered by job_title (`serve_flight.py:291`), optionally
-    * archived as `<base>_full_export.csv` (S8); lazy like [[budgetReport]].
+    * archived as `<base>_full_export.csv` (S8), passed to `consume` under
+    * the read lock like [[budgetReport]].
     */
-  def fullExport(clientId: String, password: String, filename: String,
-                 saveCopy: Boolean = false): DataFrame = {
+  def fullExport[A](clientId: String, password: String, filename: String,
+                    saveCopy: Boolean = false)(consume: DataFrame => A): A = {
     val tenant = Tenancy.authenticated(users, clientId, password)
     withFct(tenant, filename) { fct =>
       val export = Reports.fullExport(fct)
       if (saveCopy) saveCsv(export, tenant, filename, "_full_export")
-      export
+      consume(export)
     }
   }
 

@@ -149,12 +149,14 @@ object Pipeline {
       }
       swapIn(tmp, warehouse)
       // the rename moved the very files each read-back scanned: pin its
-      // schema under the live path, so reads after the swap infer nothing
-      built.map { case (n, table) =>
+      // schema under the live path, so reads after the swap infer nothing;
+      // under the read lock, since pinning lists the live files and a
+      // concurrent same-name swap would move them away mid-listing
+      reading(warehouse)(built.map { case (n, table) =>
         val live = warehouse.resolve(n).toString
         Readers.pinSchema(spark, live, table.schema)
         n -> Readers.parquet(spark, live)
-      }
+      })
     } finally {
       deleteRecursively(tmp) // M8: no corrupt half-built leftovers
     }

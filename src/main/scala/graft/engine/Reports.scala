@@ -55,12 +55,6 @@ object Reports {
   def fullExport(fct: DataFrame, tieBreak: Column*): DataFrame =
     requireContract(fct).orderBy(asc_nulls_last("job_title") +: tieBreak: _*)
 
-  /** O3 — top-k rows by total_budget (`app.py:390-393`); ties broken by
-    * job_title so the result is deterministic under any partitioning.
-    */
-  def topK(report: DataFrame, k: Int = 10): DataFrame =
-    report.orderBy(desc("total_budget"), asc_nulls_last("job_title")).limit(k)
-
   /** A2 — KPI grand totals over the report (`app.py:340-342`): total budget,
     * total employees, and average budget per employee (0 when no employees).
     */

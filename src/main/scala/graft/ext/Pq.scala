@@ -560,7 +560,9 @@ object Pq {
     val m = model.books.size
     val luts = new Array[Long](qRows.length * m * kk)
     qRows.zipWithIndex.foreach { case ((_, v), qi) =>
-      graft.functions.PqKernel.lut(flat, norms, m, kk, subDim, v)
+      graft.functions.PqKernel.adcLut(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+          .fromPrimitiveArray(v), flat, norms, m, kk, subDim)
         .copyToArray(luts, qi * m * kk)
     }
     val qids = qRows.map(_._1).toSeq

@@ -16,12 +16,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * and Janino's 64 KB method ceiling make it unusable (the
   * [[NearestCentroid]] lesson, measured again here: m=16/k=64 on 64-dim
   * embeddings stalls plan compilation for minutes). These expressions
-  * carry the codebooks as REFERENCE OBJECTS — the generated code is a
-  * fixed nested loop over `double[]` regardless of (m, k), so encode and
-  * ADC stay inside whole-stage codegen at any codebook size.
+  * carry the codebooks as REFERENCE OBJECTS — the generated code is one
+  * call into [[PqKernel]] regardless of (m, k), so encode and ADC stay
+  * inside whole-stage codegen at any codebook size. Interpreted eval makes
+  * the same call, so eval and codegen agree bit for bit by construction.
   *
-  * Operation order is BIT-IDENTICAL to the literal path and the DuckDB
-  * oracle: per subspace d² = v·v − 2·(Σ vⱼcⱼ left-to-right) + ‖c‖²
+  * Operation order matches the literal path and the DuckDB oracle bit for
+  * bit: per subspace d² = v·v − 2·(Σ vⱼcⱼ left-to-right) + ‖c‖²
   * (norms pre-folded left-to-right), argmin by strict `<` scan in code
   * order (ties to the lowest code), micro grid = ⌊d²·10⁶ + ½⌋ as long.
   */
@@ -48,197 +49,61 @@ object PqMatrix {
   }
 }
 
-/** Per-subspace nearest-code assignment for all m subspaces in ONE
-  * codegen'd pass: array<double> vector → array<long> of m codes.
+/** The loops behind the PQ expressions and the driver-side batch LUT.
+  * Each expression's interpreted `nullSafeEval` and its generated code
+  * make the same single call here (the [[VectorKernel]] shape), and
+  * [[graft.ext.Pq.adcKnnPackedBatch]] builds its LUTs with the same
+  * [[adcLut]], so every path runs one loop in one order.
   */
-case class PqEncodePacked(child: Expression, flat: Array[Double],
-                          norms: Array[Double], m: Int, k: Int,
-                          subDim: Int)
-    extends UnaryExpression {
+object PqKernel {
+  /** Valid width of subspace `s`'s slice of an `n`-value vector: the
+    * subspace is cut short, or empty, past the vector's end.
+    */
+  private def width(n: Int, s: Int, subDim: Int): Int =
+    math.max(0, math.min(subDim, n - s * subDim))
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** Nearest code of each of the m subspaces ([[VectorKernel.argmin]] over
+    * the subspace's own slice and codebook), as an array<long>.
+    */
+  def encode(v: ArrayData, flat: Array[Double], norms: Array[Double],
+             m: Int, k: Int, subDim: Int): ArrayData = {
     val n = v.numElements()
     val codes = new Array[Long](m)
     var s = 0
     while (s < m) {
-      val base = s * subDim
-      var vv = 0.0
-      var j = 0
-      while (j < subDim && base + j < n) {
-        val x = v.getDouble(base + j); vv += x * x; j += 1
-      }
-      var best = 0
-      var bestD2 = Double.PositiveInfinity
-      var c = 0
-      while (c < k) {
-        val off = (s * k + c) * subDim
-        var dot = 0.0
-        var i = 0
-        while (i < subDim && base + i < n) {
-          dot += v.getDouble(base + i) * flat(off + i); i += 1
-        }
-        val d2 = vv - 2.0 * dot + norms(s * k + c)
-        if (d2 < bestD2) { bestD2 = d2; best = c }
-        c += 1
-      }
-      codes(s) = best.toLong
+      codes(s) = VectorKernel.argmin(v, s * subDim, width(n, s, subDim), flat,
+        norms, s * k, k, subDim).toLong
       s += 1
     }
     UnsafeArrayData.fromPrimitiveArray(codes)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-      val normsRef = ctx.addReferenceObj("pqNorms", norms, "double[]")
-      val codes = ctx.freshName("codes")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      val vv = ctx.freshName("vv")
-      val j = ctx.freshName("j")
-      val best = ctx.freshName("best")
-      val bestD2 = ctx.freshName("bestD2")
-      val c = ctx.freshName("c")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      val d2 = ctx.freshName("d2")
-      s"""
-         |int $n = $v.numElements();
-         |long[] $codes = new long[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $base = $s * $subDim;
-         |  double $vv = 0.0;
-         |  for (int $j = 0; $j < $subDim && $base + $j < $n; $j++) {
-         |    double x = $v.getDouble($base + $j); $vv += x * x;
-         |  }
-         |  int $best = 0;
-         |  double $bestD2 = Double.POSITIVE_INFINITY;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    int $off = ($s * $k + $c) * $subDim;
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $subDim && $base + $i < $n; $i++) {
-         |      $dot += $v.getDouble($base + $i) * $flatRef[$off + $i];
-         |    }
-         |    double $d2 = $vv - 2.0 * $dot + $normsRef[$s * $k + $c];
-         |    if ($d2 < $bestD2) { $bestD2 = $d2; $best = $c; }
-         |  }
-         |  $codes[$s] = (long) $best;
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($codes);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncodePacked =
-    copy(child = newChild)
-}
-
-/** Per-query ADC lookup table as ONE flattened array<long>:
-  * lut[s·k + c] = ⌊d²(q_s, books(s)(c))·10⁶ + ½⌋. The broadcast payload
-  * of the packed ADC scan — m·k longs per query, vectors never leave
-  * the query side.
-  */
-case class PqAdcLutMicro(child: Expression, flat: Array[Double],
-                         norms: Array[Double], m: Int, k: Int,
-                         subDim: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_pq_adc_lut"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** The flattened ADC lookup table of one query vector:
+    * lut(s·k + c) = ⌊d²(v_s, books(s)(c))·10⁶ + ½⌋.
+    */
+  def adcLut(v: ArrayData, flat: Array[Double], norms: Array[Double],
+             m: Int, k: Int, subDim: Int): Array[Long] = {
     val n = v.numElements()
     val lut = new Array[Long](m * k)
     var s = 0
     while (s < m) {
       val base = s * subDim
-      var vv = 0.0
-      var j = 0
-      while (j < subDim && base + j < n) {
-        val x = v.getDouble(base + j); vv += x * x; j += 1
-      }
+      val len = width(n, s, subDim)
+      val vv = VectorKernel.sqNorm(v, base, len)
       var c = 0
       while (c < k) {
-        val off = (s * k + c) * subDim
-        var dot = 0.0
-        var i = 0
-        while (i < subDim && base + i < n) {
-          dot += v.getDouble(base + i) * flat(off + i); i += 1
-        }
-        val d2 = vv - 2.0 * dot + norms(s * k + c)
+        val d2 = VectorKernel.d2(v, base, len, vv, flat, norms, s * k + c,
+          subDim)
         lut(s * k + c) = math.floor(d2 * 1e6 + 0.5).toLong
         c += 1
       }
       s += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(lut)
+    lut
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-      val normsRef = ctx.addReferenceObj("pqNorms", norms, "double[]")
-      val lut = ctx.freshName("lut")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      val vv = ctx.freshName("vv")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      val d2 = ctx.freshName("d2")
-      s"""
-         |int $n = $v.numElements();
-         |long[] $lut = new long[$m * $k];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $base = $s * $subDim;
-         |  double $vv = 0.0;
-         |  for (int $j = 0; $j < $subDim && $base + $j < $n; $j++) {
-         |    double x = $v.getDouble($base + $j); $vv += x * x;
-         |  }
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    int $off = ($s * $k + $c) * $subDim;
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $subDim && $base + $i < $n; $i++) {
-         |      $dot += $v.getDouble($base + $i) * $flatRef[$off + $i];
-         |    }
-         |    double $d2 = $vv - 2.0 * $dot + $normsRef[$s * $k + $c];
-         |    $lut[$s * $k + $c] = (long) java.lang.Math.floor($d2 * 1.0E6 + 0.5);
-         |  }
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($lut);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqAdcLutMicro =
-    copy(child = newChild)
-}
-
-/** ADC distance: Σ_s lut[s·k + codes[s]] — exact long sum of the
-  * per-subspace micro partials. `left` = codes (array<long>, m entries),
-  * `right` = the query's flattened LUT (array<long>, m·k entries).
-  */
-case class PqAdcDistMicro(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_pq_adc_dist"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
+  /** Σ_s lut(s·k + codes(s)) over the codes' m subspaces. */
+  def adcDist(codes: ArrayData, lut: ArrayData, k: Int): Long = {
     val m = codes.numElements()
     var s = 0
     var d = 0L
@@ -249,42 +114,23 @@ case class PqAdcDistMicro(left: Expression, right: Expression, k: Int)
     d
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $m = $a.numElements();
-         |long $d = 0L;
-         |for (int $s = 0; $s < $m; $s++) {
-         |  $d += $b.getLong($s * $k + (int) $a.getLong($s));
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
+  /** [[adcDist]] against query `qi`'s LUT inside a batch of LUTs laid out
+    * one after another, m·k longs each.
+    */
+  def adcDistBatch(codes: ArrayData, qi: Int, luts: Array[Long], m: Int,
+                   k: Int): Long = {
+    val base = qi * m * k
+    var s = 0
+    var d = 0L
+    while (s < m) {
+      d += luts(base + s * k + codes.getLong(s).toInt)
+      s += 1
+    }
+    d
+  }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdcDistMicro =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Coordinate permutation of an array<double> vector in ONE pass with
-  * the permutation as a reference object. The Column phrasing —
-  * `array(perm.map(j => element_at(v, j + 1)))` — re-evaluates the
-  * child (typically `cast(embedding AS array<double>)`) once PER
-  * ELEMENT: 64 whole-array casts + 64 intermediate allocations per
-  * row (the round-18 q338 finding: 0.5 ms/row on a 4096-flop encode).
-  * Here the child evaluates once and the permute is a d-step copy.
-  */
-case class VecPermute(child: Expression, perm: Array[Int])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_vec_permute"
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** out(i) = v(perm(i)); an index past v's end is an error. */
+  def permute(v: ArrayData, perm: Array[Int]): ArrayData = {
     val n = v.numElements()
     val out = new Array[Double](perm.length)
     var i = 0
@@ -297,41 +143,123 @@ case class VecPermute(child: Expression, perm: Array[Int])
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
+}
+
+/** Per-subspace nearest-code assignment for all m subspaces in ONE
+  * codegen'd call ([[PqKernel.encode]]): array<double> vector →
+  * array<long> of m codes.
+  */
+case class PqEncodePacked(child: Expression, flat: Array[Double],
+                          norms: Array[Double], m: Int, k: Int,
+                          subDim: Int)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_pq_encode"
+
+  override def nullSafeEval(input: Any): Any =
+    PqKernel.encode(input.asInstanceOf[ArrayData], flat, norms, m, k, subDim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
+    val normsRef = ctx.addReferenceObj("pqNorms", norms, "double[]")
+    defineCodeGen(ctx, ev, v => "graft.functions.PqKernel" +
+      s".encode($v, $flatRef, $normsRef, $m, $k, $subDim)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PqEncodePacked =
+    copy(child = newChild)
+}
+
+/** Per-query ADC lookup table as ONE flattened array<long>
+  * ([[PqKernel.adcLut]]): lut[s·k + c] = ⌊d²(q_s, books(s)(c))·10⁶ + ½⌋.
+  * The broadcast payload of the packed ADC scan — m·k longs per query,
+  * vectors never leave the query side.
+  */
+case class PqAdcLutMicro(child: Expression, flat: Array[Double],
+                         norms: Array[Double], m: Int, k: Int,
+                         subDim: Int)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_pq_adc_lut"
+
+  override def nullSafeEval(input: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(PqKernel.adcLut(
+      input.asInstanceOf[ArrayData], flat, norms, m, k, subDim))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
+    val normsRef = ctx.addReferenceObj("pqNorms", norms, "double[]")
+    defineCodeGen(ctx, ev, v =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
+        ".fromPrimitiveArray(graft.functions.PqKernel" +
+        s".adcLut($v, $flatRef, $normsRef, $m, $k, $subDim))")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PqAdcLutMicro =
+    copy(child = newChild)
+}
+
+/** ADC distance: Σ_s lut[s·k + codes[s]] — exact long sum of the
+  * per-subspace micro partials ([[PqKernel.adcDist]]). `left` = codes
+  * (array<long>, m entries), `right` = the query's flattened LUT
+  * (array<long>, m·k entries).
+  */
+case class PqAdcDistMicro(left: Expression, right: Expression, k: Int)
+    extends BinaryExpression {
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "graft_pq_adc_dist"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PqKernel.adcDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val permRef = ctx.addReferenceObj("vecPerm", perm, "int[]")
-      val out = ctx.freshName("out")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |int $n = $v.numElements();
-         |double[] $out = new double[$permRef.length];
-         |for (int $i = 0; $i < $permRef.length; $i++) {
-         |  int $j = $permRef[$i];
-         |  if ($j >= $n) throw new ArrayIndexOutOfBoundsException(
-         |    "permutation index " + $j + " out of bounds for vector of " + $n);
-         |  $out[$i] = $v.getDouble($j);
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.PqKernel.adcDist($a, $b, $k)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqAdcDistMicro =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Coordinate permutation of an array<double> vector in ONE pass with
+  * the permutation as a reference object. The Column phrasing —
+  * `array(perm.map(j => element_at(v, j + 1)))` — re-evaluates the
+  * child (typically `cast(embedding AS array<double>)`) once PER
+  * ELEMENT: 64 whole-array casts + 64 intermediate allocations per
+  * row (the round-18 q338 finding: 0.5 ms/row on a 4096-flop encode).
+  * Here the child evaluates once and the permute is a d-step copy
+  * ([[PqKernel.permute]]).
+  */
+case class VecPermute(child: Expression, perm: Array[Int])
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_vec_permute"
+
+  override def nullSafeEval(input: Any): Any =
+    PqKernel.permute(input.asInstanceOf[ArrayData], perm)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val permRef = ctx.addReferenceObj("vecPerm", perm, "int[]")
+    defineCodeGen(ctx, ev, v => s"graft.functions.PqKernel.permute($v, $permRef)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): VecPermute =
     copy(child = newChild)
 }
 
 /** ADC distance of one corpus row's codes against query `qi` of a
-  * DRIVER-COLLECTED batch LUT (flat layout: luts[qi·m·k + s·k + code]).
-  * The batch LUT rides as ONE reference object, so the per-query
-  * distance fan-out is `explode(sequence(0, B−1))` over the codes row —
-  * NO broadcast join, and the encode feeding `codes` is evaluated once
-  * per corpus row (the round-18 q338 finding: whole-stage codegen
-  * re-evaluated the stream-side encode once per broadcast row, a
-  * per-row cost that grew with the query batch).
+  * DRIVER-COLLECTED batch LUT (flat layout: luts[qi·m·k + s·k + code];
+  * [[PqKernel.adcDistBatch]]). The batch LUT rides as ONE reference
+  * object, so the per-query distance fan-out is
+  * `explode(sequence(0, B−1))` over the codes row — NO broadcast join,
+  * and the encode feeding `codes` is evaluated once per corpus row (the
+  * round-18 q338 finding: whole-stage codegen re-evaluated the
+  * stream-side encode once per broadcast row, a per-row cost that grew
+  * with the query batch).
   */
 case class PqAdcDistBatch(left: Expression, right: Expression,
                           luts: Array[Long], m: Int, k: Int)
@@ -340,74 +268,19 @@ case class PqAdcDistBatch(left: Expression, right: Expression,
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_pq_adc_dist_batch"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val qi = b.asInstanceOf[Number].intValue()
-    val base = qi * m * k
-    var s = 0
-    var d = 0L
-    while (s < m) {
-      d += luts(base + s * k + codes.getLong(s).toInt)
-      s += 1
-    }
-    d
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PqKernel.adcDistBatch(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[Number].intValue(), luts, m, k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val lutsRef = ctx.addReferenceObj("adcLuts", luts, "long[]")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val base = ctx.freshName("base")
-      s"""
-         |int $base = ((int) $b) * $m * $k;
-         |long $d = 0L;
-         |for (int $s = 0; $s < $m; $s++) {
-         |  $d += $lutsRef[$base + $s * $k + (int) $a.getLong($s)];
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lutsRef = ctx.addReferenceObj("adcLuts", luts, "long[]")
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.PqKernel.adcDistBatch($a, (int) $b, $lutsRef, $m, $k)")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcDistBatch =
     copy(left = newLeft, right = newRight)
-}
-
-object PqKernel {
-  /** The [[PqAdcLutMicro]] arithmetic as a driver-callable kernel —
-    * SAME loop, SAME order, so a LUT built driver-side for the batch
-    * path is bit-identical to the expression-built one (the oracle
-    * reproduces both from the rendered codebooks).
-    */
-  def lut(flat: Array[Double], norms: Array[Double], m: Int, k: Int,
-          subDim: Int, v: Array[Double]): Array[Long] = {
-    val n = v.length
-    val out = new Array[Long](m * k)
-    var s = 0
-    while (s < m) {
-      val base = s * subDim
-      var vv = 0.0
-      var j = 0
-      while (j < subDim && base + j < n) {
-        val x = v(base + j); vv += x * x; j += 1
-      }
-      var c = 0
-      while (c < k) {
-        val off = (s * k + c) * subDim
-        var dot = 0.0
-        var i = 0
-        while (i < subDim && base + i < n) {
-          dot += v(base + i) * flat(off + i); i += 1
-        }
-        val d2 = vv - 2.0 * dot + norms(s * k + c)
-        out(s * k + c) = math.floor(d2 * 1e6 + 0.5).toLong
-        c += 1
-      }
-      s += 1
-    }
-    out
-  }
 }
 
 object PqFunctions {

@@ -7,13 +7,86 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
+/** The loops behind the vector expressions. Each expression's interpreted
+  * `nullSafeEval` and its generated code make the same single call here,
+  * so the two paths cannot drift apart: bit-identity between eval and
+  * codegen holds by construction. A kernel is compiled once and the JIT
+  * treats it as its own method, so it does not grow the `processNext()`
+  * of every plan it lands in.
+  */
+object VectorKernel {
+  /** Σ xᵢyᵢ over the shorter length, folded left to right. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    s
+  }
+
+  /** Exact Σ xᵢyᵢ over the shorter length. */
+  def intDot(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+    s
+  }
+
+  /** ‖v[base, base + len)‖², folded left to right. */
+  private[functions] def sqNorm(v: ArrayData, base: Int, len: Int): Double = {
+    var vv = 0.0
+    var j = 0
+    while (j < len) { val x = v.getDouble(base + j); vv += x * x; j += 1 }
+    vv
+  }
+
+  /** d² of the slice v[base, base + len) (squared norm `vv`) against
+    * centroid row `r` of `flat` (rows of `stride` values):
+    * vv − 2·(Σ vⱼcⱼ left to right) + norms(r).
+    */
+  private[functions] def d2(v: ArrayData, base: Int, len: Int, vv: Double,
+                            flat: Array[Double], norms: Array[Double],
+                            r: Int, stride: Int): Double = {
+    val off = r * stride
+    var dot = 0.0
+    var i = 0
+    while (i < len) { dot += v.getDouble(base + i) * flat(off + i); i += 1 }
+    vv - 2.0 * dot + norms(r)
+  }
+
+  /** Nearest of centroid rows `first` until `first + k` to the slice
+    * v[base, base + len), as an offset from `first`: argmin of [[d2]] by a
+    * strict `<` scan, so ties go to the lowest row.
+    */
+  def argmin(v: ArrayData, base: Int, len: Int, flat: Array[Double],
+             norms: Array[Double], first: Int, k: Int, stride: Int): Int = {
+    val vv = sqNorm(v, base, len)
+    var best = 0
+    var bestD2 = Double.PositiveInfinity
+    var c = 0
+    while (c < k) {
+      val d = d2(v, base, len, vv, flat, norms, first + c, stride)
+      if (d < bestD2) { bestD2 = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Nearest centroid of a `dim`-wide matrix to v's first `dim` values. */
+  def nearestCentroid(v: ArrayData, flat: Array[Double],
+                      norms: Array[Double], dim: Int): Int =
+    argmin(v, 0, math.min(v.numElements(), dim), flat, norms, 0,
+      norms.length, dim)
+}
+
 /** Native Catalyst expression for the vector hot path.
   *
   * The similarity operators originally used `zip_with` + `aggregate`
   * higher-order functions; those allocate a lambda frame per element and
   * dominated the benchmark (50s of a 74s total at sf0.1). This expression
-  * generates a tight primitive loop inside whole-stage codegen — no
-  * per-element allocation, no virtual dispatch — and keeps the same
+  * is one call to the primitive loop [[VectorKernel.dot]] — no
+  * per-element allocation, no virtual dispatch — which keeps the same
   * left-to-right accumulation order as the fold it replaces, so results
   * are bit-identical to the previous implementation (and to the DuckDB
   * oracle's `list_dot_product`).
@@ -26,30 +99,11 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernel.dot($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -59,9 +113,9 @@ case class DotProduct(left: Expression, right: Expression)
 /** Exact integer dot product over two array<long> columns — the int8
   * quantized-similarity hot path. Same rationale as [[DotProduct]]: the
   * `zip_with` + `aggregate` higher-order form allocates a lambda frame
-  * per element; this is a primitive loop inside whole-stage codegen.
-  * Integer addition is associative, so there is no accumulation-order
-  * caveat at all — results are exact on any engine.
+  * per element; this is one call to [[VectorKernel.intDot]]. Integer
+  * addition is associative, so there is no accumulation-order caveat at
+  * all — results are exact on any engine.
   */
 case class IntDotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -69,30 +123,12 @@ case class IntDotProduct(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_int_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.intDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.VectorKernel.intDot($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntDotProduct =
@@ -109,11 +145,12 @@ case class IntDotProduct(left: Expression, right: Expression)
   * beyond 64 KB" at 4096×8 and fall back to interpreted eval at ~370 ns per
   * vector-cell — and a crossJoin(broadcast)+min(struct) aggregate is no
   * faster, dominated by per-pair ObjectHashAggregate lookups). Here the
-  * generated code is a fixed ~20-line nested loop over `double[]` arrays
-  * regardless of nCells: no join, no shuffle, no codegen ceiling.
+  * generated code is one call to [[VectorKernel.nearestCentroid]] over
+  * `double[]` arrays regardless of nCells: no join, no shuffle, no codegen
+  * ceiling.
   *
-  * Semantics are BIT-IDENTICAL to the literal-projection path (and so to
-  * the q64 DuckDB oracle): d² = v·v − 2·(Σ vᵢcᵢ, folded left-to-right)
+  * Semantics match the literal-projection path (and so the q64 DuckDB
+  * oracle) bit for bit: d² = v·v − 2·(Σ vᵢcᵢ, folded left-to-right)
   * + ‖c‖² (norms pre-folded left-to-right), argmin by strict `<` scan in
   * cell order = ties to the lowest cell.
   */
@@ -124,61 +161,16 @@ case class NearestCentroid(child: Expression, flat: Array[Double],
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_centroid"
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val d = math.min(v.numElements(), dim)
-    var vv = 0.0
-    var i = 0
-    while (i < d) { val x = v.getDouble(i); vv += x * x; i += 1 }
-    var best = 0
-    var bestD2 = Double.PositiveInfinity
-    var c = 0
-    while (c < norms.length) {
-      var s = 0.0
-      var j = 0
-      val off = c * dim
-      while (j < d) { s += v.getDouble(j) * flat(off + j); j += 1 }
-      val d2 = vv - 2.0 * s + norms(c)
-      if (d2 < bestD2) { bestD2 = d2; best = c }
-      c += 1
-    }
-    best
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.nearestCentroid(input.asInstanceOf[ArrayData], flat, norms,
+      dim)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("flatCentroids", flat, "double[]")
-      val normsRef = ctx.addReferenceObj("centroidNorms", norms, "double[]")
-      val d = ctx.freshName("d")
-      val vv = ctx.freshName("vv")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
-      val s = ctx.freshName("s")
-      val d2 = ctx.freshName("d2")
-      val best = ctx.freshName("best")
-      val bestD2 = ctx.freshName("bestD2")
-      s"""
-         |int $d = java.lang.Math.min($v.numElements(), $dim);
-         |double $vv = 0.0;
-         |for (int $i = 0; $i < $d; $i++) {
-         |  double x = $v.getDouble($i); $vv += x * x;
-         |}
-         |int $best = 0;
-         |double $bestD2 = Double.POSITIVE_INFINITY;
-         |for (int $c = 0; $c < $normsRef.length; $c++) {
-         |  double $s = 0.0;
-         |  int $off = $c * $dim;
-         |  for (int $j = 0; $j < $d; $j++) {
-         |    $s += $v.getDouble($j) * $flatRef[$off + $j];
-         |  }
-         |  double $d2 = $vv - 2.0 * $s + $normsRef[$c];
-         |  if ($d2 < $bestD2) { $bestD2 = $d2; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val flatRef = ctx.addReferenceObj("flatCentroids", flat, "double[]")
+    val normsRef = ctx.addReferenceObj("centroidNorms", norms, "double[]")
+    defineCodeGen(ctx, ev, v => "graft.functions.VectorKernel" +
+      s".nearestCentroid($v, $flatRef, $normsRef, $dim)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)

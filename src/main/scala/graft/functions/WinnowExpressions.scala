@@ -8,118 +8,52 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native sliding-window minimum for the winnowing selection rule.
-  *
-  * The higher-order-function phrasing —
-  * `transform(sequence(1, n−w+1), i -> array_min(slice(h, i, w)))` —
-  * is QUADRATIC under Catalyst's lambda evaluator (each window
-  * re-evaluates its slice, and when predicate pushdown substitutes the
-  * producing projection into a pre-scan Filter, the whole upstream
-  * hash chain is re-evaluated per window position; measured: q359 at
-  * sf0.1 spent ~7 minutes in exactly that). This expression computes
-  * all window minima in ONE monotonic-deque pass — O(n) total, a plain
-  * generated loop that stays inside whole-stage codegen, and stays
-  * O(n) no matter how many plan branches the optimizer copies it into.
-  *
-  * Contract (must match the DuckDB oracle's list-comprehension
-  * phrasing exactly):
-  *  - n ≥ w  → the minima of all n−w+1 windows, in order;
-  *  - 1 ≤ n < w → one element, the global minimum (the winnowing
-  *    guarantee extends to short documents);
-  *  - n = 0 → empty array.
-  */
-case class SlidingMinLong(child: Expression, w: Int)
-    extends UnaryExpression {
-  require(w >= 1, s"window must be >= 1, got $w")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_sliding_min"
-
-  override def nullSafeEval(input: Any): Any = {
-    val h = input.asInstanceOf[ArrayData]
-    val n = h.numElements()
-    if (n == 0) UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-    else if (n < w) {
-      var m = h.getLong(0)
-      var i = 1
-      while (i < n) { val x = h.getLong(i); if (x < m) m = x; i += 1 }
-      UnsafeArrayData.fromPrimitiveArray(Array(m))
-    } else {
-      val out = new Array[Long](n - w + 1)
-      val dq = new Array[Int](n) // deque of indices, values increasing
-      var head = 0
-      var tail = 0 // exclusive
-      var i = 0
-      while (i < n) {
-        val x = h.getLong(i)
-        while (tail > head && h.getLong(dq(tail - 1)) >= x) tail -= 1
-        dq(tail) = i; tail += 1
-        if (dq(head) <= i - w) head += 1
-        if (i >= w - 1) out(i - w + 1) = h.getLong(dq(head))
-        i += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(out)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, h => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val dq = ctx.freshName("dq")
-      val head = ctx.freshName("head")
-      val tail = ctx.freshName("tail")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val m = ctx.freshName("m")
-      s"""
-         |int $n = $h.numElements();
-         |long[] $out;
-         |if ($n == 0) {
-         |  $out = new long[0];
-         |} else if ($n < $w) {
-         |  long $m = $h.getLong(0);
-         |  for (int $i = 1; $i < $n; $i++) {
-         |    long $x = $h.getLong($i); if ($x < $m) $m = $x;
-         |  }
-         |  $out = new long[] { $m };
-         |} else {
-         |  $out = new long[$n - $w + 1];
-         |  int[] $dq = new int[$n];
-         |  int $head = 0; int $tail = 0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $x = $h.getLong($i);
-         |    while ($tail > $head && $h.getLong($dq[$tail - 1]) >= $x) $tail--;
-         |    $dq[$tail] = $i; $tail++;
-         |    if ($dq[$head] <= $i - $w) $head++;
-         |    if ($i >= $w - 1) $out[$i - $w + 1] = $h.getLong($dq[$head]);
-         |  }
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SlidingMinLong =
-    copy(child = newChild)
-}
-
 /** The complete winnowing selection — token array → DISTINCT selected
   * fingerprint array — as ONE expression backed by a static kernel.
   *
-  * Rationale (measured, round 15b): even with [[SlidingMinLong]], the
-  * gram-construction + md5 chain stays a ~40-node expression tree that
-  * predicate pushdown copies into pre-scan Filters and Janino then
-  * compiles in every branch — q358/q359 paid a ~9 s FIXED cost per
-  * invocation (sf1/sf0.1 ratio 1.3 on a linear operator = almost all
-  * plan overhead). Collapsing the chain to a single static call makes
-  * each plan copy one generated line; the kernel reproduces
-  * `hash60(concat_ws(' ', gram))` bit-exactly (md5 of UTF-8, first 15
-  * hex chars as a 60-bit long — the [[Portable.hash60]] contract the
-  * DuckDB oracle mirrors) and the monotonic-deque minima.
+  * Rationale (measured, round 15b): phrased as Columns, the gram
+  * construction and md5 chain is a ~40-node expression tree that
+  * predicate pushdown copies into pre-scan Filters, and Janino compiles
+  * it in every branch: q358/q359 paid a ~9 s FIXED cost per invocation
+  * (sf1/sf0.1 ratio 1.3 on a linear operator = almost all plan
+  * overhead). The higher-order window minimum, `transform(sequence(1,
+  * n−w+1), i -> array_min(slice(h, i, w)))`, was also QUADRATIC under
+  * Catalyst's lambda evaluator (q359 at sf0.1 spent ~7 minutes in it).
+  * Collapsing the chain to a single static call makes each plan copy
+  * one generated line, and interpreted eval makes the same call, so the
+  * two agree by construction. The kernel reproduces
+  * `hash60(concat_ws(' ', gram))` bit-exactly (md5 of UTF-8, first 15 hex
+  * chars as a 60-bit long — the [[Portable.hash60]] contract the DuckDB
+  * oracle mirrors) and takes the window minima in one O(n)
+  * monotonic-deque pass ([[WinnowKernel.windowMins]]).
   */
 object WinnowKernel {
+  /** The minima of all n−w+1 `w`-windows of `h`, in order, by one
+    * monotonic-deque pass; one element, the global minimum, when
+    * 1 ≤ n < w (the winnowing guarantee extends to short documents);
+    * empty when n = 0. This is the contract the DuckDB oracle's
+    * list-comprehension phrasing follows.
+    */
+  def windowMins(h: Array[Long], w: Int): Array[Long] = {
+    val ng = h.length
+    if (ng == 0) h
+    else if (ng < w) Array(h.min)
+    else {
+      val out = new Array[Long](ng - w + 1)
+      val dq = new Array[Int](ng) // deque of indices, values increasing
+      var head = 0; var tail = 0; var p = 0
+      while (p < ng) {
+        val x = h(p)
+        while (tail > head && h(dq(tail - 1)) >= x) tail -= 1
+        dq(tail) = p; tail += 1
+        if (dq(head) <= p - w) head += 1
+        if (p >= w - 1) out(p - w + 1) = h(dq(head))
+        p += 1
+      }
+      out
+    }
+  }
+
   /** Distinct window minima of the gram hash sequence of `words`. */
   def select(words: ArrayData, n: Int, w: Int): ArrayData = {
     val nw = words.numElements()
@@ -146,23 +80,7 @@ object WinnowKernel {
       h(i) = acc >>> 4
       i += 1
     }
-    // window minima (global min when shorter than the window), distinct
-    val mins =
-      if (ng < w) Array(h.min)
-      else {
-        val out = new Array[Long](ng - w + 1)
-        val dq = new Array[Int](ng)
-        var head = 0; var tail = 0; var p = 0
-        while (p < ng) {
-          val x = h(p)
-          while (tail > head && h(dq(tail - 1)) >= x) tail -= 1
-          dq(tail) = p; tail += 1
-          if (dq(head) <= p - w) head += 1
-          if (p >= w - 1) out(p - w + 1) = h(dq(head))
-          p += 1
-        }
-        out
-      }
+    val mins = windowMins(h, w)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     var q = 0
     while (q < mins.length) { seen.add(mins(q)); q += 1 }
@@ -194,10 +112,6 @@ case class WinnowSelect(child: Expression, n: Int, w: Int)
 }
 
 object WinnowFunctions {
-  /** All `w`-window minima of an `array<long>` column in one O(n) pass. */
-  def slidingMin(h: Column, w: Int): Column =
-    GraftShim.column(SlidingMinLong(GraftShim.expression(h), w))
-
   /** Full winnowing selection: token array → distinct selected 60-bit
     * fingerprints, one kernel call (see [[WinnowKernel]]).
     */

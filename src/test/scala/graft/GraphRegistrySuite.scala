@@ -1,14 +1,13 @@
 package graft
 
 import scala.util.hashing.MurmurHash3
-import graft.ext.Checkpoints
 
 /** Tier-1 slice of the query registry: the graph queries, the
   * connected-component queries and the other queries that pin through
-  * [[Checkpoints.scoped]], run through [[SparkEntry.queries]] at sf0.001
+  * [[graft.ext.Checkpoints.scoped]], run through [[SparkEntry.run]] at sf0.001
   * on the shared test session. Each query must give the same
-  * order-insensitive row hash on two runs, and once its frames are passed
-  * to `Checkpoints.release` (the Bench path) it must leave no persistent
+  * order-insensitive row hash on two runs, and once `SparkEntry.run` has
+  * released what it pinned (the Bench path) it must leave no persistent
   * RDD and no cached relation behind.
   *
   * The tables are perfbench's copy of the seed-42 sf0.001 set, which is
@@ -44,12 +43,9 @@ class GraphRegistrySuite extends SparkSpec {
   private val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** One run: collect, release, and hash the rows in any order. */
-  private def runOnce(name: String): Int = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    val rows = df.collect()
-    Checkpoints.release(df)
-    MurmurHash3.unorderedHash(rows.map(_.toString))
-  }
+  private def runOnce(name: String): Int =
+    SparkEntry.run(spark, sfDir, name)(df =>
+      MurmurHash3.unorderedHash(df.collect().map(_.toString)))
 
   for ((group, names) <- Seq("graph" -> graphQueries,
       "connected-component" -> componentQueries,

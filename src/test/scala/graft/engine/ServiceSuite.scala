@@ -65,6 +65,29 @@ class ServiceSuite extends SparkSpec {
     ArrowBridge.readFramed(new java.io.ByteArrayInputStream(bytes), bytes.length)
   }
 
+  /** Waits until the running overwrite `upload` of `wh` has its fct in
+    * its scratch build beside the warehouse, and a little longer: all it
+    * has left is the swap.
+    */
+  private def awaitScratchBuild(wh: java.nio.file.Path,
+                                upload: scala.concurrent.Future[_]): Unit = {
+    def built: Boolean = {
+      val ls = Files.list(wh.getParent)
+      try ls.iterator().asScala.exists { p =>
+        p.getFileName.toString.startsWith(s".${wh.getFileName}.tmp-") &&
+          Files.exists(p.resolve("corporate.fct_corporate/_SUCCESS"))
+      } finally ls.close()
+    }
+    val deadline = System.nanoTime +
+      java.util.concurrent.TimeUnit.SECONDS.toNanos(120)
+    while (!built) {
+      assert(System.nanoTime < deadline && !upload.isCompleted,
+        "the overwrite never finished its build")
+      Thread.sleep(10)
+    }
+    Thread.sleep(200)
+  }
+
   private def rows(batches: Array[Array[Byte]]): Seq[Seq[Any]] =
     ArrowBridge.fromArrowBatches(spark, batches).collect().map(_.toSeq).toSeq
 
@@ -82,11 +105,11 @@ class ServiceSuite extends SparkSpec {
         |3,2013,Fire,Chief,FT,"$30,000.00","$10,000.00",,
         |""")
     svc.upload("LA", "p1", "corporate_a.csv", csv)
-    val report = svc.budgetReport("LA", "p1", "corporate_a.csv", saveCopy = true)
-      .collect()
+    val report =
+      svc.budgetReport("LA", "p1", "corporate_a.csv", saveCopy = true)(_.collect())
     assert(report.map(_.getAs[String]("job_title")).toSeq == Seq("Chief", "Officer"))
     assert(report(1).getAs[Long]("total_employee") == 2L)
-    val export = svc.fullExport("LA", "p1", "corporate_a.csv").collect()
+    val export = svc.fullExport("LA", "p1", "corporate_a.csv")(_.collect())
     assert(export.length == 3)
     assert(export.head.getAs[String]("job_title") == "Chief")
     val (raw, clean) = svc.listFiles("LA", "p1")
@@ -104,7 +127,7 @@ class ServiceSuite extends SparkSpec {
         |Lee,Bo,Newark,Lincoln,Aide,0.5,3,Std,30000
         |""")
     svc.upload("NJ", "p2", "education_b.csv", csv)
-    val export = svc.fullExport("NJ", "p2", "education_b.csv").collect()
+    val export = svc.fullExport("NJ", "p2", "education_b.csv")(_.collect())
     val smith = export.find(_.getAs[String]("job_title") == "Teacher").get
     assert(smith.getAs[String]("employment_status") == "Full Time") // fte null -> 1.0
     assert(smith.getAs[Double]("total_amount") == 64000 * 1.05)     // 17y bonus
@@ -117,7 +140,7 @@ class ServiceSuite extends SparkSpec {
         |Mercy,SF,CA,DRG Y,5,2000.0,1500.0
         |""")
     svc.upload("US", "p3", "hospital_c.csv", csv)
-    val report = svc.budgetReport("US", "p3", "hospital_c.csv").collect()
+    val report = svc.budgetReport("US", "p3", "hospital_c.csv")(_.collect())
     assert(report.head.getAs[String]("job_title") == "DRG X") // 10*1000.5 > 5*2000
     assert(report.head.getAs[Double]("total_budget") == 10005.0)
   }
@@ -140,10 +163,10 @@ class ServiceSuite extends SparkSpec {
     assert(ra("corporate.fct_corporate").count() == 1)
     assert(rb("education.fct_education").count() == 1)
     // each landed in its own warehouse, untouched by the other
-    assert(svc.budgetReport("LA", "p1", "corporate_conc.csv")
-      .collect()(0).getAs[String]("job_title") == "JobA")
-    assert(svc.budgetReport("NJ", "p2", "education_conc.csv")
-      .collect()(0).getAs[String]("job_title") == "JobB")
+    assert(svc.budgetReport("LA", "p1", "corporate_conc.csv")(_.collect())(0)
+      .getAs[String]("job_title") == "JobA")
+    assert(svc.budgetReport("NJ", "p2", "education_conc.csv")(_.collect())(0)
+      .getAs[String]("job_title") == "JobB")
   }
 
   it("round-trips the Arrow wire format (S4 upload / S7 result stream)") {
@@ -282,15 +305,43 @@ class ServiceSuite extends SparkSpec {
       (rows.map(_.getAs[Long]("total_employee")).sum,
         rows.map(_.getAs[Double]("total_budget")).sum)
     upload("swap_1.csv", Seq("A" -> 100, "A" -> 200, "B" -> 300))
-    val before = svc.budgetReport("LA", "p1", "corporate_swap.csv").collect()
+    val before = svc.budgetReport("LA", "p1", "corporate_swap.csv")(_.collect())
     assert(totals(before) == ((3L, 600.0)))
     upload("swap_2.csv",
       Seq("C" -> 1000, "D" -> 2000, "D" -> 3000, "E" -> 10, "C" -> 5))
-    val after = svc.budgetReport("LA", "p1", "corporate_swap.csv").collect()
+    val after = svc.budgetReport("LA", "p1", "corporate_swap.csv")(_.collect())
     assert(after.map(_.toSeq).toSeq == freshRows("corporate_swap.csv"))
     assert(totals(after) == ((5L, 6015.0)))
     assert(after.map(_.getAs[String]("job_title")).toSeq ==
       Seq("D", "C", "E"))
+  }
+
+  it("runs the actions of a report and an export on one build while a same-name overwrite waits") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val filename = "corporate_scoped.csv"
+    val wh = warehouse(filename)
+    val s = svc
+    s.upload("LA", "p1", filename,
+      corporateCsv("scoped_1.csv", Seq("A" -> 100, "B" -> 200, "A" -> 50)))
+    val old = freshRows(filename)
+    val overwrite = s.fullExport("LA", "p1", filename) { export =>
+      s.budgetReport("LA", "p1", filename) { report =>
+        val f = Future(s.upload("LA", "p1", filename,
+          corporateCsv("scoped_2.csv", Seq("C" -> 5, "D" -> 6))))
+        awaitScratchBuild(wh, f)
+        // the new build is finished: the actions still read the old one
+        assert(export.count() == 3)
+        assert(report.collect().map(_.toSeq).toSeq == old)
+        assert(!f.isCompleted)
+        f
+      }
+    }
+    Await.result(overwrite, 120.seconds)
+    assert(s.fullExport("LA", "p1", filename)(_.count()) == 2)
+    assert(s.budgetReport("LA", "p1", filename)(
+      _.collect().map(_.toSeq).toSeq) == freshRows(filename))
   }
 
   describe("the budget report stored with each build") {
@@ -488,28 +539,14 @@ class ServiceSuite extends SparkSpec {
       s.upload("LA", "p1", filename,
         corporateCsv("held_1.csv", Seq("A" -> 100, "B" -> 200)))
       val old = freshRows(filename)
-      // the overwrite's scratch build beside the warehouse has its fct
-      def fctBuilt: Boolean = {
-        val ls = Files.list(wh.getParent)
-        try ls.iterator().asScala.exists { p =>
-          p.getFileName.toString.startsWith(s".${wh.getFileName}.tmp-") &&
-            Files.exists(p.resolve("corporate.fct_corporate/_SUCCESS"))
-        } finally ls.close()
-      }
       val overwrite = Pipeline.reading(wh) {
         val f = Future(s.upload("LA", "p1", filename,
           corporateCsv("held_2.csv", Seq("C" -> 5, "D" -> 6, "D" -> 7))))
-        val deadline = System.nanoTime + 120.seconds.toNanos
-        while (!fctBuilt) {
-          assert(System.nanoTime < deadline && !f.isCompleted,
-            "the overwrite never finished its build")
-          Thread.sleep(10)
-        }
-        Thread.sleep(200)
+        awaitScratchBuild(wh, f)
         // built but not live: the old build's report, stored now, and rows
         assert(rows(s.budgetReportArrow("LA", "p1", filename)) == old)
         assert(rows(storedReport(filename)) == old)
-        assert(s.fullExport("LA", "p1", filename).count() == 2)
+        assert(s.fullExport("LA", "p1", filename)(_.count()) == 2)
         assert(!f.isCompleted)
         f
       }
@@ -1029,7 +1066,7 @@ class ServiceSuite extends SparkSpec {
 
   it("refuses cross-tenant access") {
     assertThrows[IllegalArgumentException](
-      svc.budgetReport("LA", "wrong", "corporate_a.csv"))
+      svc.budgetReport("LA", "wrong", "corporate_a.csv")(_.count()))
   }
 
   it("auth failures are indistinguishable (no client-id enumeration)") {

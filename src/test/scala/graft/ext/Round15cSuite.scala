@@ -138,15 +138,12 @@ class Round15cSuite extends SparkSpec {
     }
   }
 
-  describe("WinnowFunctions.slidingMin") {
+  describe("WinnowKernel.windowMins") {
     it("matches the naive per-window minimum on random arrays") {
       val rnd = new scala.util.Random(15)
       val cases = (0 to 40).map(n => Seq.fill(n)(rnd.nextLong()))
       for (w <- Seq(1, 2, 4, 7); h <- cases) {
-        val got = Seq(h).toDF("h")
-          .select(graft.functions.WinnowFunctions.slidingMin(col("h"), w)
-            .as("m"))
-          .as[Seq[Long]].collect().head
+        val got = graft.functions.WinnowKernel.windowMins(h.toArray, w).toSeq
         val want =
           if (h.isEmpty) Seq()
           else if (h.size < w) Seq(h.min)
