@@ -5,7 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.dot
+import graft.functions.VectorFunctions.{dot, nearestCentroid}
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the
   * coarse-quantizer alternative to random-hyperplane LSH
@@ -18,10 +18,12 @@ import graft.functions.VectorFunctions.dot
   *     a representative sample, not every vector (FAISS trains IVF cells
   *     the same way).
   *  2. ASSIGN: every corpus vector picks its nearest centroid in a single
-  *     PROJECTION — the centroids travel into whole-stage codegen as array
-  *     literals, so assignment is one corpus pass with no join, no shuffle,
-  *     and no per-row blowup. Posting lists are just the `cell` column; at
-  *     warehouse scale they can additionally be bucketed on disk.
+  *     PROJECTION — the centroid matrix rides into whole-stage codegen as
+  *     a reference object ([[graft.functions.NearestCentroid]]), so
+  *     assignment is one corpus pass with no join, no shuffle, no per-row
+  *     blowup and no codegen size ceiling at any cell count. Posting lists
+  *     are just the `cell` column; at warehouse scale they can
+  *     additionally be bucketed on disk.
   *  3. PROBE: each query ranks centroids (there are only `nCells`), keeps
   *     the `nProbe` nearest cells, and scores only vectors in those cells:
   *     the scanned fraction is ~nProbe/nCells of the corpus, the quadratic
@@ -69,60 +71,26 @@ object IvfIndex {
     fromCentroids(spark, corpus,
       trainCentroids(spark, corpus, nCells, seed, maxTrainVectors))
 
-  /** Above this many centroid literals (nCells × dim), assignment switches
-    * from the embedded-literal projection to the [[NearestCentroid]]
-    * matrix expression: a generated method carrying tens of thousands of
-    * array literals blows past the JVM's 64 KB codegen method limit
-    * (measured at 4096×8: Janino throws "Code grows beyond 64 KB" — for
-    * flat AND chunked literal trees — and interpreted fallback runs ~370 ns
-    * per vector-cell; a crossJoin(broadcast)+min(struct) aggregate is no
-    * faster, dominated by per-pair ObjectHashAggregate lookups). 2048
-    * keeps q64's 16×64 literal plan, whose plan-time constant folding is
-    * ideal at small cell counts.
-    */
-  val DefaultCodegenLiteralBudget = 2048
-
-  /** Assign every corpus vector to its nearest centroid.
-    *
-    * Small cell counts (nCells × dim <= `codegenLiteralBudget`): `array_min`
-    * over (d2, cell) structs gives the argmin with ties to the lowest cell,
-    * in one codegen'd projection — no crossJoin row blowup, no shuffle.
-    *
-    * Large cell counts (the 10⁴–10⁵ cells a 100 TB corpus wants):
-    * [[graft.functions.NearestCentroid]] — a custom Catalyst expression
-    * whose generated code is a fixed-size loop over the centroid matrix
-    * held as a reference object, so assignment stays ONE codegen'd
-    * projection (no join, no shuffle, no 64 KB ceiling) at any cell count.
-    * Identical operation order (v·v − 2·v·c + c·c, folds left-to-right,
-    * ties to lowest cell), so both paths are bit-equal — asserted in
-    * ExtSuite at nCells=2048.
+  /** Assign every corpus vector to its nearest centroid with
+    * [[graft.functions.NearestCentroid]]: a Catalyst expression whose
+    * generated code is one call to a loop over the centroid matrix held as
+    * a reference object, so assignment is ONE codegen'd projection (no
+    * join, no shuffle, no 64 KB ceiling) at any cell count. d² is
+    * v·v − 2·v·c + c·c with the dot products folded left to right (DuckDB
+    * `list_dot_product`'s order) and ties go to the lowest cell, so the
+    * q64 oracle's literal SQL reproduces every cell bit for bit. A null
+    * vector gets a null cell.
     */
   def fromCentroids(spark: SparkSession, corpus: DataFrame,
-                    centroidVecs: Seq[Seq[Double]],
-                    codegenLiteralBudget: Int = DefaultCodegenLiteralBudget): Model = {
+                    centroidVecs: Seq[Seq[Double]]): Model = {
     require(centroidVecs.nonEmpty, "fromCentroids needs at least one centroid")
-    val vecs = asDouble(corpus)
     import spark.implicits._
     val centroids = centroidVecs.zipWithIndex
       .map { case (c, i) => (i, c) }.toDF("cell", "cv")
       .withColumn("cv_n2", dot(col("cv"), col("cv")))
-    val vn = vecs.withColumn("v_n2", dot(col("v"), col("v")))
-    val nLiterals = centroidVecs.size.toLong * centroidVecs.head.size
-    val cellCol =
-      if (nLiterals <= codegenLiteralBudget) {
-        val cellStructs = centroidVecs.zipWithIndex.map { case (c, i) =>
-          val cvLit = array(c.map(lit): _*)
-          // same left-to-right accumulation as DotProduct / list_dot_product
-          val cvN2 = c.foldLeft(0.0)((s, x) => s + x * x)
-          struct(
-            (col("v_n2") - lit(2.0) * dot(col("v"), cvLit) + lit(cvN2)).as("d2"),
-            lit(i).as("cell"))
-        }
-        array_min(array(cellStructs: _*)).getField("cell")
-      } else {
-        graft.functions.VectorFunctions.nearestCentroid(col("v"), centroidVecs)
-      }
-    val assigned = vn.withColumn("cell", cellCol)
+    val assigned = asDouble(corpus)
+      .withColumn("v_n2", dot(col("v"), col("v")))
+      .withColumn("cell", nearestCentroid(col("v"), centroidVecs))
       .select("vec_id", "v", "cell", "v_n2")
     Model(centroidVecs, centroids, assigned)
   }
@@ -160,33 +128,33 @@ object IvfIndex {
       .orderBy("cell")
   }
 
-  /** Approximate top-k: probe the nProbe nearest cells per query, exact
-    * cosine within the probed cells only.
-    *
-    * `broadcastProbe = true` (default) broadcasts the (query × nProbe)
-    * probe table into the corpus scan — right whenever the query set fits
-    * an executor (ad-hoc search, dashboard lookups). For CORPUS-SCALE
-    * query sets (e.g. all-vs-all near-dup via IVF) set it false: the
-    * probe join then shuffles both sides on `cell` — cells are zipfy, so
-    * leave AQE skew-join splitting on.
+  /** The probe shared by every IVF search: each query's `nProbe` cells
+    * with the highest cosine to their centroid, ties to the lowest cell,
+    * as rows (query_id, qv, qv_n2, cell, cv). The centroid table has only
+    * nCells rows, so it is broadcast and each query ranks nCells rows.
     */
-  def knn(model: Model, queries: DataFrame, k: Int, nProbe: Int,
-          broadcastProbe: Boolean = true): DataFrame = {
+  private[ext] def probe(model: Model, queries: DataFrame, nProbe: Int): DataFrame = {
     val q = asDouble(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .withColumn("qv_n2", dot(col("qv"), col("qv")))
-    // rank centroids per query (centroid table is tiny -> broadcast)
     val cellRank = Window.partitionBy("query_id")
       .orderBy(desc("cell_score"), asc("cell"))
-    val probed = q.crossJoin(broadcast(model.centroids))
+    q.crossJoin(broadcast(model.centroids))
       .withColumn("cell_score",
         dot(col("qv"), col("cv")) / sqrt(col("qv_n2") * col("cv_n2")))
       .withColumn("cell_rnk", row_number().over(cellRank))
       .filter(col("cell_rnk") <= nProbe)
+      .select("query_id", "qv", "qv_n2", "cell", "cv")
+  }
+
+  /** Approximate top-k: [[probe]] the nProbe nearest cells per query, exact
+    * cosine within the probed cells only. The (query × nProbe) probe table
+    * is broadcast into the corpus scan.
+    */
+  def knn(model: Model, queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    val probed = probe(model, queries, nProbe)
       .select("query_id", "qv", "qv_n2", "cell")
-    // score only vectors in probed cells
-    val probeSide = if (broadcastProbe) broadcast(probed) else probed
-    val scored = model.assigned.join(probeSide, Seq("cell"))
+    val scored = model.assigned.join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qv"), col("v")) / sqrt(col("qv_n2") * col("v_n2")), 6)

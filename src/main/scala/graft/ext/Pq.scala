@@ -17,16 +17,17 @@ import org.apache.spark.sql.functions._
   *    [[IvfIndex.trainCentroids]] sampling discipline — quality needs a
   *    representative sample, not every vector).
   *  - ENCODE: per-subspace nearest-code assignment as ONE codegen'd
-  *    projection over codebook literals (squared-Euclidean identity,
-  *    ties to the lowest code — the [[IvfIndex]] operation order, so
-  *    encoding is SQL-expressible and hash-verifiable). The per-row
-  *    reconstruction error is emitted on the exact micro grid: a later
-  *    SUM of err_micro longs is order-invariant where a double sum
-  *    would not be.
+  *    projection ([[graft.functions.PqEncodePacked]]: the codebooks ride
+  *    as a reference object, squared-Euclidean identity, ties to the
+  *    lowest code — the [[IvfIndex]] operation order, so encoding is
+  *    SQL-expressible and hash-verifiable). [[encode]] also emits the
+  *    per-row reconstruction error on the exact micro grid: a later SUM
+  *    of err_micro longs is order-invariant where a double sum would not
+  *    be.
   *  - ADC SEARCH: per query, an m·k lookup table of partial distances
-  *    (micro longs) is built against the codebooks; corpus CODES join
-  *    the table and the total distance is an exact integer sum, so
-  *    top-k membership and tie order (distance, then vec_id) are
+  *    (micro longs) is built against the codebooks; each corpus row's
+  *    packed codes index it and the total distance is an exact integer
+  *    sum, so top-k membership and tie order (distance, then vec_id) are
   *    deterministic on any engine. The per-query top-k runs on the
   *    bounded [[graft.functions.TopKLongPairs]] aggregate.
   */
@@ -282,43 +283,36 @@ object Pq {
     // encode's arithmetic cost
     graft.functions.PqFunctions.vecPermute(v, perm)
 
-  /** Squared distance between subvector s of `v` and a code centroid,
-    * in the engine-portable order: v·v − 2·v·c + c·c, dot products
-    * folded left-to-right (DuckDB list_dot_product's order).
-    */
-  private def subD2(v: Column, model: Model, s: Int, c: Seq[Double]): Column = {
-    val sub = model.subDim
-    def el(j: Int): Column = element_at(v, s * sub + 1 + j)
-    val vv = (0 until sub).map(j => el(j) * el(j)).reduce(_ + _)
-    val vc = (0 until sub).map(j => el(j) * lit(c(j))).reduce(_ + _)
-    val cc = c.foldLeft(0.0)((a, x) => a + x * x)
-    vv - lit(2.0) * vc + lit(cc)
-  }
-
-  /** Encode every vector: per-subspace nearest code (argmin via the
-    * sorted-struct trick, ties to the lowest code) plus the row's total
-    * reconstruction error ⌊Σ_s d²·10⁶ + ½⌋ as an exact long. One
-    * projection, no shuffle.
+  /** Encode every vector: per-subspace nearest code as columns
+    * code0…code{m−1} ([[encodePacked]]'s codes) plus the row's total
+    * reconstruction error ⌊Σ_s d²·10⁶ + ½⌋ as an exact long, where d² is
+    * the chosen code's squared distance v·v − 2·v·c + c·c (dot products
+    * folded left to right, summed over s in order). One projection, no
+    * shuffle. A null vector gets null codes and a null error.
     */
   def encode(corpus: DataFrame, model: Model): DataFrame = {
-    val v = col("__v")
-    val base = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("__v"))
-    val mins = (0 until model.m).map { s =>
-      array_min(array(model.books(s).zipWithIndex.map { case (c, i) =>
-        struct(subD2(v, model, s, c).as("d2"), lit(i).as("code"))
-      }: _*))
-    }
-    val codeCols = mins.zipWithIndex.map { case (mn, s) =>
-      mn.getField("code").cast("long").as(s"code$s") }
-    val err = mins.map(_.getField("d2")).reduce(_ + _)
-    base.select(col("vec_id") +: codeCols :+
+    import graft.functions.VectorFunctions.dot
+    val (_, norms, k, sub) = graft.functions.PqMatrix.pack(model.books)
+    val coded = corpus.select(col("vec_id"),
+        col("embedding").cast("array<double>").as("__v"))
+      .withColumn("__codes",
+        graft.functions.PqFunctions.pqCodes(col("__v"), model.books))
+    def code(s: Int): Column = element_at(col("__codes"), s + 1)
+    val err = (0 until model.m).map { s =>
+      val v = slice(col("__v"), s * sub + 1, sub)
+      val at = (code(s) + 1).cast("int")
+      val c = element_at(typedLit(model.books(s)), at)
+      val cc = element_at(typedLit(norms.slice(s * k, s * k + k).toSeq), at)
+      dot(v, v) - lit(2.0) * dot(v, c) + cc
+    }.reduce(_ + _)
+    coded.select(col("vec_id") +:
+      (0 until model.m).map(s => code(s).as(s"code$s")) :+
       floor(err * 1e6 + lit(0.5)).cast("long").as("err_micro"): _*)
   }
 
   /** Broadcast budget for the per-query ADC lookup table, in ROWS
     * (|queries|·m·k). 4M rows ≈ 100–150 MB broadcast — comfortable on
-    * any executor; beyond it [[adcKnn]]/[[ivfPqKnn]] fall back to
+    * any executor; beyond it [[adcKnnPacked]]/[[ivfPqKnn]] fall back to
     * hash-chunked query batches instead of silently OOMing the driver
     * (each query's top-k is independent, so partitioning the query set
     * and unioning the per-batch results is semantics-identical).
@@ -329,34 +323,6 @@ object Pq {
     * codebooks). */
   private def lutRowsPerQuery(model: Model): Long =
     model.books.map(_.size.toLong).sum
-
-  /** Per-query ADC lookup table (query_id, __s, __code, d_micro):
-    * partial squared distance from the query's subvector `s` to code
-    * centroid `code`, on the exact micro grid. One projection over
-    * codebook literals per (query × m·k) row — the ONLY piece of the
-    * ADC scan that carries real vectors, and the piece the
-    * [[DefaultMaxLutRows]] budget bounds. Shared by [[adcKnn]] and
-    * [[ivfPqKnn]] so the two ADC paths cannot drift.
-    */
-  private def adcLut(queries: DataFrame, model: Model): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    queries.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("__q"))
-      .crossJoin(
-        model.books.zipWithIndex.flatMap { case (book, s) =>
-          book.indices.map(i => (s, i))
-        }.toDF("__s", "__code"))
-      .select(col("query_id"), col("__s"), col("__code"),
-        floor(model.books.zipWithIndex.map { case (book, s) =>
-          book.zipWithIndex.foldLeft(lit(null).cast("double")) {
-            case (acc, (c, i)) =>
-              when(col("__s") === s && col("__code") === i,
-                subD2(col("__q"), model, s, c)).otherwise(acc)
-          }
-        }.reduce(coalesce(_, _)) * 1e6 + lit(0.5)).cast("long")
-          .as("d_micro"))
-  }
 
   /** Fail-loud LUT budgeting: split `queries` into hash-disjoint batches
     * whose per-batch LUT fits `maxLutRows` — ENFORCED per batch, not just
@@ -407,28 +373,9 @@ object Pq {
       Some(pmod(hash(col("vec_id")), lit(nBatches.toInt)) === b))
   }
 
-  /** ADC k-nearest-neighbors: queries keep their EXACT subvectors; the
-    * corpus is represented only by its codes. Distances are per-query
-    * micro-long lookup sums — exact integers, so ranking is
-    * deterministic (distance asc, vec_id asc). `queries` and `corpus`
-    * must both expose (vec_id, embedding). The per-query LUT broadcast
-    * is budgeted by `maxLutRows`: a query set too large for one
-    * broadcast is processed in hash-disjoint batches (each batch scans
-    * the code table once — the honest serving cost) and unioned;
-    * results are identical either way.
-    */
-  def adcKnn(queries: DataFrame, corpusCodes: DataFrame, model: Model,
-             k: Int, maxLutRows: Long = DefaultMaxLutRows): DataFrame =
-    batchPredicates(queries, model, maxLutRows).map { pred =>
-      adcKnnBatch(pred.map(queries.filter).getOrElse(queries),
-        corpusCodes, model, k)
-    }.reduce(_.union(_))
-
-  /** Packed encode: all m codes as ONE array<long> column — the
-    * full-dimension form. Codebooks ride as codegen reference objects
-    * ([[graft.functions.PqEncodePacked]]), so the projection stays in
-    * whole-stage codegen at ANY (m, k) — the literal [[encode]] path is
-    * unusable past ~2k plan literals (the [[IvfIndex]] 64 KB lesson).
+  /** Packed encode: all m codes as ONE array<long> column. Codebooks
+    * ride as codegen reference objects ([[graft.functions.PqEncodePacked]]),
+    * so the projection stays in whole-stage codegen at ANY (m, k).
     * Requires uniform code counts across books.
     */
   def encodePacked(corpus: DataFrame, model: Model): DataFrame =
@@ -582,35 +529,16 @@ object Pq {
         (-col("key")).as("dist_micro"))
   }
 
-  private def adcKnnBatch(queries: DataFrame, corpusCodes: DataFrame,
-                          model: Model, k: Int): DataFrame = {
-    val melted = corpusCodes.select(col("vec_id") +:
-      (0 until model.m).map(s => col(s"code$s")): _*)
-      .select(col("vec_id"), explode(array((0 until model.m).map { s =>
-        struct(lit(s).as("__s"), col(s"code$s").as("__code"))
-      }: _*)).as("__sc"))
-      .select(col("vec_id"), col("__sc.__s").as("__s"),
-        col("__sc.__code").as("__code"))
-    val dists = melted.join(broadcast(adcLut(queries, model)),
-        Seq("__s", "__code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d_micro")).as("dist_micro"))
-      .filter(col("query_id") =!= col("vec_id"))
-    graft.functions.TopKFunctions.topkPerGroup(dists,
-        Seq(col("query_id")), -col("dist_micro"), col("vec_id"), k)
-      .select(col("query_id"), col("rnk"), col("id").as("neighbor_id"),
-        (-col("key")).as("dist_micro"))
-  }
-
   /** The composed FAISS-style stack — IVF coarse probe + PQ fine rank:
-    * queries pick their `nProbe` nearest IVF cells (cosine, the
-    * [[IvfIndex.knn]] probe), and only the CODES of vectors in probed
-    * cells are ranked by exact-integer ADC distance. At 100 TB the scan
-    * touches ~nProbe/nCells of the corpus and moves m bytes per
-    * candidate instead of the vector — the memory-bandwidth shape real
-    * billion-vector serving uses. Every step after the two k-means fits
-    * (cell assignment, probing, code assignment, lookup distances,
-    * ranking) is engine-portable and oracle-checked.
+    * queries pick their `nProbe` nearest IVF cells ([[IvfIndex.probe]],
+    * cosine), and only the packed codes of vectors in probed cells are
+    * ranked by exact-integer ADC distance against the query's one LUT.
+    * At 100 TB the scan touches ~nProbe/nCells of the corpus and moves m
+    * codes per candidate instead of the vector — the memory-bandwidth
+    * shape real billion-vector serving uses. Every step after the two
+    * k-means fits (cell assignment, probing, code assignment, lookup
+    * distances, ranking) is engine-portable and oracle-checked. The LUT
+    * budget counts m·k rows per query.
     */
   def ivfPqKnn(corpus: DataFrame, queries: DataFrame,
                ivfCentroids: Seq[Seq[Double]], model: Model, k: Int,
@@ -618,11 +546,16 @@ object Pq {
                maxLutRows: Long = DefaultMaxLutRows): DataFrame = {
     val spark = corpus.sparkSession
     val ivf = IvfIndex.fromCentroids(spark, corpus, ivfCentroids)
-    val codes = encode(corpus, model)
-      .join(ivf.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    val codes = ivf.assigned.select(col("vec_id"), col("cell"),
+      graft.functions.PqFunctions.pqCodes(col("v"), model.books).as("codes"))
     batchPredicates(queries, model, maxLutRows).map { pred =>
-      ivfPqKnnBatch(codes, ivf,
-        pred.map(queries.filter).getOrElse(queries), model, k, nProbe)
+      val batch = pred.map(queries.filter).getOrElse(queries)
+      val probed = IvfIndex.probe(ivf, batch, nProbe).select("query_id", "cell")
+      val luts = batch.select(col("vec_id").as("query_id"),
+        graft.functions.PqFunctions.pqAdcLut(
+          col("embedding").cast("array<double>"), model.books).as("__lut"))
+      adcTopK(codes.join(broadcast(probed), Seq("cell"))
+        .join(broadcast(luts), Seq("query_id")), model, k)
     }.reduce(_.union(_))
   }
 
@@ -631,7 +564,7 @@ object Pq {
     * cell's codebook budget covers only the local displacement — at the
     * same (m, k) the quantization error is strictly smaller than
     * [[ivfPqKnn]]'s raw-vector codes. Queries probe their `nProbe`
-    * nearest cells (the q64 cosine probe), build ONE packed LUT per
+    * nearest cells ([[IvfIndex.probe]]), build ONE packed LUT per
     * (query, probed cell) from the query's residual against that cell,
     * and candidates are ranked by exact-integer ADC over their residual
     * codes. The LUT broadcast is |queries|·nProbe·m·k rows, budgeted by
@@ -656,74 +589,24 @@ object Pq {
           model.books).as("codes"))
     batchPredicates(queries, model, maxLutRows, lutMultiplier = nProbe)
       .map { pred =>
-        ivfAdcResidualBatch(codes, ivf,
-          pred.map(queries.filter).getOrElse(queries), model, k, nProbe)
+        val batch = pred.map(queries.filter).getOrElse(queries)
+        val probed = IvfIndex.probe(ivf, batch, nProbe)
+          .select(col("query_id"), col("cell"),
+            graft.functions.PqFunctions.pqAdcLut(
+              zip_with(col("qv"), col("cv"), (a, b) => a - b),
+              model.books).as("__lut"))
+        adcTopK(codes.join(broadcast(probed), Seq("cell")), model, k)
       }.reduce(_.union(_))
   }
 
-  private def ivfAdcResidualBatch(codes: DataFrame, ivf: IvfIndex.Model,
-                                  queries: DataFrame, model: Model,
-                                  k: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorFunctions.dot
-    val nCodes = model.books.head.size
-    val q = queries.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qv_n2", dot(col("qv"), col("qv")))
-    // nCells rows per query — bounded by the index, not the data
-    val cellRank = Window.partitionBy("query_id")
-      .orderBy(desc("cell_score"), asc("cell"))
-    val probed = q.crossJoin(broadcast(ivf.centroids))
-      .withColumn("cell_score",
-        dot(col("qv"), col("cv")) / sqrt(col("qv_n2") * col("cv_n2")))
-      .withColumn("cell_rnk", row_number().over(cellRank))
-      .filter(col("cell_rnk") <= nProbe)
-      .select(col("query_id"), col("cell"), col("qv"), col("cv"))
-    val lutQ = broadcast(probed.select(col("query_id"), col("cell"),
-      graft.functions.PqFunctions.pqAdcLut(
-        zip_with(col("qv"), col("cv"), (a, b) => a - b),
-        model.books).as("__lut")))
-    val dists = codes.join(lutQ, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
+  /** Top-k per query by packed ADC over candidate (query_id, vec_id,
+    * codes, __lut) rows, the query itself excluded.
+    */
+  private def adcTopK(candidates: DataFrame, model: Model, k: Int): DataFrame = {
+    val dists = candidates.filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
         graft.functions.PqFunctions.pqAdcDist(col("codes"), col("__lut"),
-          nCodes).as("dist_micro"))
-    graft.functions.TopKFunctions.topkPerGroup(dists,
-        Seq(col("query_id")), -col("dist_micro"), col("vec_id"), k)
-      .select(col("query_id"), col("rnk"), col("id").as("neighbor_id"),
-        (-col("key")).as("dist_micro"))
-  }
-
-  private def ivfPqKnnBatch(codes: DataFrame, ivf: IvfIndex.Model,
-                            queries: DataFrame, model: Model, k: Int,
-                            nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorFunctions.dot
-    val q = queries.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("qv_n2", dot(col("qv"), col("qv")))
-    // nCells rows per query — bounded by the index, not the data
-    val cellRank = Window.partitionBy("query_id")
-      .orderBy(desc("cell_score"), asc("cell"))
-    val probed = q.crossJoin(broadcast(ivf.centroids))
-      .withColumn("cell_score",
-        dot(col("qv"), col("cv")) / sqrt(col("qv_n2") * col("cv_n2")))
-      .withColumn("cell_rnk", row_number().over(cellRank))
-      .filter(col("cell_rnk") <= nProbe)
-      .select(col("query_id"), col("cell"))
-    // candidate (query, vec) pairs: codes of probed cells only
-    val cand = codes.join(broadcast(probed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-    val melted = cand.select(col("query_id"), col("vec_id"),
-        explode(array((0 until model.m).map { s =>
-          struct(lit(s).as("__s"), col(s"code$s").as("__code"))
-        }: _*)).as("__sc"))
-      .select(col("query_id"), col("vec_id"),
-        col("__sc.__s").as("__s"), col("__sc.__code").as("__code"))
-    val dists = melted.join(broadcast(adcLut(queries, model)),
-        Seq("query_id", "__s", "__code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("d_micro")).as("dist_micro"))
+          model.books.head.size).as("dist_micro"))
     graft.functions.TopKFunctions.topkPerGroup(dists,
         Seq(col("query_id")), -col("dist_micro"), col("vec_id"), k)
       .select(col("query_id"), col("rnk"), col("id").as("neighbor_id"),

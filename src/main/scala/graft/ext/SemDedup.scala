@@ -11,9 +11,9 @@ import graft.functions.VectorFunctions.dot
   * over the whole corpus.
   *
   * Scale design: cell assignment is the shared IVF path
-  * ([[IvfIndex.fromCentroids]] — codegen'd literals at small cell counts,
-  * the [[graft.functions.NearestCentroid]] reference-object expression at
-  * large ones; one corpus scan, no shuffle). The pair scan is a self-join
+  * ([[IvfIndex.fromCentroids]] — the [[graft.functions.NearestCentroid]]
+  * reference-object expression at any cell count; one corpus scan, no
+  * shuffle). The pair scan is a self-join
   * keyed on `cell`, so the shuffle moves each vector once and the
   * quadratic term is bounded by the largest cell — at 100 TB the knobs
   * are nCells (more cells ⇒ smaller quadratic blocks) and AQE skew-join

@@ -147,8 +147,7 @@ object Similarity {
     * oracle recomputes every step from the parquet itself).
     *
     * Scale: each of the k−1 steps is ONE corpus projection against ≤ k
-    * literal vectors (the [[graft.ext.IvfIndex]] embedded-literal
-    * assignment shape — no join, no shuffle) plus a 1-row argmax;
+    * literal vectors (no join, no shuffle) plus a 1-row argmax;
     * driver state is O(k·dim). k is the job multiplier — keep it small
     * (≤ ~64); selected rows keep dmin = 0 and simply never win again.
     * Returns (step, vec_id, dmin_micro).

@@ -8,23 +8,23 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
-/** Native Catalyst expressions for FULL-DIMENSION product quantization.
+/** Native Catalyst expressions for product quantization: the one encode
+  * and ADC path of [[graft.ext.Pq]].
   *
-  * The literal-folded PQ path ([[graft.ext.Pq.encode]]/adcKnn) embeds
-  * m×k codebook centroids as plan literals — ideal at m=2/k=16 (q315's
-  * plan-time constant folding), but past ~2k literals Catalyst analysis
-  * and Janino's 64 KB method ceiling make it unusable (the
-  * [[NearestCentroid]] lesson, measured again here: m=16/k=64 on 64-dim
-  * embeddings stalls plan compilation for minutes). These expressions
-  * carry the codebooks as REFERENCE OBJECTS — the generated code is one
-  * call into [[PqKernel]] regardless of (m, k), so encode and ADC stay
-  * inside whole-stage codegen at any codebook size. Interpreted eval makes
-  * the same call, so eval and codegen agree bit for bit by construction.
+  * Folding the m×k codebook centroids into the plan as literals does not
+  * scale: at m=16/k=64 on 64-dim embeddings plan compilation stalls for
+  * minutes, and even at m=2/k=16 the literal ADC lookup table grew
+  * `processNext()` past Janino's 64 KB method limit on every run. These
+  * expressions carry the codebooks as REFERENCE OBJECTS — the generated
+  * code is one call into [[PqKernel]] regardless of (m, k), so encode and
+  * ADC stay inside whole-stage codegen at any codebook size. Interpreted
+  * eval makes the same call, so eval and codegen agree bit for bit by
+  * construction.
   *
-  * Operation order matches the literal path and the DuckDB oracle bit for
-  * bit: per subspace d² = v·v − 2·(Σ vⱼcⱼ left-to-right) + ‖c‖²
-  * (norms pre-folded left-to-right), argmin by strict `<` scan in code
-  * order (ties to the lowest code), micro grid = ⌊d²·10⁶ + ½⌋ as long.
+  * Operation order matches the DuckDB oracles bit for bit: per subspace
+  * d² = v·v − 2·(Σ vⱼcⱼ left-to-right) + ‖c‖² (norms pre-folded
+  * left-to-right), argmin by strict `<` scan in code order (ties to the
+  * lowest code), micro grid = ⌊d²·10⁶ + ½⌋ as long.
   */
 object PqMatrix {
   /** Flattened codebooks: flat((s·k + c)·subDim + j) = books(s)(c)(j);

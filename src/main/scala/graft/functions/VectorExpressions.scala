@@ -137,22 +137,22 @@ case class IntDotProduct(left: Expression, right: Expression)
 
 /** Nearest-centroid cell id for a vector, against a centroid matrix that
   * rides along as a REFERENCE OBJECT — not as literal child expressions.
+  * It is the one IVF assignment path ([[graft.ext.IvfIndex.fromCentroids]]).
   *
-  * This is what lets IVF assignment stay inside whole-stage codegen at ANY
-  * cell count: embedding nCells×dim literals into the plan breaks Janino's
-  * 64 KB method limit somewhere past ~10k literals (measured: flat and
-  * chunked `array_min(array(struct...))` projections both throw "Code grows
-  * beyond 64 KB" at 4096×8 and fall back to interpreted eval at ~370 ns per
-  * vector-cell — and a crossJoin(broadcast)+min(struct) aggregate is no
-  * faster, dominated by per-pair ObjectHashAggregate lookups). Here the
+  * This is what keeps IVF assignment inside whole-stage codegen at ANY
+  * cell count: folding nCells×dim literals into the plan breaks Janino's
+  * 64 KB method limit (measured: `array_min(array(struct...))` projections
+  * throw "Code grows beyond 64 KB" at 4096×8 and fall back to interpreted
+  * eval at ~370 ns per vector-cell), and even at q64's 16×64 the query
+  * ran slower on literals than on this expression. Here the
   * generated code is one call to [[VectorKernel.nearestCentroid]] over
   * `double[]` arrays regardless of nCells: no join, no shuffle, no codegen
   * ceiling.
   *
-  * Semantics match the literal-projection path (and so the q64 DuckDB
-  * oracle) bit for bit: d² = v·v − 2·(Σ vᵢcᵢ, folded left-to-right)
-  * + ‖c‖² (norms pre-folded left-to-right), argmin by strict `<` scan in
-  * cell order = ties to the lowest cell.
+  * Semantics match the q64 DuckDB oracle bit for bit:
+  * d² = v·v − 2·(Σ vᵢcᵢ, folded left-to-right) + ‖c‖² (norms pre-folded
+  * left-to-right), argmin by strict `<` scan in cell order = ties to the
+  * lowest cell. A null vector gets a null cell.
   */
 case class NearestCentroid(child: Expression, flat: Array[Double],
                            norms: Array[Double], dim: Int)
@@ -197,7 +197,7 @@ object VectorFunctions {
     centroids.zipWithIndex.foreach { case (c, i) =>
       c.copyToArray(flat, i * dim)
     }
-    // same left-to-right fold as the literal path's cvN2
+    // left-to-right fold, as the q64 oracle folds c·c
     val norms = centroids.map(_.foldLeft(0.0)((s, x) => s + x * x)).toArray
     GraftShim.column(NearestCentroid(GraftShim.expression(v), flat, norms, dim))
   }

@@ -20,11 +20,9 @@ import Tables.t
   * embeddings' 64 dimensions (Dim below), which is why q319's honest
   * recall audit reports ~0.05–0.30 — the distance mass in the other 56
   * dimensions is invisible to ADC by construction. It stays gated as
-  * the SMALL-configuration exercise of the literal-codebook path
-  * (plan-time constant folding, m=2 oracle shape); the full-dimension,
-  * usable-recall stack is the q330 family
-  * ([[Round14Queries]] + [[graft.ext.Pq.encodePacked]]), whose recall
-  * is gated ≥ 0.7.
+  * the SMALL configuration (m=2, k=16 oracle shape) of the same packed
+  * encode and ADC kernels the full-dimension, usable-recall q330 family
+  * ([[Round14Queries]]) runs, whose recall is gated ≥ 0.7.
   */
 object Round13fQueries extends QuerySet {
 
@@ -66,12 +64,12 @@ object Round13fQueries extends QuerySet {
         .orderBy("code0", "code1")),
 
     // ADC top-k: queries keep exact vectors, the corpus is scanned as
-    // CODES + per-query lookup tables (exact integer distances).
+    // packed CODES + per-query lookup tables (exact integer distances).
     "q316_pq_adc" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val model = pqModel(s, dir)
-      Pq.adcKnn(e.filter(col("vec_id") < AdcQueries),
-          Pq.encode(e, model), model, AdcK)
+      Pq.adcKnnPacked(e.filter(col("vec_id") < AdcQueries),
+          Pq.encodePacked(e, model), model, AdcK)
         .orderBy("query_id", "rnk")
     }),
 
@@ -99,8 +97,8 @@ object Round13fQueries extends QuerySet {
       val e = t(s, dir, "embeddings")
       val model = pqModel(s, dir)
       Round14Queries.recallFrame(e,
-        Pq.adcKnn(e.filter(col("vec_id") < AdcQueries), Pq.encode(e, model),
-          model, Round14Queries.RecallK))
+        Pq.adcKnnPacked(e.filter(col("vec_id") < AdcQueries),
+          Pq.encodePacked(e, model), model, Round14Queries.RecallK))
     }),
   )
 

@@ -94,15 +94,12 @@ object Round4Queries extends QuerySet {
         .orderBy("media_id")
     }),
 
-    // q64 with the NearestCentroid MATRIX path forced (budget 0): the
-    // codegen'd reference-object loop — the shape large cell counts use —
-    // hash-checked against the same generated DuckDB oracle as q64. The
-    // two queries green together prove both assignment paths bit-equal
-    // at the driver, not just in ExtSuite.
+    // The same query as q64: IVF has one assignment path, so the two run
+    // the same plan against the same generated DuckDB oracle.
     "q72_ann_ivf_matrix" -> ((s, dir) => {
       val e = Readers.table(s, dir, "embeddings")
       val model = graft.ext.IvfIndex.fromCentroids(
-        s, e, Round2Queries.ivfCentroids(s, dir), codegenLiteralBudget = 0)
+        s, e, Round2Queries.ivfCentroids(s, dir))
       graft.ext.IvfIndex.knn(model, e.filter(col("vec_id") < 10), 5, nProbe = 4)
         .orderBy("query_id", "rnk")
     }),

@@ -3,12 +3,15 @@ package graft
 import scala.util.hashing.MurmurHash3
 
 /** Tier-1 slice of the query registry: the graph queries, the
-  * connected-component queries and the other queries that pin through
-  * [[graft.ext.Checkpoints.scoped]], run through [[SparkEntry.run]] at sf0.001
-  * on the shared test session. Each query must give the same
-  * order-insensitive row hash on two runs, and once `SparkEntry.run` has
-  * released what it pinned (the Bench path) it must leave no persistent
-  * RDD and no cached relation behind.
+  * connected-component queries, the other queries that pin through
+  * [[graft.ext.Checkpoints.scoped]] and the IVF/PQ vector queries, run
+  * through [[SparkEntry.run]] at sf0.001 on the shared test session. Each
+  * query must give the same order-insensitive row hash on two runs, and
+  * once `SparkEntry.run` has released what it pinned (the Bench path) it
+  * must leave no persistent RDD and no cached relation behind. The vector
+  * queries must also compile every generated class: a whole-stage codegen
+  * compile that fails falls back to interpreted execution on every run
+  * without failing the query, so only the log shows it.
   *
   * The tables are perfbench's copy of the seed-42 sf0.001 set, which is
   * byte-identical to the set the oracle is checked on.
@@ -40,6 +43,14 @@ class GraphRegistrySuite extends SparkSpec {
     "q356_kmeans_centroids", "q361_pca_component", "q364_perceptron_train",
     "q378_bpe_train_batched")
 
+  /** Queries on the IVF assignment and probe ([[graft.ext.IvfIndex]]) and
+    * the PQ encode and ADC ([[graft.ext.Pq]]).
+    */
+  private val vectorQueries = Seq("q64_ann_ivf", "q72_ann_ivf_matrix",
+    "q99_semdedup", "q129_cell_representatives", "q194_label_confusion",
+    "q315_pq_error", "q316_pq_adc", "q318_ivf_pq", "q319_pq_recall",
+    "q336_ivf_adc_residual")
+
   private val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** One run: collect, release, and hash the rows in any order. */
@@ -49,7 +60,8 @@ class GraphRegistrySuite extends SparkSpec {
 
   for ((group, names) <- Seq("graph" -> graphQueries,
       "connected-component" -> componentQueries,
-      "scoped-pin" -> scopedPinQueries); name <- names)
+      "scoped-pin" -> scopedPinQueries, "vector" -> vectorQueries);
+      name <- names)
     describe(s"registry $group query $name") {
       it("is deterministic and releases everything it pins") {
         // the events readers turn nanosAsLong on for the session; put it
@@ -71,4 +83,42 @@ class GraphRegistrySuite extends SparkSpec {
         }
       }
     }
+
+  describe("registry vector queries") {
+    it("compile every generated class") {
+      import org.apache.logging.log4j.LogManager
+      import org.apache.logging.log4j.core.{LogEvent, Logger}
+      import org.apache.logging.log4j.core.appender.AbstractAppender
+      import org.apache.logging.log4j.core.config.Property
+      val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val capture = new AbstractAppender("graft-codegen-capture", null, null,
+          true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = {
+          val msg = e.getMessage.getFormattedMessage
+          if (msg.contains("Failed to compile the generated Java code"))
+            failed.add(msg)
+        }
+      }
+      capture.start()
+      // start the session first: its start-up reconfigures log4j, which
+      // would drop an appender added before it
+      spark.sparkContext
+      val loggers = Seq(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
+        "org.apache.spark.sql.execution.WholeStageCodegenExec")
+        .map(LogManager.getLogger(_).asInstanceOf[Logger])
+      loggers.foreach(_.addAppender(capture))
+      try {
+        val bad = vectorQueries.filter { name =>
+          val before = failed.size
+          runOnce(name)
+          failed.size > before
+        }
+        assert(bad.isEmpty, s"whole-stage codegen failed to compile for $bad")
+      } finally {
+        loggers.foreach(_.removeAppender(capture))
+        capture.stop()
+      }
+    }
+  }
 }

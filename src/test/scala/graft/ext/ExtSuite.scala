@@ -140,29 +140,25 @@ class ExtSuite extends SparkSpec {
   }
 
   describe("IvfIndex.fromCentroids large-cell-count fallback") {
-    it("matrix-expression assignment == literal assignment at nCells=2048") {
-      // dim 4 keeps the literal plan buildable (8192 literals) so the two
-      // paths can be compared row-for-row; at real dims this cell count
-      // would blow the codegen budget, which is the fallback's reason to exist
+    it("NearestCentroid assignment == driver-side argmin at nCells=2048") {
       val corpus = spark.range(300).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(3)), j =>
           (pmod(hash(col("id"), j), lit(1000)) / 500.0 - 1.0).cast("float"))
           .as("embedding"))
       val cents = Seq.tabulate(2048)(i =>
         Seq.tabulate(4)(j => (((i * 31 + j * 17) % 97) / 97.0) - 0.5))
-      val viaLiteral = IvfIndex
-        .fromCentroids(spark, corpus, cents, codegenLiteralBudget = Int.MaxValue)
+      val got = IvfIndex.fromCentroids(spark, corpus, cents)
         .assigned.select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val viaJoin = IvfIndex
-        .fromCentroids(spark, corpus, cents, codegenLiteralBudget = 0)
-        .assigned.select("vec_id", "cell").collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(viaJoin == viaLiteral)
-    }
-    it("default budget keeps q64's 16x64 shape on the literal path") {
-      assert(16 * 64 <= IvfIndex.DefaultCodegenLiteralBudget)
-      assert(2048L * 64 > IvfIndex.DefaultCodegenLiteralBudget)
+      // d² = v·v − 2·v·c + c·c folded left to right, ties to the lowest cell
+      def dot(x: Seq[Double], y: Seq[Double]): Double =
+        x.zip(y).foldLeft(0.0) { case (a, (p, q)) => a + p * q }
+      val want = corpus.as[(Long, Seq[Float])].collect().map { case (id, e) =>
+        val v = e.map(_.toDouble)
+        val d2 = cents.map(c => dot(v, v) - 2.0 * dot(v, c) + dot(c, c))
+        id -> d2.indices.reduceLeft((b, i) => if (d2(i) < d2(b)) i else b)
+      }.toMap
+      assert(got == want)
     }
     it("NearestCentroid is null-safe") {
       val df = Seq(Tuple1(Option(Seq(1.0, 0.0))), Tuple1(None))
@@ -172,16 +168,14 @@ class ExtSuite extends SparkSpec {
         .nearestCentroid(col("v"), cents).as("cell")).collect()
       assert(got(0).getInt(0) == 1)  // matches the second centroid exactly
       assert(got(1).isNullAt(0))     // null vector -> null cell, no NPE
-    }
-    it("shuffle-probe knn == broadcast-probe knn") {
-      val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      val q = emb.filter(col("vec_id") < 5)
-      val model = IvfIndex.build(spark, emb, nCells = 8)
-      def rows(b: Boolean) =
-        IvfIndex.knn(model, q, 3, nProbe = 4, broadcastProbe = b).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-          .toSet
-      assert(rows(false) == rows(true))
+      // Pq.encode takes its codes from the same kind of kernel: a null
+      // vector gets null codes and a null error
+      val pq = Pq.Model(Seq(Seq(Seq(0.0), Seq(1.0)), Seq(Seq(0.0), Seq(1.0))),
+        dim = 2)
+      val enc = Pq.encode(Seq((1L, Option(Seq(1.0f, 0.0f))), (2L, None))
+        .toDF("vec_id", "embedding"), pq).orderBy("vec_id").collect()
+      assert(enc(0).toSeq == Seq(1L, 1L, 0L, 0L))
+      assert(enc(1).toSeq == Seq(2L, null, null, null))
     }
   }
 

@@ -35,11 +35,11 @@ class Round13fSuite extends SparkSpec {
     }
   }
 
-  describe("Pq.adcKnn") {
+  describe("Pq.adcKnnPacked") {
     it("ranks corpus codes by exact integer lookup distances") {
       val q = Seq((100L, Seq(0.0f, 0.0f, 0.0f, 0.0f)))
         .toDF("vec_id", "embedding")
-      val got = Pq.adcKnn(q, Pq.encode(corpus, model), model, 3)
+      val got = Pq.adcKnnPacked(q, Pq.encodePacked(corpus, model), model, 3)
         .as[(Long, Long, Long, Long)].collect().sortBy(_._2).toList
       // dists: v1 (0,0)->0; v4 (0,0)->0 (code-identical); v3 -> 200e6;
       // v2 -> 400e6. tie v1/v4 breaks on vec_id asc
@@ -49,7 +49,7 @@ class Round13fSuite extends SparkSpec {
 
     it("excludes the query itself when ids collide") {
       val q = corpus.filter(col("vec_id") === 1L)
-      val ids = Pq.adcKnn(q, Pq.encode(corpus, model), model, 4)
+      val ids = Pq.adcKnnPacked(q, Pq.encodePacked(corpus, model), model, 4)
         .as[(Long, Long, Long, Long)].collect().map(_._3).toSet
       assert(!ids.contains(1L) && ids == Set(2L, 3L, 4L))
     }

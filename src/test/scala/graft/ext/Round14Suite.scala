@@ -94,17 +94,6 @@ class Round14Suite extends SparkSpec {
         (i % 5).toFloat, (i % 3).toFloat))
     }.toDF("vec_id", "embedding")
 
-    it("adcKnn chunked == unchunked (cap forcing many batches)") {
-      val q = corpus.filter(col("vec_id") <= 9L)
-      val codes = Pq.encode(corpus, model)
-      val full = Pq.adcKnn(q, codes, model, 5)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      // 4 LUT rows per query, 9 queries → cap 8 forces 5 batches
-      val chunked = Pq.adcKnn(q, codes, model, 5, maxLutRows = 8L)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(chunked == full)
-    }
-
     it("ivfPqKnn chunked == unchunked") {
       val cents = Seq(Seq(1.0, 1.0, 1.0, 1.0), Seq(10.0, 6.0, 4.0, 2.0))
       val q = corpus.filter(col("vec_id") <= 6L)
@@ -119,30 +108,10 @@ class Round14Suite extends SparkSpec {
     it("rejects a budget too small for even one query") {
       val q = corpus.filter(col("vec_id") === 1L)
       val e = intercept[IllegalArgumentException] {
-        Pq.adcKnn(q, Pq.encode(corpus, model), model, 3, maxLutRows = 3L)
+        Pq.adcKnnPacked(q, Pq.encodePacked(corpus, model), model, 3,
+          maxLutRows = 3L)
       }
       assert(e.getMessage.contains("cannot hold even one query"))
-    }
-
-    it("packed encode emits the same codes as the literal projection") {
-      val lit2 = Pq.encode(corpus, model)
-        .select(col("vec_id"), col("code0"), col("code1"))
-        .as[(Long, Long, Long)].collect().toSet
-      val packed = Pq.encodePacked(corpus, model)
-        .select(col("vec_id"), element_at(col("codes"), 1).as("c0"),
-          element_at(col("codes"), 2).as("c1"))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(packed == lit2)
-    }
-
-    it("packed ADC reproduces the literal ADC ranking and distances") {
-      val q = corpus.filter(col("vec_id") <= 5L)
-      val viaLit = Pq.adcKnn(q, Pq.encode(corpus, model), model, 4)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      val viaPacked = Pq.adcKnnPacked(q, Pq.encodePacked(corpus, model),
-          model, 4)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(viaPacked == viaLit)
     }
 
     it("packed ADC chunked == unchunked") {
@@ -150,6 +119,7 @@ class Round14Suite extends SparkSpec {
       val codes = Pq.encodePacked(corpus, model)
       val full = Pq.adcKnnPacked(q, codes, model, 5)
         .as[(Long, Long, Long, Long)].collect().toSet
+      // 4 LUT rows per query, 9 queries → cap 8 forces 5 batches
       val chunked = Pq.adcKnnPacked(q, codes, model, 5, maxLutRows = 8L)
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(chunked == full)

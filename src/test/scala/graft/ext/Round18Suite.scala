@@ -198,23 +198,38 @@ class Round18Suite extends SparkSpec {
       assertThrows[Exception](bad.collect())
     }
 
-    it("adcKnnPacked (batch-LUT plan) matches the melt-path adcKnn ranking") {
-      // two independent implementations of the same ADC semantics:
-      // the reference-object batch plan vs the exploded (s, code) join
+    it("adcKnnPacked (batch-LUT plan) matches a driver-side ADC reference") {
       val books = Seq.tabulate(2)(s => Seq.tabulate(4)(c =>
         Seq.tabulate(2)(j => (c * 3 + j + s).toDouble)))
       val model = Pq.Model(books, dim = 4)
-      val vecs = (0L until 40L).map(i => (i,
+      val rows = (0L until 40L).map(i => (i,
         Seq.tabulate(4)(j => ((i * 7 + j * 5) % 11).toDouble)))
-        .toDF("vec_id", "embedding")
-      val queries = vecs.filter(col("vec_id") < 3)
-      val fast = Pq.adcKnnPacked(queries, Pq.encodePacked(vecs, model),
-          model, 5)
+      val vecs = rows.toDF("vec_id", "embedding")
+      val fast = Pq.adcKnnPacked(vecs.filter(col("vec_id") < 3),
+          Pq.encodePacked(vecs, model), model, 5)
         .select("query_id", "rnk", "neighbor_id", "dist_micro")
         .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-      val ref = Pq.adcKnn(queries, Pq.encode(vecs, model), model, 5)
-        .select("query_id", "rnk", "neighbor_id", "dist_micro")
-        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+      // the same ADC semantics in plain Scala: d² = v·v − 2·v·c + c·c
+      // folded left to right, nearest code ties to the lowest, distance
+      // Σ_s ⌊d²·10⁶ + ½⌋, top 5 by (distance, vec_id) without the query
+      def dot(x: Seq[Double], y: Seq[Double]): Double =
+        x.zip(y).foldLeft(0.0) { case (a, (p, q)) => a + p * q }
+      def d2(v: Seq[Double], s: Int, c: Seq[Double]): Double = {
+        val x = v.slice(2 * s, 2 * s + 2)
+        dot(x, x) - 2.0 * dot(x, c) + dot(c, c)
+      }
+      val codes = rows.map { case (id, v) =>
+        id -> books.indices.map(s => books(s).indices.reduceLeft((b, c) =>
+          if (d2(v, s, books(s)(c)) < d2(v, s, books(s)(b))) c else b))
+      }.toMap
+      val ref = rows.take(3).flatMap { case (q, qv) =>
+        rows.collect { case (id, _) if id != q =>
+          (books.indices.map(s => math.floor(
+            d2(qv, s, books(s)(codes(id)(s))) * 1e6 + 0.5).toLong).sum, id)
+        }.sorted.take(5).zipWithIndex.map { case ((d, id), r) =>
+          (q, r + 1L, id, d)
+        }
+      }.sorted
       assert(fast == ref)
     }
 
